@@ -123,11 +123,6 @@ object Bench {
         n -> t
       }.toMap
     val loadEnd = loadavg
-    // Locale.ROOT: the f-interpolator uses the default locale, which on a
-    // comma-decimal host would render 1,234 and corrupt the JSON
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def js(m: Map[String, Double]) =
-      m.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val totalWarm = if (warm.nonEmpty) warm.values.sum else 0.0
     // ADJUDICATED total: the raw cold sum with each rerun outlier's cold
@@ -160,9 +155,9 @@ object Bench {
       s""""total_warm":$totalWarm,"value_adjudicated":$totalAdj,""" +
       s""""queries_warm":${js(warm)},"warm_runs":$warmRuns,""" +
       s""""warm_passes":[${warmPasses.map(js).mkString(",")}],""" +
-      s""""reruns":${js(rerunned)},"load_cold":${js(loadCold.toMap)},""" +
+      s""""reruns":${js(rerunned)},"load_cold":${js(loadCold)},""" +
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},""" +
-      s""""steal_cold":${js(stealCold.toMap)},""" +
+      s""""steal_cold":${js(stealCold)},""" +
       s""""steal_warm_passes":[${stealWarm.mkString(",")}],""" +
       s""""steal_start":$stealStart,"steal_end":$stealJiffies,""" +
       s""""sf":$sfNum,"sf_dir":"$sfDir"}"""
@@ -175,4 +170,16 @@ object Bench {
     // land on stdout below the JSON line
     println(line)
   }
+
+  // Locale.ROOT: the f-interpolator uses the default locale, which on a
+  // comma-decimal host would render 1,234 and corrupt the JSON
+  private def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** A JSON object of 3-decimal values, keys in the pairs' own order: the
+    * run-order fields (`load_cold`, `steal_cold`) pass their
+    * LinkedHashMap straight in — an immutable Map past 4 entries is a
+    * hash map and would scramble that order.
+    */
+  private[graft] def js(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 }

@@ -23,7 +23,7 @@ object Serve {
   /** One immutable serving snapshot: swapped atomically by `/reload`,
     * read once per request — the unit of consistency under mutation.
     * `nRows`/`nTombstones` are the layout stats captured at load/reload
-    * time (the cached index frame is already tombstone-anti-joined, so
+    * time (the index snapshot is already tombstone-anti-joined, so
     * the debt half of the health report must ride in the snapshot —
     * it's what schedules compaction).
     */
@@ -64,7 +64,7 @@ object Serve {
   def gracefulStop(server: HttpServer, drainSeconds: Int = 5): Unit =
     server.stop(drainSeconds)
 
-  /** Build the index, persist base + index, and start serving. Returns the
+  /** Build the index, snapshot base + index, and start serving. Returns the
     * server (caller stops it).
     *
     * Two engines per request (reference-parity default, Spark opt-in):
@@ -76,7 +76,16 @@ object Serve {
     */
   def start(spark: SparkSession, sfDir: String, port: Int,
             indexDir: Option[String] = None): HttpServer = {
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet").persist()
+    // engine frames are eager LOCAL CHECKPOINTS, not persist(): Spark
+    // keys its cache by analyzed plan, so a persisted read of the base or
+    // layout path would also answer every later read of that path in the
+    // session — and VecsStream.maintainIndex publishes by staging +
+    // rename, which no writer recaches, so a following compactIndex would
+    // rewrite the stale cached layout (dropping the streamed adds) and
+    // /reload would serve it. A checkpoint matches no other plan; the
+    // ContextCleaner reclaims its blocks once no engine snapshot (and so
+    // no request) holds it.
+    val base = spark.read.parquet(s"$sfDir/embeddings.parquet").localCheckpoint()
     // load a persisted index when given one (the reference service's cold
     // start: model from disk, no training); otherwise train in-process.
     // loadLive, not load: a maintained layout (VecsStream.maintainIndex)
@@ -111,9 +120,9 @@ object Serve {
         s"saved index dim ${model.params.dim} != base embedding dim $baseDim — " +
           s"index at $dir was built from a different dataset")
     }
-    val index = withLabels(index0, base).persist()
-    val nLiveWarm = index.count(); base.count() // warm caches before first request
-    // tombstone debt for /describe: the cached frame is already live
+    val index = withLabels(index0, base).localCheckpoint()
+    val nLiveWarm = index.count()
+    // tombstone debt for /describe: the snapshot is already live
     // (anti-joined), so the raw-row/tombstone half comes from the layout
     // once per engine build. A freshly trained engine has no log.
     val (nRows, nTomb) = indexDir match {
@@ -148,7 +157,7 @@ object Serve {
     // to compact/rebalance off-path and /reload). Same split criterion
     // as rebalanceIndex at its default maxSizeFactor — the spec pins
     // field-for-field equality with describeIndex over the same dir,
-    // tombstone-debt fields included. Served from the cached index frame
+    // tombstone-debt fields included. Served from the index snapshot
     // (tombstones were already anti-joined at load; the raw/tombstone
     // counts ride in the snapshot), so the cost is one numClusters-row
     // aggregate per call.
@@ -237,15 +246,9 @@ object Serve {
     // POST /reload {"index_dir": "...", "base": "<parquet path>"}: load a
     // saved (possibly mutated — appendVectors/upsertVectors output) index
     // and its base vectors, build the new hot tier OFF the serving path,
-    // then swap atomically. In-flight queries keep the old snapshot; the
-    // old cached index is released after the swap (lazy unpersist — any
-    // job still reading it just recomputes).
+    // then swap atomically. In-flight queries keep the old snapshot; its
+    // checkpoint blocks are reclaimed once no request holds it (see start).
     server.createContext("/reload", (ex: HttpExchange) => {
-      // persisted frames are tracked so a failed reload releases them —
-      // otherwise a retrying ops loop would accumulate cached datasets
-      // until storage memory is exhausted
-      val persisted = scala.collection.mutable.ListBuffer
-        .empty[org.apache.spark.sql.DataFrame]
       try {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         val idxDir = parseString(body, "index_dir")
@@ -254,7 +257,7 @@ object Serve {
           .getOrElse(s"$sfDir/embeddings.parquet")
         // loadLive: respect an uncompacted tombstone log (see start)
         val (m2, i2raw) = RabitqIndex.loadLive(spark, idxDir)
-        // validate BEFORE persisting: an empty base is the same fatal
+        // validate BEFORE snapshotting: an empty base is the same fatal
         // state start() rejects — a 200 here would silently serve nothing
         val b2raw = spark.read.parquet(basePath)
         val baseDim = b2raw.select(size(col("embedding"))).limit(1)
@@ -263,31 +266,15 @@ object Serve {
             s"reload base at $basePath is empty — nothing to serve"))
         require(m2.params.dim == baseDim,
           s"reloaded index dim ${m2.params.dim} != base embedding dim $baseDim")
-        val b2 = b2raw.persist(); persisted += b2
-        val i2 = withLabels(i2raw, b2).persist(); persisted += i2
-        val n2 = b2.count(); i2.count()
+        val b2 = b2raw.localCheckpoint()
+        val i2 = withLabels(i2raw, b2).localCheckpoint()
+        val n2 = b2.count()
         val (nRows2, nTomb2) = RabitqIndex.layoutStats(spark, idxDir)
         val hot2 = HotTier.fromIndex(spark, m2, i2, b2)
-        val old = engineRef.getAndSet(Engine(m2, i2, b2, hot2, nRows2, nTomb2))
-        // release the OLD engine's cache — but Spark keys the cache by
-        // analyzed plan, so a reload from the same path would share the
-        // entry with the frame just installed; unpersisting that shared
-        // entry would evict the NEW engine's cache. Only drop frames
-        // whose plan differs from the incoming ones.
-        def release(oldDf: org.apache.spark.sql.DataFrame,
-                    newDf: org.apache.spark.sql.DataFrame): Unit =
-          if (!oldDf.queryExecution.analyzed.sameResult(newDf.queryExecution.analyzed))
-            oldDf.unpersist(false)
-        release(old.index, i2); release(old.base, b2)
-        // the swap succeeded: b2/i2 are now the LIVE engine's frames. Clear
-        // the rollback list BEFORE respond() — a late IOException (dropped
-        // client) must not uncache the serving index, silently degrading
-        // every subsequent query to lineage recompute.
-        persisted.clear()
+        engineRef.set(Engine(m2, i2, b2, hot2, nRows2, nTomb2))
         respond(ex, 200, s"""{"reloaded":true,"n_base":$n2}""")
       } catch {
         case e: Throwable =>
-          persisted.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
           val msg = jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
           respond(ex, 400, s"""{"error":"$msg"}""")
       }

@@ -1514,7 +1514,7 @@ object SparkEntry {
       // EXACTLY filtered brute force — a real-rows oracle (q97's SQL at
       // label = 7), not a constant gate. At corpus scale the same
       // widening keeps effective candidates constant instead of
-      // saturating (ScaleSmoke filtered sweep: 0.332 → 0.786).
+      // saturating (README "Filtered search at scale": 0.332 → 0.786).
       val (model, index) = annIndexLabeled(s, dir)
       RabitqQuery.filteredTopK(s, model, index, T(s, dir, "embeddings"),
         annQueries(s, dir), col("label") === 7,

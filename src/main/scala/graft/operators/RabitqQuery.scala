@@ -37,9 +37,9 @@ object RabitqQuery {
   // fires topK once per HTTP request against the same cached Engine
   // model, and re-broadcasting it every call puts a driver→blockmanager
   // write on every request that SERIALIZES concurrent requests at the
-  // driver (ServeBench gen:200k×64, 8 threads, spark engine: 11.9 →
-  // 15.5-16.5 qps, p50 578 → 381ms from this cache alone; the payload
-  // grows with padDim² — the rotation matrix dominates). Weak keys:
+  // driver (gen:200k×64, 8 threads, spark engine: 11.9 → 15.5-16.5
+  // qps, p50 578 → 381ms from this cache alone — README V5 row; the
+  // payload grows with padDim² — the rotation matrix dominates). Weak keys:
   // the entry dies with the model and the ContextCleaner reclaims the
   // broadcast's blocks once the Broadcast object is unreachable, so a
   // long-lived server that reloads engines leaks nothing. Identity
@@ -117,8 +117,8 @@ object RabitqQuery {
     // with one lookup pass per candidate instead of 4 popcount plane
     // passes — bit-identical rough distances (spec'd), different kernel.
     // Probe-side payload grows dim/2 B → dim·128 B per row, fine for the
-    // broadcast serving shape; the A/B measurement lives in KernelBench +
-    // PLANS.md q93.
+    // broadcast serving shape; the A/B measurement is recorded in
+    // PLANS.md q93 (perfbench's kernel.asymdot_lut_ns_per_code tracks it).
     val probes = if (fastscan)
       probes0.withColumn("lut",
         graft.functions.VectorExpressions.buildLut(col("planes"))).drop("planes")
@@ -240,7 +240,7 @@ object RabitqQuery {
     * production-shaped composition of a metadata predicate with the IVF
     * probe. Querying a filtered index at the unfiltered-tuned nprobe
     * collapses recall (measured at 1M×64, 10% selectivity: 0.852 →
-    * 0.332 at nprobe 16/256 — ScaleSmoke `filtered` stage): every probed
+    * 0.332 at nprobe 16/256 — README "Filtered search at scale"): every probed
     * cluster is ~selectivity-thin, so the filtered top-k's true
     * neighbors spread across clusters the probe skips. The remedy is to
     * hold the EFFECTIVE candidate count constant: probe

@@ -175,7 +175,7 @@ object TextOps {
     * winner — the same cross-engine float discipline as q17's ratios.
     *
     * Scale shape (round 9, measured at 10M docs — the third formulation;
-    * the first two are kept in `TfidfProbe` as the A/B record):
+    * the first two were A/B-measured by the retired `TfidfProbe`):
     * the whole pipeline hangs off ONE corpus exchange,
     * `repartition(doc_id)`, and the TERM never keys a heavy exchange at
     * all — skew-proof by construction ("the" ≈ every doc costs nothing

@@ -1261,6 +1261,59 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop(0)
   }
 
+  test("Serve: compactIndex after maintainIndex in the serving session keeps " +
+      "the streamed adds, and /reload serves them — no cache refresh needed") {
+    // the serving snapshot must not be a cache entry keyed by the layout
+    // path: maintainIndex publishes its files by staging + rename, which
+    // no Spark writer recaches, so a path-keyed entry would answer
+    // compactIndex's read of the layout with the pre-stream rows
+    import org.apache.spark.sql.functions.lit
+    val sfDir = java.nio.file.Files.createTempDirectory("serve_stale_sf").toString
+    val basePath = s"$sfDir/embeddings.parquet"
+    // label-free base: the served index frame is the plain layout scan
+    emb.filter(col("vec_id") < 200).select("vec_id", "embedding").write.parquet(basePath)
+    val idxDir = java.nio.file.Files.createTempDirectory("serve_stale_idx").toString
+    val (model, index) = RabitqIndex.build(spark, spark.read.parquet(basePath),
+      numClusters = 4, seed = 11L)
+    RabitqIndex.save(spark, model, index, idxDir)
+    val port = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val server = graft.Serve.start(spark, sfDir, port, Some(idxDir))
+    try {
+      val opsDir = java.nio.file.Files.createTempDirectory("serve_stale_ops").toString
+      val adds = emb.filter(col("vec_id") >= 200 && col("vec_id") < 240)
+        .select("vec_id", "embedding")
+      adds.select(lit("add").as("op"), col("vec_id"), col("embedding"))
+        .coalesce(1).write.parquet(s"$opsDir/in")
+      graft.streaming.VecsStream.maintainIndex(spark, s"$opsDir/in", idxDir,
+        s"$opsDir/ckpt", model, "serve_stale_spec")
+      adds.write.mode("append").parquet(basePath)
+      graft.streaming.VecsStream.compactIndex(spark, idxDir)
+      val expected = (0L until 240L).toSet
+      val (_, live) = RabitqIndex.loadLive(spark, idxDir)
+      assert(live.select("vec_id").collect().map(_.getLong(0)).toSet == expected,
+        "compaction must keep the streamed adds")
+
+      val client = java.net.http.HttpClient.newHttpClient()
+      def post(path: String, body: String) = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"http://localhost:$port/$path"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val reload = post("reload", s"""{"index_dir": "$idxDir", "base": "$basePath"}""")
+      assert(reload.statusCode() == 200, s"reload failed: ${reload.body()}")
+      assert(reload.body().contains("\"n_base\":240"), reload.body())
+      val desc = post("describe", "").body()
+      assert(desc.contains("\"n_live\":240"), desc)
+      val qvec = emb.filter(col("vec_id") === 230)
+        .select("embedding").head().getSeq[Float](0)
+      val resp = post("query",
+        s"""{"query": ${qvec.mkString("[", ",", "]")}, "top_k": 5, "probe": 4}""").body()
+      assert(graft.Serve.parseFloatArray(resp, "ids").head.toLong == 230L, resp)
+    } finally server.stop(0)
+  }
+
   test("HTTP label-filtered queries: hot tier and spark engine agree and equal " +
       "filtered brute force; absent label returns empty") {
     val port = {
