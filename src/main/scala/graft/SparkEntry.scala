@@ -850,17 +850,14 @@ object SparkEntry {
       // the work for zero invariant strength), and the three legs are
       // independent, so their jobs submit from three threads and the
       // scheduler interleaves their stages across the cores
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val Seq(mem, disk, truth) = Await.result(Future.sequence(Seq(
-        Future(RabitqQuery.topK(s, model, index, base, qs,
+      val (mem, disk, truth) = Overlap(s,
+        RabitqQuery.topK(s, model, index, base, qs,
           nprobe = 8, topk = 10, rerank = 100)
-          .select("query_id", "neighbor_id", "rank").localCheckpoint(true)),
-        Future(RabitqQuery.topKFromDisk(s, diskIndex(s, dir), base, qs,
+          .select("query_id", "neighbor_id", "rank").localCheckpoint(true),
+        RabitqQuery.topKFromDisk(s, diskIndex(s, dir), base, qs,
           nprobe = 8, topk = 10, rerank = 100)
-          .select("query_id", "neighbor_id", "rank").localCheckpoint(true)),
-        Future(ExactKnn.l2TopK(base, qs, 10).localCheckpoint(true)))),
-        scala.concurrent.duration.Duration(10, "min"))
+          .select("query_id", "neighbor_id", "rank").localCheckpoint(true),
+        ExactKnn.l2TopK(base, qs, 10).localCheckpoint(true))
       val consistent = mem.exceptAll(disk).union(disk.exceptAll(mem))
         .agg(count(lit(1)).as("n_diff"))
         .select((col("n_diff") === 0).cast("long").as("paths_consistent"))
@@ -1468,8 +1465,6 @@ object SparkEntry {
       // materialize the saved index ONCE before fanning out (a concurrent
       // first-call race would write it twice)
       val savedIdx = diskIndexLabeled(s, dir)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
       def gates(pred: Column, floor: Double, tag: String): DataFrame = {
         // each leg's ≤ |q|·k result is materialized ONCE (localCheckpoint):
         // the truth/mem/disk pipelines would otherwise re-run inside every
@@ -1478,14 +1473,13 @@ object SparkEntry {
         // on fb, so their jobs are submitted from three threads and the
         // scheduler interleaves their stages across the cores.
         val fb = emb.filter(pred).localCheckpoint(true)
-        val Seq(truth, mem, disk) = Await.result(Future.sequence(Seq(
-          Future(ExactKnn.l2TopK(fb, qs, 10).localCheckpoint(true)),
-          Future(RabitqQuery.topK(s, model, index.filter(pred),
-            fb, qs, nprobe = 8, topk = 10, rerank = 100).localCheckpoint(true)),
-          Future(RabitqQuery.topKFromDisk(s, savedIdx,
+        val (truth, mem, disk) = Overlap(s,
+          ExactKnn.l2TopK(fb, qs, 10).localCheckpoint(true),
+          RabitqQuery.topK(s, model, index.filter(pred),
+            fb, qs, nprobe = 8, topk = 10, rerank = 100).localCheckpoint(true),
+          RabitqQuery.topKFromDisk(s, savedIdx,
             fb, qs, nprobe = 8, topk = 10, rerank = 100, pred = pred)
-            .localCheckpoint(true)))),
-          scala.concurrent.duration.Duration(10, "min"))
+            .localCheckpoint(true))
         val cols = Seq("query_id", "neighbor_id", "rank").map(col)
         val recallOk = ExactKnn.recall(mem, truth, 10)
           .select((col("recall") >= floor).cast("long").as(s"recall_ok_$tag"))
@@ -1500,11 +1494,10 @@ object SparkEntry {
       // threads so the scheduler interleaves their stages instead of
       // serializing ~10 small jobs end to end (gate-heavy BY DESIGN;
       // this halves its wall clock without weakening any invariant)
-      val legs = Await.result(Future.sequence(Seq(
-        Future(gates(col("label") % 4 === 1, 0.8, "sel30")),
-        Future(gates(col("label") === 7, 0.65, "sel10")))),
-        scala.concurrent.duration.Duration(10, "min"))
-      legs.reduce(_.crossJoin(_))
+      val (sel30, sel10) = Overlap(s,
+        gates(col("label") % 4 === 1, 0.8, "sel30"),
+        gates(col("label") === 7, 0.65, "sel10"))
+      sel30.crossJoin(sel10)
     }),
     "q100_ann_filtered_auto" -> ((s, dir) => {
       // selectivity-aware probe widening (RabitqQuery.filteredTopK — the
@@ -1690,17 +1683,13 @@ object SparkEntry {
       // plan-dump's lazyPlans mode nothing materializes, so the full
       // lazy plan stays inspectable — and identical to the sequential
       // formulation.
-      val lazyPlans = sys.props.get("graft.dedup.lazyPlans").contains("true")
-      val futSem =
-        if (lazyPlans) None
-        else Some(scala.concurrent.Future(semDroppedPlan.localCheckpoint(true))(
-          scala.concurrent.ExecutionContext.global))
-      val afterExact = Dedup.incrementalNew(history, incoming, historyBloom(s, dir))
-      val afterMinhash = Dedup.incrementalMinhashNew(history, afterExact,
+      def minhashChain = Dedup.incrementalMinhashNew(history,
+        Dedup.incrementalNew(history, incoming, historyBloom(s, dir)),
         n = 3, simThreshold = 0.5)
-      val semDropped = futSem.fold(semDroppedPlan)(f =>
-        scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration(10, "min")))
+      val (semDropped, afterMinhash) =
+        if (sys.props.get("graft.dedup.lazyPlans").contains("true"))
+          (semDroppedPlan, minhashChain)
+        else Overlap(s, semDroppedPlan.localCheckpoint(true), minhashChain)
       afterMinhash.join(broadcast(semDropped), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -1741,13 +1730,10 @@ object SparkEntry {
       // threads (guide §2.6, the q48 pattern) fills those gaps without
       // changing any leg's result (training is deterministic — that
       // equality IS the gate)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val futR2 = Future(BpeTrain.learn(s, docs, numMerges = 20))
-      val futTop = Future(BpeTrain.pairStats(docs, 1).collect()(0))
-      val r1 = BpeTrain.learn(s, docs, numMerges = 20)
-      val r2 = Await.result(futR2, scala.concurrent.duration.Duration(10, "min"))
-      val top = Await.result(futTop, scala.concurrent.duration.Duration(10, "min"))
+      val (r2, top, r1) = Overlap(s,
+        BpeTrain.learn(s, docs, numMerges = 20),
+        BpeTrain.pairStats(docs, 1).collect()(0),
+        BpeTrain.learn(s, docs, numMerges = 20))
       val firstOk = r1.merges.nonEmpty &&
         r1.merges.head.left == top.getString(0) &&
         r1.merges.head.right == top.getString(1) &&
@@ -1789,8 +1775,7 @@ object SparkEntry {
         cosineThreshold = 0.4, shingleN = 3, simThreshold = 0.5,
         tmp, s"ingest_stream_${streamCounter.incrementAndGet()}",
         maxFilesPerTrigger = Some(1),
-        statics = if (sys.env.get("SPARK_GRAFT_SHARE_STATICS").contains("false"))
-          None else Some(ingestStatics(s, dir)))
+        statics = Some(ingestStatics(s, dir)))
         .orderBy(col("doc_id"))
     }),
     "q113_stream_index" -> ((s, dir) => {
@@ -1849,8 +1834,7 @@ object SparkEntry {
         tmp, s"ingest_index_stream_${streamCounter.incrementAndGet()}",
         maxFilesPerTrigger = Some(1),
         indexInto = Some((model, s"$tmp/idx")),
-        statics = if (sys.env.get("SPARK_GRAFT_SHARE_STATICS").contains("false"))
-          None else Some(ingestStatics(s, dir)))
+        statics = Some(ingestStatics(s, dir)))
       val (m2, idx2) = RabitqIndex.load(s, s"$tmp/idx")
       val baseFinal = histEmb.unionByName(
         emb.join(surv.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
@@ -1964,25 +1948,23 @@ object SparkEntry {
       // streams start only after BOTH legs complete — the file set and
       // the layout are bit-identical to the sequential order, and the
       // gate's logical set is batching-invariant by contract anyway.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val futIn1 = Future(opsFile(emb.filter(upper && col("vec_id") % 2 === 0),
-        col("vec_id") % 11 === 4, s"$tmp/in1"))
-      RabitqIndex.save(s, model, index0, s"$tmp/idx")
-      Await.result(futIn1, Duration(10, "min"))
+      Overlap(s,
+        opsFile(emb.filter(upper && col("vec_id") % 2 === 0),
+          col("vec_id") % 11 === 4, s"$tmp/in1"),
+        RabitqIndex.save(s, model, index0, s"$tmp/idx"))
       graft.streaming.VecsStream.maintainIndex(s, s"$tmp/in1", s"$tmp/idx",
         s"$tmp/ckpt1", model,
         s"lifecycle_p1_${streamCounter.incrementAndGet()}",
         maxFilesPerTrigger = Some(1))
-      val futIn2 = Future(opsFile(emb.filter(upper && col("vec_id") % 2 === 1),
-        col("vec_id") % 13 === 6, s"$tmp/in2"))
-      val report = RabitqIndex.rebalanceIndex(s, s"$tmp/idx", emb,
-        maxSizeFactor = 1.4)
-      require(report.split.nonEmpty,
-        s"lifecycle gate is vacuous: rebalance was a no-op ($report)")
-      val (m2, _) = RabitqIndex.load(s, s"$tmp/idx")
-      Await.result(futIn2, Duration(10, "min"))
+      val (_, m2) = Overlap(s,
+        opsFile(emb.filter(upper && col("vec_id") % 2 === 1),
+          col("vec_id") % 13 === 6, s"$tmp/in2"), {
+        val report = RabitqIndex.rebalanceIndex(s, s"$tmp/idx", emb,
+          maxSizeFactor = 1.4)
+        require(report.split.nonEmpty,
+          s"lifecycle gate is vacuous: rebalance was a no-op ($report)")
+        RabitqIndex.load(s, s"$tmp/idx")._1
+      })
       graft.streaming.VecsStream.maintainIndex(s, s"$tmp/in2", s"$tmp/idx",
         s"$tmp/ckpt2", m2,
         s"lifecycle_p2_${streamCounter.incrementAndGet()}",
@@ -2288,17 +2270,14 @@ object SparkEntry {
       // after build() so nothing rides on the k-means fit; the stream
       // starts only after both complete — file set and layout identical
       // to the sequential order
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val futIn = Future(emb.filter(!lower)
-        .select(lit("add").as("op"), col("vec_id"), col("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 6 === 1)
-          .select(lit("del").as("op"), col("vec_id"),
-            lit(null).cast("array<float>").as("embedding")))
-        .repartition(2).write.parquet(s"$tmp/in"))
-      RabitqIndex.save(s, model, index0, s"$tmp/idx")
-      Await.result(futIn, Duration(10, "min"))
+      Overlap(s,
+        emb.filter(!lower)
+          .select(lit("add").as("op"), col("vec_id"), col("embedding"))
+          .unionByName(emb.filter(col("vec_id") % 6 === 1)
+            .select(lit("del").as("op"), col("vec_id"),
+              lit(null).cast("array<float>").as("embedding")))
+          .repartition(2).write.parquet(s"$tmp/in"),
+        RabitqIndex.save(s, model, index0, s"$tmp/idx"))
       graft.streaming.VecsStream.maintainIndex(s, s"$tmp/in", s"$tmp/idx",
         s"$tmp/ckpt", model,
         s"maint_loop_${streamCounter.incrementAndGet()}",

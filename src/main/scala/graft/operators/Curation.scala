@@ -167,9 +167,6 @@ object Curation {
       .localCheckpoint(true)
     var changed = 1L
     var iter = 0
-    // env (not sysprop): sbt's forked run JVM inherits the environment
-    // but not -D flags given to sbt itself
-    val debug = sys.env.get("GRAFT_CC_DEBUG").contains("true")
     // bounded storage residency: each round materializes via persist()
     // and eagerly releases the previous round's blocks (residency ≤ 2
     // label frames, not maxIter of them); every 8th round substitutes a
@@ -177,7 +174,6 @@ object Curation {
     // intermediate persists get dropped
     var prevPersisted: Option[DataFrame] = None
     while (changed > 0 && iter < maxIter) {
-      val t0 = System.nanoTime()
       val nbrMin = edges.join(labels, edges("dst") === labels("node"))
         .groupBy(col("src")).agg(min(col("comp")).as("nbr_comp"))
         .select(col("src").as("node"), col("nbr_comp"))
@@ -191,8 +187,6 @@ object Curation {
       prevPersisted = if (checkpointRound) None else Some(step)
       labels = step.select(col("node"), col("comp"))
       iter += 1
-      if (debug) System.err.println(
-        f"[cc] round $iter: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     edges.unpersist()
     // silent wrong answers are worse than failing: an unconverged exit

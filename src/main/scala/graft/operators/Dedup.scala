@@ -142,11 +142,11 @@ object Dedup {
     * docs of an `incoming` batch whose text does NOT already appear in a
     * (much larger) `history` corpus, without ever shuffling history.
     *
-    *   1. build a Bloom filter over history text digests with Catalyst's
-    *      own distributed sketch aggregate (`BloomFilterAggregate`, the
-    *      machinery behind Spark's runtime join filters): partial filter
-    *      per partition, OR-merge — only the final bitmap (~1.2 B/doc at
-    *      1% fpp) leaves the executors, embedded as a plan literal;
+    *   1. build a Bloom filter over history text digests, distributed
+    *      (the bitmap format behind Spark's runtime join filters): partial
+    *      filter per partition, OR-merge — only the per-partition bitmaps
+    *      (~1.2 B/doc at 1% fpp) leave the executors, and the merged one
+    *      is embedded as a plan literal;
     *   2. cheap-test every incoming digest against it with the codegen
     *      `BloomFilterMightContain` predicate — no false negatives, so
     *      the negatives are DEFINITELY new and skip everything below;
@@ -162,77 +162,67 @@ object Dedup {
     * cost is two narrow scans (sketch build + confirm), zero exchanges of
     * history rows — the property that survives a 1000-executor corpus.
     * Digest equality stands in for text equality as in `exact` (xxhash64
-    * here: `BloomFilterAggregate` wants LongType; collision odds 2^-64).
+    * here: the filter is keyed on longs; collision odds 2^-64).
     *
-    * `expectedHistoryDocs` sizes the filter (an upper bound is fine);
-    * the build raises Spark's runtime-bloom-filter session caps when the
-    * requested size exceeds them (the defaults clamp silently above ~7M
-    * docs at 1% fpp). At corpora where the bitmap itself outgrows the
-    * driver (≥ ~10^10 docs at 1% fpp) raise fpp — exactness is
+    * `expectedHistoryDocs` sizes the filter (an upper bound is fine; no
+    * session cap clamps it). At corpora where the bitmap itself outgrows
+    * the driver (≥ ~10^10 docs at 1% fpp) raise fpp — exactness is
     * unaffected, only step 3's broadcast grows.
     *
     * Output: the incoming rows that are new, original schema.
     */
   /** The text-digest column every incremental-dedup path fingerprints on
-    * (LongType — `BloomFilterAggregate`'s input type; collision odds
+    * (LongType — the Bloom filter's key type; collision odds
     * 2^-64, same contract as `exact`'s md5 grouping). NULL text → NULL
     * digest (not the seed hash): SQL equality never matches NULLs, so a
     * null-text incoming row must never count as a duplicate of a
-    * null-text history row — NULL fps fall out of the bloom build
-    * (aggregates skip NULL inputs) and survive every anti-join below
+    * null-text history row — NULL fps are filtered out of the bloom
+    * build and survive every anti-join below
     * (NULL keys never match), which is exactly the NOT EXISTS semantics
     * the q94 oracle states.
     */
   def textFp: Column = when(col("text").isNotNull, xxhash64(col("text")))
 
   /** Distributed Bloom-sketch build over `history`'s text digests +
-    * membership predicate over a `fp` column: partial filter per
-    * partition, OR-merged (Catalyst's `BloomFilterAggregate`, the runtime
-    * join-filter machinery); only the merged bitmap reaches the driver,
-    * embedded as a plan literal read by the codegen
-    * `BloomFilterMightContain` predicate. None ⇔ empty history. Shared by
-    * the batch (`incrementalNew`) and streaming
-    * (`DocsStream.newFingerprints`) ingest paths so their pruning can
-    * never diverge.
+    * membership predicate over a `fp` column: a partial filter per
+    * partition over the non-NULL digests, OR-merged on the driver; the
+    * merged bitmap is embedded as a plan literal read by the codegen
+    * `BloomFilterMightContain` predicate. The filter is built directly
+    * (the bytes `BloomFilterAggregate` would produce) rather than through
+    * that aggregate, which SILENTLY clamps its size to the session's
+    * runtime-join-filter maxima (maxNumItems default 4M, maxNumBits
+    * default 67M bits ≈ 7M items at 1% fpp) — honoring the requested size
+    * through it would mean raising session-global caps that a concurrent
+    * query's injected runtime filters also read. None ⇔ no non-NULL
+    * digest in history. Shared by the batch (`incrementalNew`) and
+    * streaming (`DocsStream.newFingerprints`) ingest paths so their
+    * pruning can never diverge.
     */
   def historyBloomPredicate(history: DataFrame, expectedHistoryDocs: Long,
                             fpp: Double): Option[Column] = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graft.ColumnShim
+    import org.apache.spark.util.sketch.BloomFilter
     val nItems = math.max(expectedHistoryDocs, 1L)
-    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(nItems, fpp)
-    // BloomFilterAggregate SILENTLY clamps both arguments to the session's
-    // runtime-join-filter maxima (maxNumItems default 4M, maxNumBits
-    // default 67M bits ≈ 7M items at 1% fpp) — above that the effective
-    // fpp would quietly exceed the requested one and the verification
-    // broadcast would grow. Exactness never depends on fpp, but the
-    // requested size should be honored: raise the caps for the duration
-    // of the sketch build, then RESTORE them — leaving them raised would
-    // silently permit Spark's own injected runtime join filters, sized
-    // from table statistics, to grow past the cap the default protects.
-    val conf = history.sparkSession.conf
-    val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> nItems,
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits)
-    val saved = keys.map { case (k, needed) =>
-      val prev = conf.getOption(k)
-      if (prev.map(_.toLong).getOrElse(0L) < needed) conf.set(k, needed.toString)
-      k -> prev
-    }
-    try {
-      val bloomAgg = ColumnShim.column(new BloomFilterAggregate(
-        ColumnShim.expression(textFp), Literal(nItems), Literal(numBits)).toAggregateExpression())
-      // the aggregate yields NULL over zero rows — an empty history means
-      // everything incoming is new
-      Option(history.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]]("bf")).map { bin =>
+    val numBits = BloomFilter.optimalNumOfBits(nItems, fpp)
+    val parts = history.select(textFp.as("fp")).where(col("fp").isNotNull)
+      .as(org.apache.spark.sql.Encoders.scalaLong).rdd
+      .mapPartitions { fps =>
+        val part = BloomFilter.create(nItems, numBits)
+        fps.foreach(fp => part.putLong(fp))
+        Iterator.single(part)
+      }
+    // an empty history (zero partitions, or no non-NULL digest) means
+    // everything incoming is new
+    Option.when(parts.getNumPartitions > 0)(parts.reduce(_ mergeInPlace _))
+      .filter(_.cardinality() > 0)
+      .map { bf =>
+        val bytes = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bytes)
         ColumnShim.column(BloomFilterMightContain(
-          Literal.create(bin, org.apache.spark.sql.types.BinaryType),
+          Literal.create(bytes.toByteArray, org.apache.spark.sql.types.BinaryType),
           ColumnShim.expression(col("fp"))))
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
   }
 
   def incrementalNew(history: DataFrame, incoming: DataFrame,

@@ -316,11 +316,12 @@ object LayoutCommit {
 
   def renamesDirAtomically: Boolean = current.renamesDirAtomically
 
-  /** Run `body` with `ops` as the active implementation — a TEST seam
-    * (specs only; suites run sequentially in the forked test JVM, and
-    * the swap is process-global). The synchronization serializes
-    * accidental overlap; threads spawned inside `body` (the lease
-    * hammer) all see `ops` via the volatile read.
+  /** Run `body` with `ops` as the active implementation. The swap is
+    * process-global, so callers must be the only layout writer while it
+    * holds: the specs (suites run sequentially in the forked test JVM)
+    * and the single-threaded q123/q124 query drives. The synchronization
+    * serializes accidental overlap; threads spawned inside `body` (the
+    * lease hammer) all see `ops` via the volatile read.
     */
   private[graft] def withOps[A](ops: CommitOps)(body: => A): A =
     synchronized {

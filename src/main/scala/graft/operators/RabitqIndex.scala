@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import graft.Overlap
 import graft.functions.VectorOps
 
 /** Index-build parameters. `seed` drives rotation, k-means init, and the
@@ -60,38 +61,6 @@ case class RabitqModel(
   */
 object RabitqIndex {
 
-  /** Run independent driver-side actions concurrently (guide §2.6
-    * "overlap independent jobs"): the model-sidecar reads/writes are
-    * three tiny single-task jobs whose cost is per-job latency, not
-    * compute — running them from a small thread pool overlaps that
-    * latency. Spark's scheduler handles concurrent jobs natively.
-    *
-    * Failure semantics: ALL three computations settle (success or
-    * failure) before the first error rethrows — a detached future still
-    * writing a LIVE sidecar dir (save() writes `$dir/rotation` etc.
-    * directly) must never outlive the call, or a caller that catches
-    * the error and retries could race its own zombie write. The await
-    * is bounded (30 min, far above any sane sidecar IO) instead of
-    * infinite: a write hung on a flaky object store fails the op loudly
-    * rather than wedging maintenance forever while the lease breaker
-    * hands the layout to a second mutator. On that timeout the hung
-    * computation cannot be cancelled (no kill seam for a blocked Spark
-    * action) — the TimeoutException documents that the op must be
-    * treated as crashed, exactly like a process kill at the same point
-    * (every caller's crash protocol already covers it).
-    */
-  private[graft] def inParallel[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration._
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val (fut1, fut2) = (Future(fa), Future(fb))
-    val cTry = scala.util.Try(fc)
-    val limit = 30.minutes
-    val r1 = scala.util.Try(Await.result(fut1, limit))
-    val r2 = scala.util.Try(Await.result(fut2, limit))
-    (r1.get, r2.get, cTry.get)
-  }
-
   /** Seeded random orthogonal rotation (B2): QR of a Gaussian matrix with
     * column signs fixed by diag(R) > 0 so Q is unique.
     * (Reference: `/root/reference/src/utils.rs:16-20`, unseeded.)
@@ -119,8 +88,8 @@ object RabitqIndex {
     * cached for the iterative fit (else every Lloyd iteration re-reads and
     * re-converts the parquet).
     */
-  def build(spark: SparkSession, base: DataFrame, numClusters: Int, seed: Long): (RabitqModel, DataFrame) = {
-    spark.sparkContext.setJobDescription("rabitq: kmeans fit")
+  def build(spark: SparkSession, base: DataFrame, numClusters: Int,
+            seed: Long): (RabitqModel, DataFrame) = Overlap.labelled(spark, "rabitq: kmeans fit") {
     val withVec = base.select(col("vec_id"), col("embedding"))
       .withColumn("features", array_to_vector(col("embedding")))
       .cache()
@@ -767,9 +736,9 @@ object RabitqIndex {
     * a fresh checkpoint (batchIds restart at 0) silently SKIP batches in
     * `IdempotentSink` — quiet data loss either way.
     */
-  def save(spark: SparkSession, model: RabitqModel, index: DataFrame, dir: String): Unit = {
+  def save(spark: SparkSession, model: RabitqModel, index: DataFrame,
+           dir: String): Unit = Overlap.labelled(spark, s"rabitq: save $dir") {
     import spark.implicits._
-    spark.sparkContext.setJobDescription(s"rabitq: save $dir")
     index.write.mode("overwrite").partitionBy("cluster_id").parquet(s"$dir/index")
     LayoutFs.delete(s"$dir/MANIFEST")
     LayoutFs.list(dir)
@@ -784,9 +753,9 @@ object RabitqIndex {
         (f.name == "MANIFEST.tmp" || f.name == "BUILT_K"))
       .foreach(f => LayoutFs.delete(f.path))
     // the three model sidecars are independent tiny single-task writes —
-    // overlap them (inParallel) so the save pays one write latency, not
+    // overlap them so the save pays one write latency, not
     // three; data-first crash ordering is preserved (index wrote above)
-    inParallel(
+    Overlap(spark,
       model.rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
         .toDF("row_id", "row").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/rotation"),
@@ -1204,8 +1173,8 @@ object RabitqIndex {
   def rebalanceIndex(spark: SparkSession, dir: String, base: DataFrame,
                      maxSizeFactor: Double = 1.5,
                      fitSampleCap: Long = 100000L): RebalanceReport =
-    withLayoutLock(dir)(
-      rebalanceUnlocked(spark, dir, base, maxSizeFactor, fitSampleCap))
+    withLayoutLock(dir)(Overlap.labelled(spark, s"rebalance: $dir")(
+      rebalanceUnlocked(spark, dir, base, maxSizeFactor, fitSampleCap)))
 
   private[graft] def rebalanceUnlocked(
       spark: SparkSession, dir: String, base: DataFrame,
@@ -1395,7 +1364,7 @@ object RabitqIndex {
         // one pass over the staged files: per-cluster sizes, moved = Σ
         // (the former separate count() re-read the same files); the two
         // sidecar writes are independent of it — overlap all three
-        val (_, _, sizes2) = inParallel(
+        val (_, _, sizes2) = Overlap(spark,
           centroids2.zipWithIndex.map { case (cen, i) => (i, cen.toSeq) }.toSeq
             .toDF("cluster_id", "centroid").coalesce(1)
             .write.mode("overwrite").parquet(s"$staging/centroids"),
@@ -2195,9 +2164,9 @@ object RabitqIndex {
     */
   private[graft] def modelOfGen(spark: SparkSession, dir: String,
                                 gen: String): RabitqModel = {
-    // three independent tiny single-task reads — overlap them (inParallel)
+    // three independent tiny single-task reads — overlap them
     // so a model load pays one job latency, not three
-    val (p, rotation, centroids) = inParallel(
+    val (p, rotation, centroids) = Overlap(spark,
       spark.read.parquet(modelSidecarDir(dir, gen, "params")).head(),
       spark.read.parquet(s"$dir/rotation")
         .orderBy("row_id").collect()
@@ -2384,7 +2353,7 @@ object RabitqIndex {
         // when the layout is clean of crashed appends; footers list
         // every file, so with in-progress batches present fall back to
         // the committed scan's count (read-committed visibility).
-        val (nRowsOpt, nTomb, sizes) = inParallel(
+        val (nRowsOpt, nTomb, sizes) = Overlap(spark,
           if (footerFastPath && inProgressPrefixes(dir).isEmpty)
             clusterSizesFromFooters(spark, dir, gen).map(_.map(_._2).sum)
           else None,

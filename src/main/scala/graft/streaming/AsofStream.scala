@@ -128,12 +128,6 @@ object AsofStream {
       chunks: Int = 3, stateParts: Int = 4): DataFrame = {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // every micro-batch snapshots the state store per shuffle partition;
-    // size the stream's partition width for the drive (restored after) —
-    // a deployment sizes it to key cardinality instead
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    try {
     def gather(df: DataFrame, cols: (String, String, String), side: Int): Seq[TaggedIn] =
       df.select(col(cols._1).cast("long"), col(cols._2).cast("timestamp"),
           col(cols._3).cast("long"))
@@ -147,8 +141,13 @@ object AsofStream {
       .sortBy(t => (t.tsUs, t.side, t.id))
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TaggedIn]
     val name = s"asof_stream_${runCounter.incrementAndGet()}"
-    val q = asof(ms.toDS().withWatermark("ts", "1 second"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    // every micro-batch snapshots the state store per shuffle partition;
+    // size the stream's partition width for the drive (StreamConf) — a
+    // deployment sizes it to key cardinality instead
+    val q = StreamConf.start(spark, stateParts) {
+      asof(ms.toDS().withWatermark("ts", "1 second"))
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+    }
     val chunkSize = math.max(1, (all.size + chunks - 1) / chunks)
     all.grouped(chunkSize).foreach { c => ms.addData(c); q.processAllAvailable() }
     // ONE flusher batch suffices: its max event time advances the
@@ -163,9 +162,6 @@ object AsofStream {
     q.processAllAvailable()
     q.stop()
     spark.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts.toString)
-    }
   }
 
   /** Drive the streaming as-of join from a PARQUET FILE SOURCE — the
@@ -194,104 +190,79 @@ object AsofStream {
       dir: String, chunks: Int = 3, stateParts: Int = 4,
       parquetSink: Boolean = false): DataFrame = {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    val defaultStore = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val defaultChangelog =
-      spark.conf.getOption("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // incremental changelog commits instead of a full RocksDB snapshot
-    // upload per micro-batch — the configuration a large-state deployment
-    // runs, and most of the per-batch fixed cost at small state
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
-      def shape(df: DataFrame, cols: (String, String, String), side: Int) = df.select(
-        col(cols._1).cast("long").as("key"), col(cols._2).cast("timestamp").as("ts"),
-        lit(side).as("side"), col(cols._3).cast("long").as("id"),
-        lit(0.0).as("value"))
-        .filter(col("key").isNotNull && col("ts").isNotNull && col("id").isNotNull)
-      val tagged = shape(right, rightCols, 0).unionByName(shape(left, leftCols, 1))
-        .withColumn("ts_us", unix_micros(col("ts")))
-      // event-time chunk boundaries: exact quantiles (err 0), not a global
-      // sort — each chunk write below is a parallel filtered scan.
-      // chunks=1 needs no boundaries (approxQuantile returns null for an
-      // empty probability array — don't call it)
-      val bounds =
-        if (chunks <= 1) Array.empty[Long]
-        else tagged.stat
-          .approxQuantile("ts_us", (1 until chunks).map(_.toDouble / chunks).toArray, 0.0)
-          .map(_.toLong)
-      // empty input ⇒ approxQuantile returns an empty array — degrade to a
-      // single (empty) chunk instead of indexing past the bounds
-      val lo = Long.MinValue +: bounds
-      val hi = bounds :+ Long.MaxValue
-      val effChunks = bounds.length + 1
-      val inDir = s"$dir/in"
-      // FileStreamSource replays files in modification-time order, and part
-      // files written in quick succession can share an mtime on
-      // coarse-granularity filesystems — ties then replay in arbitrary
-      // listing order, letting a later chunk advance the watermark past an
-      // earlier one (whose rows would be dropped as late, silently diverging
-      // from the batch join). Stamp each chunk's files with strictly
-      // increasing mtimes so replay order never depends on fs granularity.
-      val inDirNorm = inDir.stripPrefix("file:")
-      val stamped = scala.collection.mutable.Set.empty[String]
-      val mtime0 = System.currentTimeMillis() - (effChunks + 2L) * 60000L
-      def stampNewFiles(stampMs: Long): Unit =
-        graft.operators.LayoutFs.list(inDirNorm)
-          .filter(e => !e.isDir && !stamped.contains(e.name))
-          .foreach { e =>
-            graft.operators.LayoutFs.setLastModified(e.path, stampMs)
-            stamped += e.name
-          }
-      (0 until effChunks).foreach { i =>
-        val chunk = if (effChunks == 1) tagged  // no boundaries — skip the filter
-          else tagged.filter(col("ts_us") > lo(i) && col("ts_us") <= hi(i))
-        chunk.drop("ts_us").coalesce(1)
-          .write.mode("append").parquet(inDir)
-        stampNewFiles(mtime0 + i * 60000L)
-      }
-      // one flusher file, exactly as runOnce: it advances the watermark and
-      // the engine's required no-data batch drains the buffered lefts. A
-      // CONSTANT far-future event time (year 2200) replaces a max(ts)
-      // aggregate over the input — one fewer full scan; any on-time event
-      // is below it by construction (event-time data beyond 2200 would be
-      // upstream corruption, filtered by a deployment's validity bounds)
-      spark.range(1).select(lit(-1L).as("key"),
-        timestamp_micros(lit(7258118400000000L)).as("ts"),
-        lit(0).as("side"), lit(-1L).as("id"), lit(0.0).as("value"))
-        .coalesce(1).write.mode("append").parquet(inDir)
-      stampNewFiles(mtime0 + effChunks * 60000L)
-      import spark.implicits._
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "key BIGINT, ts TIMESTAMP, side INT, id BIGINT, value DOUBLE")
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(inDir).as[TaggedIn]
-      val name = s"asof_fstream_${runCounter.incrementAndGet()}"
-      val out = asof(src.withWatermark("ts", "1 second"))
-      val writer =
-        if (parquetSink) out.writeStream.format("parquet").option("path", s"$dir/out")
-        else out.writeStream.format("memory").queryName(name)
-      val q = writer.outputMode("append")
-        .option("checkpointLocation", s"$dir/ckpt").start()
-      q.processAllAvailable()
-      q.stop()
-      if (parquetSink) spark.read.parquet(s"$dir/out") else spark.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts.toString)
-      defaultStore match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      defaultChangelog match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
+    def shape(df: DataFrame, cols: (String, String, String), side: Int) = df.select(
+      col(cols._1).cast("long").as("key"), col(cols._2).cast("timestamp").as("ts"),
+      lit(side).as("side"), col(cols._3).cast("long").as("id"),
+      lit(0.0).as("value"))
+      .filter(col("key").isNotNull && col("ts").isNotNull && col("id").isNotNull)
+    val tagged = shape(right, rightCols, 0).unionByName(shape(left, leftCols, 1))
+      .withColumn("ts_us", unix_micros(col("ts")))
+    // event-time chunk boundaries: exact quantiles (err 0), not a global
+    // sort — each chunk write below is a parallel filtered scan.
+    // chunks=1 needs no boundaries (approxQuantile returns null for an
+    // empty probability array — don't call it)
+    val bounds =
+      if (chunks <= 1) Array.empty[Long]
+      else tagged.stat
+        .approxQuantile("ts_us", (1 until chunks).map(_.toDouble / chunks).toArray, 0.0)
+        .map(_.toLong)
+    // empty input ⇒ approxQuantile returns an empty array — degrade to a
+    // single (empty) chunk instead of indexing past the bounds
+    val lo = Long.MinValue +: bounds
+    val hi = bounds :+ Long.MaxValue
+    val effChunks = bounds.length + 1
+    val inDir = s"$dir/in"
+    // FileStreamSource replays files in modification-time order, and part
+    // files written in quick succession can share an mtime on
+    // coarse-granularity filesystems — ties then replay in arbitrary
+    // listing order, letting a later chunk advance the watermark past an
+    // earlier one (whose rows would be dropped as late, silently diverging
+    // from the batch join). Stamp each chunk's files with strictly
+    // increasing mtimes so replay order never depends on fs granularity.
+    val inDirNorm = inDir.stripPrefix("file:")
+    val stamped = scala.collection.mutable.Set.empty[String]
+    val mtime0 = System.currentTimeMillis() - (effChunks + 2L) * 60000L
+    def stampNewFiles(stampMs: Long): Unit =
+      graft.operators.LayoutFs.list(inDirNorm)
+        .filter(e => !e.isDir && !stamped.contains(e.name))
+        .foreach { e =>
+          graft.operators.LayoutFs.setLastModified(e.path, stampMs)
+          stamped += e.name
+        }
+    (0 until effChunks).foreach { i =>
+      val chunk = if (effChunks == 1) tagged  // no boundaries — skip the filter
+        else tagged.filter(col("ts_us") > lo(i) && col("ts_us") <= hi(i))
+      chunk.drop("ts_us").coalesce(1)
+        .write.mode("append").parquet(inDir)
+      stampNewFiles(mtime0 + i * 60000L)
     }
+    // one flusher file, exactly as runOnce: it advances the watermark and
+    // the engine's required no-data batch drains the buffered lefts. A
+    // CONSTANT far-future event time (year 2200) replaces a max(ts)
+    // aggregate over the input — one fewer full scan; any on-time event
+    // is below it by construction (event-time data beyond 2200 would be
+    // upstream corruption, filtered by a deployment's validity bounds)
+    spark.range(1).select(lit(-1L).as("key"),
+      timestamp_micros(lit(7258118400000000L)).as("ts"),
+      lit(0).as("side"), lit(-1L).as("id"), lit(0.0).as("value"))
+      .coalesce(1).write.mode("append").parquet(inDir)
+    stampNewFiles(mtime0 + effChunks * 60000L)
+    import spark.implicits._
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "key BIGINT, ts TIMESTAMP, side INT, id BIGINT, value DOUBLE")
+    val src = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+      .parquet(inDir).as[TaggedIn]
+    val name = s"asof_fstream_${runCounter.incrementAndGet()}"
+    val out = asof(src.withWatermark("ts", "1 second"))
+    val writer =
+      if (parquetSink) out.writeStream.format("parquet").option("path", s"$dir/out")
+      else out.writeStream.format("memory").queryName(name)
+    val q = StreamConf.start(spark, stateParts, rocksDb = true) {
+      writer.outputMode("append").option("checkpointLocation", s"$dir/ckpt").start()
+    }
+    q.processAllAvailable()
+    q.stop()
+    if (parquetSink) spark.read.parquet(s"$dir/out") else spark.table(name)
   }
 }

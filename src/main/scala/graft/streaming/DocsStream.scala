@@ -37,11 +37,11 @@ object DocsStream {
         (graft.operators.LayoutFs.parent(path),
           graft.operators.LayoutFs.baseName(path))
       else (path, "*")
-    // state = first-seen fingerprints in the watermark horizon; scope the
+    // state = first-seen fingerprints in the watermark horizon; size the
     // store width for the drive (StreamConf) instead of paying the full
     // session shuffle width in per-batch store commits
-    StreamConf.withStateParts(spark, stateParts) {
-      val q = spark.readStream
+    val q = StreamConf.start(spark, stateParts) {
+      spark.readStream
         .schema(docsSchema)
         .option("pathGlobFilter", glob)
         .parquet(dir)
@@ -56,9 +56,9 @@ object DocsStream {
         .queryName(queryName)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      spark.table(queryName)
     }
+    q.awaitTermination()
+    spark.table(queryName)
   }
 
   /** Streaming incremental ingest — the continuous counterpart of
@@ -123,11 +123,11 @@ object DocsStream {
         fps.filter(!mightContain)
           .unionByName(fps.filter(mightContain).join(histFps, Seq("fp"), "left_anti"))
     }
-    // scope the state-store width for the drive (StreamConf): the only
+    // size the state-store width for the drive (StreamConf): the only
     // stateful exchange is the dropDuplicatesWithinWatermark below — the
     // bloom filter and the broadcast anti-join shuffle nothing
-    StreamConf.withStateParts(spark, stateParts) {
-      val q = newFps
+    val q = StreamConf.start(spark, stateParts) {
+      newFps
         .withColumn("ts", current_timestamp())
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("fp")
@@ -138,9 +138,9 @@ object DocsStream {
         .queryName(queryName)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      spark.table(queryName)
     }
+    q.awaitTermination()
+    spark.table(queryName)
   }
 
   /** The q95 stream-vs-batch parity gate in ONE tagged-union shuffle:

@@ -90,17 +90,17 @@ object EventsStream {
   def runOnce(spark: SparkSession, path: String, minutes: Int, queryName: String,
               stateParts: Int = 4): DataFrame = {
     // state = one row per (window, event_type) — a few thousand rows;
-    // scope the store width to that, not the session's shuffle width
-    StreamConf.withStateParts(spark, stateParts) {
-      val q = windowedCountsStream(spark, path, minutes)
+    // size the store width to that, not the session's shuffle width
+    val q = StreamConf.start(spark, stateParts) {
+      windowedCountsStream(spark, path, minutes)
         .writeStream
         .outputMode("complete")
         .format("memory")
         .queryName(queryName)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      spark.table(queryName)
     }
+    q.awaitTermination()
+    spark.table(queryName)
   }
 }

@@ -75,10 +75,11 @@ object IdempotentSink {
     LayoutFs.mkdirs(s"$commitRoot/_commits/$queryName")
     LayoutCommit.exclusiveCreate(inprog)
     val staging = s"$commitRoot/_staging/$prefix"
-    df.sparkSession.sparkContext.setJobDescription(s"sink: stage $prefix")
-    val w0 = df.write.mode("overwrite")
-    val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
-    w.parquet(staging)
+    graft.Overlap.labelled(df.sparkSession, s"sink: stage $prefix") {
+      val w0 = df.write.mode("overwrite")
+      val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
+      w.parquet(staging)
+    }
     onStaged() // test seam: a maintenance pass fired between stage and promote
     // promote + commit under the layout lease: serialized against every
     // maintenance mutator, target re-resolved while nothing can swap it

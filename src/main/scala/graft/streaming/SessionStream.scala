@@ -112,18 +112,18 @@ object SessionStream {
     */
   def runOnce(spark: SparkSession, path: String, gapMinutes: Int, queryName: String,
               stateParts: Int = 4): DataFrame = {
-    // state = one open session per user in the watermark horizon; scope
+    // state = one open session per user in the watermark horizon; size
     // the store width to that cardinality, not the session shuffle width
-    StreamConf.withStateParts(spark, stateParts) {
-      val q = sessionizeStream(spark, path, gapMinutes)
+    val q = StreamConf.start(spark, stateParts) {
+      sessionizeStream(spark, path, gapMinutes)
         .writeStream
         .outputMode("append")
         .format("memory")
         .queryName(queryName)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      spark.table(queryName)
     }
+    q.awaitTermination()
+    spark.table(queryName)
   }
 }

@@ -53,29 +53,25 @@ object UpsertStream {
       stateParts: Int = 4): DataFrame = {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    try {
-      val rows = events
-        .select(col("user_id").cast("long"), col("event_type"),
-          col("ts").cast("timestamp"), col("event_id").cast("long"),
-          col("value").cast("double"))
-        .collect().toSeq
-        .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3))
-        .map(r => EvIn(r.getLong(0), r.getString(1), r.getTimestamp(2).toInstant,
-          r.getLong(3), r.getDouble(4)))
-        .sortBy(e => (e.tsUs, e.event_id))
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EvIn]
-      val name = s"upsert_stream_${runCounter.incrementAndGet()}"
-      val q = upsert(ms.toDS())
+    val rows = events
+      .select(col("user_id").cast("long"), col("event_type"),
+        col("ts").cast("timestamp"), col("event_id").cast("long"),
+        col("value").cast("double"))
+      .collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3))
+      .map(r => EvIn(r.getLong(0), r.getString(1), r.getTimestamp(2).toInstant,
+        r.getLong(3), r.getDouble(4)))
+      .sortBy(e => (e.tsUs, e.event_id))
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EvIn]
+    val name = s"upsert_stream_${runCounter.incrementAndGet()}"
+    val q = StreamConf.start(spark, stateParts) {
+      upsert(ms.toDS())
         .writeStream.outputMode("update").format("memory").queryName(name).start()
-      val chunkSize = math.max(1, (rows.size + chunks - 1) / chunks)
-      rows.grouped(chunkSize).foreach { c => ms.addData(c); q.processAllAvailable() }
-      q.stop()
-      spark.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts.toString)
     }
+    val chunkSize = math.max(1, (rows.size + chunks - 1) / chunks)
+    rows.grouped(chunkSize).foreach { c => ms.addData(c); q.processAllAvailable() }
+    q.stop()
+    spark.table(name)
   }
 
   /** Drive the upsert from a PARQUET FILE SOURCE — the non-harness path:
@@ -98,61 +94,38 @@ object UpsertStream {
       chunks: Int = 3, stateParts: Int = 4, parquetSink: Boolean = false): DataFrame = {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    val defaultStore = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val defaultChangelog =
-      spark.conf.getOption("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // incremental changelog commits, not a full snapshot per micro-batch
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
-      val inDir = s"$dir/in"
-      events
-        .select(col("user_id").cast("long"), col("event_type"),
-          col("ts").cast("timestamp"), col("event_id").cast("long"),
-          col("value").cast("double"))
-        .filter(col("user_id").isNotNull && col("event_type").isNotNull &&
-          col("ts").isNotNull && col("event_id").isNotNull)
-        .repartition(chunks)
-        .write.mode("overwrite").parquet(inDir)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, ts TIMESTAMP, event_id BIGINT, value DOUBLE")
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir).as[EvIn]
-      val name = s"upsert_fstream_${runCounter.incrementAndGet()}"
-      val out = upsert(src)
-      val writer =
-        if (parquetSink) out.writeStream.foreachBatch {
-          (batch: Dataset[UpOut], _: Long) =>
-            batch.write.mode("append").parquet(s"$dir/out")
-        }
-        else out.writeStream.format("memory").queryName(name)
-      val q = writer.outputMode("update")
-        .option("checkpointLocation", s"$dir/ckpt").start()
-      q.processAllAvailable()
-      q.stop()
-      if (parquetSink) {
-        // empty input ⇒ zero micro-batches ⇒ foreachBatch never ran and
-        // $dir/out does not exist — an empty changelog, not an error
-        if (graft.operators.LayoutFs.exists(s"$dir/out".stripPrefix("file:")))
-          spark.read.parquet(s"$dir/out")
-        else spark.emptyDataset[UpOut].toDF()
-      } else spark.table(name)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts.toString)
-      defaultStore match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val inDir = s"$dir/in"
+    events
+      .select(col("user_id").cast("long"), col("event_type"),
+        col("ts").cast("timestamp"), col("event_id").cast("long"),
+        col("value").cast("double"))
+      .filter(col("user_id").isNotNull && col("event_type").isNotNull &&
+        col("ts").isNotNull && col("event_id").isNotNull)
+      .repartition(chunks)
+      .write.mode("overwrite").parquet(inDir)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "user_id BIGINT, event_type STRING, ts TIMESTAMP, event_id BIGINT, value DOUBLE")
+    val src = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir).as[EvIn]
+    val name = s"upsert_fstream_${runCounter.incrementAndGet()}"
+    val out = upsert(src)
+    val writer =
+      if (parquetSink) out.writeStream.foreachBatch {
+        (batch: Dataset[UpOut], _: Long) =>
+          batch.write.mode("append").parquet(s"$dir/out")
       }
-      defaultChangelog match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
+      else out.writeStream.format("memory").queryName(name)
+    val q = StreamConf.start(spark, stateParts, rocksDb = true) {
+      writer.outputMode("update").option("checkpointLocation", s"$dir/ckpt").start()
     }
+    q.processAllAvailable()
+    q.stop()
+    if (parquetSink) {
+      // empty input ⇒ zero micro-batches ⇒ foreachBatch never ran and
+      // $dir/out does not exist — an empty changelog, not an error
+      if (graft.operators.LayoutFs.exists(s"$dir/out".stripPrefix("file:")))
+        spark.read.parquet(s"$dir/out")
+      else spark.emptyDataset[UpOut].toDF()
+    } else spark.table(name)
   }
 }

@@ -346,7 +346,7 @@ object VecsStream {
     // ONE lease across the whole pass: the describe→act sequence must
     // not interleave with another scheduler's pass (each acting on the
     // other's stale report), and the loop IS the maintenance window
-    RabitqIndex.withLayoutLock(idxDir) {
+    RabitqIndex.withLayoutLock(idxDir)(graft.Overlap.labelled(spark, s"maintenance: $idxDir") {
       // vacuum first: a crashed prior cycle's debris (unreferenced
       // generations, dead staging) must not ride along forever — pure
       // file metadata, no jobs; retired generations inside the retention
@@ -376,5 +376,5 @@ object VecsStream {
             known = Some((h.model, h.sizes.toMap)), recovered = true))
         else None
       MaintenanceReport(compacted, rebalanced, vac)
-    }
+    })
 }

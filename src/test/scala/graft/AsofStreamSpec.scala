@@ -31,6 +31,13 @@ class AsofStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("key", "ts", "id")
   }
 
+  private val StreamKeys = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+
+  /** The stream-start keys as the session holds them (None = unset). */
+  private def streamConf: Seq[Option[String]] = StreamKeys.map(spark.conf.getAll.get)
+
   private def streamed(left: DataFrame, right: DataFrame, chunks: Int) =
     AsofStream.runOnce(spark, left, right, ("key", "ts", "id"), ("key", "ts", "id"), chunks)
       .select("key", "left_id", "right_id").collect()
@@ -62,6 +69,16 @@ class AsofStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (chunks <- Seq(1, 4, 17)) {
       assert(streamed(left, right, chunks) == expect, s"chunks=$chunks")
     }
+    // the drive's state width is set only around start(): with the
+    // session width unset, it stays unset (and the store keys untouched)
+    spark.conf.unset("spark.sql.shuffle.partitions")
+    try {
+      val before = streamConf
+      assert(before.head.isEmpty)
+      AsofStream.runOnce(spark, left, right, ("key", "ts", "id"), ("key", "ts", "id"),
+        chunks = 2, stateParts = 2)
+      assert(streamConf == before)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     // spot-check the semantics directly
     assert(expect.contains((1L, 1L, -1L)))  // before any right
     assert(expect.contains((1L, 2L, 11L)))  // equal-ts inclusive, id tie-break
@@ -175,8 +192,18 @@ class AsofStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq("last_event_id" -> col("event_id"), "last_value" -> col("value")))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
     val dir = java.nio.file.Files.createTempDirectory("upsert_fsrc").toString
+    StreamKeys.tail.foreach(spark.conf.unset)
+    val confBefore = streamConf
     try {
-      val changelog = graft.streaming.UpsertStream.runFileSource(spark, df, dir, chunks = 3)
+      val changelog = graft.streaming.UpsertStream.runFileSource(spark, df, dir,
+        chunks = 3, stateParts = 2)
+      // the session reads exactly as before (unset keys stay unset) ...
+      assert(streamConf == confBefore)
+      // ... while the stream itself ran with the drive's conf
+      val offsets0 = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "ckpt", "offsets", "0")), "UTF-8")
+      assert(offsets0.contains("\"spark.sql.shuffle.partitions\":\"2\""), offsets0)
+      assert(offsets0.contains("RocksDBStateStoreProvider"), offsets0)
       val got = changelog.groupBy(col("user_id"), col("event_type"))
         .agg(max_by(struct(col("last_event_id"), col("last_value")),
           struct(col("ts_us"), col("last_event_id"))).as("w"))

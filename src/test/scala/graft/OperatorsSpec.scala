@@ -660,25 +660,46 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val history = Seq((1L, "a")).toDF("doc_id", "text")
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val (bitsBefore, itemsBefore) = (spark.conf.get(bitsKey), spark.conf.get(itemsKey))
+    def caps = (spark.conf.getOption(bitsKey), spark.conf.getOption(itemsKey))
+    val capsBefore = caps
+    def filterBytes(pred: org.apache.spark.sql.Column): Array[Byte] = {
+      var bin: Array[Byte] = null
+      org.apache.spark.sql.graft.ColumnShim.expression(pred).foreach {
+        case lit: org.apache.spark.sql.catalyst.expressions.Literal
+            if lit.dataType == org.apache.spark.sql.types.BinaryType =>
+          bin = lit.value.asInstanceOf[Array[Byte]]
+        case _ => ()
+      }
+      bin
+    }
+    // the session caps are read by every concurrent query's injected
+    // runtime join filters: a watcher polls them for the whole build and
+    // they must never move
+    val capsSeen = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+    val building = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() => while (building.get) { capsSeen.add(caps); Thread.sleep(1) })
+    watcher.start()
     // 10M expected docs at 1% fpp needs ~96M bits — past the 67M default
     // cap BloomFilterAggregate clamps to without error. The EFFECTIVE
     // size is observable in the serialized filter embedded in the
     // predicate: it must be bitmap-sized for the REQUESTED numBits, not
     // the clamp.
-    val pred = Dedup.historyBloomPredicate(history, 10000000L, 0.01).get
-    var binLen = -1L
-    org.apache.spark.sql.graft.ColumnShim.expression(pred).foreach {
-      case lit: org.apache.spark.sql.catalyst.expressions.Literal
-          if lit.dataType == org.apache.spark.sql.types.BinaryType =>
-        binLen = lit.value.asInstanceOf[Array[Byte]].length.toLong
-      case _ => ()
-    }
+    val pred = try Dedup.historyBloomPredicate(history, 10000000L, 0.01).get
+      finally { building.set(false); watcher.join() }
+    val binLen = filterBytes(pred).length.toLong
     val wantBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(10000000L, 0.01)
     assert(binLen >= wantBits / 8, s"filter binary $binLen B < requested ${wantBits / 8} B — clamped")
-    // the caps are raised only for the build, then restored: leaving
-    // them raised would resize Spark's own injected join filters
-    assert(spark.conf.get(bitsKey) == bitsBefore && spark.conf.get(itemsKey) == itemsBefore)
+    assert(!capsSeen.isEmpty)
+    capsSeen.forEach(c => assert(c == capsBefore, s"session caps moved during the build: $c"))
+    assert(caps == capsBefore)
+    // the filter is exactly Spark's own bloom over the non-NULL digests
+    val small = Seq((1L, "a"), (2L, "b"), (3L, null.asInstanceOf[String]), (4L, "a"))
+      .toDF("doc_id", "text").repartition(3)
+    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(10L, 0.01)
+    val expect = new java.io.ByteArrayOutputStream()
+    small.stat.bloomFilter(Dedup.textFp, 10L, numBits).writeTo(expect)
+    assert(filterBytes(Dedup.historyBloomPredicate(small, 10L, 0.01).get)
+      .sameElements(expect.toByteArray))
   }
 
   test("ngram jaccard: identical docs get 1.0, disjoint get filtered") {
