@@ -27,6 +27,8 @@ import org.apache.spark.sql.SparkSession
   *     are cancelled but its driver code cannot be, so the timeout means
   *     the op must be treated as crashed, like a process kill at the same
   *     point (every caller's crash protocol already covers that).
+  *     Query-gate legs share the limit: it only fires on a leg that is
+  *     already hung, and a gate leg runs for seconds.
   */
 object Overlap {
 

@@ -144,9 +144,9 @@ object Dedup {
     *
     *   1. build a Bloom filter over history text digests, distributed
     *      (the bitmap format behind Spark's runtime join filters): partial
-    *      filter per partition, OR-merge — only the per-partition bitmaps
-    *      (~1.2 B/doc at 1% fpp) leave the executors, and the merged one
-    *      is embedded as a plan literal;
+    *      filter per partition, OR-merged on the executors — only the merged
+    *      bitmap (~1.2 B/doc at 1% fpp) reaches the driver, where it is
+    *      embedded as a plan literal;
     *   2. cheap-test every incoming digest against it with the codegen
     *      `BloomFilterMightContain` predicate — no false negatives, so
     *      the negatives are DEFINITELY new and skip everything below;
@@ -185,9 +185,12 @@ object Dedup {
 
   /** Distributed Bloom-sketch build over `history`'s text digests +
     * membership predicate over a `fp` column: a partial filter per
-    * partition over the non-NULL digests, OR-merged on the driver; the
-    * merged bitmap is embedded as a plan literal read by the codegen
-    * `BloomFilterMightContain` predicate. The filter is built directly
+    * partition over the non-NULL digests, OR-merged on the executors in a
+    * tree whose last merge also runs on an executor, so only the final
+    * bitmap reaches the driver (one bitmap per history partition would
+    * count ~1.2 MB each against `spark.driver.maxResultSize` at 2^20
+    * items); the merged bitmap is embedded as a plan literal read by the
+    * codegen `BloomFilterMightContain` predicate. The filter is built directly
     * (the bytes `BloomFilterAggregate` would produce) rather than through
     * that aggregate, which SILENTLY clamps its size to the session's
     * runtime-join-filter maxima (maxNumItems default 4M, maxNumBits
@@ -205,17 +208,14 @@ object Dedup {
     import org.apache.spark.util.sketch.BloomFilter
     val nItems = math.max(expectedHistoryDocs, 1L)
     val numBits = BloomFilter.optimalNumOfBits(nItems, fpp)
-    val parts = history.select(textFp.as("fp")).where(col("fp").isNotNull)
+    val bloom = history.select(textFp.as("fp")).where(col("fp").isNotNull)
       .as(org.apache.spark.sql.Encoders.scalaLong).rdd
-      .mapPartitions { fps =>
-        val part = BloomFilter.create(nItems, numBits)
-        fps.foreach(fp => part.putLong(fp))
-        Iterator.single(part)
-      }
-    // an empty history (zero partitions, or no non-NULL digest) means
-    // everything incoming is new
-    Option.when(parts.getNumPartitions > 0)(parts.reduce(_ mergeInPlace _))
-      .filter(_.cardinality() > 0)
+      .treeAggregate(BloomFilter.create(nItems, numBits),
+        (bf: BloomFilter, fp: Long) => { bf.putLong(fp); bf },
+        (a: BloomFilter, b: BloomFilter) => a.mergeInPlace(b),
+        depth = 2, finalAggregateOnExecutor = true)
+    // an empty history (no non-NULL digest) means everything incoming is new
+    Some(bloom).filter(_.cardinality() > 0)
       .map { bf =>
         val bytes = new java.io.ByteArrayOutputStream()
         bf.writeTo(bytes)

@@ -657,7 +657,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("historyBloomPredicate builds past the silent clamp and restores the session caps") {
     import spark.implicits._
-    val history = Seq((1L, "a")).toDF("doc_id", "text")
+    val history = Seq((1L, "a")).toDF("doc_id", "text").repartition(4)
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     def caps = (spark.conf.getOption(bitsKey), spark.conf.getOption(itemsKey))
@@ -678,6 +678,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val capsSeen = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
     val building = new java.util.concurrent.atomic.AtomicBoolean(true)
     val watcher = new Thread(() => while (building.get) { capsSeen.add(caps); Thread.sleep(1) })
+    // every byte a task returns to the driver counts against
+    // spark.driver.maxResultSize: the per-partition bitmaps must merge on
+    // the executors, so only ~one bitmap comes back however many
+    // partitions history has
+    val toDriver = new java.util.concurrent.atomic.AtomicLong(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val marker = "bloom spec listener drain"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => toDriver.addAndGet(m.resultSize))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
     watcher.start()
     // 10M expected docs at 1% fpp needs ~96M bits — past the 67M default
     // cap BloomFilterAggregate clamps to without error. The EFFECTIVE
@@ -685,10 +700,19 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // predicate: it must be bitmap-sized for the REQUESTED numBits, not
     // the clamp.
     val pred = try Dedup.historyBloomPredicate(history, 10000000L, 0.01).get
-      finally { building.set(false); watcher.join() }
+      finally {
+        building.set(false); watcher.join()
+        // the listener bus is FIFO: once the marker job's start is seen,
+        // every task end of the build has been delivered
+        Overlap.labelled(spark, marker)(spark.sparkContext.parallelize(1 to 1, 1).count())
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        spark.sparkContext.removeSparkListener(listener)
+      }
     val binLen = filterBytes(pred).length.toLong
     val wantBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(10000000L, 0.01)
     assert(binLen >= wantBits / 8, s"filter binary $binLen B < requested ${wantBits / 8} B — clamped")
+    assert(toDriver.get < 2 * binLen,
+      s"tasks returned ${toDriver.get} B to the driver for one $binLen B filter")
     assert(!capsSeen.isEmpty)
     capsSeen.forEach(c => assert(c == capsBefore, s"session caps moved during the build: $c"))
     assert(caps == capsBefore)
