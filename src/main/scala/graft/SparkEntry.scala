@@ -2034,48 +2034,51 @@ object SparkEntry {
           col("n_tombstones"))
     }),
     "q121_swap_recovery" -> ((s, dir) => {
-      // CRASH-RECOVERY gate for the rebalance ROLL-FORWARD swap: a
-      // process died right after declaring the point of no return (all
-      // re-encoded rows + the new sidecar staged durably, _COMMIT
-      // written, ZERO renames done). The next maintenance pass — here
-      // vacuumIndex, the loop's first step — must FINISH the swap, and
-      // search through the recovered layout must still equal brute
-      // force. Construction: save a healthy index, then manufacture the
-      // committed state — cluster 0 "re-split" into clusters 0 and k
-      // (half the rows each, re-labeled only: the new centroid k is an
-      // exact COPY of centroid 0, so the rows' codes/factors stay valid
-      // against their new centroid and full probe + full rerank remains
-      // an exact oracle) plus the k+1-centroid sidecar. A row lost,
-      // duplicated, or left in a stale dir by the recovery flips the
-      // row set; a staging reclaimed as debris (the pre-roll-forward
-      // failure mode) loses half of cluster 0 outright.
+      // CRASH-WINDOW gate for the rebalance publish: a process died after
+      // writing a COMPLETE next generation but before the MANIFEST write
+      // — index-v2 holds its re-encoded data, its `_CARRY` listing and
+      // the grown `_centroids`/`_params`, and nothing references it.
+      // Readers must keep resolving `index`, vacuumIndex must reclaim
+      // index-v2 as unreferenced debris (without following its listing
+      // into the live generation's files), and search through the
+      // layout must still equal brute force. Construction: save a
+      // healthy index, then manufacture the unpublished generation —
+      // cluster 0 "re-split" into clusters 0 and k (half the rows each,
+      // re-labeled only, centroid k an exact COPY of centroid 0) and
+      // every other cluster carried by the real listing builder. A
+      // reader resolving the orphan, its k+1-centroid model leaking, a
+      // vacuum that spares it, or one that reclaims a file its listing
+      // names flips the require()s or the row set.
       val emb = T(s, dir, "embeddings")
       val tmp = graft.TempDirs.create("graft_q121_")
+      val idx = s"$tmp/idx"
+      val next = s"$idx/index-v2"
       val (model, index0) = RabitqIndex.build(s, emb, NumClusters, Seed)
-      RabitqIndex.save(s, model, index0, s"$tmp/idx")
-      val dataDir = RabitqIndex.indexDataDir(s"$tmp/idx")
-      val c0 = s.read.parquet(dataDir).filter(col("cluster_id") === 0)
+      RabitqIndex.save(s, model, index0, idx)
+      val c0 = s.read.parquet(s"$idx/index").filter(col("cluster_id") === 0)
       require(c0.count() >= 2, "fixture cluster 0 too small for a split")
-      val staging = s"$tmp/idx/_rebalance_staging"
       c0.withColumn("cluster_id",
           when(col("vec_id") % 2 === 0, lit(0)).otherwise(lit(NumClusters)))
-        .write.partitionBy("cluster_id").parquet(s"$staging/index")
-      val cents = s.read.parquet(s"$tmp/idx/centroids")
+        .write.partitionBy("cluster_id").parquet(next)
+      RabitqIndex.writeCarryListing(next,
+        RabitqIndex.buildCarryListing(idx, "index", Set(0)))
+      val cents = s.read.parquet(s"$idx/centroids")
       cents.unionByName(cents.filter(col("cluster_id") === 0)
           .withColumn("cluster_id", lit(NumClusters)))
-        .coalesce(1).write.parquet(s"$staging/centroids")
-      s.read.parquet(s"$tmp/idx/params")
+        .coalesce(1).write.parquet(s"$next/_centroids")
+      s.read.parquet(s"$idx/params")
         .withColumn("num_clusters", lit(NumClusters + 1))
-        .coalesce(1).write.parquet(s"$staging/params")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(staging, "_COMMIT"), "0".getBytes)
-      val rep = RabitqIndex.vacuumIndex(s"$tmp/idx") // the recovery entry
-      require(!new java.io.File(staging).exists &&
-        !rep.removed.exists(_.contains("_rebalance_staging")),
-        s"committed swap was reclaimed as debris instead of finished ($rep)")
-      val (m2, live) = RabitqIndex.loadLive(s, s"$tmp/idx")
-      require(m2.params.numClusters == NumClusters + 1,
-        "staged sidecar not swapped in by the recovery")
+        .coalesce(1).write.parquet(s"$next/_params")
+      require(RabitqIndex.readCarry(idx, "index-v2").nonEmpty,
+        "gate is vacuous: the unpublished generation carries nothing")
+      require(RabitqIndex.indexDataDir(idx) == s"$idx/index",
+        "readers resolved a generation no MANIFEST write published")
+      val rep = RabitqIndex.vacuumIndex(idx) // default retention window
+      require(rep.removed.contains(next) && !new java.io.File(next).exists,
+        s"the unpublished generation was not reclaimed as debris ($rep)")
+      val (m2, live) = RabitqIndex.loadLive(s, idx)
+      require(m2.params.numClusters == NumClusters,
+        "the unpublished generation's grown model reached a reader")
       RabitqQuery.topK(s, m2, live, emb, annQueries(s, dir),
         nprobe = m2.params.numClusters, topk = 10, rerank = fullRerank(s, dir))
         .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -2129,9 +2132,8 @@ object SparkEntry {
       // path. The same schedules that TEAR under a naive object-store
       // double (LifecycleContractSpec: last-writer-wins create admits
       // concurrent mutators; a reader racing the MANIFEST publish
-      // resolves a vacuumed generation; the in-place rebalance swap
-      // half-populates a cluster) must run to the exact brute-force row
-      // set here: a non-exclusive batch marker double-appends the
+      // resolves a vacuumed generation) must run to the exact brute-force
+      // row set here: a non-exclusive batch marker double-appends the
       // replay, a torn MANIFEST publish loses the generation, a
       // mis-swept staging loses the batch, a mis-carried tombstone log
       // resurrects deletes, a dropped generation-local model sidecar
@@ -2141,10 +2143,9 @@ object SparkEntry {
       // the upper half (batch 0 — it piles into the boundary clusters —
       // then a verbatim REPLAY of batch 0 that must no-op via the
       // If-None-Match marker), tombstone vec_id % 9 = 2, REBALANCE
-      // (CondPutCommit declares no atomic dir rename, so this takes the
-      // generation-versioned shape: index-v2 with the grown model
-      // riding inside it and the uncompacted log carried, published by
-      // one atomic MANIFEST PUT), compact (folds the carried log into
+      // (index-v2 with the grown model riding inside it and the
+      // uncompacted log carried, published by one atomic MANIFEST PUT),
+      // compact (folds the carried log into
       // index-v3 AND carries the generation-local sidecars forward),
       // vacuum at retain 0 (reclaims both retired generations) — live
       // set = ALL ∖ (% 9 = 2).
@@ -2192,15 +2193,15 @@ object SparkEntry {
     }),
     "q124_generation_manifest" -> ((s, dir) => {
       // FILE-REFERENCE GENERATION MANIFEST, driver-gated: the
-      // object-store rebalance carries every untouched cluster BY
+      // rebalance carries every untouched cluster BY
       // REFERENCE — the published generation's `_CARRY` listing names
       // the immutable source files in place (the Iceberg-manifest
       // shape; IO ∝ skew) instead of per-file copy (∝ corpus, the
       // ≤ r18 shape) — and vacuum REFCOUNTS listed files across
       // retained generations instead of retiring whole directories.
       // Construction: q116's skew recipe (model fit on the lower
-      // halfspace, everything appended through the frozen model) under
-      // CondPutCommit; rebalance publishes index-v2 whose untouched
+      // halfspace, everything appended through the frozen model);
+      // rebalance publishes index-v2 whose untouched
       // clusters are listing lines. require()s: a real split; a
       // non-empty listing with ZERO listed files physically copied
       // into the new generation; a retain-0 vacuum that reclaims the
@@ -2218,29 +2219,26 @@ object SparkEntry {
       RabitqIndex.appendVectors(s, model,
           emb.filter(element_at(col("embedding"), 1) >= 0f))
         .write.mode("append").partitionBy("cluster_id").parquet(s"$tmp/idx/index")
-      val (m2, live) = graft.operators.LayoutCommit.withOps(
-          graft.operators.CondPutCommit) {
-        val report = RabitqIndex.rebalanceIndex(s, s"$tmp/idx", emb,
-          maxSizeFactor = 1.4)
-        require(report.split.nonEmpty,
-          s"manifest gate is vacuous: no cluster split ($report)")
-        val carry = RabitqIndex.readCarry(s"$tmp/idx", "index-v2")
-        require(carry.nonEmpty,
-          "manifest gate is vacuous: nothing was carried by reference")
-        val carryNames = carry.map(_.split('/').last).toSet
-        val copied = Option(new java.io.File(s"$tmp/idx/index-v2").listFiles())
-          .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory)
-          .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
-          .count(f => carryNames.contains(f.getName))
-        require(copied == 0,
-          s"$copied carried files were physically copied — the carry " +
-            "must be metadata-only")
-        RabitqIndex.vacuumIndex(s"$tmp/idx", retainMs = 0L)
-        carry.foreach(e => require(new java.io.File(s"$tmp/idx/$e").isFile,
-          s"refcounted vacuum reclaimed a file the active listing " +
-            s"references: $e"))
-        RabitqIndex.loadLive(s, s"$tmp/idx")
-      }
+      val report = RabitqIndex.rebalanceIndex(s, s"$tmp/idx", emb,
+        maxSizeFactor = 1.4)
+      require(report.split.nonEmpty,
+        s"manifest gate is vacuous: no cluster split ($report)")
+      val carry = RabitqIndex.readCarry(s"$tmp/idx", "index-v2")
+      require(carry.nonEmpty,
+        "manifest gate is vacuous: nothing was carried by reference")
+      val carryNames = carry.map(_.split('/').last).toSet
+      val copied = Option(new java.io.File(s"$tmp/idx/index-v2").listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory)
+        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
+        .count(f => carryNames.contains(f.getName))
+      require(copied == 0,
+        s"$copied carried files were physically copied — the carry " +
+          "must be metadata-only")
+      RabitqIndex.vacuumIndex(s"$tmp/idx", retainMs = 0L)
+      carry.foreach(e => require(new java.io.File(s"$tmp/idx/$e").isFile,
+        s"refcounted vacuum reclaimed a file the active listing " +
+          s"references: $e"))
+      val (m2, live) = RabitqIndex.loadLive(s, s"$tmp/idx")
       RabitqQuery.topK(s, m2, live, emb, annQueries(s, dir),
         nprobe = m2.params.numClusters, topk = 10, rerank = fullRerank(s, dir))
         .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -2953,9 +2951,9 @@ object SparkEntry {
           |        row_number() OVER (PARTITION BY q.query_id ORDER BY list_distance(q.qe, b.be), b.vec_id) AS rank
           |      FROM q CROSS JOIN b)
           |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM d WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-      // q121: recovery is layout-pure over the full vector set (the
-      // "split" only re-labels half of cluster 0 against an identical
-      // centroid copy), so the oracle is q23's exact kNN verbatim
+      // q121: the unpublished generation is reclaimed and the original
+      // layout serves the full vector set, so the oracle is q23's exact
+      // kNN verbatim
       "q121_swap_recovery" -> knnSql,
       // q122: the mid-compaction batch lands whole in the new
       // generation and the folded tombstones stay folded, so the live

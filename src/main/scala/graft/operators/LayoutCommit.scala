@@ -3,9 +3,9 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 /** The FOUR commit primitives every crash-safety protocol in the saved
-  * index lifecycle is built from — the compaction MANIFEST swap
-  * (`VecsStream.compactSwap`), the rebalance `_COMMIT` marker and its
-  * roll-forward renames (`RabitqIndex.completeRebalanceSwap`), the
+  * index lifecycle is built from — the generation MANIFEST publish
+  * shared by compaction and rebalance (`RabitqIndex.publishGeneration`,
+  * with the rebalance's `_CARRY` listing writes before it), the
   * maintenance lease (`RabitqIndex.withLayoutLock`), and the
   * exactly-once streamed append (`streaming.IdempotentSink`).
   *
@@ -21,11 +21,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   *
   * The protocols are correct iff the layout's filesystem provides:
   *
-  *  1. '''atomic rename''' of a file or directory within the layout dir
-  *     (a concurrent reader sees the old name or the new name, never a
-  *     torn file / half a directory), and
+  *  1. '''atomic rename''' of a FILE within the layout dir (a concurrent
+  *     reader sees the old name or the new name, never a torn file), and
   *  2. '''atomic create-if-absent''' (exactly one of N concurrent
   *     creators of the same path succeeds).
+  *
+  * No protocol renames a directory: every layout mutation that readers
+  * can observe is a new generation published by one file write.
   *
   * [[PosixCommit]] (the default) provides both via `java.nio.file` —
   * LOCAL POSIX filesystems (and POSIX-faithful NFS) only. An HDFS
@@ -72,10 +74,11 @@ trait CommitOps {
     */
   def atomicMoveFile(src: String, dst: String): Unit
 
-  /** Atomic directory rename; the destination must not exist. Throws
-    * `NoSuchFileException` if `src` is already gone — callers use that
-    * to detect losing a rename race (exactly one of N concurrent movers
-    * of the same `src` succeeds).
+  /** Atomic rename of a single FILE; the destination must not exist.
+    * Throws `NoSuchFileException` if `src` is already gone — the lease
+    * break's rename-aside (`RabitqIndex.withLayoutLock`, its one caller)
+    * uses that to detect losing a rename race (exactly one of N
+    * concurrent movers of the same `src` succeeds).
     */
   def atomicRenameDir(src: String, dst: String): Unit
 
@@ -83,22 +86,6 @@ trait CommitOps {
     * call created the file (exactly one of N concurrent callers wins).
     */
   def exclusiveCreate(path: String, content: String = ""): Boolean
-
-  /** Does [[atomicRenameDir]] move a DIRECTORY atomically as a unit?
-    * True for POSIX rename(2) and the HDFS NameNode; false for object
-    * stores, where a "directory rename" is per-object copy+delete and a
-    * racing reader sees it half-populated. The one protocol that
-    * replaces live-read directories in place — the rebalance swap
-    * (`RabitqIndex.completeRebalanceSwap`) — consults this DECLARED
-    * capability and, when absent, takes the generation-versioned shape
-    * instead (rewrite into a fresh `index-vN` + atomic MANIFEST
-    * publish with untouched clusters carried by reference in the
-    * `_CARRY` listing — needs only atomic PUT). A plain s3a connector
-    * effectively claims this capability it does not have; the contract
-    * spec's naive double deliberately repeats that lie to demonstrate
-    * the tear.
-    */
-  def renamesDirAtomically: Boolean = true
 }
 
 /** The POSIX `java.nio.file` implementation — local filesystems (and
@@ -153,18 +140,10 @@ object PosixCommit extends CommitOps {
   *    protocols already tolerate (deterministic per-retry names +
   *    `IdempotentSink`'s sweep; staged sources are debris vacuum
   *    reclaims).
-  *  - [[atomicRenameDir]]: per-file copy then delete — NOT atomic as a
-  *    unit. Sufficient for single FILES routed through it (the lease
-  *    break's rename-aside: the aside PUT is atomic and the lock
-  *    DELETE is atomic — the only reader-visible step is the delete)
-  *    but a DIRECTORY mid-copy is visible half-populated, so this impl
-  *    DECLARES `renamesDirAtomically = false` and the one protocol
-  *    that replaces live directories in place — the rebalance swap —
-  *    consults the flag and takes the generation-versioned shape
-  *    instead (`RabitqIndex.rebalanceGenerationSwap`: rewrite into a
-  *    fresh `index-vN`, untouched clusters carried BY REFERENCE in the
-  *    `_CARRY` listing, one atomic MANIFEST publish; gated end-to-end
-  *    by q123/q124 and the contract spec).
+  *  - [[atomicRenameDir]]: PUT dst (refused if it exists), then DELETE
+  *    src — its one caller renames a single FILE (the lease break's
+  *    rename-aside: the aside PUT is atomic and the lock DELETE is
+  *    atomic — the only reader-visible step is the delete).
   */
 object CondPutCommit extends CommitOps {
 
@@ -190,28 +169,11 @@ object CondPutCommit extends CommitOps {
   }
 
   def atomicRenameDir(src: String, dst: String): Unit = {
-    val (s, d) = (p(src), p(dst))
-    if (Files.isRegularFile(s)) {
-      if (Files.exists(d))
-        throw new java.nio.file.FileAlreadyExistsException(dst)
-      atomicMoveFile(src, dst)
-    } else if (!Files.exists(s)) {
+    if (!Files.exists(p(src)))
       throw new java.nio.file.NoSuchFileException(src)
-    } else {
-      if (Files.exists(d))
-        throw new java.nio.file.FileAlreadyExistsException(dst)
-      // copy-then-delete, file by file — see the scaladoc: never use on
-      // a live-read directory (the rebalance in-place swap)
-      val walk = Files.walk(s)
-      try {
-        walk.sorted().forEach { x =>
-          val rel = d.resolve(s.relativize(x).toString)
-          if (Files.isDirectory(x)) Files.createDirectories(rel)
-          else putObject(rel, Files.readAllBytes(x))
-        }
-      } finally walk.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(s.toFile)
-    }
+    if (Files.exists(p(dst)))
+      throw new java.nio.file.FileAlreadyExistsException(dst)
+    atomicMoveFile(src, dst)
   }
 
   def exclusiveCreate(path: String, content: String = ""): Boolean =
@@ -221,10 +183,6 @@ object CondPutCommit extends CommitOps {
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       true
     } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-
-  // object stores have no rename at all — declare it, so the rebalance
-  // swap takes the generation-versioned shape (see the class scaladoc)
-  override def renamesDirAtomically: Boolean = false
 }
 
 /** The Hadoop `FileSystem`/`FileContext` implementation — the HDFS
@@ -314,12 +272,12 @@ object LayoutCommit {
   def exclusiveCreate(path: String, content: String = ""): Boolean =
     current.exclusiveCreate(path, content)
 
-  def renamesDirAtomically: Boolean = current.renamesDirAtomically
-
   /** Run `body` with `ops` as the active implementation. The swap is
     * process-global, so callers must be the only layout writer while it
     * holds: the specs (suites run sequentially in the forked test JVM)
-    * and the single-threaded q123/q124 query drives. The synchronization
+    * and the single-threaded q123 query drive — the one query-path
+    * caller, which runs the whole lifecycle under [[CondPutCommit]]. The
+    * synchronization
     * serializes accidental overlap; threads spawned inside `body` (the
     * lease hammer) all see `ops` via the volatile read.
     */

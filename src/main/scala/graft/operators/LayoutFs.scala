@@ -61,14 +61,12 @@ trait LayoutFs {
     */
   def setLastModified(path: String, ms: Long): Unit
 
-  /** Copy one file, replacing the destination — STAGING only (both the
-    * callers copy into not-yet-referenced paths; the reader-visible
-    * publish is always a [[CommitOps]] primitive).
+  /** Copy one file, replacing the destination — STAGING only (its
+    * caller, `RabitqIndex.copyParquetFiles`, copies into
+    * not-yet-referenced paths; the reader-visible publish is always a
+    * [[CommitOps]] primitive).
     */
   def copyFile(src: String, dst: String): Unit
-
-  /** Recursive directory copy, replacing existing files — staging only. */
-  def copyDirectory(src: String, dst: String): Unit
 }
 
 /** Local-filesystem implementation (`java.io`/`java.nio` + commons-io) —
@@ -110,9 +108,6 @@ object PosixFs extends LayoutFs {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
-
-  def copyDirectory(src: String, dst: String): Unit =
-    org.apache.commons.io.FileUtils.copyDirectory(f(src), f(dst))
 }
 
 /** Hadoop `FileSystem` implementation — the HDFS deployment shape,
@@ -187,17 +182,6 @@ final class HadoopFs(conf: org.apache.hadoop.conf.Configuration)
     FileUtil.copy(fs(s), s, fs(d), d, false, true, conf)
     ()
   }
-
-  // MERGE contents into dst (PosixFs's commons-io contract) — a bare
-  // FileUtil.copy onto an existing directory would NEST src under it,
-  // and the two seam impls must not disagree on a retried sidecar copy
-  def copyDirectory(src: String, dst: String): Unit = {
-    mkdirs(dst)
-    list(src).foreach { e =>
-      if (e.isDir) copyDirectory(e.path, s"$dst/${e.name}")
-      else copyFile(e.path, s"$dst/${e.name}")
-    }
-  }
 }
 
 /** The seam the lifecycle helpers call through — [[PosixFs]] by
@@ -222,7 +206,6 @@ object LayoutFs {
   def deleteRecursively(path: String): Unit = current.deleteRecursively(path)
   def sizeOfDirectory(path: String): Long = current.sizeOfDirectory(path)
   def copyFile(src: String, dst: String): Unit = current.copyFile(src, dst)
-  def copyDirectory(src: String, dst: String): Unit = current.copyDirectory(src, dst)
 
   /** Last path segment — the `java.io.File.getName` the string-path
     * seam replaces ("…/idx/index-v2" → "index-v2").

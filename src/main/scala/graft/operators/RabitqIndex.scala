@@ -315,9 +315,9 @@ object RabitqIndex {
     * retiring at directory granularity. The listing is FLAT, never a
     * chain: a swap that inherits carried entries rewrites the survivors
     * into its own listing, so resolution is one file read. Absent — a
-    * fresh [[save]], every compaction rewrite, the in-place POSIX
-    * rebalance — the generation is self-contained and the scan is the
-    * plain directory read, plan-identical to the pre-listing engine.
+    * fresh [[save]], every compaction rewrite — the generation is
+    * self-contained and the scan is the plain directory read,
+    * plan-identical to the pre-listing engine.
     * Underscore name = invisible to Spark's file listing, exactly like
     * the `_centroids`/`_params` generation-local sidecars. Reference
     * analog: the reference's S3 tier only ever GETs immutable objects
@@ -428,12 +428,11 @@ object RabitqIndex {
     * oversized shard), then the tiny `_CARRY_LIST` naming each shard's
     * range. Every write goes through the commit seam (kill-sweep
     * crash points); all of it lands inside the still-unreferenced next
-    * generation, so a crash anywhere leaves only debris the conversion
-    * retry wipes ([[completeRebalanceSwapAsGeneration]] rebuilds
-    * `nextDir` from scratch) or vacuum reclaims. Stale listing state
-    * from a crashed prior attempt is wiped FIRST so `_CARRY_LIST` can
-    * only ever name shards this attempt wrote — and so the two shapes
-    * can never coexist (readers prefer `_CARRY`).
+    * generation, so a crash anywhere leaves only debris vacuum reclaims
+    * (a retried rebalance rewrites `nextDir` from scratch). Stale
+    * listing state from a crashed prior attempt is wiped FIRST so
+    * `_CARRY_LIST` can only ever name shards this attempt wrote — and
+    * so the two shapes can never coexist (readers prefer `_CARRY`).
     */
   private[graft] def writeCarryListing(nextDir: String,
                                        entries: Seq[String]): Unit = {
@@ -476,10 +475,11 @@ object RabitqIndex {
         s"carry entry without a cluster_id= segment: $e"))
       .stripPrefix("cluster_id=").toInt
 
-  /** Build the listing a generation swap publishes: every data file of
-    * the current generation's NON-split clusters — its own files by
-    * root-relative path plus its inherited carry entries, flattened.
-    * Pure directory metadata; no data bytes move.
+  /** The listing a generation swap publishes, walked from the driver:
+    * every data file of the current generation's NON-split clusters —
+    * its own files by root-relative path plus its inherited carry
+    * entries, flattened. Pure directory metadata; no data bytes move.
+    * The reference [[buildCarryEntriesDistributed]] is spec-pinned to.
     */
   private[graft] def buildCarryListing(dir: String, curName: String,
                                        splitIds: Set[Int]): Seq[String] = {
@@ -501,10 +501,8 @@ object RabitqIndex {
     * and a metadata-sized collect; the O(file-count) NameNode/object-
     * store LIST round-trips run distributed, so listing-build wall-clock
     * stays flat as the corpus grows (the r19 shape walked every file
-    * from the driver). Same entry set as the driver walk (spec-pinned).
-    * Only the PRIMARY swap path uses this — the crash-recovery
-    * conversion ([[completeRebalanceSwapAsGeneration]]) has no
-    * SparkSession by contract and keeps the driver walk.
+    * from the driver). Same entry set as the driver walk
+    * ([[buildCarryListing]], spec-pinned).
     */
   private[graft] def buildCarryEntriesDistributed(
       spark: SparkSession, dir: String, curName: String,
@@ -729,12 +727,12 @@ object RabitqIndex {
     * are removed (a brand-new index has no history) — data is written
     * first, so a crash mid-save leaves the previous generation readable.
     * The protocol leftovers matter as much as the data dirs: a surviving
-    * `_rebalance_staging/_COMMIT` would be rolled FORWARD by the next
-    * maintenance pass (replacing fresh cluster dirs with stale re-encoded
-    * rows and overwriting the new sidecar), and surviving `_commits`
-    * markers would make a restarted stream that reuses a queryName with
-    * a fresh checkpoint (batchIds restart at 0) silently SKIP batches in
-    * `IdempotentSink` — quiet data loss either way.
+    * `_rebalance_staging/_COMMIT` (a swap an older build left mid-way)
+    * would make every later mutator refuse the fresh layout
+    * ([[withLayoutLock]]), and surviving `_commits` markers would make a
+    * restarted stream that reuses a queryName with a fresh checkpoint
+    * (batchIds restart at 0) silently SKIP batches in `IdempotentSink` —
+    * quiet data loss.
     */
   def save(spark: SparkSession, model: RabitqModel, index: DataFrame,
            dir: String): Unit = Overlap.labelled(spark, s"rabitq: save $dir") {
@@ -746,7 +744,7 @@ object RabitqIndex {
         (f.name.startsWith("index-v") || f.name == "deletes" ||
           f.name.startsWith("deletes-") || f.name == "_retired" ||
           f.name == "_rebalance_staging" || f.name == "_commits" ||
-          f.name == "_staging" || f.name.startsWith(".rebalance-new-")))
+          f.name == "_staging"))
       .foreach(f => LayoutFs.deleteRecursively(f.path))
     LayoutFs.list(dir)
       .filter(f => !f.isDir &&
@@ -1144,9 +1142,9 @@ object RabitqIndex {
     * ids, so untouched partitions stay bit-valid (their rows reference
     * unchanged centroid ids). Only the oversized clusters' members are
     * re-encoded (globally nearest over the grown centroid set — they
-    * may land in untouched clusters, which is an append, not a
-    * rewrite) and only their partition dirs are deleted. IO ∝ oversized
-    * mass, never corpus size. Exactness is untouched by construction:
+    * may land in untouched clusters) into a new generation that carries
+    * every untouched file by reference ([[rebalanceGenerationSwap]]).
+    * IO ∝ oversized mass, never corpus size. Exactness is untouched by construction:
     * rebalance is a pure LAYOUT op — every vector remains present
     * exactly once with a valid (cluster_id, residual) encoding, so
     * full-probe search still equals brute force (the q116 gate) while
@@ -1182,17 +1180,15 @@ object RabitqIndex {
       known: Option[(RabitqModel, Map[Int, Long])] = None,
       recovered: Boolean = false): RebalanceReport = {
     import spark.implicits._
-    if (!recovered) {
-      completeRebalanceSwap(dir) // finish a predecessor's crashed swap first
+    if (!recovered)
       // settle crashed uncommitted appends BEFORE reading the layout: a
       // promoted-but-unmarked batch would otherwise be re-encoded into
       // consolidated files (losing its prefix names) and then re-appended
       // whole by the stream's replay — duplicates. `recovered = true` is
-      // the maintenanceLoop's contract: the pass already completed the
-      // swap and settled appends ONCE under the same held lease.
+      // the maintenanceLoop's contract: the pass already settled appends
+      // ONCE under the same held lease.
       graft.streaming.IdempotentSink.settleInProgress(dir,
         Seq(indexDataDir(dir), tombstoneLogDir(dir)))
-    }
     // `known` threads the maintenance pass's one measurement through
     // (model + LIVE per-cluster sizes — both invariant across the
     // compaction that may have run in between: the rewrite preserves
@@ -1328,165 +1324,115 @@ object RabitqIndex {
         live.filter(col("cluster_id").isin(splitIds.map(Int.box): _*))
           .select("vec_id", extraCols.toIndexedSeq: _*),
         Seq("vec_id"))
-    // The in-place swap is legal only when (a) the commit impl really
-    // renames directories atomically AND (b) the active generation is
-    // SELF-CONTAINED: a generation assembled by a carry listing cannot
-    // be mutated in place — replacing a split cluster's own dir leaves
-    // its carried files still listed, resurrecting pre-split rows.
-    val activeSelfContained =
-      !hasCarry(dir, LayoutFs.baseName(indexDataDir(dir)))
-    val (movedRows, reencSizes) =
-      if (LayoutCommit.renamesDirAtomically && activeSelfContained) {
-        // IN-PLACE swap (IO ∝ skew — only split partition dirs move).
-        // Stage EVERYTHING the swap needs DURABLY before touching the
-        // live layout: the re-encoded rows (distributed parquet write,
-        // IO ∝ skew) AND the new model sidecar (centroids + params
-        // change, rotation/bias don't) — recovery must be able to finish
-        // the swap with file operations alone, no SparkSession. Then a
-        // _COMMIT marker makes the swap the point of no return: before
-        // it, a crash rolls BACK (vacuum reclaims the staging as debris,
-        // the live layout was never touched); after it, the swap rolls
-        // FORWARD ([[completeRebalanceSwap]] — idempotent atomic
-        // directory renames, re-driven by the next maintenance pass if
-        // this process dies mid-swap). No state ever exists where
-        // re-encoded rows are lost.
-        val staging = s"$dir/_rebalance_staging"
-        spark.sparkContext.setJobDescription(s"rebalance: reencode+swap $dir")
-        LayoutFs.deleteRecursively(staging) // pre-commit debris
-        // hash-partition on the destination cluster before the partitioned
-        // write (the compactRewrite consolidation): ~one part file per
-        // destination instead of O(tasks × destinations) fragments riding
-        // in the layout until the next compaction
-        reencWide.repartition(model2.params.numClusters, col("cluster_id"))
-          .write.mode("overwrite").partitionBy("cluster_id")
-          .parquet(s"$staging/index")
-        val reenc = spark.read.parquet(s"$staging/index")
-        // one pass over the staged files: per-cluster sizes, moved = Σ
-        // (the former separate count() re-read the same files); the two
-        // sidecar writes are independent of it — overlap all three
-        val (_, _, sizes2) = Overlap(spark,
-          centroids2.zipWithIndex.map { case (cen, i) => (i, cen.toSeq) }.toSeq
-            .toDF("cluster_id", "centroid").coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/centroids"),
-          Seq((model2.params.dim, model2.params.padDim, model2.params.numClusters,
-               model2.params.seed, model2.bias.toSeq))
-            .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/params"),
-          reenc.groupBy("cluster_id").count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap)
-        val moved = sizes2.values.sum
-        // the marker names the SPLIT clusters (their dirs are replaced
-        // wholesale; every other destination merges) and is itself staged +
-        // atomically renamed — a torn marker can never misclassify a dir
-        LayoutCommit.atomicWriteFile(s"$staging/_COMMIT",
-          splitIds.mkString("\n"))
-        completeRebalanceSwap(dir)
-        (moved, sizes2)
-      } else {
-        // the active CommitOps has NO atomic directory rename (an object
-        // store) — replacing live partition dirs in place would expose
-        // half-populated clusters to racing readers (the contract spec
-        // executes exactly that tear), so take compaction's generation-
-        // versioned shape instead: everything lands in an unreferenced
-        // `index-vN`, one atomic MANIFEST PUT publishes it
-        rebalanceGenerationSwap(spark, dir, model2, reencWide, splitIds)
-      }
+    val reencSizes =
+      rebalanceGenerationSwap(spark, dir, model2, reencWide, splitIds)
 
     // after-sizes without re-reading the layout: untouched sizes +
     // re-encoded destinations
     val after = (sizes -- splitIds) ++
       reencSizes.map { case (c, n) => c -> ((sizes -- splitIds).getOrElse(c, 0L) + n) }
-    RebalanceReport(k0, centroids2.length, splitK, movedRows,
+    RebalanceReport(k0, centroids2.length, splitK, reencSizes.values.sum,
       maxBefore, if (after.isEmpty) 0L else after.values.max)
     } finally members.unpersist()
   }
 
-  /** The OBJECT-STORE rebalance swap — taken when the active
-    * [[CommitOps]] declares no atomic directory rename (`CondPutCommit`;
-    * a store where a "dir rename" is per-object copy+delete that racing
-    * readers see half-populated). Compaction's generation-versioned
-    * shape: build the ENTIRE next generation unreferenced, publish with
-    * ONE atomic MANIFEST PUT, retire the old generation into the
-    * retention window. Nothing reader-visible mutates in place.
+  /** The rebalance publish — compaction's generation-versioned shape on
+    * every filesystem: build the ENTIRE next generation unreferenced,
+    * publish with ONE atomic MANIFEST write, retire the old generation
+    * into the retention window. Nothing reader-visible mutates in place,
+    * so the protocol needs only atomic file write (no directory rename)
+    * and holds on an object store exactly as on POSIX/HDFS.
     *
     *  1. Re-encoded split members: distributed parquet write straight
-    *     into `index-v{N+1}` (IO ∝ skew; `overwrite` makes a retry
-    *     idempotent, and a crashed attempt's partial generation is
-    *     unreferenced debris vacuum reclaims).
+    *     into `index-v{N+1}`, hash-partitioned on the destination
+    *     cluster first (~one part file per destination instead of
+    *     O(tasks × destinations) fragments; IO ∝ skew; `overwrite`
+    *     makes a retry idempotent, and a crashed attempt's partial
+    *     generation is unreferenced debris vacuum reclaims).
     *  2. Untouched clusters: carried BY REFERENCE — the new
     *     generation's `_CARRY` listing ([[readCarry]]) names their
     *     immutable part files where they already live, one metadata
-    *     line per file, written with one atomic PUT before the publish.
-    *     NOTHING corpus-proportional moves: the swap's IO is the
-    *     re-encoded split members (∝ skew) plus the listing bytes.
-    *     (Rounds ≤18 carried by per-file copy — server-side CopyObject,
-    *     but still IO and request volume ∝ CORPUS per rebalance; the
-    *     listing is the Iceberg-manifest shape that gets back to
-    *     ∝ skew, and the carry-∝-skew spec pins it.) The old generation
+    *     line per file, written through the commit seam before the
+    *     publish. NOTHING corpus-proportional moves: the swap's IO is
+    *     the re-encoded split members (∝ skew) plus the listing bytes.
+    *     (Rounds ≤18 carried by per-file copy — IO and request volume
+    *     ∝ CORPUS per rebalance; the listing is the Iceberg-manifest
+    *     shape, and the carry-∝-skew spec pins it.) The old generation
     *     stays intact both for its retention-window readers AND as the
     *     physical home of the carried files; vacuum refcounts them.
-    *  3. The uncompacted tombstone log is carried the same way — logs
-    *     are per generation, and the carried untouched rows still
-    *     include tombstoned members (the re-encode dropped them only
-    *     for split clusters); the anti-join is idempotent, so split
-    *     members' ids matching nothing is harmless.
+    *     Promoted-but-unmarked appends are settled out of the source
+    *     generation immediately before the listing is built: carried by
+    *     reference, their files would sit beyond the reach of the
+    *     replay's sweep (it walks only the new generation's own dirs)
+    *     and the replay would serve those rows twice. Inductively the
+    *     INHERITED carry entries are clean.
+    *  3. The uncompacted tombstone log is carried by copy (delete-
+    *     volume-sized) — logs are per generation, and the carried
+    *     untouched rows still include tombstoned members (the re-encode
+    *     dropped them only for split clusters); the anti-join is
+    *     idempotent, so split members' ids matching nothing is harmless.
     *  4. The GROWN model rides INSIDE the generation (`_centroids` /
-    *     `_params` — underscore dirs are invisible to the data scan):
-    *     the layout-root sidecar pair cannot be replaced atomically
-    *     without a directory rename, so the MANIFEST PUT flips data and
-    *     model TOGETHER. [[load]] prefers generation-local sidecars;
-    *     `VecsStream.compactRewrite` carries them into every later
-    *     generation.
-    *  5. Publish: [[markRetired]] (the retention clock) + one atomic
-    *     MANIFEST PUT — `VecsStream.compactSwap`'s exact sequence.
+    *     `_params` — underscore dirs are invisible to the data scan), so
+    *     the MANIFEST write flips data and model TOGETHER. [[load]]
+    *     prefers generation-local sidecars; `VecsStream.compactRewrite`
+    *     carries them into every later generation.
+    *  5. Publish: [[publishGeneration]] — `VecsStream.compactSwap`'s
+    *     exact sequence.
     *
-    * Crash anywhere before 5: readers keep resolving the old
-    * generation; the partial next generation is unreferenced debris.
-    * Crash after: done — a replayed rebalance finds balanced sizes and
-    * no-ops. Gated end-to-end by q123 and the contract spec's
-    * generation-rebalance leg; swept by the kill sweep's CondPut order.
+    * Steps 2–4 and the per-destination sizes it returns (one pass over
+    * the written files; moved rows = Σ sizes) are independent and run
+    * under one [[Overlap]]. Crash anywhere before 5: readers keep
+    * resolving the old generation; the partial next generation is
+    * unreferenced debris. Crash after: done — a replayed rebalance finds
+    * balanced sizes and no-ops. Gated end-to-end by the rebalance queries
+    * (q116–q118, q120, q123, q124), the crash window by q121; swept by
+    * the kill sweep under both commit implementations.
     */
   private[graft] def rebalanceGenerationSwap(
       spark: SparkSession, dir: String, model2: RabitqModel,
-      reencWide: DataFrame, splitIds: Seq[Int]): (Long, Map[Int, Long]) = {
+      reencWide: DataFrame, splitIds: Seq[Int]): Map[Int, Long] = {
     import spark.implicits._
     val curName = LayoutFs.baseName(indexDataDir(dir))
     val curV = if (curName == "index") 1 else curName.stripPrefix("index-v").toInt
     val nextName = s"index-v${curV + 1}"
     val nextDir = s"$dir/$nextName"
+    spark.sparkContext.setJobDescription(s"rebalance: reencode+publish $dir")
     reencWide.repartition(model2.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(nextDir)
-    val reenc = spark.read.parquet(nextDir)
-    val movedRows = reenc.count()
-    val reencSizes = reenc.groupBy("cluster_id").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // untouched clusters: by reference (one listing line per file — the
-    // seam-primitive writes are kill-sweep points and, deployed, atomic
-    // PUTs); the per-cluster file enumeration fans out as Spark tasks
-    // and the listing shards past carryShardTarget; the tombstone log
-    // goes by copy (delete-volume-sized)
-    writeCarryListing(nextDir,
-      buildCarryEntriesDistributed(spark, dir, curName, splitIds.toSet))
-    tombstoneLogOfGenIfAny(dir, curName).foreach(logDir =>
-      copyParquetFiles(logDir, logDirOfGen(dir, nextName)))
-    model2.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster_id", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$nextDir/_centroids")
-    Seq((model2.params.dim, model2.params.padDim, model2.params.numClusters,
-         model2.params.seed, model2.bias.toSeq))
-      .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
-      .write.mode("overwrite").parquet(s"$nextDir/_params")
+    // step 2's settle: no unmarked batch may enter the listing below
+    graft.streaming.IdempotentSink.settleInProgress(dir,
+      Seq(s"$dir/$curName", logDirOfGen(dir, curName)))
+    // the written schema is known: reading it back with it skips the
+    // footer-inference job. Underscore-named sidecars and listing files
+    // the other legs write into `nextDir` are invisible to this scan.
+    val (_, _, reencSizes) = Overlap(spark,
+      Overlap(spark,
+        model2.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("cluster_id", "centroid").coalesce(1)
+          .write.mode("overwrite").parquet(s"$nextDir/_centroids"),
+        Seq((model2.params.dim, model2.params.padDim, model2.params.numClusters,
+             model2.params.seed, model2.bias.toSeq))
+          .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
+          .write.mode("overwrite").parquet(s"$nextDir/_params")),
+      {
+        writeCarryListing(nextDir,
+          buildCarryEntriesDistributed(spark, dir, curName, splitIds.toSet))
+        tombstoneLogOfGenIfAny(dir, curName).foreach(logDir =>
+          copyParquetFiles(logDir, logDirOfGen(dir, nextName)))
+      },
+      spark.read.schema(reencWide.schema).parquet(nextDir)
+        .groupBy("cluster_id").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap)
     publishGeneration(dir, curName, nextName)
-    (movedRows, reencSizes)
+    reencSizes
   }
 
   /** Copy a directory's parquet data files into `tgt` (flat), replacing
     * on retry, in parallel — used only for DELETE-VOLUME- and
-    * MODEL-sized payloads (tombstone-log carry, sidecar tables, staged
-    * split dirs of a roll-forward conversion); the corpus-sized
-    * untouched-cluster carry rides in the `_CARRY` listing instead
-    * ([[buildCarryListing]]) and never copies. Staging, not a commit
+    * MODEL-sized payloads (tombstone-log carry, generation-local sidecar
+    * tables); the corpus-sized untouched-cluster carry rides in the
+    * `_CARRY` listing instead and never copies. Staging, not a commit
     * primitive: nothing resolves the destination until the MANIFEST
     * publish, and on a real object store each copy is a server-side
     * CopyObject. A DEDICATED bounded pool, not the JVM-global common
@@ -1514,223 +1460,13 @@ object RabitqIndex {
   /** Atomically publish a fully-built generation: retire `curName` (the
     * retention clock starts) and point the MANIFEST at `nextName` — the
     * ONE reader-visible step of every generation swap, shared by
-    * compaction (`VecsStream.compactSwap`) and the object-store
-    * rebalance so the two publishes can never diverge.
+    * compaction (`VecsStream.compactSwap`) and the rebalance so the two
+    * publishes can never diverge.
     */
   private[graft] def publishGeneration(dir: String, curName: String,
                                        nextName: String): Unit = {
     markRetired(dir, curName)
     LayoutCommit.atomicWriteFile(s"$dir/MANIFEST", nextName)
-  }
-
-  /** Finish a COMMITTED rebalance swap — idempotent, file operations
-    * only, no SparkSession. No-op unless `_rebalance_staging/_COMMIT`
-    * exists (i.e. [[rebalanceUnlocked]] finished staging the re-encoded
-    * rows and the new sidecar and declared the point of no return).
-    * The `_COMMIT` marker lists the SPLIT cluster ids: their partition
-    * dirs are REPLACED wholesale (their rows were all re-encoded —
-    * atomically rename the old dir aside, rename the staged dir in; a
-    * split cluster every member re-assigned AWAY from has no staged dir
-    * and its old dir is simply retired);
-    * every other staged destination MERGES its files into the existing
-    * dir (a re-encoded member can land in ANY cluster of the grown
-    * centroid set, and untouched clusters keep their rows — globally
-    * unique part names make the file moves idempotent under retry).
-    * Sidecar: copy the staged tables to a temp sibling, then
-    * atomic-rename over centroids/params (the staged copy survives
-    * until final cleanup, so a crash at ANY point re-drives to the same
-    * end state). Called at the top of every maintenance entry point
-    * (vacuum runs first in the loop), so a swap orphaned by a crash
-    * completes on the next pass — the staged rows can never be
-    * stranded or reclaimed as debris. Readers racing a mid-swap crash
-    * see a consistent-but-incomplete index (a split cluster's dir
-    * missing for the duration of two renames) — never a torn file,
-    * never resurrections.
-    */
-  private[graft] def completeRebalanceSwap(dir: String): Unit = {
-    val staging = s"$dir/_rebalance_staging"
-    val commitF = s"$staging/_COMMIT"
-    if (!LayoutFs.exists(commitF)) return
-    val splitIds = LayoutFs.readString(commitF).split('\n')
-      .map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet
-    if (!LayoutCommit.renamesDirAtomically ||
-        hasCarry(dir, LayoutFs.baseName(indexDataDir(dir)))) {
-      // a committed IN-PLACE staging being rolled forward either under
-      // a commit impl with no atomic dir rename (a deployment migrated
-      // to the object-store shape with a crashed swap in tow) or onto
-      // an active generation assembled by a CARRY listing (whose
-      // clusters cannot be replaced by dir rename — the listed files
-      // would resurface): driving the renames below would expose racing
-      // readers to half-populated LIVE cluster dirs or resurrect
-      // carried rows. The staging holds everything the swap needs, so
-      // CONVERT it to the generation-versioned publish instead — file
-      // operations only, idempotent, and the layout the readers resolve
-      // never mutates in place.
-      completeRebalanceSwapAsGeneration(dir, splitIds, staging)
-      return
-    }
-    val dataDir = indexDataDir(dir)
-    val stagedDirs = LayoutFs.list(s"$staging/index")
-      .filter(f => f.isDir && f.name.startsWith("cluster_id="))
-      .map(f => f.name -> f.path).toMap
-    // every SPLIT cluster's old dir must go — all its rows were
-    // re-encoded, wherever they landed. A split cluster can receive
-    // ZERO staged rows (every member re-assigned to a sibling sub or a
-    // neighbor), so iterate the marker's ids, not the staged dirs: the
-    // old dir is moved aside either way (the aside doubles as the
-    // processed-marker that makes a crash-retry skip this id instead of
-    // moving freshly-swapped rows aside).
-    splitIds.foreach { cid =>
-      val name = s"cluster_id=$cid"
-      val tgt = s"$dataDir/$name"
-      val aside = s"$dataDir/.rebalance-old-$name"
-      stagedDirs.get(name) match {
-        case Some(sd) =>
-          if (LayoutFs.exists(tgt)) {
-            // tgt still holds the OLD rows (the staged dir is only
-            // renamed away after the old one is moved aside)
-            LayoutFs.deleteRecursively(aside)
-            LayoutCommit.atomicRenameDir(tgt, aside)
-          }
-          LayoutCommit.atomicRenameDir(sd, tgt)
-        case None =>
-          if (!LayoutFs.exists(aside) && LayoutFs.exists(tgt))
-            LayoutCommit.atomicRenameDir(tgt, aside)
-      }
-    }
-    // every other staged destination MERGES its files into the existing
-    // dir (idempotent: moves of globally-unique part names)
-    stagedDirs.foreach { case (name, sd) =>
-      if (!splitIds.contains(name.stripPrefix("cluster_id=").toInt)) {
-        val tgt = s"$dataDir/$name"
-        LayoutFs.mkdirs(tgt)
-        LayoutFs.list(sd)
-          .filter(f => !f.isDir && f.name.endsWith(".parquet"))
-          .foreach(f => LayoutCommit.atomicMoveFile(f.path, s"$tgt/${f.name}"))
-        LayoutFs.deleteRecursively(sd)
-      }
-    }
-    for (t <- Seq("centroids", "params")) {
-      val tmp = s"$dir/.rebalance-new-$t"
-      LayoutFs.deleteRecursively(tmp)
-      LayoutFs.copyDirectory(s"$staging/$t", tmp)
-      LayoutFs.deleteRecursively(s"$dir/$t")
-      LayoutCommit.atomicRenameDir(tmp, s"$dir/$t")
-      // a generation-LOCAL sidecar (left by an earlier generation-
-      // versioned rebalance of this layout on an object-store deployment)
-      // SHADOWS the root pair just installed in [[modelSidecarDir]] —
-      // refresh it with the same staged copy, the same dance (idempotent
-      // under crash-retry: the staged source survives until the staging
-      // delete below)
-      // keyed on EITHER the sidecar or its tmp: a crash between the
-      // deleteDirectory(genLocal) and the rename below would otherwise
-      // make the retry SKIP recreating it — the generation would end
-      // with a mixed gen-local/root pair (old params against new
-      // centroids). The tmp's presence is the evidence of exactly that
-      // half-refresh, so it re-drives the dance instead.
-      val genLocal = s"$dataDir/_$t"
-      val gtmp = s"$dataDir/.rebalance-new-$t"
-      if (LayoutFs.isDirectory(genLocal) || LayoutFs.isDirectory(gtmp)) {
-        LayoutFs.deleteRecursively(gtmp)
-        LayoutFs.copyDirectory(s"$staging/$t", gtmp)
-        LayoutFs.deleteRecursively(genLocal)
-        LayoutCommit.atomicRenameDir(gtmp, genLocal)
-      }
-    }
-    // ORDER MATTERS: delete the staging (and with it the _COMMIT marker
-    // that makes retries re-drive the swap) BEFORE the asides — a retry
-    // that found no _COMMIT must never re-interpret swapped-in dirs,
-    // and asides stranded by a crash right here are reclaimed by
-    // vacuum's debris sweep (no _COMMIT → debris)
-    LayoutFs.deleteRecursively(staging)
-    LayoutFs.list(dataDir)
-      .filter(f => f.isDir && f.name.startsWith(".rebalance-old-"))
-      .foreach(f => LayoutFs.deleteRecursively(f.path))
-  }
-
-  /** [[completeRebalanceSwap]]'s object-store conversion: finish a
-    * committed in-place staging as a GENERATION publish — the next
-    * generation built unreferenced from the staged rows, the untouched
-    * clusters carried BY REFERENCE in its `_CARRY` listing, the log and
-    * the staged sidecars riding inside it, then the shared
-    * [[publishGeneration]] atomic PUT. Idempotent at every crash point:
-    * BEFORE the publish, the partial generation is unreferenced
-    * (rebuilt from scratch on retry — the staging and its `_COMMIT`
-    * survive until after the publish); the publish is preceded by a
-    * `_PUBLISHED-<gen>` marker inside the staging, so a retry AFTER the
-    * publish recognizes the conversion as COMPLETE (the MANIFEST — or
-    * the retirement history — already shows the recorded generation)
-    * and only deletes the staging. Without the marker, a crash in the
-    * publish→cleanup window would make the retry re-run the conversion
-    * AGAINST the freshly published generation: split-cluster dirs
-    * rebuilt from the stale staged content would silently drop any
-    * batch an appender committed into a split-id cluster in the
-    * interim, and every such retry would mint a pointless extra
-    * generation. Exercised by the contract spec's migration leg and the
-    * kill sweep (the marker write is a seam primitive — a crash point).
-    */
-  private def completeRebalanceSwapAsGeneration(
-      dir: String, splitIds: Set[Int], staging: String): Unit = {
-    // marker names are matched EXACTLY (and every match evaluated, not
-    // the first list entry): a crashed atomicWriteFile leaves sibling
-    // tmp debris ALSO prefixed `_PUBLISHED-` (`<name>.tmp` /
-    // `<name>.tmp.<seq>`), and a prefix-first pick could read a garbage
-    // generation name from the tmp, miss the REAL marker next to it,
-    // and re-drive an already-published conversion — minting a spurious
-    // generation from stale staged content
-    val markerName = "_PUBLISHED-index(-v\\d+)?".r
-    val entries = LayoutFs.list(staging).filter(!_.isDir)
-    val published = entries.filter(f => markerName.pattern
-      .matcher(f.name).matches())
-    val activeNow = LayoutFs.baseName(indexDataDir(dir))
-    if (published.exists { p =>
-      val recorded = p.name.stripPrefix("_PUBLISHED-")
-      activeNow == recorded || LayoutFs.isFile(s"$dir/_retired/$recorded")
-    }) {
-      // a recorded generation was published (it is active, or was and
-      // has since been superseded): finishing = cleanup only
-      LayoutFs.deleteRecursively(staging)
-      return
-    }
-    // recorded but never published (crash between marker and publish):
-    // drop the stale markers — and any tmp debris a crashed marker
-    // write stranded — and re-drive against the CURRENT active
-    // generation
-    entries.filter(_.name.startsWith("_PUBLISHED-"))
-      .foreach(f => LayoutFs.delete(f.path))
-    val curName = LayoutFs.baseName(indexDataDir(dir))
-    // settle crashed promoted-but-UNMARKED appends against the SOURCE
-    // generation BEFORE building the carry listing: such a batch's
-    // files physically live in curName's dirs, and carrying them BY
-    // REFERENCE would put them beyond the reach of the replay's sweep
-    // (settle/sweep only walk the new generation's own dirs) — the
-    // replay re-promotes the batch and the union scan serves every row
-    // twice, permanently. The pre-carry shape was safe by accident (the
-    // conversion physically copied untouched files where sweepPrefix
-    // found them); the listing shape must settle first. Inductively the
-    // INHERITED carry entries are clean: every conversion settles
-    // before listing, so an unmarked batch's files never enter one.
-    // All callers hold the layout lease (completeRebalanceSwap's
-    // contract), so no live appender is mid-promote.
-    graft.streaming.IdempotentSink.settleInProgress(dir,
-      Seq(s"$dir/$curName", logDirOfGen(dir, curName)))
-    val curV = if (curName == "index") 1 else curName.stripPrefix("index-v").toInt
-    val nextName = s"index-v${curV + 1}"
-    val nextDir = s"$dir/$nextName"
-    // a previous crashed attempt's partial generation was never
-    // referenced — rebuild it from scratch
-    LayoutFs.deleteRecursively(nextDir)
-    LayoutFs.list(s"$staging/index")
-      .filter(f => f.isDir && f.name.startsWith("cluster_id="))
-      .foreach(sd => copyParquetFiles(sd.path, s"$nextDir/${sd.name}"))
-    writeCarryListing(nextDir, buildCarryListing(dir, curName, splitIds))
-    tombstoneLogOfGenIfAny(dir, curName).foreach(logDir =>
-      copyParquetFiles(logDir, logDirOfGen(dir, nextName)))
-    for (t <- Seq("centroids", "params"))
-      copyParquetFiles(s"$staging/$t", s"$nextDir/_$t")
-    LayoutCommit.atomicWriteFile(s"$staging/_PUBLISHED-$nextName", nextName)
-    publishGeneration(dir, curName, nextName)
-    LayoutFs.deleteRecursively(staging)
   }
 
   /** Per-cluster row counts from parquet FOOTER metadata only — no data
@@ -1826,10 +1562,20 @@ object RabitqIndex {
     * holder's lock on its way out. `waitMs` > 0 polls the acquire
     * (100ms) before giving up — the appenders' promote uses it to ride
     * out a maintenance pass instead of failing the batch.
+    *
+    * A layout holding a committed `_rebalance_staging` is refused before
+    * the lease is taken: builds before the generation-versioned
+    * rebalance swapped cluster dirs in place behind that marker, and its
+    * staging holds the only copy of the re-encoded rows — no mutator of
+    * this build may sweep, append into, or rewrite around it.
     */
   private[graft] def withLayoutLock[A](
       dir: String, staleMs: Long = 60L * 60 * 1000,
       waitMs: Long = 0L)(body: => A): A = {
+    require(!LayoutFs.exists(s"$dir/_rebalance_staging/_COMMIT"),
+      s"$dir holds a committed in-place rebalance swap " +
+        "(_rebalance_staging/_COMMIT) left by an older build: finish it " +
+        "with the build that wrote it before maintaining this layout")
     val lock = s"$dir/_maintenance.lock"
     val token = java.util.UUID.randomUUID().toString
     def acquire(): Boolean = LayoutCommit.exclusiveCreate(lock, token)
@@ -1926,14 +1672,9 @@ object RabitqIndex {
     * deliberately does not).
     *
     * '''Immediate debris''' (never reader-visible): an UNRETIRED
-    * non-active generation (a compaction that rewrote but never swapped
-    * — no reader ever resolved it), a dead `_rebalance_staging` (no
-    * `_COMMIT` — pre-point-of-no-return), `.rebalance-old-` asides and
-    * `.rebalance-new-` sidecar temps (stranded only by a crash inside
-    * the swap's final cleanup, after the end state is fully in place;
-    * asides are NOT a reader-visibility mechanism — the swap renames
-    * dirs, so pre-swap paths are gone either way), a torn
-    * `MANIFEST.tmp`, stranded lease-break asides, and `.inprogress`
+    * non-active generation (a compaction or rebalance that wrote its
+    * generation but never published it — no reader ever resolved it), a
+    * torn `MANIFEST.tmp`, stranded lease-break asides, and `.inprogress`
     * sentinels whose commit marker exists (the batch committed; the
     * sentinel just makes every later inspection read as a crashed
     * attempt).
@@ -1951,10 +1692,6 @@ object RabitqIndex {
 
   private[graft] def vacuumUnlocked(
       dir: String, retainMs: Long = DefaultRetainMs): VacuumReport = {
-    // a COMMITTED rebalance swap is recovery state, not debris — roll
-    // it forward before reclaiming anything (its staging holds the only
-    // copy of the re-encoded rows until the renames land)
-    completeRebalanceSwap(dir)
     val now = System.currentTimeMillis()
     val active = LayoutFs.baseName(indexDataDir(dir))
     val markers = LayoutFs.list(s"$dir/_retired")
@@ -2007,14 +1744,8 @@ object RabitqIndex {
     // age-gated batch staging (live batches never straddle the window)
     val stagingVictims = LayoutFs.list(s"$dir/_staging")
       .filter(f => f.isDir && now - f.mtime >= retainMs).map(_.path)
-    val asideDebris = LayoutFs.list(s"$dir/$active")
-      .filter(f => f.isDir && (f.name.startsWith(".rebalance-old-") ||
-        f.name.startsWith(".rebalance-new-"))).map(_.path)
     val dirVictims = retiredVictims.map(_.path) ++ debrisGens.map(_.path) ++
-      logVictims ++ orphanLogVictims ++ stagingVictims ++ asideDebris ++
-      LayoutFs.list(dir).filter(f => f.isDir &&
-        (f.name == "_rebalance_staging" ||
-          f.name.startsWith(".rebalance-new-"))).map(_.path)
+      logVictims ++ orphanLogVictims ++ stagingVictims
     // committed batches' stranded in-progress sentinels
     val staleSentinels = LayoutFs.list(s"$dir/_commits")
       .filter(_.isDir).flatMap(q => LayoutFs.list(q.path))
@@ -2132,11 +1863,11 @@ object RabitqIndex {
 
   /** Resolve a model sidecar table against an ALREADY-RESOLVED
     * generation dir: a generation-LOCAL `_<table>` dir (written by
-    * [[rebalanceGenerationSwap]] on object-store deployments, carried
-    * forward by every compaction) SHADOWS the layout-root dir [[save]]
-    * writes — the root pair cannot be replaced atomically without a
-    * directory rename, so there the model travels with the generation
-    * and the MANIFEST PUT flips data and model together. Callers must
+    * every [[rebalanceGenerationSwap]], carried forward by every
+    * compaction) SHADOWS the layout-root dir [[save]] writes — the root
+    * pair cannot be replaced atomically without a directory rename, so
+    * the model travels with the generation and the MANIFEST write flips
+    * data and model together. Callers must
     * resolve the generation ONCE and derive every path from it (the
     * [[load]] discipline): re-reading the MANIFEST per table would let
     * a concurrent publish hand back a TORN model/data pair — exactly

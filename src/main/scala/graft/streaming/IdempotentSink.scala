@@ -84,19 +84,6 @@ object IdempotentSink {
     // promote + commit under the layout lease: serialized against every
     // maintenance mutator, target re-resolved while nothing can swap it
     RabitqIndex.withLayoutLock(commitRoot, waitMs = leaseWaitMs) {
-      // finish a predecessor's crashed-but-COMMITTED rebalance swap
-      // BEFORE resolving the target — the same first step every
-      // maintenance entry point takes, and load-bearing here: after a
-      // stale-lease break an appender can win the race to a layout
-      // whose `_rebalance_staging/_COMMIT` exists but whose renames
-      // never ran, and a batch promoted into a SPLIT cluster's
-      // about-to-be-replaced dir would be dropped wholesale by the
-      // roll-forward while its commit marker makes the replay a no-op
-      // — silent data loss. Rolling forward first means the promote
-      // lands in the post-swap layout (and, on the conversion path,
-      // `targetDir` — by-name — re-resolves to the published
-      // generation). Cost on the common path: one existence probe.
-      RabitqIndex.completeRebalanceSwap(commitRoot)
       val target = targetDir
       // the target dir must exist even if every row of every batch was
       // filtered out — a downstream read of the sink must see an (empty)

@@ -252,11 +252,7 @@ object VecsStream {
 
   private[graft] def compactUnlocked(spark: SparkSession, idxDir: String,
                                      recovered: Boolean = false): Unit = {
-    if (!recovered) {
-      // finish a predecessor's crashed-but-committed rebalance swap first:
-      // compacting a mid-swap layout would rewrite a generation missing
-      // the split clusters' rows
-      RabitqIndex.completeRebalanceSwap(idxDir)
+    if (!recovered)
       // settle crashed uncommitted appends BEFORE the rewrite reads the
       // layout: a promoted-but-unmarked batch would be folded into
       // consolidated files (losing its prefix names) and then re-appended
@@ -264,10 +260,9 @@ object VecsStream {
       // in full by the replay, so nothing is lost. Live batches can't be
       // mid-promote here (the promote takes the lease we hold).
       // `recovered = true` is the maintenanceLoop's contract: the pass
-      // already did both ONCE under the same held lease.
+      // already settled ONCE under the same held lease.
       IdempotentSink.settleInProgress(idxDir,
         Seq(RabitqIndex.indexDataDir(idxDir), RabitqIndex.tombstoneLogDir(idxDir)))
-    }
     // presence judged by DATA files, not the directory: the streamed del
     // leg creates its (possibly forever-empty) target dir unconditionally
     if (RabitqIndex.tombstoneLogIfAny(idxDir).isEmpty) return
@@ -293,10 +288,9 @@ object VecsStream {
     live.repartition(m.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(s"$idxDir/$nextName")
-    // carry generation-LOCAL model sidecars: a generation-versioned
-    // rebalance (the object-store shape, RabitqIndex.
-    // rebalanceGenerationSwap) puts the grown model INSIDE its
-    // generation so the MANIFEST PUT flips data and model together —
+    // carry generation-LOCAL model sidecars: a rebalance
+    // (RabitqIndex.rebalanceGenerationSwap) puts the grown model INSIDE
+    // its generation so the MANIFEST write flips data and model together —
     // every later generation must keep carrying it, or readers of the
     // compacted generation would fall back to the STALE layout-root
     // pair (pre-split centroids against post-split cluster ids)
@@ -350,12 +344,11 @@ object VecsStream {
       // vacuum first: a crashed prior cycle's debris (unreferenced
       // generations, dead staging) must not ride along forever — pure
       // file metadata, no jobs; retired generations inside the retention
-      // window survive (in-flight readers may still hold them). The
-      // vacuum also completes any committed rebalance swap.
+      // window survive (in-flight readers may still hold them).
       val vac = RabitqIndex.vacuumUnlocked(idxDir, retainMs)
       // settle crashed uncommitted appends ONCE for the whole pass (the
-      // phases previously each re-ran the swap-completion and the settle,
-      // re-listing the layout three times under the same held lease)
+      // phases previously each re-ran the settle, re-listing the layout
+      // under the same held lease)
       IdempotentSink.settleInProgress(idxDir,
         Seq(RabitqIndex.indexDataDir(idxDir), RabitqIndex.tombstoneLogDir(idxDir)))
       // ONE measurement for the whole pass: the health snapshot below is

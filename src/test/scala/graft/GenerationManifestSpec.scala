@@ -352,7 +352,6 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
         tick(); inner.atomicRenameDir(s, d) }
       override def exclusiveCreate(p: String, c: String = ""): Boolean = {
         tick(); inner.exclusiveCreate(p, c) }
-      override def renamesDirAtomically: Boolean = inner.renamesDirAtomically
     }
     val idxDir = java.nio.file.Files.createTempDirectory("crash_race").toString
     val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
@@ -491,11 +490,9 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       ()
     }
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
-    // back under the DEFAULT PosixCommit: renamesDirAtomically is true,
-    // but the active generation is assembled by a carry listing — an
-    // in-place swap would replace a split cluster's own dir while its
-    // carried files stay listed (resurrection), so the guard must route
-    // to the generation shape regardless of the capability
+    // back under the DEFAULT PosixCommit: the second rebalance takes the
+    // same generation shape (the only one) over a carry-listed active
+    // generation, so its listing must inherit and flatten index-v2's
     val (m1, _) = RabitqIndex.load(spark, idxDir) // writers reload (q117)
     assert(m1.params.numClusters > 8)
     // re-skew: a second pile of upper-halfspace vectors (fresh ids) into
@@ -512,9 +509,7 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rep2.numClustersAfter > rep2.numClustersBefore,
       s"gate is vacuous: the re-skewed layout did not split again ($rep2)")
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3",
-      "the guard must publish a generation, never swap a carry-listed " +
-        "layout in place")
-    assert(!new java.io.File(s"$idxDir/_rebalance_staging").exists)
+      "the second rebalance must publish the next generation")
     val carry3 = RabitqIndex.readCarry(idxDir, "index-v3")
     val srcGens = carry3.map(_.takeWhile(_ != '/')).toSet
     assert(srcGens.size >= 2,
@@ -555,7 +550,6 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     def deleteRecursively(p: String) = inner.deleteRecursively(p)
     def sizeOfDirectory(p: String) = inner.sizeOfDirectory(p)
     def copyFile(s: String, d: String) = inner.copyFile(s, d)
-    def copyDirectory(s: String, d: String) = inner.copyDirectory(s, d)
   }
 
   test("sharded manifest: past carryShardTarget the listing splits into " +

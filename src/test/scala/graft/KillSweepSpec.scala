@@ -14,18 +14,18 @@ import graft.operators._
   * version of a randomized sweep: every interleaving of "crash between
   * primitive k and k+1" is covered, and intra-primitive atomicity is
   * exactly what the filesystem contract guarantees), under BOTH
-  * deployment shapes: `PosixCommit` (the in-place rebalance swap,
-  * `_COMMIT` + roll-forward renames) and `CondPutCommit` (the
-  * object-store generation-versioned swap — unreferenced `index-vN`
-  * built, one atomic MANIFEST publish). Recovery is THE
-  * REPLAY: the schedule re-runs from the top, the way a restarted
-  * stream replays its batches — commit markers must no-op completed
-  * steps, roll-forward/settle must finish crashed ones — and the layout
+  * commit implementations: `PosixCommit` and `CondPutCommit` (the
+  * object-store shape). Both drive the same generation-versioned
+  * rebalance — unreferenced `index-vN` built, `_CARRY` listing written,
+  * one atomic MANIFEST publish — through different primitives.
+  * Recovery is THE REPLAY: the schedule re-runs from the top, the way a
+  * restarted stream replays its batches — commit markers must no-op
+  * completed steps, settle must finish crashed ones — and the layout
   * must come out with every vector present exactly once and full-probe
   * search equal to brute force.
   *
-  * The round-17 individual crash specs (q121's zero-renames swap,
-  * q122's mid-compaction batch, the settle spec) each hand-picked one
+  * The individual crash specs (q121's unpublished generation, q122's
+  * mid-compaction batch, the settle spec) each hand-picked one
   * point; this sweeps them all, twice (two schedule orders), for
   * ≥ 50 green schedules.
   *
@@ -35,7 +35,7 @@ import graft.operators._
   * re-manufacturing the dead holder's lock (2h-old mtime, foreign
   * token) after every injected crash, so EVERY schedule's recovery
   * also exercises the stale-lease break path on top of its own
-  * roll-forward/settle/replay work.
+  * settle/replay work.
   */
 class KillSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -76,9 +76,6 @@ class KillSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     def exclusiveCreate(p: String, c: String = ""): Boolean = {
       tick("exclusiveCreate", p); inner.exclusiveCreate(p, c)
     }
-    // the wrapped impl's declared capability must pass through, or the
-    // sweep would run the POSIX in-place rebalance shape over CondPut
-    override def renamesDirAtomically: Boolean = inner.renamesDirAtomically
   }
 
   // ---- fixture: skewed corpus so the rebalance step really splits ----
@@ -184,11 +181,12 @@ class KillSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevShardTarget = RabitqIndex.carryShardTarget
     RabitqIndex.carryShardTarget = 8
     try {
-    // both schedule orders × both deployment shapes: PosixCommit drives
-    // the in-place rebalance swap (_COMMIT + roll-forward renames),
-    // CondPutCommit drives the generation-versioned one (unreferenced
-    // index-vN + atomic MANIFEST publish) — every commit-primitive call
-    // of BOTH shapes gets a crash injected before it
+    // both schedule orders × both commit implementations: the rebalance
+    // publishes a generation under each (unreferenced index-vN, sharded
+    // carry listing, atomic MANIFEST write), but PosixCommit does it by
+    // rename(2) and CondPutCommit by conditional PUT, and the appends'
+    // moves differ too — every commit-primitive call of BOTH gets a crash
+    // injected before it
     for (order <- Seq(0, 1); impl <- Seq(
         "posix" -> (PosixCommit: CommitOps),
         "condput" -> (CondPutCommit: CommitOps))) {

@@ -65,23 +65,9 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     def atomicRenameDir(srcS: String, dstS: String): Unit = {
-      val src = java.nio.file.Paths.get(srcS)
-      val dst = java.nio.file.Paths.get(dstS)
-      if (!Files.exists(src))
+      if (!Files.exists(java.nio.file.Paths.get(srcS)))
         throw new java.nio.file.NoSuchFileException(srcS)
-      if (Files.isRegularFile(src)) { atomicMoveFile(srcS, dstS); return }
-      val walk = Files.walk(src)
-      try {
-        walk.sorted().forEach { p =>
-          val rel = dst.resolve(src.relativize(p).toString)
-          if (Files.isDirectory(p)) Files.createDirectories(rel)
-          else {
-            Files.copy(p, rel, StandardCopyOption.REPLACE_EXISTING)
-            hook("dir-file", rel)
-          }
-        }
-      } finally walk.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(src.toFile)
+      atomicMoveFile(srcS, dstS)
     }
 
     def exclusiveCreate(path: String, content: String = ""): Boolean = {
@@ -269,7 +255,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hiding anywhere on the lifecycle paths would still pass over
     // file: — the grep gate below is the companion that proves there
     // isn't one; this leg proves the Hadoop plumbing ROUND-TRIPS the
-    // full protocol including the in-place rebalance swap.
+    // full protocol including the rebalance's generation publish.
     val (m2, live) = LayoutFs.withFs(new HadoopFs(conf)) {
       LayoutCommit.withOps(new HadoopFsCommit(conf)) {
         // skew recipe so the rebalance really splits
@@ -373,55 +359,6 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"local mkdirs, found: $l"))
   }
 
-  test("TEAR (executed): a reader racing the REAL in-place rebalance " +
-      "swap under the naive double sees a HALF-POPULATED cluster — " +
-      "present directory, rows silently missing") {
-    import spark.implicits._
-    // a layout plus a committed rebalance staging whose split cluster
-    // holds TWO staged part files — the naive double's dir "rename" is
-    // per-file copy, so between the two copies the destination EXISTS
-    // with half its rows. (Under POSIX the same protocol gives a racing
-    // reader only old-complete, absent, or new-complete — absence is
-    // LOUD; a present-but-partial cluster answers queries wrong
-    // silently. This is why CommitOps.renamesDirAtomically exists.)
-    val idxDir = Files.createTempDirectory("naive_reb").toString
-    val (model, index0) = RabitqIndex.build(spark,
-      emb.filter(col("vec_id") < 300), numClusters = 4, seed = 7L)
-    RabitqIndex.save(spark, model, index0, idxDir)
-    val splitId = index0.groupBy("cluster_id").count()
-      .orderBy(desc("count")).head().getInt(0)
-    val staging = new java.io.File(s"$idxDir/_rebalance_staging")
-    spark.read.parquet(s"$idxDir/index")
-      .filter(col("cluster_id") === splitId)
-      .repartition(2) // → two part files in the staged split dir
-      .write.partitionBy("cluster_id").parquet(s"$staging/index")
-    for (t <- Seq("centroids", "params"))
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(s"$idxDir/$t"), new java.io.File(staging, t))
-    Files.writeString(new java.io.File(staging, "_COMMIT").toPath,
-      splitId.toString)
-    val tgt = new java.io.File(s"$idxDir/index/cluster_id=$splitId")
-    val midCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    LayoutCommit.withOps(new NaiveObjectStoreOps((tag, p) => {
-      // fires after EACH per-file copy of the staged→live dir "rename"
-      // (.crc shadows copy first in sort order — count only once a DATA
-      // file landed, the way a real scan lists)
-      if (tag == "dir-file" && p.getParent != null &&
-          p.getParent.toString == tgt.getPath &&
-          p.getFileName.toString.endsWith(".parquet"))
-        midCounts += spark.read.parquet(tgt.getPath).count()
-    })) {
-      RabitqIndex.completeRebalanceSwap(idxDir)
-    }
-    val fin = spark.read.parquet(tgt.getPath).count()
-    assert(fin > 0)
-    assert(midCounts.exists(c => c > 0 && c < fin),
-      s"expected a mid-copy reader to see a partial cluster " +
-        s"(saw $midCounts of $fin) — if this fires, the naive double " +
-        "no longer tears the in-place swap and the capability flag is " +
-        "not load-bearing")
-  }
-
   test("SURVIVE (executed): the rebalance under the conditional-PUT impl " +
       "takes the generation-versioned shape — atomic MANIFEST publish, " +
       "model riding in the generation, tombstone log carried") {
@@ -485,190 +422,79 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         "the next generation")
   }
 
-  test("SURVIVE (executed): a committed in-place staging rolled forward " +
-      "under the conditional-PUT impl CONVERTS to a generation publish " +
-      "instead of tearing live cluster dirs") {
-    // the migration case: a POSIX-deployed rebalance crashed after its
-    // point of no return (_COMMIT written, renames not driven), and the
-    // layout is next opened under the object-store impl. Driving the
-    // in-place renames through per-file copy+delete would expose racing
-    // readers to half-populated LIVE dirs (the TEAR test above), so
-    // completeRebalanceSwap consults the declared capability and
-    // finishes the swap as a generation publish instead.
-    val idxDir = Files.createTempDirectory("condput_rollfwd").toString
-    val (model, index0) = RabitqIndex.build(spark,
-      emb.filter(col("vec_id") < 300), numClusters = 4, seed = 7L)
-    RabitqIndex.save(spark, model, index0, idxDir)
-    val splitId = index0.groupBy("cluster_id").count()
-      .orderBy(desc("count")).head().getInt(0)
-    val staging = new java.io.File(s"$idxDir/_rebalance_staging")
-    spark.read.parquet(s"$idxDir/index")
-      .filter(col("cluster_id") === splitId)
-      .write.partitionBy("cluster_id").parquet(s"$staging/index")
-    for (t <- Seq("centroids", "params"))
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(s"$idxDir/$t"), new java.io.File(staging, t))
-    Files.writeString(new java.io.File(staging, "_COMMIT").toPath,
-      splitId.toString)
-    val expectedIds = index0.select("vec_id").collect().map(_.getLong(0)).toSet
-    val (m2, live) = LayoutCommit.withOps(CondPutCommit) {
-      // the first maintenance entry point rolls the swap forward
-      RabitqIndex.vacuumIndex(idxDir) // default retention — old gen kept
-      RabitqIndex.loadLive(spark, idxDir)
-    }
-    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
-      "the roll-forward must publish a generation, not rename in place")
-    assert(new java.io.File(s"$idxDir/index").isDirectory,
-      "the old generation must stay intact for retention-window readers")
-    assert(!new java.io.File(s"$idxDir/_rebalance_staging").exists)
-    assert(m2.params.numClusters == 4)
-    val ids = live.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(ids == expectedIds, "the conversion lost or invented rows")
-    assert(live.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
-      "the conversion duplicated rows")
-  }
-
-  test("SURVIVE (executed): a batch appended between a crashed " +
-      "rebalance's _COMMIT and its roll-forward is NOT dropped by the " +
-      "swap — the appender's promote rolls the swap forward first " +
-      "(both deployment shapes)") {
-    // the post-stale-break race: a POSIX rebalance staged its rows,
-    // wrote _COMMIT, and crashed before the renames; the lease is
-    // eventually broken and an APPENDER wins the race to the layout
-    // before any maintenance pass. Its batch can land in a SPLIT
-    // cluster's dir — which the roll-forward replaces WHOLESALE from
-    // the staged content — and the batch's commit marker would make
-    // the stream's replay a no-op: silent data loss unless the
-    // promote itself finishes the swap first, the way every
-    // maintenance entry point does.
-    for ((tag, ops) <- Seq("posix" -> (PosixCommit: CommitOps),
-        "condput" -> (CondPutCommit: CommitOps))) {
-      val idxDir = Files.createTempDirectory(s"midswap_append_$tag").toString
-      val (model, index0) = RabitqIndex.build(spark,
-        emb.filter(col("vec_id") < 300), numClusters = 4, seed = 7L)
-      RabitqIndex.save(spark, model, index0, idxDir)
-      val splitId = index0.groupBy("cluster_id").count()
-        .orderBy(desc("count")).head().getInt(0)
-      val memberIds = index0.filter(col("cluster_id") === splitId)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      // committed in-place staging, renames never driven (the crash)
-      val staging = new java.io.File(s"$idxDir/_rebalance_staging")
-      spark.read.parquet(s"$idxDir/index")
-        .filter(col("cluster_id") === splitId)
-        .write.partitionBy("cluster_id").parquet(s"$staging/index")
-      for (t <- Seq("centroids", "params"))
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(s"$idxDir/$t"), new java.io.File(staging, t))
-      Files.writeString(new java.io.File(staging, "_COMMIT").toPath,
-        splitId.toString)
-      // the racing batch: fresh ids whose vectors ASSIGN to the split
-      // cluster (same embeddings, new ids)
-      val extra = emb.filter(col("vec_id").isin(
-          memberIds.take(20).toSeq.map(Long.box): _*))
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      val extraIds = extra.select("vec_id").collect().map(_.getLong(0)).toSet
-      val enc = RabitqIndex.appendVectors(spark, model, extra)
-      assert(enc.filter(col("cluster_id") === splitId).count() > 0,
-        "gate is vacuous: the racing batch missed the split cluster")
-      LayoutCommit.withOps(ops) {
-        graft.streaming.IdempotentSink.appendBatch(enc,
-          RabitqIndex.indexDataDir(idxDir), idxDir, s"mid_$tag", 0L,
-          partitionCols = Seq("cluster_id"))
-        // the maintenance pass that would have driven the drop
-        RabitqIndex.vacuumIndex(idxDir)
-        ()
-      }
-      val (_, live) = RabitqIndex.loadLive(spark, idxDir)
-      val ids = live.select("vec_id").collect().map(_.getLong(0))
-      assert(ids.length == ids.distinct.length, s"$tag: duplicated rows")
-      assert(extraIds.subsetOf(ids.toSet),
-        s"$tag: the roll-forward dropped the appended batch " +
-          s"(missing ${(extraIds -- ids.toSet).take(5)}) — the promote " +
-          "must finish a committed swap before landing rows")
-      assert(index0.select("vec_id").collect().map(_.getLong(0)).toSet
-        .subsetOf(ids.toSet), s"$tag: original rows lost")
-    }
-  }
-
   test("SURVIVE (executed): a batch PROMOTED but crashed before its " +
       "commit marker is settled out of the SOURCE generation before " +
       "the roll-forward builds its carry listing — the replay lands " +
       "exactly once (no carried-by-reference duplicates)") {
-    // the mirror image of the append-drop race above. Reachable via a
-    // ZOMBIE rebalance: R settles and stages under the lease, the lease
-    // is deemed stale mid-staging and broken, appender A promotes into
+    // reachable via a ZOMBIE rebalance (R settles under the lease, the
+    // lease is deemed stale mid-run and broken, appender A promotes into
     // the still-active source generation and crashes before its commit
-    // marker, zombie R writes _COMMIT and dies. The next maintenance
-    // pass (vacuum — which never settles) rolls the swap forward as a
-    // generation publish; A's unmarked files sit in UNTOUCHED clusters,
-    // so the conversion would carry them BY REFERENCE into the new
-    // generation's _CARRY listing — where the replay's sweep (which
-    // only walks the new generation's own dirs) cannot reach them —
-    // and the re-promoted copy would be served alongside the carried
-    // one: silent permanent duplicates. The conversion must settle
-    // unmarked appends against the SOURCE generation first.
-    val idxDir = Files.createTempDirectory("unmarked_carry").toString
-    LayoutCommit.withOps(CondPutCommit) {
-      val (model, index0) = RabitqIndex.build(spark,
-        emb.filter(col("vec_id") < 300), numClusters = 4, seed = 7L)
-      RabitqIndex.save(spark, model, index0, idxDir)
-      val sizes = index0.groupBy("cluster_id").count()
-        .orderBy(desc("count")).collect()
-      val splitId = sizes.head.getInt(0)
-      val quietId = sizes.last.getInt(0) // an UNTOUCHED cluster
-      assert(splitId != quietId)
-      // zombie R's staging: read BEFORE the racing promote (faithful to
-      // the timeline — R staged from the pre-append layout)
-      val staging = new java.io.File(s"$idxDir/_rebalance_staging")
-      spark.read.parquet(s"$idxDir/index")
-        .filter(col("cluster_id") === splitId)
-        .write.partitionBy("cluster_id").parquet(s"$staging/index")
-      for (t <- Seq("centroids", "params"))
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(s"$idxDir/$t"), new java.io.File(staging, t))
-      // the racing batch: fresh ids that ASSIGN to the untouched
-      // cluster, so its files are exactly what the listing would carry
-      val quietMembers = index0.filter(col("cluster_id") === quietId)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      val extra = emb.filter(col("vec_id").isin(
-          quietMembers.take(15).toSeq.map(Long.box): _*))
-        .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
-      val enc = RabitqIndex.appendVectors(spark, model, extra)
-      assert(enc.filter(col("cluster_id") === quietId).count() > 0,
-        "gate is vacuous: the racing batch missed the untouched cluster")
-      val extraIds = extra.select("vec_id").collect().map(_.getLong(0)).toSet
-      // promote-then-crash: everything appendBatch does EXCEPT the
-      // commit marker — the stranded in-progress sentinel is the
-      // crash's evidence the settle keys on
-      LayoutFs.mkdirs(s"$idxDir/_commits/unmk")
-      LayoutCommit.exclusiveCreate(s"$idxDir/_commits/unmk/0.inprogress")
-      val stg = s"$idxDir/_staging/unmk-0"
-      enc.write.mode("overwrite").partitionBy("cluster_id").parquet(stg)
-      RabitqIndex.promoteStaged(stg, RabitqIndex.indexDataDir(idxDir),
-        Some("unmk-0"))
-      LayoutFs.deleteRecursively(stg)
-      // zombie R's point of no return, written AFTER the promote
-      Files.writeString(new java.io.File(staging, "_COMMIT").toPath,
-        splitId.toString)
-      // the maintenance pass that drives the conversion (never settles
-      // on its own)
-      RabitqIndex.vacuumIndex(idxDir)
-      assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
-        "the roll-forward must have published a generation")
-      // the stream's replay of the unmarked batch
-      graft.streaming.IdempotentSink.appendBatch(enc,
-        RabitqIndex.indexDataDir(idxDir), idxDir, "unmk", 0L,
-        partitionCols = Seq("cluster_id"))
-      val (_, live) = RabitqIndex.loadLive(spark, idxDir)
-      val ids = live.select("vec_id").collect().map(_.getLong(0))
-      assert(ids.length == ids.distinct.length,
-        "the carried-by-reference unmarked batch was served twice — " +
-          "the conversion must settle unmarked appends against the " +
-          "source generation before building its carry listing")
-      assert(extraIds.subsetOf(ids.toSet), "the replayed batch was lost")
-      assert(index0.select("vec_id").collect().map(_.getLong(0)).toSet
-        .subsetOf(ids.toSet), "original rows lost")
-      ()
+    // marker, R goes on to build its carry listing) and inside one
+    // maintenanceLoop pass, whose rebalance phase runs `recovered = true`
+    // (the pass settled once, at its top). A's unmarked files sit in an
+    // UNTOUCHED cluster, so a listing built over them carries them BY
+    // REFERENCE into the new generation — beyond the reach of the
+    // replay's sweep, which walks only the new generation's own dirs —
+    // and the re-promoted copy is served alongside the carried one:
+    // silent permanent duplicates. The publish must settle unmarked
+    // appends against the SOURCE generation right before the listing.
+    for ((tag, ops) <- Seq("condput" -> (CondPutCommit: CommitOps),
+        "posix" -> (PosixCommit: CommitOps))) {
+      val idxDir = Files.createTempDirectory(s"unmarked_carry_$tag").toString
+      LayoutCommit.withOps(ops) {
+        // skew so the rebalance really splits: model fit on the lower
+        // halfspace, layout holding everything (the q120 recipe)
+        val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+        val (model, _) = RabitqIndex.build(spark, lowerHalf,
+          numClusters = 4, seed = 7L)
+        val index0 = RabitqIndex.appendVectors(spark, model, emb)
+        RabitqIndex.save(spark, model, index0, idxDir)
+        // the smallest cluster is at most the mean size: never split
+        val quietId = index0.groupBy("cluster_id").count()
+          .orderBy(col("count")).head().getInt(0)
+        // the racing batch: fresh ids that ASSIGN to the untouched
+        // cluster, so its files are exactly what the listing would carry
+        val quietMembers = index0.filter(col("cluster_id") === quietId)
+          .select("vec_id").collect().map(_.getLong(0)).toSet
+        val extra = emb.filter(col("vec_id").isin(
+            quietMembers.take(15).toSeq.map(Long.box): _*))
+          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
+        val enc = RabitqIndex.appendVectors(spark, model, extra)
+        assert(enc.filter(col("cluster_id") === quietId).count() > 0,
+          s"$tag: gate is vacuous: the racing batch missed the untouched cluster")
+        val extraIds = extra.select("vec_id").collect().map(_.getLong(0)).toSet
+        // promote-then-crash: everything appendBatch does EXCEPT the
+        // commit marker — the stranded in-progress sentinel is the
+        // crash's evidence the settle keys on
+        LayoutFs.mkdirs(s"$idxDir/_commits/unmk")
+        LayoutCommit.exclusiveCreate(s"$idxDir/_commits/unmk/0.inprogress")
+        val stg = s"$idxDir/_staging/unmk-0"
+        enc.write.mode("overwrite").partitionBy("cluster_id").parquet(stg)
+        RabitqIndex.promoteStaged(stg, RabitqIndex.indexDataDir(idxDir),
+          Some("unmk-0"))
+        LayoutFs.deleteRecursively(stg)
+        // the rebalance phase of a pass that settled before the promote
+        val rep = RabitqIndex.rebalanceUnlocked(spark, idxDir, emb,
+          maxSizeFactor = 1.4, fitSampleCap = 100000L, recovered = true)
+        assert(rep.numClustersAfter > rep.numClustersBefore,
+          s"$tag: gate is vacuous: the skewed layout did not split ($rep)")
+        assert(!rep.split.contains(quietId))
+        assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
+          s"$tag: the rebalance must have published a generation")
+        // the stream's replay of the unmarked batch
+        graft.streaming.IdempotentSink.appendBatch(enc,
+          RabitqIndex.indexDataDir(idxDir), idxDir, "unmk", 0L,
+          partitionCols = Seq("cluster_id"))
+        val (_, live) = RabitqIndex.loadLive(spark, idxDir)
+        val ids = live.select("vec_id").collect().map(_.getLong(0))
+        assert(ids.length == ids.distinct.length,
+          s"$tag: the carried-by-reference unmarked batch was served " +
+            "twice — the publish must settle unmarked appends against " +
+            "the source generation before building its carry listing")
+        assert(extraIds.subsetOf(ids.toSet), s"$tag: the replayed batch was lost")
+        assert(index0.select("vec_id").collect().map(_.getLong(0)).toSet
+          .subsetOf(ids.toSet), s"$tag: original rows lost")
+      }
     }
   }
 

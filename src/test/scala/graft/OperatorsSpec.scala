@@ -2065,13 +2065,12 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
     RabitqIndex.save(spark, model, index0, dir)
     Seq(9L).toDF("vec_id").write.parquet(s"$dir/deletes")
-    // debris: a compaction that rewrote but never swapped, a dead
-    // rebalance staging, orphaned batch staging, a torn MANIFEST.tmp,
-    // and a committed batch's marker (which must SURVIVE)
+    // debris: a compaction that rewrote but never swapped, a lease-break
+    // aside a crashed breaker stranded, orphaned batch staging, a torn
+    // MANIFEST.tmp, and a committed batch's marker (which must SURVIVE)
     graft.streaming.VecsStream.compactRewrite(spark, dir) // index-v2, no swap
-    new java.io.File(s"$dir/_rebalance_staging/cluster_id=0").mkdirs()
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/_rebalance_staging/cluster_id=0/part-0.parquet"), "x")
+      java.nio.file.Paths.get(dir, "_maintenance.lock.broken-dead"), "x")
     new java.io.File(s"$dir/_staging/q-0").mkdirs()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "MANIFEST.tmp"), "index-v2")
     new java.io.File(s"$dir/_commits/q").mkdirs()
@@ -2082,7 +2081,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rep.removed.size == 3 && rep.reclaimedBytes > 0, rep.toString)
     assert(!new java.io.File(s"$dir/index-v2").exists,
       "unRETIRED non-active generation is immediate debris")
-    assert(!new java.io.File(s"$dir/_rebalance_staging").exists)
+    assert(!new java.io.File(s"$dir/_maintenance.lock.broken-dead").exists)
     assert(!new java.io.File(s"$dir/MANIFEST.tmp").exists)
     // batch staging is AGE-GATED (it may belong to a LIVE batch between
     // its staged write and its lease-guarded promote) — a fresh entry
@@ -2117,104 +2116,46 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(RabitqIndex.loadLive(spark, dir)._2.count() == before.size)
   }
 
-  test("rebalance swap: a crash after _COMMIT rolls FORWARD on the next " +
-      "maintenance pass — staged rows are never stranded or vacuumed away") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rebal_commit").toString
-    val initial = emb.filter(col("vec_id") < 400)
+  test("a layout left mid-swap by an older build (committed " +
+      "_rebalance_staging) is refused by vacuumIndex and every other " +
+      "mutator; a save over it starts a fresh layout") {
+    val dir = java.nio.file.Files.createTempDirectory("legacy_swap").toString
+    val initial = emb.filter(col("vec_id") < 300)
     val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
     RabitqIndex.save(spark, model, index0, dir)
-    val dataDir = RabitqIndex.indexDataDir(dir)
-
-    // manufacture the exact crash state: everything STAGED and COMMITTED,
-    // process died before any rename. Staged index = cluster 0 re-split
-    // into clusters 0 and 4 (half the rows each, marker factor_ip values
-    // so provenance is checkable), staged sidecar = 5 centroids.
-    val c0 = spark.read.parquet(dataDir).filter(col("cluster_id") === 0)
-      .withColumn("cluster_id", lit(0))
-    val half0 = c0.filter(col("vec_id") % 2 === 0).withColumn("cluster_id", lit(0))
-    val half4 = c0.filter(col("vec_id") % 2 =!= 0).withColumn("cluster_id", lit(4))
+    // what an older build's in-place rebalance left when it died between
+    // its _COMMIT marker and its directory renames: the staging holds
+    // the only copy of the re-encoded split cluster
     val staging = s"$dir/_rebalance_staging"
-    half0.unionByName(half4).write.partitionBy("cluster_id")
-      .parquet(s"$staging/index")
-    val oldCent = spark.read.parquet(s"$dir/centroids")
-    oldCent.unionByName(oldCent.filter(col("cluster_id") === 0)
-        .withColumn("cluster_id", lit(4)))
-      .coalesce(1).write.parquet(s"$staging/centroids")
-    spark.read.parquet(s"$dir/params").withColumn("num_clusters", lit(5))
-      .coalesce(1).write.parquet(s"$staging/params")
-    // the marker lists the split ids: cluster 0 is REPLACED (all its
-    // rows were re-encoded), cluster 4 is a fresh destination (merge
-    // path, empty target)
+    spark.read.parquet(s"$dir/index").filter(col("cluster_id") === 0)
+      .write.partitionBy("cluster_id").parquet(s"$staging/index")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(staging, "_COMMIT"), "0".getBytes)
-    val c0RowsBefore = c0.count()
-
-    // the next maintenance pass (vacuum runs first in the loop) must
-    // FINISH the swap, not reclaim it as debris
-    val rep = RabitqIndex.vacuumIndex(dir)
-    assert(!new java.io.File(staging).exists, "staging not cleaned up")
-    assert(!rep.removed.exists(_.contains("_rebalance_staging")),
-      "a committed swap was reported as reclaimed debris")
-    val (m2, live) = RabitqIndex.loadLive(spark, dir)
-    assert(m2.params.numClusters == 5, "staged sidecar not swapped in")
-    val sizes = live.groupBy("cluster_id").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(sizes.getOrElse(0, 0L) + sizes.getOrElse(4, 0L) == c0RowsBefore,
-      s"split rows lost or duplicated: $sizes")
-    assert(sizes.contains(4), "fresh cluster dir not renamed in")
-    assert(live.count() == initial.count())
-    assert(Option(new java.io.File(dataDir).listFiles()).get
-      .forall(!_.getName.startsWith(".rebalance-")), "aside debris left")
-
-    // idempotence under a crash MID-swap: cluster 0 already renamed in,
-    // cluster 4 still staged — the redo finishes only what's left
-    val again = s"$dir/_rebalance_staging"
-    live.filter(col("cluster_id") === 4).withColumn("cluster_id", lit(4))
-      .write.partitionBy("cluster_id").parquet(s"$again/index")
-    spark.read.parquet(s"$dir/centroids").coalesce(1)
-      .write.parquet(s"$again/centroids")
-    spark.read.parquet(s"$dir/params").coalesce(1)
-      .write.parquet(s"$again/params")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(again, "_COMMIT"), "4".getBytes)
-    RabitqIndex.completeRebalanceSwap(dir)
-    val live2 = RabitqIndex.loadLive(spark, dir)._2
-    assert(live2.count() == initial.count(),
-      "mid-swap redo lost or duplicated rows")
-    assert(live2.filter(col("cluster_id") === 4).count() == sizes(4))
-
-    // an UNCOMMITTED staging (crash before the point of no return)
-    // still rolls BACK: vacuum reclaims it, the layout is untouched
-    // (read the CURRENT layout — the swaps above renamed the original
-    // files this test staged from)
-    RabitqIndex.loadLive(spark, dir)._2.filter(col("cluster_id") === 4)
-      .withColumn("cluster_id", lit(4))
-      .write.partitionBy("cluster_id").parquet(s"$again/index")
-    val rep2 = RabitqIndex.vacuumIndex(dir)
-    assert(rep2.removed.exists(_.contains("_rebalance_staging")))
+    val e = intercept[IllegalArgumentException](RabitqIndex.vacuumIndex(dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("older build"),
+      e.getMessage)
+    for (op <- Seq[() => Any](
+        () => graft.streaming.VecsStream.compactIndex(spark, dir),
+        () => RabitqIndex.rebalanceIndex(spark, dir, initial),
+        () => graft.streaming.VecsStream.maintenanceLoop(spark, dir, initial),
+        () => graft.streaming.IdempotentSink.appendBatch(
+          RabitqIndex.appendVectors(spark, model,
+            emb.filter(col("vec_id") >= 300 && col("vec_id") < 310)),
+          RabitqIndex.indexDataDir(dir), dir, "legacy", 0L,
+          partitionCols = Seq("cluster_id"))))
+      intercept[IllegalArgumentException](op())
+    assert(new java.io.File(s"$staging/_COMMIT").isFile &&
+      new java.io.File(s"$staging/index/cluster_id=0").isDirectory,
+      "a refused mutator must leave the staged rows alone")
+    assert(!new java.io.File(s"$dir/_maintenance.lock").exists,
+      "the refusal comes before the lease is taken")
+    assert(RabitqIndex.loadLive(spark, dir)._2.count() == initial.count(),
+      "the refused append must not have landed")
+    // a fresh index has no history: save resets the staging with the rest
+    RabitqIndex.save(spark, model, index0, dir)
+    assert(!new java.io.File(staging).exists)
+    RabitqIndex.vacuumIndex(dir)
     assert(RabitqIndex.loadLive(spark, dir)._2.count() == initial.count())
-
-    // a split cluster every member re-assigned AWAY from has NO staged
-    // dir — its old dir must still be retired, or its rows (re-encoded
-    // elsewhere in a real rebalance) would survive as duplicates. The
-    // 200k smoke caught exactly this in the first cut of the swap.
-    val c1Rows = RabitqIndex.loadLive(spark, dir)._2
-      .filter(col("cluster_id") === 1).count()
-    assert(c1Rows > 0, "fixture has no cluster-1 rows to retire")
-    new java.io.File(s"$again/index").mkdirs() // staged rows: none at all
-    spark.read.parquet(s"$dir/centroids").coalesce(1)
-      .write.parquet(s"$again/centroids")
-    spark.read.parquet(s"$dir/params").coalesce(1)
-      .write.parquet(s"$again/params")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(again, "_COMMIT"), "1".getBytes)
-    RabitqIndex.completeRebalanceSwap(dir)
-    val live3 = RabitqIndex.loadLive(spark, dir)._2
-    assert(!new java.io.File(s"$dataDir/cluster_id=1").exists,
-      "zero-staged split cluster's old dir survived the swap")
-    assert(live3.count() == initial.count() - c1Rows)
-    assert(!new java.io.File(again).exists)
   }
 
   test("maintenance lease: concurrent maintenance mutators are mutually " +
