@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.graft.SeededRelation
+import org.apache.spark.sql.types.StructType
 import graft.Overlap
 import graft.functions.VectorOps
 
@@ -310,14 +313,15 @@ object RabitqIndex {
     * directory. Written by the generation-versioned rebalance swap so
     * UNTOUCHED clusters are carried as metadata (one listing line per
     * immutable file — IO ∝ skew) instead of per-file copy (∝ corpus);
-    * readers resolve the listing ([[scanOfGen]]), and [[vacuumUnlocked]]
-    * refcounts listed files across retained generations instead of
-    * retiring at directory granularity. The listing is FLAT, never a
-    * chain: a swap that inherits carried entries rewrites the survivors
-    * into its own listing, so resolution is one file read. Absent — a
-    * fresh [[save]], every compaction rewrite — the generation is
-    * self-contained and the scan is the plain directory read,
-    * plan-identical to the pre-listing engine.
+    * [[scanOfGen]] seeds its one relation with the listed files beside
+    * the generation's own (no directory walk of the source generations),
+    * and [[vacuumUnlocked]] refcounts listed files across retained
+    * generations instead of retiring at directory granularity. The
+    * listing is FLAT, never a chain: a swap that inherits carried
+    * entries rewrites the survivors into its own listing, so resolution
+    * is one file read. Absent — a fresh [[save]], every compaction
+    * rewrite — the generation is self-contained and the relation holds
+    * its own files only.
     * Underscore name = invisible to Spark's file listing, exactly like
     * the `_centroids`/`_params` generation-local sidecars. Reference
     * analog: the reference's S3 tier only ever GETs immutable objects
@@ -537,131 +541,153 @@ object RabitqIndex {
     own ++ inherited
   }
 
-  /** The data scan of an already-resolved generation: its own directory
-    * unioned with any files its `_CARRY` listing carries by reference.
-    * Carried files are grouped by SOURCE generation and read with
-    * `basePath` pointing at that generation dir, so `cluster_id`
-    * partition inference — and partition PRUNING of probe filters —
-    * works on the carried branches exactly as on the own branch; the
-    * listing bounds the file index (no directory walk of retired
-    * generations). Carry-free generations return the plain directory
-    * read — the identical plan every existing pruning gate asserts.
-    */
-  private[graft] def scanOfGen(spark: SparkSession, dir: String,
-                               gen: String): DataFrame =
-    scanOfGen(spark, dir, gen, None)
+  /** A layout path as the qualified Hadoop path Spark reads it by. */
+  private def hpath(spark: SparkSession, p: String): Path = {
+    val path = new Path(p)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path)
+  }
 
-  /** [[scanOfGen]] with OPTIONAL cluster restriction: when `clusters` is
-    * given, carried files are materialized from only the manifest
-    * shards overlapping them ([[readCarryForClusters]]) — the planner
-    * never even lists the carried files of unprobed clusters, which at
-    * 100 TB is the difference between O(probed) and O(corpus-file-count)
-    * driver work per query. Restriction contract: the caller MUST still
-    * filter `cluster_id ∈ clusters` (the own-dir branch is a full
-    * directory read pruned by that filter, exactly as before).
+  private def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+
+  /** The children of `d`; none when `d` is missing. */
+  private def listStatus(spark: SparkSession, d: Path): Seq[FileStatus] =
+    try d.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(d).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The parquet data files directly in `d`, by name. */
+  private def parquetFiles(spark: SparkSession, d: Path): Seq[FileStatus] =
+    listStatus(spark, d).filter(s => s.isFile && isDataFile(s.getPath.getName))
+      .sortBy(_.getPath.getName)
+
+  /** The data scan of an already-resolved generation: ONE relation
+    * ([[org.apache.spark.graft.SeededRelation]]) over its own committed
+    * files and the files its carry listing names in older generations,
+    * opened from what the engine already knows — the own listing, the
+    * listing file, one footer for the schema — so opening runs no Spark
+    * job (no listing job however many cluster dirs, no schema
+    * inference). Partition values come from the `cluster_id=` dirs of
+    * both, so a probe filter prunes carried files exactly like own
+    * ones.
+    *
+    * Read-committed: files of promoted-but-unmarked batches
+    * ([[inProgressPrefixes]]) are left out — the replay may sweep them
+    * at any moment, and a racing reader must neither serve them nor
+    * hard-fail on their deletion. `refresh()` of the relation re-lists
+    * the own dirs (with the exclusion re-read) and keeps the carried
+    * set: a carried source dir can still hold pre-split files the
+    * listing does not carry.
+    *
+    * With `clusters` given, only those own cluster dirs are listed and
+    * carried files come from only the manifest shards overlapping them
+    * ([[readCarryForClusters]]) — driver work ∝ probed data, not ∝
+    * corpus file count. Restriction contract: the caller MUST still
+    * filter `cluster_id ∈ clusters`.
+    *
+    * The schema is the footer schema of the relation's first file. A
+    * relation with no file — a probe of clusters that hold none, or a
+    * generation whose every file belongs to an uncommitted batch — is
+    * empty and takes the schema from the first committed own file of
+    * any cluster, else the first carried file, else an uncommitted own
+    * file.
     */
   private[graft] def scanOfGen(spark: SparkSession, dir: String,
                                gen: String,
-                               clusters: Option[Set[Int]]): DataFrame = {
+                               clusters: Option[Set[Int]] = None): DataFrame = {
     val genName = LayoutFs.baseName(gen)
-    val inprog = inProgressPrefixes(dir)
-    // the OWN-directory branch: the plain directory read on the
-    // no-crash path (inprog empty — plan-identical to every pruning
-    // gate), an explicit file enumeration EXCLUDING uncommitted-batch
-    // files when a promoted-but-unmarked append exists (read-committed:
-    // the replay may sweep those files at any moment, and a racing
-    // reader must neither serve them nor hard-fail on their deletion)
-    def ownScanAttempt(retries: Int): DataFrame =
-      if (inprog.isEmpty) spark.read.parquet(gen)
-      else {
-        val all = LayoutFs.list(gen)
-          .filter(d => d.isDir && d.name.startsWith("cluster_id="))
-          .sortBy(_.name)
-          .flatMap(cd => LayoutFs.list(cd.path)
-            .filter(f => !f.isDir && f.name.endsWith(".parquet"))
-            .sortBy(_.name))
-        val files = all
-          .filterNot(f => excludedByInProgress(f.name, inprog)).map(_.path)
-        if (files.nonEmpty) spark.read.option("basePath", gen).parquet(files: _*)
-        else if (all.isEmpty) spark.read.parquet(gen)
-        else
-          // 'no committed files' ≠ 'no files': when the exclusion emptied
-          // a non-empty listing, EVERY parquet file here belongs to a
-          // promoted-but-uncommitted batch — a full-directory read would
-          // serve exactly those rows (and race the replay's sweep), so
-          // serve a schema-only empty frame instead (one excluded footer
-          // read for the schema, zero data rows — the pure-carry shape).
-          // The schema read races the replay's SWEEP of that very file
-          // (its deletion is the uncommitted-batch contract): on a
-          // vanished-file failure re-list and retry — after the sweep
-          // the listing is either empty (plain dir read) or holds the
-          // re-promoted attempt's fresh files
-          try spark.read.option("basePath", gen).parquet(all.head.path).limit(0)
-          catch {
-            case _: Exception if retries > 0 &&
-                !LayoutFs.isFile(all.head.path) =>
-              ownScanAttempt(retries - 1)
-          }
+    val root = hpath(spark, gen)
+    def ownFiles(only: Option[Set[Int]]): Seq[FileStatus] = {
+      val dirs = only match {
+        case Some(cs) => cs.toSeq.sorted.map(c => new Path(root, s"cluster_id=$c"))
+        case None => listStatus(spark, root)
+          .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster_id="))
+          .map(_.getPath).sortBy(_.getName)
       }
-    def ownScan: DataFrame = ownScanAttempt(retries = 3)
-    // carry-free generation (the common case, two metadata probes):
-    // the plain own-dir read, with none of the listing resolution or
-    // the ownHasData walk below — the probed disk path must cost the
-    // same here as the r19 loadLive read did
-    if (!hasCarry(dir, genName)) return ownScan
-    val carry0 = clusters.fold(readCarry(dir, genName))(cs =>
-      readCarryForClusters(dir, genName, cs))
-    // defensive: listings are built post-settle so they never name an
-    // uncommitted batch's files — but exclusion here is one string test
-    val carry = carry0.filterNot(e =>
-      excludedByInProgress(e.split('/').last, inprog))
-    def ownHasData = LayoutFs.list(gen)
-      .filter(f => f.isDir && f.name.startsWith("cluster_id="))
-      .exists(cd => LayoutFs.list(cd.path)
-        .exists(f => !f.isDir && f.name.endsWith(".parquet")))
-    if (carry.isEmpty) {
-      // no carried files at all, or none within the restriction: the
-      // own-directory read — except a PURE-carry generation whose
-      // probed clusters hold zero carried files, where the own dir has
-      // nothing to infer a schema from; read one carried file for the
-      // schema and return its empty restriction
-      if (clusters.isEmpty || ownHasData) return ownScan
-      val anyEntry = (if (LayoutFs.isFile(s"$dir/$genName/_CARRY"))
-          readCarry(dir, genName).headOption
-        else readCarryShards(dir, genName).headOption
-          .flatMap(s => readShardEntries(dir, genName, s).headOption))
-        .getOrElse(return ownScan)
-      return spark.read
-        .option("basePath", s"$dir/${anyEntry.takeWhile(_ != '/')}")
-        .parquet(s"$dir/$anyEntry").limit(0)
+      dirs.flatMap(parquetFiles(spark, _))
     }
-    val own = if (ownHasData) Seq(ownScan) else Nil
-    val carried = carry.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1)
-      .map { case (srcGen, entries) =>
-        spark.read.option("basePath", s"$dir/$srcGen")
-          .parquet(entries.map(e => s"$dir/$e"): _*)
+    def committed(files: Seq[FileStatus], inprog: Seq[String]) =
+      files.filterNot(f => excludedByInProgress(f.getPath.getName, inprog))
+    val inprog = inProgressPrefixes(dir)
+    val own = committed(ownFiles(clusters), inprog)
+    val carried: Map[Path, Seq[FileStatus]] =
+      if (!hasCarry(dir, genName)) Map.empty
+      else clusters.fold(readCarry(dir, genName))(cs =>
+          readCarryForClusters(dir, genName, cs))
+        // defensive: listings are built post-settle so they never name
+        // an uncommitted batch's files — but exclusion is one string test
+        .filterNot(e => excludedByInProgress(e.split('/').last, inprog))
+        // statuses from one listing per carried cluster dir, not one
+        // stat per file; root = the source generation dir
+        .groupBy(e => e.substring(0, e.lastIndexOf('/'))).toSeq.sortBy(_._1)
+        .flatMap { case (rel, es) =>
+          val byName = parquetFiles(spark, hpath(spark, s"$dir/$rel"))
+            .map(s => s.getPath.getName -> s).toMap
+          es.sorted.map(e => byName.getOrElse(e.split('/').last,
+            throw new java.io.FileNotFoundException(
+              s"carried file $dir/$e is missing")))
+        }
+        .groupBy(_.getPath.getParent.getParent)
+    def anyCarried: Option[String] =
+      if (LayoutFs.isFile(s"$dir/$genName/_CARRY")) readCarry(dir, genName).headOption
+      else readCarryShards(dir, genName).headOption
+        .flatMap(s => readShardEntries(dir, genName, s).headOption)
+    // the empty relation's schema read races the replay's SWEEP of an
+    // uncommitted file (its deletion is the uncommitted-batch contract):
+    // when the file vanished, look again
+    def schemaOfEmpty(retries: Int): StructType = {
+      val all = ownFiles(None)
+      val src = committed(all, inprog).headOption.map(_.getPath)
+        .orElse(anyCarried.map(e => hpath(spark, s"$dir/$e")))
+        .orElse(all.headOption.map(_.getPath))
+        .getOrElse(throw new IllegalStateException(
+          s"$gen holds no parquet file to read its schema from"))
+      try SeededRelation.footerSchema(spark, src)
+      catch {
+        case _: java.io.IOException if retries > 0 &&
+            !src.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(src) =>
+          schemaOfEmpty(retries - 1)
       }
-    (own ++ carried).reduce(_.unionByName(_))
+    }
+    val schema = (own ++ carried.values.flatten).headOption
+      .fold(schemaOfEmpty(retries = 3))(f =>
+        SeededRelation.footerSchema(spark, f.getPath))
+    SeededRelation.open(spark, schema, Some("cluster_id"), root, own,
+      () => committed(ownFiles(clusters), inProgressPrefixes(dir)), carried)
   }
 
+  /** A flat parquet table (a tombstone log, a model sidecar) as one
+    * relation over the files in `path` outside the batches `inprog`
+    * names, both re-read on `refresh()`, with the footer schema of the
+    * first — opened without a Spark job. None when no file qualifies.
+    */
+  private def flatScanOf(spark: SparkSession, path: String,
+                         inprog: () => Seq[String]): Option[DataFrame] = {
+    val root = hpath(spark, path)
+    def files(): Seq[FileStatus] = {
+      val excluded = inprog()
+      parquetFiles(spark, root)
+        .filterNot(f => excludedByInProgress(f.getPath.getName, excluded))
+    }
+    val initial = files()
+    initial.headOption.map(f => SeededRelation.open(spark,
+      SeededRelation.footerSchema(spark, f.getPath), None, root, initial, () => files()))
+  }
+
+  /** A model sidecar table, read with its footer schema. */
+  private[graft] def sidecarOf(spark: SparkSession, path: String): DataFrame =
+    flatScanOf(spark, path, () => Nil).getOrElse(
+      throw new IllegalStateException(s"model table $path holds no parquet file"))
+
   /** The tombstone-log scan of a generation with the same read-committed
-    * exclusion as [[scanOfGen]]: the log is an append target too, so a
-    * crashed delete batch's files are excluded (and safe from the
-    * replay's sweep racing this read). None when the log is empty or
-    * holds only uncommitted batches.
+    * exclusion and the same job-free open as [[scanOfGen]]: the log is an
+    * append target too, so a crashed delete batch's files are excluded
+    * (and safe from the replay's sweep racing this read). EVERY reader of
+    * the log goes through here. None when the log is empty or holds only
+    * uncommitted batches.
     */
   private[graft] def logScanOfGen(spark: SparkSession, dir: String,
-                                  gen: String): Option[DataFrame] = {
-    val p = logDirOfGen(dir, gen)
-    val inprog = inProgressPrefixes(dir)
-    val files = LayoutFs.list(p)
-      .filter(f => !f.isDir && f.name.endsWith(".parquet") &&
-        !excludedByInProgress(f.name, inprog))
-      .sortBy(_.name).map(_.path)
-    if (files.isEmpty) None
-    else if (inprog.isEmpty) Some(spark.read.parquet(p))
-    else Some(spark.read.option("basePath", p).parquet(files: _*))
-  }
+                                  gen: String): Option[DataFrame] =
+    flatScanOf(spark, logDirOfGen(dir, gen), () => inProgressPrefixes(dir))
 
   /** Mark a generation as RETIRED (superseded by a compaction swap) —
     * the marker's mtime starts the retention clock [[vacuumIndex]]
@@ -676,17 +702,14 @@ object RabitqIndex {
   }
 
   /** Move staged parquet data files into a (possibly partitioned) layout
-    * directory, preserving the partition-dir structure. `rename =
-    * Some(prefix)` gives per-directory DETERMINISTIC names
-    * (`$prefix-00000.parquet`, sorted source order) so a retried caller
-    * overwrites its own files instead of duplicating them; `None` keeps
-    * the writer's names (globally unique part-UUIDs — right for
-    * run-once ops like the rebalance promote). File moves are
-    * metadata-only on a real filesystem — the staged bytes are written
-    * exactly once.
+    * directory, preserving the partition-dir structure, under
+    * per-directory DETERMINISTIC names (`$prefix-00000.parquet`, sorted
+    * source order) so a retried caller overwrites its own files instead
+    * of duplicating them. File moves are metadata-only on a real
+    * filesystem — the staged bytes are written exactly once.
     */
   private[graft] def promoteStaged(staging: String, target: String,
-                                   rename: Option[String]): Unit = {
+                                   prefix: String): Unit = {
     def walk(src: String, dst: String): Unit = {
       val kids = LayoutFs.list(src)
       kids.filter(d => d.isDir && !d.name.startsWith("_"))
@@ -695,8 +718,7 @@ object RabitqIndex {
         .sortBy(_.name)
       if (files.nonEmpty) LayoutFs.mkdirs(dst)
       files.zipWithIndex.foreach { case (f, i) =>
-        val name = rename.fold(f.name)(p => f"$p-$i%05d.parquet")
-        LayoutCommit.atomicMoveFile(f.path, s"$dst/$name")
+        LayoutCommit.atomicMoveFile(f.path, f"$dst/$prefix-$i%05d.parquet")
       }
     }
     walk(staging, target)
@@ -712,9 +734,8 @@ object RabitqIndex {
     // rows and the counted log must belong to the same generation
     val gen = indexDataDir(dir)
     val nRows = scanOfGen(spark, dir, gen).count()
-    val nTomb = tombstoneLogOfGenIfAny(dir, LayoutFs.baseName(gen))
-      .fold(0L)(delDir =>
-        spark.read.parquet(delDir).select("vec_id").distinct().count())
+    val nTomb = logScanOfGen(spark, dir, LayoutFs.baseName(gen))
+      .fold(0L)(_.select("vec_id").distinct().count())
     (nRows, nTomb)
   }
 
@@ -1199,10 +1220,8 @@ object RabitqIndex {
     val gen = indexDataDir(dir)
     val model = known.map(_._1).getOrElse(modelOfGen(spark, dir, gen))
     val index = scanOfGen(spark, dir, gen)
-    val live = tombstoneLogOfGenIfAny(dir, LayoutFs.baseName(gen))
-      .fold(index)(delDir =>
-        index.join(spark.read.parquet(delDir).select("vec_id"),
-          Seq("vec_id"), "left_anti"))
+    val live = logScanOfGen(spark, dir, LayoutFs.baseName(gen))
+      .fold(index)(log => index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
     spark.sparkContext.setJobDescription(s"rebalance: sizes $dir")
     val sizes = known.map(_._2).getOrElse {
       // with no tombstone log the live sizes are pure footer metadata
@@ -1898,11 +1917,11 @@ object RabitqIndex {
     // three independent tiny single-task reads — overlap them
     // so a model load pays one job latency, not three
     val (p, rotation, centroids) = Overlap(spark,
-      spark.read.parquet(modelSidecarDir(dir, gen, "params")).head(),
-      spark.read.parquet(s"$dir/rotation")
+      sidecarOf(spark, modelSidecarDir(dir, gen, "params")).head(),
+      sidecarOf(spark, s"$dir/rotation")
         .orderBy("row_id").collect()
         .map(r => r.getAs[Seq[Float]]("row").toArray),
-      spark.read.parquet(modelSidecarDir(dir, gen, "centroids"))
+      sidecarOf(spark, modelSidecarDir(dir, gen, "centroids"))
         .orderBy("cluster_id").collect()
         .map(r => r.getAs[Seq[Float]]("centroid").toArray))
     val params = RabitqParams(p.getAs[Int]("dim"), p.getAs[Int]("pad_dim"),
@@ -1916,12 +1935,13 @@ object RabitqIndex {
   /** Single-resolution PROBE-PRUNED live read — the disk query paths'
     * read: resolve the generation ONCE, load its model, let the caller
     * derive the probed cluster ids from it, and return the live scan
-    * restricted to them. Carried files come from only the manifest
-    * shards overlapping the probed clusters ([[readCarryForClusters]]),
-    * so the planner's file index is ∝ probed data, not ∝ corpus file
-    * count; the `cluster_id ∈ probed` filter is already applied (it
-    * partition-prunes the own-dir branch exactly as before — the plan
-    * the pruning gates assert), and the generation's tombstone log is
+    * restricted to them. Only the probed own cluster dirs are listed
+    * and carried files come from only the manifest shards overlapping
+    * the probed clusters ([[readCarryForClusters]]), so the planner's
+    * file index is ∝ probed data, not ∝ corpus file count; the
+    * `cluster_id ∈ probed` filter is already applied (it lands in the
+    * scan's PartitionFilters — the plan the pruning gates assert), and
+    * the generation's tombstone log is
     * anti-joined out ([[loadLive]]'s contract). Result-identical to
     * `loadLive` + the same filter: shards cover every cluster, and
     * restriction + filter commute.
@@ -2064,9 +2084,12 @@ object RabitqIndex {
     // exactly, so read ONLY file metadata (one tiny distributed pass,
     // zero data pages) instead of scanning a corpus-sized column. With a
     // log present the live sizes need the anti-join, so fall back to the
-    // slim two-column scan.
+    // slim two-column scan. Footers count every file, so neither footer
+    // read runs while a promoted-but-unmarked batch exists: the scans
+    // exclude it (read-committed visibility, [[loadLive]]'s view).
+    val footerOk = footerFastPath && inProgressPrefixes(dir).isEmpty
     val footerSizes: Option[Array[(Int, Long)]] =
-      if (footerFastPath && log.isEmpty)
+      if (footerOk && log.isEmpty)
         clusterSizesFromFooters(spark, dir, gen)
       else None
     footerSizes match {
@@ -2074,18 +2097,17 @@ object RabitqIndex {
         IndexHealth(gen, modelOfGen(spark, dir, gen), fs.map(_._2).sum, 0L, fs)
       case None =>
         val (model, index) = loadOfGen(spark, dir, gen)
-        val tomb = log.map(delDir =>
-          spark.read.parquet(delDir).select("vec_id").distinct())
+        val tomb = logScanOfGen(spark, dir, genName)
+          .map(_.select("vec_id").distinct())
         val live = tomb.map(t => index.join(t, Seq("vec_id"), "left_anti"))
           .getOrElse(index)
         // three INDEPENDENT actions — physical row count, tombstone
         // count, live per-cluster sizes — overlapped (guide §2.6). The
         // physical count comes from parquet footers (zero data pages)
-        // when the layout is clean of crashed appends; footers list
-        // every file, so with in-progress batches present fall back to
-        // the committed scan's count (read-committed visibility).
+        // when the layout is clean of crashed appends, else from the
+        // committed scan.
         val (nRowsOpt, nTomb, sizes) = Overlap(spark,
-          if (footerFastPath && inProgressPrefixes(dir).isEmpty)
+          if (footerOk)
             clusterSizesFromFooters(spark, dir, gen).map(_.map(_._2).sum)
           else None,
           tomb.map(_.count()).getOrElse(0L),

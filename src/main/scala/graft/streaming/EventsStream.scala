@@ -30,7 +30,8 @@ object EventsStream {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** The type a batch read of `path` gives `ts` under the session's parquet
-    * options — footer-only metadata reads, no data scan.
+    * options — footer-only metadata reads on the driver
+    * (`SeededRelation.footerSchema`), no data scan and no Spark job.
     *
     * Probes EVERY parquet file under `path`, not just the first: a file
     * stream runs with ONE fixed schema, so a directory whose files mix
@@ -50,7 +51,8 @@ object EventsStream {
         .map(_.getPath)
     require(files.nonEmpty, s"no parquet files under $path")
     val types = files
-      .map(f => f -> spark.read.parquet(f.toString).schema("ts").dataType)
+      .map(f => f ->
+        org.apache.spark.graft.SeededRelation.footerSchema(spark, f)("ts").dataType)
     val distinct = types.map(_._2).distinct
     if (distinct.size > 1)
       throw new IllegalArgumentException(

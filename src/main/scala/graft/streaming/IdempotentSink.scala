@@ -90,7 +90,7 @@ object IdempotentSink {
       // directory, not path-not-found
       LayoutFs.mkdirs(target)
       if (retry) sweepPrefix(target, prefix)
-      RabitqIndex.promoteStaged(staging, target, Some(prefix))
+      RabitqIndex.promoteStaged(staging, target, prefix)
       LayoutFs.deleteRecursively(staging)
       LayoutCommit.exclusiveCreate(marker)
       LayoutFs.delete(inprog)

@@ -141,19 +141,153 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d.getAs[Long]("n_rows") == liveBefore.size.toLong,
       "describeIndex footer fast path must count carried files")
 
-    // 5. partition PRUNING survives the carry: a cluster_id filter must
-    // land in PartitionFilters on EVERY branch of the union (own scan
-    // and each per-source-generation carried scan) — the disk query
-    // path's static prune depends on it
+    // 5. partition PRUNING survives the carry: the generation is ONE
+    // scan, a cluster_id filter lands in its PartitionFilters, and the
+    // files it selects are exactly that cluster's own and carried files
+    // — the disk query path's static prune depends on it
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val carriedCluster = carry.map(RabitqIndex.clusterOfCarryEntry).head
-    val plan = live.filter(col("cluster_id") === carriedCluster)
-      .queryExecution.executedPlan.toString
-    val scans = "PartitionFilters: \\[[^\\]]*cluster_id".r
-      .findAllIn(plan).size
-    assert(scans >= 2,
-      s"expected the cluster_id filter in PartitionFilters of both the " +
-        s"own and the carried scan branches (found $scans):\n" +
-        plan.take(2000))
+    val scans = live.filter(col("cluster_id") === carriedCluster)
+      .queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1,
+      s"expected one scan of the generation, found ${scans.size}")
+    val scan = scans.head
+    assert(scan.metadata.getOrElse("PartitionFilters", "").contains("cluster_id"),
+      s"the cluster_id filter must reach PartitionFilters:\n${scan.metadata}")
+    val selected = scan.relation.location
+      .listFiles(scan.partitionFilters, scan.dataFilters)
+      .flatMap(_.files.map(_.getPath.toUri.getPath.stripPrefix(s"$idxDir/")))
+    val expected = (v2Files.keySet ++ carry)
+      .filter(e => RabitqIndex.clusterOfCarryEntry(e) == carriedCluster)
+    assert(expected.exists(carry.contains),
+      "gate is vacuous: the filtered cluster has no carried file")
+    assert(selected.length == selected.distinct.length && selected.toSet == expected,
+      s"the pruned scan must select exactly cluster $carriedCluster's own " +
+        s"and carried files (selected=$selected, expected=$expected)")
+  }
+
+  test("one relation per generation: opening a carry-listed generation " +
+      "past 32 cluster dirs runs no Spark job, reads the rows of the plain " +
+      "per-source reads, and a refresh re-lists only its own dirs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val idxDir = java.nio.file.Files.createTempDirectory("seeded_open").toString
+    // 40 lower-halfspace centroids (no k-means fit): the upper half piles
+    // into boundary clusters, so the rebalance splits a few and carries
+    // the rest — more cluster dirs than Spark's parallel-listing threshold
+    val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+    val cents = lowerHalf.orderBy("vec_id").limit(40).select("embedding")
+      .collect().map(_.getSeq[Float](0).toArray)
+    val (model, _) = RabitqIndex.buildWithCentroids(spark, lowerHalf, cents, 7L)
+    RabitqIndex.save(spark, model, RabitqIndex.appendVectors(spark, model, emb), idxDir)
+    val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore,
+      "gate is vacuous: the skewed layout did not split")
+    val gen = RabitqIndex.indexDataDir(idxDir)
+    assert(gen == s"$idxDir/index-v2")
+    val carry = RabitqIndex.readCarry(idxDir, "index-v2")
+    val ownClusters = ownDataFiles(idxDir, "index-v2").keySet
+      .map(RabitqIndex.clusterOfCarryEntry)
+    assert(carry.size > 32 && ownClusters.nonEmpty,
+      s"gate is vacuous: ${carry.size} carried files, ${ownClusters.size} own dirs")
+    val delId = emb.agg(min("vec_id")).head().getLong(0)
+    graft.streaming.IdempotentSink.appendBatch(Seq(delId).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(idxDir), idxDir, "open-del", 0L)
+    val probed = Set(ownClusters.min, RabitqIndex.clusterOfCarryEntry(carry.last))
+
+    // jobs submitted under one job group (overlap legs inherit it); a
+    // marker job in its own group closes each window, so every earlier
+    // job start has reached the listener when the count is read
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    var window = 0
+    def jobsOf(body: => Any): Int = {
+      window += 1
+      val g = s"seeded-open-$window"
+      def inGroup(id: String)(f: => Any): Unit = {
+        sc.setJobGroup(id, id)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(g)(body)
+      inGroup(s"$g-end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains(s"$g-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(s"$g-end"), "the marker job never reached the listener")
+      started.toArray.count(_ == g)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(RabitqIndex.scanOfGen(spark, idxDir, gen)) == 0,
+        "opening the generation's data scan must run no job")
+      assert(jobsOf(RabitqIndex.scanOfGen(spark, idxDir, gen, Some(probed))) == 0,
+        "opening the probe-restricted scan must run no job")
+      assert(jobsOf(RabitqIndex.logScanOfGen(spark, idxDir, "index-v2")) == 0,
+        "opening the tombstone log must run no job")
+      Seq(RabitqIndex.modelSidecarDir(idxDir, gen, "params"), s"$idxDir/rotation",
+          RabitqIndex.modelSidecarDir(idxDir, gen, "centroids")).foreach { t =>
+        assert(jobsOf(RabitqIndex.sidecarOf(spark, t)) == 0,
+          s"opening the model table $t must run no job")
+      }
+      // the full opens: their frames add no job to the model's collects
+      val modelJobs = jobsOf(RabitqIndex.modelOfGen(spark, idxDir, gen))
+      assert(jobsOf(RabitqIndex.loadLive(spark, idxDir)) == modelJobs,
+        "loadLive's frames must add no job to its model read")
+      assert(jobsOf(RabitqIndex.loadLiveProbed(spark, idxDir,
+          (_, _) => probed.toSeq)) == modelJobs,
+        "loadLiveProbed's frames must add no job to its model read")
+    } finally sc.removeSparkListener(listener)
+
+    // the rows are those of the plain per-source reads
+    val cols = Seq("vec_id", "cluster_id", "code", "factor_ip", "factor_ppc",
+      "error_bound", "cds").map(col)
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.select(cols: _*).collect()
+      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val plain = (spark.read.parquet(gen) +:
+        carry.groupBy(_.takeWhile(_ != '/')).toSeq.map { case (src, es) =>
+          spark.read.option("basePath", s"$idxDir/$src")
+            .parquet(es.map(e => s"$idxDir/$e"): _*)
+        })
+      .reduce(_.unionByName(_))
+      .join(Seq(delId).toDF("vec_id"), Seq("vec_id"), "left_anti")
+    val live = RabitqIndex.loadLive(spark, idxDir)._2
+    assert(rows(live) == rows(plain), "the one relation diverged from the plain reads")
+    assert(rows(RabitqIndex.loadLiveProbed(spark, idxDir, (_, _) => probed.toSeq)._3) ==
+      rows(plain.filter(col("cluster_id").isin(probed.toSeq: _*))),
+      "the probe-restricted relation diverged from the filtered plain reads")
+
+    // refresh: the appended own file appears, the carry set is kept, and
+    // the source generation's other files (the split clusters' pre-split
+    // files) stay out
+    def rel(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath.stripPrefix(s"$idxDir/")
+    val sourceOnly = ownDataFiles(idxDir, "index").keySet -- carry
+    assert(sourceOnly.nonEmpty, "gate is vacuous: the source generation holds no uncarried file")
+    val cached = RabitqIndex.scanOfGen(spark, idxDir, gen).cache()
+    try {
+      val n0 = cached.count()
+      val extra = emb.limit(20)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+      graft.streaming.IdempotentSink.appendBatch(
+        RabitqIndex.appendVectors(spark, RabitqIndex.modelOfGen(spark, idxDir, gen), extra),
+        gen, idxDir, "open-add", 0L, partitionCols = Seq("cluster_id"))
+      spark.catalog.refreshByPath(gen)
+      assert(cached.count() == n0 + 20, "the refreshed relation must read the appended rows")
+      // the relation's own file list (the frame's inputFiles would read
+      // the cache's plan, which hides the relation)
+      val files = cached.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation }
+        .collect { case f: org.apache.spark.sql.execution.FileRelation => f.inputFiles }
+        .flatten.map(rel).toSet
+      assert(files.exists(_.contains("/open-add-0-")),
+        s"the refreshed relation must list the appended own file: $files")
+      assert(files.filterNot(_.startsWith("index-v2/")) == carry.toSet,
+        "a refresh must keep exactly the carried files of the source generation")
+    } finally cached.unpersist()
   }
 
   test("refcounted vacuum: an expired retired generation keeps exactly " +

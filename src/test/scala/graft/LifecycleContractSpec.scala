@@ -470,8 +470,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         LayoutCommit.exclusiveCreate(s"$idxDir/_commits/unmk/0.inprogress")
         val stg = s"$idxDir/_staging/unmk-0"
         enc.write.mode("overwrite").partitionBy("cluster_id").parquet(stg)
-        RabitqIndex.promoteStaged(stg, RabitqIndex.indexDataDir(idxDir),
-          Some("unmk-0"))
+        RabitqIndex.promoteStaged(stg, RabitqIndex.indexDataDir(idxDir), "unmk-0")
         LayoutFs.deleteRecursively(stg)
         // the rebalance phase of a pass that settled before the promote
         val rep = RabitqIndex.rebalanceUnlocked(spark, idxDir, emb,

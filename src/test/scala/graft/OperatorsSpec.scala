@@ -2023,6 +2023,58 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"replay after settle must land exactly once (got ${live.size} rows)")
   }
 
+  test("read-committed stats: describeIndex and layoutStats see exactly " +
+      "loadLive's rows — an unmarked delete or append batch counts nowhere") {
+    import spark.implicits._
+    val initial = emb.filter(col("vec_id") < 300)
+    val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
+    // promote-then-crash: everything appendBatch does EXCEPT the commit
+    // marker — the batch's files sit in the target, its sentinel stranded
+    def unmarked(root: String, query: String, df: DataFrame, target: String,
+                 partitionCols: Seq[String]): Unit = {
+      LayoutFs.mkdirs(s"$root/_commits/$query")
+      LayoutCommit.exclusiveCreate(s"$root/_commits/$query/1.inprogress")
+      val stg = s"$root/_staging/$query-1"
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(stg)
+      RabitqIndex.promoteStaged(stg, target, s"$query-1")
+      LayoutFs.deleteRecursively(stg)
+    }
+    def liveIds(dir: String): Set[Long] = RabitqIndex.loadLive(spark, dir)._2
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+
+    // a committed delete batch, then an unmarked one in the same log
+    val delDir = java.nio.file.Files.createTempDirectory("unmarked_del").toString
+    RabitqIndex.save(spark, model, index0, delDir)
+    graft.streaming.IdempotentSink.appendBatch(Seq(3L, 5L).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(delDir), delDir, "del", 0L)
+    unmarked(delDir, "del", Seq(7L, 9L, 11L).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(delDir), Nil)
+    val live = liveIds(delDir)
+    assert(live == (0L until 300L).toSet -- Set(3L, 5L),
+      "loadLive must honour exactly the committed tombstones")
+    val d = RabitqIndex.describeIndex(spark, delDir).head()
+    assert((d.getAs[Long]("n_rows"), d.getAs[Long]("n_tombstones"),
+        d.getAs[Long]("n_live")) == ((300L, 2L, live.size.toLong)),
+      s"describeIndex counted the unmarked delete batch: $d")
+    assert(RabitqIndex.layoutStats(spark, delDir) == ((300L, 2L)),
+      "layoutStats counted the unmarked delete batch")
+
+    // no log at all, an unmarked append batch: the footer fast path
+    // would count its rows
+    val addDir = java.nio.file.Files.createTempDirectory("unmarked_add").toString
+    RabitqIndex.save(spark, model, index0, addDir)
+    unmarked(addDir, "add", RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 300 && col("vec_id") < 320)),
+      RabitqIndex.indexDataDir(addDir), Seq("cluster_id"))
+    assert(liveIds(addDir) == (0L until 300L).toSet)
+    val a = RabitqIndex.describeIndex(spark, addDir).head()
+    assert((a.getAs[Long]("n_rows"), a.getAs[Long]("n_live")) == ((300L, 300L)),
+      s"describeIndex counted the unmarked append batch: $a")
+    assert(RabitqIndex.layoutStats(spark, addDir) == ((300L, 0L)),
+      "layoutStats counted the unmarked append batch")
+  }
+
   test("maintenanceLoop: below thresholds nothing fires; debt alone compacts " +
       "without a rebalance") {
     import spark.implicits._
