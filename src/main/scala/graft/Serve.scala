@@ -255,24 +255,27 @@ object Serve {
           .getOrElse(throw new IllegalArgumentException("missing 'index_dir'"))
         val basePath = parseString(body, "base")
           .getOrElse(s"$sfDir/embeddings.parquet")
-        // loadLive: respect an uncompacted tombstone log (see start)
-        val (m2, i2raw) = RabitqIndex.loadLive(spark, idxDir)
-        // validate BEFORE snapshotting: an empty base is the same fatal
-        // state start() rejects — a 200 here would silently serve nothing
-        val b2raw = spark.read.parquet(basePath)
-        val baseDim = b2raw.select(size(col("embedding"))).limit(1)
-          .collect().headOption.map(_.getInt(0))
-          .getOrElse(throw new IllegalArgumentException(
-            s"reload base at $basePath is empty — nothing to serve"))
-        require(m2.params.dim == baseDim,
-          s"reloaded index dim ${m2.params.dim} != base embedding dim $baseDim")
-        val b2 = b2raw.localCheckpoint()
-        val i2 = withLabels(i2raw, b2).localCheckpoint()
-        val n2 = b2.count()
-        val (nRows2, nTomb2) = RabitqIndex.layoutStats(spark, idxDir)
-        val hot2 = HotTier.fromIndex(spark, m2, i2, b2)
-        engineRef.set(Engine(m2, i2, b2, hot2, nRows2, nTomb2))
-        respond(ex, 200, s"""{"reloaded":true,"n_base":$n2}""")
+        val nBase = Overlap.labelled(spark, s"reload: $idxDir") {
+          // loadLive: respect an uncompacted tombstone log (see start)
+          val (m2, i2raw) = RabitqIndex.loadLive(spark, idxDir)
+          // validate BEFORE snapshotting: an empty base is the same fatal
+          // state start() rejects — a 200 here would silently serve nothing
+          val b2raw = spark.read.parquet(basePath)
+          val baseDim = b2raw.select(size(col("embedding"))).limit(1)
+            .collect().headOption.map(_.getInt(0))
+            .getOrElse(throw new IllegalArgumentException(
+              s"reload base at $basePath is empty — nothing to serve"))
+          require(m2.params.dim == baseDim,
+            s"reloaded index dim ${m2.params.dim} != base embedding dim $baseDim")
+          val b2 = b2raw.localCheckpoint()
+          val i2 = withLabels(i2raw, b2).localCheckpoint()
+          val n2 = b2.count()
+          val (nRows2, nTomb2) = RabitqIndex.layoutStats(spark, idxDir)
+          val hot2 = HotTier.fromIndex(spark, m2, i2, b2)
+          engineRef.set(Engine(m2, i2, b2, hot2, nRows2, nTomb2))
+          n2
+        }
+        respond(ex, 200, s"""{"reloaded":true,"n_base":$nBase}""")
       } catch {
         case e: Throwable =>
           val msg = jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))

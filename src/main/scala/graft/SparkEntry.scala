@@ -2060,7 +2060,7 @@ object SparkEntry {
       c0.withColumn("cluster_id",
           when(col("vec_id") % 2 === 0, lit(0)).otherwise(lit(NumClusters)))
         .write.partitionBy("cluster_id").parquet(next)
-      RabitqIndex.writeCarryListing(next,
+      RabitqIndex.writeCarryListing(idx, "index-v2",
         RabitqIndex.buildCarryListing(idx, "index", Set(0)))
       val cents = s.read.parquet(s"$idx/centroids")
       cents.unionByName(cents.filter(col("cluster_id") === 0)
@@ -2128,7 +2128,7 @@ object SparkEntry {
       // lifecycle with every commit primitive routed through
       // CondPutCommit — the conditional-PUT (If-None-Match create +
       // atomic whole-object PUT, no rename) implementation the
-      // LayoutCommit contract names as the object-store deployment
+      // CommitOps contract names as the object-store deployment
       // path. The same schedules that TEAR under a naive object-store
       // double (LifecycleContractSpec: last-writer-wins create admits
       // concurrent mutators; a reader racing the MANIFEST publish
@@ -2152,37 +2152,35 @@ object SparkEntry {
       val emb = T(s, dir, "embeddings")
       val tmp = graft.TempDirs.create("graft_q123_")
       val lower = element_at(col("embedding"), 1) < 0f
-      val (m2, live) = graft.operators.LayoutCommit.withOps(
-          graft.operators.CondPutCommit) {
-        val (model, index0) = RabitqIndex.build(s,
-          emb.filter(lower), NumClusters, Seed)
-        RabitqIndex.save(s, model, index0, s"$tmp/idx")
-        def appendHoldout(): Unit = {
-          graft.streaming.IdempotentSink.appendBatch(
-            RabitqIndex.appendVectors(s, model, emb.filter(!lower)),
-            RabitqIndex.indexDataDir(s"$tmp/idx"), s"$tmp/idx", "q123", 0L,
-            partitionCols = Seq("cluster_id"))
-          ()
-        }
-        appendHoldout()
-        appendHoldout() // replay: the conditional-PUT marker must no-op it
+      val idx = graft.operators.Layout(s"$tmp/idx", graft.operators.CondPutCommit)
+      val (model, index0) = RabitqIndex.build(s,
+        emb.filter(lower), NumClusters, Seed)
+      RabitqIndex.save(s, model, index0, idx)
+      def appendHoldout(): Unit = {
         graft.streaming.IdempotentSink.appendBatch(
-          emb.filter(col("vec_id") % 9 === 2).select("vec_id"),
-          RabitqIndex.tombstoneLogDir(s"$tmp/idx"), s"$tmp/idx", "q123-del", 1L)
-        val rep = RabitqIndex.rebalanceIndex(s, s"$tmp/idx", emb)
-        require(rep.numClustersAfter > rep.numClustersBefore,
-          "gate is vacuous: the skewed layout did not split")
-        require(RabitqIndex.indexDataDir(s"$tmp/idx") == s"$tmp/idx/index-v2",
-          "gate is vacuous: the generation-versioned rebalance did not publish")
-        graft.streaming.VecsStream.compactIndex(s, s"$tmp/idx")
-        require(RabitqIndex.indexDataDir(s"$tmp/idx") == s"$tmp/idx/index-v3",
-          "gate is vacuous: the conditional-PUT MANIFEST publish did not swap")
-        RabitqIndex.vacuumIndex(s"$tmp/idx", retainMs = 0L)
-        require(!new java.io.File(s"$tmp/idx/index").exists &&
-            !new java.io.File(s"$tmp/idx/index-v2").exists,
-          "vacuum under CondPutCommit failed to reclaim the retired generations")
-        RabitqIndex.loadLive(s, s"$tmp/idx")
+          RabitqIndex.appendVectors(s, model, emb.filter(!lower)),
+          RabitqIndex.indexDataDir(idx), idx, "q123", 0L,
+          partitionCols = Seq("cluster_id"))
+        ()
       }
+      appendHoldout()
+      appendHoldout() // replay: the conditional-PUT marker must no-op it
+      graft.streaming.IdempotentSink.appendBatch(
+        emb.filter(col("vec_id") % 9 === 2).select("vec_id"),
+        RabitqIndex.tombstoneLogDir(idx), idx, "q123-del", 1L)
+      val rep = RabitqIndex.rebalanceIndex(s, idx, emb)
+      require(rep.numClustersAfter > rep.numClustersBefore,
+        "gate is vacuous: the skewed layout did not split")
+      require(RabitqIndex.indexDataDir(idx) == s"$tmp/idx/index-v2",
+        "gate is vacuous: the generation-versioned rebalance did not publish")
+      graft.streaming.VecsStream.compactIndex(s, idx)
+      require(RabitqIndex.indexDataDir(idx) == s"$tmp/idx/index-v3",
+        "gate is vacuous: the conditional-PUT MANIFEST publish did not swap")
+      RabitqIndex.vacuumIndex(idx, retainMs = 0L)
+      require(!new java.io.File(s"$tmp/idx/index").exists &&
+          !new java.io.File(s"$tmp/idx/index-v2").exists,
+        "vacuum under CondPutCommit failed to reclaim the retired generations")
+      val (m2, live) = RabitqIndex.loadLive(s, idx)
       require(m2.params.numClusters > NumClusters,
         "load() did not resolve the generation-local (grown) model sidecars")
       val baseFinal = emb.filter(col("vec_id") % 9 =!= 2)

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
+import scala.language.implicitConversions
+
 /** The FOUR commit primitives every crash-safety protocol in the saved
   * index lifecycle is built from — the generation MANIFEST publish
   * shared by compaction and rebalance (`RabitqIndex.publishGeneration`,
@@ -9,13 +11,15 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * maintenance lease (`RabitqIndex.withLayoutLock`), and the
   * exactly-once streamed append (`streaming.IdempotentSink`).
   *
-  * Paths are plain STRINGS: `java.nio.file.Path` cannot carry an
-  * `hdfs://host/…` URI, so a Path-typed seam would make the Hadoop
-  * implementation unreachable from real deployments. The non-atomic
-  * probe/list/delete surface is the sibling seam [[LayoutFs]]; between
-  * the two, every filesystem touch of the lifecycle helpers is
-  * deployment-swappable, and `grep LayoutCommit\.` still enumerates
-  * exactly the commit points.
+  * A layout's implementation rides in its [[Layout]] handle, chosen per
+  * layout the way Delta Lake picks a `LogStore` per table path, so two
+  * layouts in one process can be written under two protocols at once.
+  * The commit points are the `ops.` calls of the lifecycle code
+  * (`grep -n 'ops\.'`). Paths are plain STRINGS: `java.nio.file.Path`
+  * cannot carry an `hdfs://host/…` URI, so a Path-typed seam would make
+  * the Hadoop implementation unreachable from real deployments. The
+  * non-atomic probe/list/delete surface is the sibling [[LayoutFs]],
+  * the handle's `fs`.
   *
   * ==== FILESYSTEM CONTRACT (read this before deploying) ====
   *
@@ -31,8 +35,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   *
   * [[PosixCommit]] (the default) provides both via `java.nio.file` —
   * LOCAL POSIX filesystems (and POSIX-faithful NFS) only. An HDFS
-  * deployment swaps in [[HadoopFsCommit]] (+ [[HadoopFs]] for the probe
-  * seam): HDFS `rename`/`create(overwrite=false)` honor the contract at
+  * deployment's handle carries [[HadoopFsCommit]] (+ [[HadoopFs]] as its
+  * `fs`): HDFS `rename`/`create(overwrite=false)` honor the contract at
   * the NameNode. '''NOT true on S3/GCS-style object stores''': `s3a://`
   * rename is copy+delete (readers can observe both or neither name) and
   * plain PUT has no exclusive-create. Running the lifecycle mutators
@@ -41,7 +45,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * class Delta Lake's `LogStore` exists for, and the
   * `LifecycleContractSpec` EXECUTES it (the lease admits two concurrent
   * mutators; a reader mid-publish resolves a vacuumed generation). To
-  * deploy there, swap in [[CondPutCommit]] (the conditional-PUT /
+  * deploy there, build the handle with [[CondPutCommit]] (the conditional-PUT /
   * If-None-Match shape — same spec shows the same schedules surviving
   * under it) or a commit-service implementation (the Delta/Iceberg
   * commit shape); every protocol above is already expressed ONLY in
@@ -250,41 +254,21 @@ final class HadoopFsCommit(conf: org.apache.hadoop.conf.Configuration)
     }
 }
 
-/** The seam every protocol calls through. Defaults to [[PosixCommit]];
-  * [[withOps]] swaps the implementation for a scope — the contract spec
-  * runs the REAL protocols under a degraded object-store double (and
-  * under [[CondPutCommit]]) through it, and the kill-point sweep
-  * injects crashes at every primitive call site the same way.
+/** A saved layout: its root `dir` plus how it is written and probed.
+  * Every lifecycle mutator and reader takes one: `ops` carries the
+  * commit primitives, `fs` the probes, listings and debris deletes, and
+  * `carryShardTarget` the entry count past which a rebalance shards its
+  * carry listing (`RabitqIndex.writeCarryListing`; specs lower it to
+  * reach the sharded shape at spec scale).
+  *
+  * A bare dir string converts to the default handle (POSIX commit and
+  * probes); this conversion is the one place a path becomes a layout.
+  * Distributed code captures `dir`, never the handle: test doubles are
+  * not serializable.
   */
-object LayoutCommit {
+final case class Layout(dir: String, ops: CommitOps = PosixCommit,
+                        fs: LayoutFs = PosixFs, carryShardTarget: Int = 4096)
 
-  @volatile private var current: CommitOps = PosixCommit
-
-  def atomicWriteFile(target: String, content: String): Unit =
-    current.atomicWriteFile(target, content)
-
-  def atomicMoveFile(src: String, dst: String): Unit =
-    current.atomicMoveFile(src, dst)
-
-  def atomicRenameDir(src: String, dst: String): Unit =
-    current.atomicRenameDir(src, dst)
-
-  def exclusiveCreate(path: String, content: String = ""): Boolean =
-    current.exclusiveCreate(path, content)
-
-  /** Run `body` with `ops` as the active implementation. The swap is
-    * process-global, so callers must be the only layout writer while it
-    * holds: the specs (suites run sequentially in the forked test JVM)
-    * and the single-threaded q123 query drive — the one query-path
-    * caller, which runs the whole lifecycle under [[CondPutCommit]]. The
-    * synchronization
-    * serializes accidental overlap; threads spawned inside `body` (the
-    * lease hammer) all see `ops` via the volatile read.
-    */
-  private[graft] def withOps[A](ops: CommitOps)(body: => A): A =
-    synchronized {
-      val prev = current
-      current = ops
-      try body finally { current = prev }
-    }
+object Layout {
+  implicit def fromDir(dir: String): Layout = Layout(dir)
 }

@@ -8,24 +8,23 @@ final case class FsEntry(path: String, name: String, isDir: Boolean,
                          length: Long, mtime: Long)
 
 /** READ/PROBE/LIST/DELETE facade over the layout's filesystem — the
-  * non-atomic half of the deployment seam ([[CommitOps]] is the atomic
-  * half: the four commit primitives every protocol's reader-visible
-  * step goes through). Every lifecycle helper's existence probe,
-  * directory listing, marker read, debris delete, and staging copy
-  * routes through here, so pointing a deployment at HDFS is swapping
-  * ONE pair of implementations (`HadoopFs` + `HadoopFsCommit`) instead
-  * of porting 80 `java.io.File` call sites — the gap the round-18
-  * `HadoopFsCommit` scaladoc named honestly, closed. Paths are plain
-  * STRINGS end to end: `java.nio.file.Path` cannot carry an
-  * `hdfs://host/…` URI (and `new java.io.File("hdfs://…")` silently
+  * non-atomic half of a [[Layout]] handle ([[CommitOps]], its `ops`, is
+  * the atomic half: the four commit primitives every protocol's
+  * reader-visible step goes through). Every lifecycle helper's existence
+  * probe, directory listing, marker read, debris delete, and staging
+  * copy goes through the handle's `fs`, so pointing a deployment at HDFS
+  * is building its handle with ONE pair of implementations (`HadoopFs` +
+  * `HadoopFsCommit`) instead of porting 80 `java.io.File` call sites.
+  * Paths are plain STRINGS end to end: `java.nio.file.Path` cannot carry
+  * an `hdfs://host/…` URI (and `new java.io.File("hdfs://…")` silently
   * collapses the double slash), so the seam never converts to either
   * except inside the POSIX impl.
   *
   * None of these operations need atomicity — they are probes, staging
   * writes into unreferenced paths, and debris removal. Anything a
   * concurrent reader may observe goes through [[CommitOps]]; keeping
-  * the two seams separate keeps the atomicity obligations auditable
-  * (grep for `LayoutCommit.` = every commit point).
+  * the two separate keeps the atomicity obligations auditable (the
+  * `ops.` calls are every commit point).
   */
 trait LayoutFs {
   def exists(path: String): Boolean
@@ -184,28 +183,15 @@ final class HadoopFs(conf: org.apache.hadoop.conf.Configuration)
   }
 }
 
-/** The seam the lifecycle helpers call through — [[PosixFs]] by
-  * default, swapped alongside [[LayoutCommit.withOps]] for the Hadoop
-  * lifecycle leg and any future deployment test double.
+/** Path helpers, plus the local-filesystem probes callers outside a
+  * layout use (the file streams' input paths, the benchmark's layout
+  * probes). Holds no state: a layout's own filesystem is its handle's
+  * `fs`.
   */
 object LayoutFs {
 
-  @volatile private var current: LayoutFs = PosixFs
-
-  def exists(path: String): Boolean = current.exists(path)
-  def isFile(path: String): Boolean = current.isFile(path)
-  def isDirectory(path: String): Boolean = current.isDirectory(path)
-  def list(path: String): Seq[FsEntry] = current.list(path)
-  def readString(path: String): String = current.readString(path)
-  def lastModified(path: String): Long = current.lastModified(path)
-  def setLastModified(path: String, ms: Long): Unit =
-    current.setLastModified(path, ms)
-  def length(path: String): Long = current.length(path)
-  def mkdirs(path: String): Unit = current.mkdirs(path)
-  def delete(path: String): Boolean = current.delete(path)
-  def deleteRecursively(path: String): Unit = current.deleteRecursively(path)
-  def sizeOfDirectory(path: String): Long = current.sizeOfDirectory(path)
-  def copyFile(src: String, dst: String): Unit = current.copyFile(src, dst)
+  def list(path: String): Seq[FsEntry] = PosixFs.list(path)
+  def sizeOfDirectory(path: String): Long = PosixFs.sizeOfDirectory(path)
 
   /** Last path segment — the `java.io.File.getName` the string-path
     * seam replaces ("…/idx/index-v2" → "index-v2").
@@ -214,24 +200,17 @@ object LayoutFs {
     path.substring(path.lastIndexOf('/') + 1)
 
   /** Parent directory of a path, preserving the parent-of-root
-    * ("/x" → "/") and bare-relative-name ("x" → ".") edge cases — the
-    * shared guard for the streams' (dir, glob) split, which previously
-    * threw StringIndexOutOfBoundsException on a slash-free single-file
-    * path.
+    * ("/x" → "/") and bare-relative-name ("x" → ".") edge cases.
     */
   def parent(path: String): String = {
     val i = path.lastIndexOf('/')
     if (i < 0) "." else if (i == 0) "/" else path.substring(0, i)
   }
 
-  /** Run `body` with `fs` active — a TEST seam with [[LayoutCommit
-    * .withOps]]'s exact contract (specs only; process-global volatile
-    * swap, serialized by the lock).
+  /** A file stream's source as (directory, name glob): a single local
+    * FILE streams as its parent dir filtered to its name (FileStreamSource
+    * wants a directory); anything else streams whole.
     */
-  private[graft] def withFs[A](fs: LayoutFs)(body: => A): A =
-    synchronized {
-      val prev = current
-      current = fs
-      try body finally { current = prev }
-    }
+  def streamSource(path: String): (String, String) =
+    if (PosixFs.isFile(path)) (parent(path), baseName(path)) else (path, "*")
 }

@@ -260,10 +260,10 @@ object RabitqIndex {
     * resolves through here and a crash mid-compaction can never expose
     * a partial layout (readers keep the old generation until the swap).
     */
-  def indexDataDir(dir: String): String = {
-    val mf = s"$dir/MANIFEST"
-    if (LayoutFs.isFile(mf)) s"$dir/${LayoutFs.readString(mf).trim}"
-    else s"$dir/index"
+  def indexDataDir(layout: Layout): String = {
+    val mf = s"${layout.dir}/MANIFEST"
+    if (layout.fs.isFile(mf)) s"${layout.dir}/${layout.fs.readString(mf).trim}"
+    else s"${layout.dir}/index"
   }
 
   /** The tombstone log of the ACTIVE generation. Logs are PER
@@ -277,8 +277,8 @@ object RabitqIndex {
     * stream's del leg) resolve through here per batch, exactly like the
     * data dir resolves through the MANIFEST.
     */
-  def tombstoneLogDir(dir: String): String = logDirOfGen(dir,
-    LayoutFs.baseName(indexDataDir(dir)))
+  def tombstoneLogDir(layout: Layout): String = logDirOfGen(layout.dir,
+    LayoutFs.baseName(indexDataDir(layout)))
 
   private[graft] def logDirOfGen(dir: String, gen: String): String =
     if (gen == "index") s"$dir/deletes"
@@ -292,16 +292,16 @@ object RabitqIndex {
     * `spark.read.parquet` over it would throw (no files to infer a
     * schema from) on a perfectly healthy layout.
     */
-  private[graft] def tombstoneLogIfAny(dir: String): Option[String] =
-    tombstoneLogOfGenIfAny(dir, LayoutFs.baseName(indexDataDir(dir)))
+  private[graft] def tombstoneLogIfAny(layout: Layout): Option[String] =
+    tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(indexDataDir(layout)))
 
   /** [[tombstoneLogIfAny]] against an already-resolved generation — for
     * callers holding a single MANIFEST resolution ([[loadLive]]).
     */
   private[graft] def tombstoneLogOfGenIfAny(
-      dir: String, gen: String): Option[String] = {
-    val p = logDirOfGen(dir, gen)
-    val hasData = LayoutFs.list(p)
+      layout: Layout, gen: String): Option[String] = {
+    val p = logDirOfGen(layout.dir, gen)
+    val hasData = layout.fs.list(p)
       .exists(x => !x.isDir && x.name.endsWith(".parquet"))
     if (hasData) Some(p) else None
   }
@@ -328,12 +328,12 @@ object RabitqIndex {
     * (`/root/reference/crates/disk/src/cache.rs:24-52`) — this keeps
     * layout MUTATION metadata-sized on the same store.
     */
-  private[graft] def readCarry(dir: String, gen: String): Seq[String] = {
-    val f = s"$dir/$gen/_CARRY"
-    if (LayoutFs.isFile(f))
-      LayoutFs.readString(f).split('\n')
+  private[graft] def readCarry(layout: Layout, gen: String): Seq[String] = {
+    val f = s"${layout.dir}/$gen/_CARRY"
+    if (layout.fs.isFile(f))
+      layout.fs.readString(f).split('\n')
         .map(_.trim).filter(_.nonEmpty).toSeq
-    else readCarryShards(dir, gen).flatMap(s => readShardEntries(dir, gen, s))
+    else readCarryShards(layout, gen).flatMap(s => readShardEntries(layout, gen, s))
   }
 
   /** Batch prefixes of PROMOTED-BUT-UNCOMMITTED appends (in-progress
@@ -348,12 +348,12 @@ object RabitqIndex {
     * it post-sweep). Metadata-sized: one `_commits` listing per
     * resolve, empty on the no-crash path.
     */
-  private[graft] def inProgressPrefixes(dir: String): Seq[String] =
-    LayoutFs.list(s"$dir/_commits").filter(_.isDir).flatMap { q =>
-      LayoutFs.list(q.path)
+  private[graft] def inProgressPrefixes(layout: Layout): Seq[String] =
+    layout.fs.list(s"${layout.dir}/_commits").filter(_.isDir).flatMap { q =>
+      layout.fs.list(q.path)
         .filter(f => !f.isDir && f.name.endsWith(".inprogress"))
         .map(_.name.stripSuffix(".inprogress"))
-        .filter(b => !LayoutFs.exists(s"$dir/_commits/${q.name}/$b"))
+        .filter(b => !layout.fs.exists(s"${layout.dir}/_commits/${q.name}/$b"))
         .map(b => s"${q.name}-$b")
     }
 
@@ -365,25 +365,11 @@ object RabitqIndex {
     * only — the self-contained-vs-carry-listed decision points must not
     * read a corpus-file-count listing just to test emptiness.
     */
-  private[graft] def hasCarry(dir: String, gen: String): Boolean =
-    (LayoutFs.isFile(s"$dir/$gen/_CARRY") &&
-      LayoutFs.length(s"$dir/$gen/_CARRY") > 0) ||
-      LayoutFs.isFile(s"$dir/$gen/_CARRY_LIST")
-
-  /** Target entries per carry-manifest SHARD — the point past which
-    * [[writeCarryListing]] switches from the flat single `_CARRY` file
-    * to the sharded manifest-list shape (`_CARRY_LIST` + `_carry/`).
-    * At 100 TB (~10⁵–10⁶ data files) a flat listing is a ~50 MB object
-    * rebuilt whole per swap and re-read whole per resolution; sharding
-    * bounds every metadata object and lets probe-pruned readers touch
-    * only the shards covering their probed clusters
-    * ([[readCarryForClusters]]) — Iceberg's manifest-list shape, and
-    * the metadata analog of the reference's block-granular ranged GET
-    * (`/root/reference/crates/disk/src/cache.rs:105-113`: touch only
-    * what you probe). Volatile test seam: specs lower it to exercise
-    * the sharded shape at spec scale.
-    */
-  @volatile private[graft] var carryShardTarget: Int = 4096
+  private[graft] def hasCarry(layout: Layout, gen: String): Boolean = {
+    val g = s"${layout.dir}/$gen"
+    (layout.fs.isFile(s"$g/_CARRY") && layout.fs.length(s"$g/_CARRY") > 0) ||
+      layout.fs.isFile(s"$g/_CARRY_LIST")
+  }
 
   /** One line of `_CARRY_LIST`: a shard's cluster-id range, file name
     * (inside `_carry/`), and entry count.
@@ -391,19 +377,19 @@ object RabitqIndex {
   private[graft] final case class CarryShard(
       lo: Int, hi: Int, name: String, count: Int)
 
-  private[graft] def readCarryShards(dir: String, gen: String): Seq[CarryShard] = {
-    val f = s"$dir/$gen/_CARRY_LIST"
-    if (!LayoutFs.isFile(f)) Nil
-    else LayoutFs.readString(f).split('\n')
+  private[graft] def readCarryShards(layout: Layout, gen: String): Seq[CarryShard] = {
+    val f = s"${layout.dir}/$gen/_CARRY_LIST"
+    if (!layout.fs.isFile(f)) Nil
+    else layout.fs.readString(f).split('\n')
       .map(_.trim).filter(_.nonEmpty).toSeq.map { l =>
         val p = l.split('\t')
         CarryShard(p(0).toInt, p(1).toInt, p(2), p(3).toInt)
       }
   }
 
-  private def readShardEntries(dir: String, gen: String,
+  private def readShardEntries(layout: Layout, gen: String,
                                s: CarryShard): Seq[String] =
-    LayoutFs.readString(s"$dir/$gen/_carry/${s.name}").split('\n')
+    layout.fs.readString(s"${layout.dir}/$gen/_carry/${s.name}").split('\n')
       .map(_.trim).filter(_.nonEmpty).toSeq
 
   /** Carry entries restricted to `clusters`, reading ONLY the manifest
@@ -414,23 +400,30 @@ object RabitqIndex {
     * file count. Shard ranges can cover more clusters than requested,
     * so entries are filtered exactly either way.
     */
-  private[graft] def readCarryForClusters(dir: String, gen: String,
+  private[graft] def readCarryForClusters(layout: Layout, gen: String,
                                           clusters: Set[Int]): Seq[String] = {
     val all =
-      if (LayoutFs.isFile(s"$dir/$gen/_CARRY")) readCarry(dir, gen)
-      else readCarryShards(dir, gen)
+      if (layout.fs.isFile(s"${layout.dir}/$gen/_CARRY")) readCarry(layout, gen)
+      else readCarryShards(layout, gen)
         .filter(s => clusters.exists(c => c >= s.lo && c <= s.hi))
-        .flatMap(s => readShardEntries(dir, gen, s))
+        .flatMap(s => readShardEntries(layout, gen, s))
     all.filter(e => clusters.contains(clusterOfCarryEntry(e)))
   }
 
   /** Publish a generation's carry listing from its entry list: the flat
-    * single `_CARRY` file up to [[carryShardTarget]] entries, the
-    * sharded manifest-list shape past it — size-bounded shards cut at
+    * single `_CARRY` file up to the handle's `carryShardTarget` entries,
+    * the sharded manifest-list shape past it. At 100 TB (~10⁵–10⁶ data
+    * files) a flat listing is a ~50 MB object rebuilt whole per swap and
+    * re-read whole per resolution; sharding bounds every metadata object
+    * and lets probe-pruned readers touch only the shards covering their
+    * probed clusters ([[readCarryForClusters]]) — Iceberg's manifest-list
+    * shape, and the metadata analog of the reference's block-granular
+    * ranged GET (its `crates/disk/src/cache.rs:105-113`:
+    * touch only what you probe). Shards are size-bounded, cut at
     * CLUSTER boundaries (a cluster's entries never straddle shards, so
     * range-overlap resolution is exact; one oversized cluster gets one
     * oversized shard), then the tiny `_CARRY_LIST` naming each shard's
-    * range. Every write goes through the commit seam (kill-sweep
+    * range. Every write is one of the handle's `ops` primitives (kill-sweep
     * crash points); all of it lands inside the still-unreferenced next
     * generation, so a crash anywhere leaves only debris vacuum reclaims
     * (a retried rebalance rewrites `nextDir` from scratch). Stale
@@ -438,13 +431,15 @@ object RabitqIndex {
     * `_CARRY_LIST` can only ever name shards this attempt wrote — and
     * so the two shapes can never coexist (readers prefer `_CARRY`).
     */
-  private[graft] def writeCarryListing(nextDir: String,
+  private[graft] def writeCarryListing(layout: Layout, nextName: String,
                                        entries: Seq[String]): Unit = {
-    LayoutFs.delete(s"$nextDir/_CARRY")
-    LayoutFs.delete(s"$nextDir/_CARRY_LIST")
-    LayoutFs.deleteRecursively(s"$nextDir/_carry")
-    if (entries.length <= carryShardTarget) {
-      LayoutCommit.atomicWriteFile(s"$nextDir/_CARRY", entries.mkString("\n"))
+    val nextDir = s"${layout.dir}/$nextName"
+    val target = layout.carryShardTarget
+    layout.fs.delete(s"$nextDir/_CARRY")
+    layout.fs.delete(s"$nextDir/_CARRY_LIST")
+    layout.fs.deleteRecursively(s"$nextDir/_carry")
+    if (entries.length <= target) {
+      layout.ops.atomicWriteFile(s"$nextDir/_CARRY", entries.mkString("\n"))
       return
     }
     val byCluster: Seq[(Int, Seq[String])] = entries
@@ -455,21 +450,21 @@ object RabitqIndex {
     var lo = -1; var hi = -1
     var buf = Vector.empty[String]
     byCluster.foreach { case (cid, es) =>
-      if (buf.nonEmpty && buf.length + es.length > carryShardTarget) {
+      if (buf.nonEmpty && buf.length + es.length > target) {
         shards += ((lo, hi, buf)); buf = Vector.empty
       }
       if (buf.isEmpty) lo = cid
       buf ++= es; hi = cid
     }
     if (buf.nonEmpty) shards += ((lo, hi, buf))
-    LayoutFs.mkdirs(s"$nextDir/_carry")
+    layout.fs.mkdirs(s"$nextDir/_carry")
     val listLines = shards.zipWithIndex.map { case ((l, h, es), i) =>
       val name = f"shard-$i%05d.list"
-      LayoutCommit.atomicWriteFile(s"$nextDir/_carry/$name",
+      layout.ops.atomicWriteFile(s"$nextDir/_carry/$name",
         es.mkString("\n"))
       s"$l\t$h\t$name\t${es.length}"
     }
-    LayoutCommit.atomicWriteFile(s"$nextDir/_CARRY_LIST",
+    layout.ops.atomicWriteFile(s"$nextDir/_CARRY_LIST",
       listLines.mkString("\n"))
   }
 
@@ -485,17 +480,17 @@ object RabitqIndex {
     * entries, flattened. Pure directory metadata; no data bytes move.
     * The reference [[buildCarryEntriesDistributed]] is spec-pinned to.
     */
-  private[graft] def buildCarryListing(dir: String, curName: String,
+  private[graft] def buildCarryListing(layout: Layout, curName: String,
                                        splitIds: Set[Int]): Seq[String] = {
-    val own = LayoutFs.list(s"$dir/$curName")
+    val own = layout.fs.list(s"${layout.dir}/$curName")
       .filter(f => f.isDir && f.name.startsWith("cluster_id=") &&
         !splitIds.contains(f.name.stripPrefix("cluster_id=").toInt))
       .sortBy(_.name)
-      .flatMap(cd => LayoutFs.list(cd.path)
+      .flatMap(cd => layout.fs.list(cd.path)
         .filter(f => !f.isDir && f.name.endsWith(".parquet"))
         .sortBy(_.name)
         .map(f => s"$curName/${cd.name}/${f.name}"))
-    val inherited = readCarry(dir, curName)
+    val inherited = readCarry(layout, curName)
       .filterNot(e => splitIds.contains(clusterOfCarryEntry(e)))
     own ++ inherited
   }
@@ -509,10 +504,10 @@ object RabitqIndex {
     * ([[buildCarryListing]], spec-pinned).
     */
   private[graft] def buildCarryEntriesDistributed(
-      spark: SparkSession, dir: String, curName: String,
+      spark: SparkSession, layout: Layout, curName: String,
       splitIds: Set[Int]): Seq[String] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(s"$dir/$curName")
+    val rootPath = new org.apache.hadoop.fs.Path(s"${layout.dir}/$curName")
     val fs = rootPath.getFileSystem(hconf)
     val dirs: Seq[(String, String)] =
       if (!fs.exists(rootPath)) Nil
@@ -536,7 +531,7 @@ object RabitqIndex {
             .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
             .map(st => s"$curName/$name/${st.getPath.getName}")
         }.collect().toSeq.sorted
-    val inherited = readCarry(dir, curName)
+    val inherited = readCarry(layout, curName)
       .filterNot(e => splitIds.contains(clusterOfCarryEntry(e)))
     own ++ inherited
   }
@@ -591,7 +586,7 @@ object RabitqIndex {
     * any cluster, else the first carried file, else an uncommitted own
     * file.
     */
-  private[graft] def scanOfGen(spark: SparkSession, dir: String,
+  private[graft] def scanOfGen(spark: SparkSession, layout: Layout,
                                gen: String,
                                clusters: Option[Set[Int]] = None): DataFrame = {
     val genName = LayoutFs.baseName(gen)
@@ -607,12 +602,12 @@ object RabitqIndex {
     }
     def committed(files: Seq[FileStatus], inprog: Seq[String]) =
       files.filterNot(f => excludedByInProgress(f.getPath.getName, inprog))
-    val inprog = inProgressPrefixes(dir)
+    val inprog = inProgressPrefixes(layout)
     val own = committed(ownFiles(clusters), inprog)
     val carried: Map[Path, Seq[FileStatus]] =
-      if (!hasCarry(dir, genName)) Map.empty
-      else clusters.fold(readCarry(dir, genName))(cs =>
-          readCarryForClusters(dir, genName, cs))
+      if (!hasCarry(layout, genName)) Map.empty
+      else clusters.fold(readCarry(layout, genName))(cs =>
+          readCarryForClusters(layout, genName, cs))
         // defensive: listings are built post-settle so they never name
         // an uncommitted batch's files — but exclusion is one string test
         .filterNot(e => excludedByInProgress(e.split('/').last, inprog))
@@ -620,24 +615,24 @@ object RabitqIndex {
         // stat per file; root = the source generation dir
         .groupBy(e => e.substring(0, e.lastIndexOf('/'))).toSeq.sortBy(_._1)
         .flatMap { case (rel, es) =>
-          val byName = parquetFiles(spark, hpath(spark, s"$dir/$rel"))
+          val byName = parquetFiles(spark, hpath(spark, s"${layout.dir}/$rel"))
             .map(s => s.getPath.getName -> s).toMap
           es.sorted.map(e => byName.getOrElse(e.split('/').last,
             throw new java.io.FileNotFoundException(
-              s"carried file $dir/$e is missing")))
+              s"carried file ${layout.dir}/$e is missing")))
         }
         .groupBy(_.getPath.getParent.getParent)
     def anyCarried: Option[String] =
-      if (LayoutFs.isFile(s"$dir/$genName/_CARRY")) readCarry(dir, genName).headOption
-      else readCarryShards(dir, genName).headOption
-        .flatMap(s => readShardEntries(dir, genName, s).headOption)
+      if (layout.fs.isFile(s"${layout.dir}/$genName/_CARRY")) readCarry(layout, genName).headOption
+      else readCarryShards(layout, genName).headOption
+        .flatMap(s => readShardEntries(layout, genName, s).headOption)
     // the empty relation's schema read races the replay's SWEEP of an
     // uncommitted file (its deletion is the uncommitted-batch contract):
     // when the file vanished, look again
     def schemaOfEmpty(retries: Int): StructType = {
       val all = ownFiles(None)
       val src = committed(all, inprog).headOption.map(_.getPath)
-        .orElse(anyCarried.map(e => hpath(spark, s"$dir/$e")))
+        .orElse(anyCarried.map(e => hpath(spark, s"${layout.dir}/$e")))
         .orElse(all.headOption.map(_.getPath))
         .getOrElse(throw new IllegalStateException(
           s"$gen holds no parquet file to read its schema from"))
@@ -652,7 +647,7 @@ object RabitqIndex {
       .fold(schemaOfEmpty(retries = 3))(f =>
         SeededRelation.footerSchema(spark, f.getPath))
     SeededRelation.open(spark, schema, Some("cluster_id"), root, own,
-      () => committed(ownFiles(clusters), inProgressPrefixes(dir)), carried)
+      () => committed(ownFiles(clusters), inProgressPrefixes(layout)), carried)
   }
 
   /** A flat parquet table (a tombstone log, a model sidecar) as one
@@ -685,9 +680,9 @@ object RabitqIndex {
     * the log goes through here. None when the log is empty or holds only
     * uncommitted batches.
     */
-  private[graft] def logScanOfGen(spark: SparkSession, dir: String,
+  private[graft] def logScanOfGen(spark: SparkSession, layout: Layout,
                                   gen: String): Option[DataFrame] =
-    flatScanOf(spark, logDirOfGen(dir, gen), () => inProgressPrefixes(dir))
+    flatScanOf(spark, logDirOfGen(layout.dir, gen), () => inProgressPrefixes(layout))
 
   /** Mark a generation as RETIRED (superseded by a compaction swap) —
     * the marker's mtime starts the retention clock [[vacuumIndex]]
@@ -695,9 +690,9 @@ object RabitqIndex {
     * where a superseded generation looks like immediately-reclaimable
     * rewrite debris.
     */
-  private[graft] def markRetired(dir: String, gen: String): Unit = {
-    LayoutFs.mkdirs(s"$dir/_retired")
-    LayoutCommit.atomicWriteFile(s"$dir/_retired/$gen",
+  private[graft] def markRetired(layout: Layout, gen: String): Unit = {
+    layout.fs.mkdirs(s"${layout.dir}/_retired")
+    layout.ops.atomicWriteFile(s"${layout.dir}/_retired/$gen",
       System.currentTimeMillis().toString)
   }
 
@@ -708,17 +703,17 @@ object RabitqIndex {
     * of duplicating them. File moves are metadata-only on a real
     * filesystem — the staged bytes are written exactly once.
     */
-  private[graft] def promoteStaged(staging: String, target: String,
+  private[graft] def promoteStaged(layout: Layout, staging: String, target: String,
                                    prefix: String): Unit = {
     def walk(src: String, dst: String): Unit = {
-      val kids = LayoutFs.list(src)
+      val kids = layout.fs.list(src)
       kids.filter(d => d.isDir && !d.name.startsWith("_"))
         .foreach(d => walk(d.path, s"$dst/${d.name}"))
       val files = kids.filter(f => !f.isDir && f.name.endsWith(".parquet"))
         .sortBy(_.name)
-      if (files.nonEmpty) LayoutFs.mkdirs(dst)
+      if (files.nonEmpty) layout.fs.mkdirs(dst)
       files.zipWithIndex.foreach { case (f, i) =>
-        LayoutCommit.atomicMoveFile(f.path, f"$dst/$prefix-$i%05d.parquet")
+        layout.ops.atomicMoveFile(f.path, f"$dst/$prefix-$i%05d.parquet")
       }
     }
     walk(staging, target)
@@ -729,12 +724,12 @@ object RabitqIndex {
     * tombstoned ids). The tombstone side is delete-volume-sized; the row
     * count is a parquet-metadata aggregate.
     */
-  def layoutStats(spark: SparkSession, dir: String): (Long, Long) = {
+  def layoutStats(spark: SparkSession, layout: Layout): (Long, Long) = {
     // single generation resolution (the load() discipline): the counted
     // rows and the counted log must belong to the same generation
-    val gen = indexDataDir(dir)
-    val nRows = scanOfGen(spark, dir, gen).count()
-    val nTomb = logScanOfGen(spark, dir, LayoutFs.baseName(gen))
+    val gen = indexDataDir(layout)
+    val nRows = scanOfGen(spark, layout, gen).count()
+    val nTomb = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
       .fold(0L)(_.select("vec_id").distinct().count())
     (nRows, nTomb)
   }
@@ -756,35 +751,35 @@ object RabitqIndex {
     * quiet data loss.
     */
   def save(spark: SparkSession, model: RabitqModel, index: DataFrame,
-           dir: String): Unit = Overlap.labelled(spark, s"rabitq: save $dir") {
+           layout: Layout): Unit = Overlap.labelled(spark, s"rabitq: save ${layout.dir}") {
     import spark.implicits._
-    index.write.mode("overwrite").partitionBy("cluster_id").parquet(s"$dir/index")
-    LayoutFs.delete(s"$dir/MANIFEST")
-    LayoutFs.list(dir)
+    index.write.mode("overwrite").partitionBy("cluster_id").parquet(s"${layout.dir}/index")
+    layout.fs.delete(s"${layout.dir}/MANIFEST")
+    layout.fs.list(layout.dir)
       .filter(f => f.isDir &&
         (f.name.startsWith("index-v") || f.name == "deletes" ||
           f.name.startsWith("deletes-") || f.name == "_retired" ||
           f.name == "_rebalance_staging" || f.name == "_commits" ||
           f.name == "_staging"))
-      .foreach(f => LayoutFs.deleteRecursively(f.path))
-    LayoutFs.list(dir)
+      .foreach(f => layout.fs.deleteRecursively(f.path))
+    layout.fs.list(layout.dir)
       .filter(f => !f.isDir &&
         (f.name == "MANIFEST.tmp" || f.name == "BUILT_K"))
-      .foreach(f => LayoutFs.delete(f.path))
+      .foreach(f => layout.fs.delete(f.path))
     // the three model sidecars are independent tiny single-task writes —
     // overlap them so the save pays one write latency, not
     // three; data-first crash ordering is preserved (index wrote above)
     Overlap(spark,
       model.rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
         .toDF("row_id", "row").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/rotation"),
+        .write.mode("overwrite").parquet(s"${layout.dir}/rotation"),
       model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cluster_id", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids"),
+        .write.mode("overwrite").parquet(s"${layout.dir}/centroids"),
       Seq((model.params.dim, model.params.padDim, model.params.numClusters,
            model.params.seed, model.bias.toSeq))
         .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/params"))
+        .write.mode("overwrite").parquet(s"${layout.dir}/params"))
     ()
   }
 
@@ -860,10 +855,11 @@ object RabitqIndex {
 
   /** Whole-model JSON serialization (S8 analog of the reference's serde
     * JSON, `/root/reference/src/rabitq.rs:72-81`): params + rotation +
-    * rotated centroids + dither bias in one self-describing file. Index
-    * DATA stays parquet — this is only the small driver-side state.
+    * rotated centroids + dither bias in one self-describing file,
+    * `model.json` in the layout's dir. Index DATA stays parquet — this
+    * is only the small driver-side state.
     */
-  def dumpModelJson(model: RabitqModel, path: String): Unit = {
+  def dumpModelJson(model: RabitqModel, layout: Layout): Unit = {
     def arr(a: Array[Float]): String = a.mkString("[", ",", "]")
     def mat(m: Array[Array[Float]]): String = m.map(arr).mkString("[", ",", "]")
     val json =
@@ -871,13 +867,13 @@ object RabitqIndex {
         s""""num_clusters":${model.params.numClusters},"seed":${model.params.seed},""" +
         s""""rotation":${mat(model.rotation)},"centroids":${mat(model.centroids)},""" +
         s""""bias":${arr(model.bias)}}"""
-    // through the seams: an atomic publish readable on any deployment fs
-    LayoutCommit.atomicWriteFile(path, json)
+    // through the handle: an atomic publish readable on any deployment fs
+    layout.ops.atomicWriteFile(s"${layout.dir}/model.json", json)
   }
 
-  def loadModelJson(path: String): RabitqModel = {
+  def loadModelJson(layout: Layout): RabitqModel = {
     // dependency-free parser for the fixed shape written above
-    val s = LayoutFs.readString(path)
+    val s = layout.fs.readString(s"${layout.dir}/model.json")
     def long(key: String): Long = {
       val m = java.util.regex.Pattern.compile("\"" + key + "\":(-?\\d+)").matcher(s)
       require(m.find(), s"missing $key"); m.group(1).toLong
@@ -1189,14 +1185,14 @@ object RabitqIndex {
     * windows and have writers re-[[load]] the model after (the q117
     * lifecycle gate drives exactly this sequence).
     */
-  def rebalanceIndex(spark: SparkSession, dir: String, base: DataFrame,
+  def rebalanceIndex(spark: SparkSession, layout: Layout, base: DataFrame,
                      maxSizeFactor: Double = 1.5,
                      fitSampleCap: Long = 100000L): RebalanceReport =
-    withLayoutLock(dir)(Overlap.labelled(spark, s"rebalance: $dir")(
-      rebalanceUnlocked(spark, dir, base, maxSizeFactor, fitSampleCap)))
+    withLayoutLock(layout)(Overlap.labelled(spark, s"rebalance: ${layout.dir}")(
+      rebalanceUnlocked(spark, layout, base, maxSizeFactor, fitSampleCap)))
 
   private[graft] def rebalanceUnlocked(
-      spark: SparkSession, dir: String, base: DataFrame,
+      spark: SparkSession, layout: Layout, base: DataFrame,
       maxSizeFactor: Double, fitSampleCap: Long,
       known: Option[(RabitqModel, Map[Int, Long])] = None,
       recovered: Boolean = false): RebalanceReport = {
@@ -1208,8 +1204,8 @@ object RabitqIndex {
       // whole by the stream's replay — duplicates. `recovered = true` is
       // the maintenanceLoop's contract: the pass already settled appends
       // ONCE under the same held lease.
-      graft.streaming.IdempotentSink.settleInProgress(dir,
-        Seq(indexDataDir(dir), tombstoneLogDir(dir)))
+      graft.streaming.IdempotentSink.settleInProgress(layout,
+        Seq(indexDataDir(layout), tombstoneLogDir(layout)))
     // `known` threads the maintenance pass's one measurement through
     // (model + LIVE per-cluster sizes — both invariant across the
     // compaction that may have run in between: the rewrite preserves
@@ -1217,21 +1213,21 @@ object RabitqIndex {
     // sidecars verbatim), replacing this phase's own model load and
     // full-scan size count. The data scan below still resolves the
     // CURRENT generation — only the measurement is reused.
-    val gen = indexDataDir(dir)
-    val model = known.map(_._1).getOrElse(modelOfGen(spark, dir, gen))
-    val index = scanOfGen(spark, dir, gen)
-    val live = logScanOfGen(spark, dir, LayoutFs.baseName(gen))
+    val gen = indexDataDir(layout)
+    val model = known.map(_._1).getOrElse(modelOfGen(spark, layout, gen))
+    val index = scanOfGen(spark, layout, gen)
+    val live = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
       .fold(index)(log => index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
-    spark.sparkContext.setJobDescription(s"rebalance: sizes $dir")
+    spark.sparkContext.setJobDescription(s"rebalance: sizes ${layout.dir}")
     val sizes = known.map(_._2).getOrElse {
       // with no tombstone log the live sizes are pure footer metadata
       // (guide §6 — zero data pages), exactly describeIndex's fast path;
       // crashed-append debris present (in-progress batches) or a
       // partitionless layout falls back to the committed scan
       val footer =
-        if (tombstoneLogOfGenIfAny(dir, LayoutFs.baseName(gen)).isEmpty &&
-            inProgressPrefixes(dir).isEmpty)
-          clusterSizesFromFooters(spark, dir, gen)
+        if (tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(gen)).isEmpty &&
+            inProgressPrefixes(layout).isEmpty)
+          clusterSizesFromFooters(spark, layout, gen)
         else None
       footer.fold(
         live.groupBy("cluster_id").count().collect()
@@ -1267,7 +1263,7 @@ object RabitqIndex {
       .join(base.select("vec_id", "embedding"), Seq("vec_id"), "left_outer")
       .persist()
     try {
-    spark.sparkContext.setJobDescription(s"rebalance: base coverage $dir")
+    spark.sparkContext.setJobDescription(s"rebalance: base coverage ${layout.dir}")
     val missingBase = members.filter(col("embedding").isNull).count()
     require(missingBase == 0L,
       s"$missingBase live index rows in the clusters to split have no vec_id in " +
@@ -1282,7 +1278,7 @@ object RabitqIndex {
     val rateCol = rates.foldLeft(lit(1000000L)) { case (acc, (c, r)) =>
       when(col("cluster_id") === c, lit(r)).otherwise(acc)
     }
-    spark.sparkContext.setJobDescription(s"rebalance: split fit $dir")
+    spark.sparkContext.setJobDescription(s"rebalance: split fit ${layout.dir}")
     val bRot = spark.sparkContext.broadcast(model.rotation)
     val bSplitK = spark.sparkContext.broadcast(splitK)
     // per-cluster Lloyd over the (id-sorted) rotated fit sample — one
@@ -1322,8 +1318,8 @@ object RabitqIndex {
     // sweep lives there; SCALE probe_scale row). Cumulative across
     // repeated rebalances because the FIRST value is kept; save() resets
     // it with the rest of the layout history.
-    if (!LayoutFs.exists(s"$dir/BUILT_K"))
-      LayoutCommit.atomicWriteFile(s"$dir/BUILT_K", k0.toString)
+    if (!layout.fs.exists(s"${layout.dir}/BUILT_K"))
+      layout.ops.atomicWriteFile(s"${layout.dir}/BUILT_K", k0.toString)
 
     // re-encode the members against the grown centroid set. Metadata
     // columns riding in the layout beyond the index schema (e.g. the
@@ -1344,7 +1340,7 @@ object RabitqIndex {
           .select("vec_id", extraCols.toIndexedSeq: _*),
         Seq("vec_id"))
     val reencSizes =
-      rebalanceGenerationSwap(spark, dir, model2, reencWide, splitIds)
+      rebalanceGenerationSwap(spark, layout, model2, reencWide, splitIds)
 
     // after-sizes without re-reading the layout: untouched sizes +
     // re-encoded destinations
@@ -1371,7 +1367,7 @@ object RabitqIndex {
     *  2. Untouched clusters: carried BY REFERENCE — the new
     *     generation's `_CARRY` listing ([[readCarry]]) names their
     *     immutable part files where they already live, one metadata
-    *     line per file, written through the commit seam before the
+    *     line per file, written through the handle's `ops` before the
     *     publish. NOTHING corpus-proportional moves: the swap's IO is
     *     the re-encoded split members (∝ skew) plus the listing bytes.
     *     (Rounds ≤18 carried by per-file copy — IO and request volume
@@ -1408,20 +1404,20 @@ object RabitqIndex {
     * the kill sweep under both commit implementations.
     */
   private[graft] def rebalanceGenerationSwap(
-      spark: SparkSession, dir: String, model2: RabitqModel,
+      spark: SparkSession, layout: Layout, model2: RabitqModel,
       reencWide: DataFrame, splitIds: Seq[Int]): Map[Int, Long] = {
     import spark.implicits._
-    val curName = LayoutFs.baseName(indexDataDir(dir))
+    val curName = LayoutFs.baseName(indexDataDir(layout))
     val curV = if (curName == "index") 1 else curName.stripPrefix("index-v").toInt
     val nextName = s"index-v${curV + 1}"
-    val nextDir = s"$dir/$nextName"
-    spark.sparkContext.setJobDescription(s"rebalance: reencode+publish $dir")
+    val nextDir = s"${layout.dir}/$nextName"
+    spark.sparkContext.setJobDescription(s"rebalance: reencode+publish ${layout.dir}")
     reencWide.repartition(model2.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(nextDir)
     // step 2's settle: no unmarked batch may enter the listing below
-    graft.streaming.IdempotentSink.settleInProgress(dir,
-      Seq(s"$dir/$curName", logDirOfGen(dir, curName)))
+    graft.streaming.IdempotentSink.settleInProgress(layout,
+      Seq(s"${layout.dir}/$curName", logDirOfGen(layout.dir, curName)))
     // the written schema is known: reading it back with it skips the
     // footer-inference job. Underscore-named sidecars and listing files
     // the other legs write into `nextDir` are invisible to this scan.
@@ -1435,15 +1431,15 @@ object RabitqIndex {
           .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
           .write.mode("overwrite").parquet(s"$nextDir/_params")),
       {
-        writeCarryListing(nextDir,
-          buildCarryEntriesDistributed(spark, dir, curName, splitIds.toSet))
-        tombstoneLogOfGenIfAny(dir, curName).foreach(logDir =>
-          copyParquetFiles(logDir, logDirOfGen(dir, nextName)))
+        writeCarryListing(layout, nextName,
+          buildCarryEntriesDistributed(spark, layout, curName, splitIds.toSet))
+        tombstoneLogOfGenIfAny(layout, curName).foreach(logDir =>
+          copyParquetFiles(layout, logDir, logDirOfGen(layout.dir, nextName)))
       },
       spark.read.schema(reencWide.schema).parquet(nextDir)
         .groupBy("cluster_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap)
-    publishGeneration(dir, curName, nextName)
+    publishGeneration(layout, curName, nextName)
     reencSizes
   }
 
@@ -1458,17 +1454,17 @@ object RabitqIndex {
     * ForkJoinPool — blocking file IO on the common pool from the Spark
     * driver can stall every other parallel-stream user in the JVM.
     */
-  private[graft] def copyParquetFiles(src: String, tgt: String): Unit = {
-    val files = LayoutFs.list(src)
+  private[graft] def copyParquetFiles(layout: Layout, src: String, tgt: String): Unit = {
+    val files = layout.fs.list(src)
       .filter(f => !f.isDir && f.name.endsWith(".parquet"))
     if (files.isEmpty) return
-    LayoutFs.mkdirs(tgt)
+    layout.fs.mkdirs(tgt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, files.length))
     try {
       val tasks = files.map { f =>
         new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = LayoutFs.copyFile(f.path, s"$tgt/${f.name}")
+          def call(): Unit = layout.fs.copyFile(f.path, s"$tgt/${f.name}")
         }
       }
       pool.invokeAll(java.util.Arrays.asList(tasks: _*))
@@ -1482,10 +1478,10 @@ object RabitqIndex {
     * compaction (`VecsStream.compactSwap`) and the rebalance so the two
     * publishes can never diverge.
     */
-  private[graft] def publishGeneration(dir: String, curName: String,
+  private[graft] def publishGeneration(layout: Layout, curName: String,
                                        nextName: String): Unit = {
-    markRetired(dir, curName)
-    LayoutCommit.atomicWriteFile(s"$dir/MANIFEST", nextName)
+    markRetired(layout, curName)
+    layout.ops.atomicWriteFile(s"${layout.dir}/MANIFEST", nextName)
   }
 
   /** Per-cluster row counts from parquet FOOTER metadata only — no data
@@ -1496,7 +1492,7 @@ object RabitqIndex {
     * back to the scan).
     */
   private[operators] def clusterSizesFromFooters(
-      spark: SparkSession, dir: String,
+      spark: SparkSession, layout: Layout,
       dataDir: String): Option[Array[(Int, Long)]] = {
     // list AND address through the Hadoop FileSystem API so the paths
     // shipped to executor tasks are FULLY QUALIFIED (scheme+authority) —
@@ -1511,8 +1507,8 @@ object RabitqIndex {
     // its own: the listing names them directly (no directory walk of the
     // source generations — the resolution is metadata-bounded)
     val carried: Seq[(Int, String)] =
-      readCarry(dir, rootPath.getName).map(e => (clusterOfCarryEntry(e),
-        fs.makeQualified(new org.apache.hadoop.fs.Path(s"$dir/$e")).toString))
+      readCarry(layout, rootPath.getName).map(e => (clusterOfCarryEntry(e),
+        fs.makeQualified(new org.apache.hadoop.fs.Path(s"${layout.dir}/$e")).toString))
     val parts = fs.listStatus(rootPath)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster_id="))
     if (parts.isEmpty && carried.isEmpty) return None
@@ -1589,19 +1585,19 @@ object RabitqIndex {
     * this build may sweep, append into, or rewrite around it.
     */
   private[graft] def withLayoutLock[A](
-      dir: String, staleMs: Long = 60L * 60 * 1000,
+      layout: Layout, staleMs: Long = 60L * 60 * 1000,
       waitMs: Long = 0L)(body: => A): A = {
-    require(!LayoutFs.exists(s"$dir/_rebalance_staging/_COMMIT"),
-      s"$dir holds a committed in-place rebalance swap " +
+    require(!layout.fs.exists(s"${layout.dir}/_rebalance_staging/_COMMIT"),
+      s"${layout.dir} holds a committed in-place rebalance swap " +
         "(_rebalance_staging/_COMMIT) left by an older build: finish it " +
         "with the build that wrote it before maintaining this layout")
-    val lock = s"$dir/_maintenance.lock"
+    val lock = s"${layout.dir}/_maintenance.lock"
     val token = java.util.UUID.randomUUID().toString
-    def acquire(): Boolean = LayoutCommit.exclusiveCreate(lock, token)
+    def acquire(): Boolean = layout.ops.exclusiveCreate(lock, token)
     def tryBreakStale(): Unit = {
       // lastModified() == 0 means the lock vanished (holder released or a
       // racing breaker won) — nothing to break, just retry the acquire
-      val lm = LayoutFs.lastModified(lock)
+      val lm = layout.fs.lastModified(lock)
       if (lm == 0L || System.currentTimeMillis() - lm < staleMs) return
       // ELECT exactly one breaker per stale-lock INSTANCE via an
       // exclusive-create claim keyed to the measured mtime: a naive
@@ -1621,31 +1617,31 @@ object RabitqIndex {
       // instance stays wedged until the GC age passes) — it can never
       // corrupt — so err long: 5 minutes.
       val claimGcMs = 5L * 60 * 1000
-      LayoutFs.list(dir)
+      layout.fs.list(layout.dir)
         .filter(f => f.name.startsWith("_maintenance.lock.break-") &&
           System.currentTimeMillis() - f.mtime > claimGcMs)
-        .foreach(f => LayoutFs.delete(f.path))
-      val claim = s"$dir/_maintenance.lock.break-$lm"
-      if (!LayoutCommit.exclusiveCreate(claim, token)) return // not elected
+        .foreach(f => layout.fs.delete(f.path))
+      val claim = s"${layout.dir}/_maintenance.lock.break-$lm"
+      if (!layout.ops.exclusiveCreate(claim, token)) return // not elected
       try {
-        if (LayoutFs.lastModified(lock) == lm) {
+        if (layout.fs.lastModified(lock) == lm) {
           // belt to the GC age's suspenders: re-verify the claim still
           // exists AND still carries OUR token immediately before the
           // rename — a breaker paused past the GC age between election
           // and here has lost its claim to a newer breaker and must
           // stand down (renaming now could vacate a fresh lock)
           val claimIsOurs = try {
-            LayoutFs.readString(claim) == token
+            layout.fs.readString(claim) == token
           } catch { case _: java.io.IOException => false }
           if (claimIsOurs) {
-            val aside = s"$dir/_maintenance.lock.broken-$token"
+            val aside = s"${layout.dir}/_maintenance.lock.broken-$token"
             try {
-              LayoutCommit.atomicRenameDir(lock, aside)
-              LayoutFs.delete(aside)
+              layout.ops.atomicRenameDir(lock, aside)
+              layout.fs.delete(aside)
             } catch { case _: java.nio.file.NoSuchFileException => () }
           }
         }
-      } finally LayoutFs.delete(claim)
+      } finally layout.fs.delete(claim)
     }
     val deadline = System.currentTimeMillis() + waitMs
     var held = acquire()
@@ -1657,13 +1653,13 @@ object RabitqIndex {
     if (!held) { tryBreakStale(); held = acquire() }
     if (!held)
       throw new IllegalStateException(
-        s"maintenance already in flight on $dir (_maintenance.lock held; " +
+        s"maintenance already in flight on ${layout.dir} (_maintenance.lock held; " +
           s"a lease breaks after ${staleMs / 1000}s)")
     try body finally {
       // release ONLY our own lease: if a breaker replaced it while we ran
       // (we outlived staleMs), the lock now carries the new holder's token
       try {
-        if (LayoutFs.readString(lock) == token) LayoutFs.delete(lock)
+        if (layout.fs.readString(lock) == token) layout.fs.delete(lock)
       } catch { case _: java.io.IOException => () }
     }
   }
@@ -1706,18 +1702,18 @@ object RabitqIndex {
     * scheduled maintenance ops is ENFORCED by the lease, not left to
     * the scheduler. Pure filesystem metadata — no jobs.
     */
-  def vacuumIndex(dir: String, retainMs: Long = DefaultRetainMs): VacuumReport =
-    withLayoutLock(dir)(vacuumUnlocked(dir, retainMs))
+  def vacuumIndex(layout: Layout, retainMs: Long = DefaultRetainMs): VacuumReport =
+    withLayoutLock(layout)(vacuumUnlocked(layout, retainMs))
 
   private[graft] def vacuumUnlocked(
-      dir: String, retainMs: Long = DefaultRetainMs): VacuumReport = {
+      layout: Layout, retainMs: Long = DefaultRetainMs): VacuumReport = {
     val now = System.currentTimeMillis()
-    val active = LayoutFs.baseName(indexDataDir(dir))
-    val markers = LayoutFs.list(s"$dir/_retired")
+    val active = LayoutFs.baseName(indexDataDir(layout))
+    val markers = layout.fs.list(s"${layout.dir}/_retired")
       .filter(!_.isDir).map(f => f.name -> f).toMap
     def expired(gen: String): Boolean =
       markers.get(gen).exists(m => now - m.mtime >= retainMs)
-    val genDirs = LayoutFs.list(dir).filter(f => f.isDir &&
+    val genDirs = layout.fs.list(layout.dir).filter(f => f.isDir &&
       (f.name == "index" || f.name.matches("index-v\\d+")))
     // REFCOUNT across generations (the carry-listing shape): a file a
     // RETAINED generation's `_CARRY` still references — the active one,
@@ -1731,7 +1727,7 @@ object RabitqIndex {
     val retainedGens: Seq[String] = active +: genDirs.map(_.name)
       .filter(g => g != active && markers.contains(g) && !expired(g))
     val referenced: Set[String] =
-      retainedGens.flatMap(g => readCarry(dir, g)).toSet
+      retainedGens.flatMap(g => readCarry(layout, g)).toSet
     def referencedUnder(gen: String): Boolean =
       referenced.exists(_.startsWith(gen + "/"))
     // superseded generations: reclaim (with their folded log + marker)
@@ -1749,39 +1745,39 @@ object RabitqIndex {
     // that generation-as-a-generation are gone past the window, and any
     // successor carried the log by copy at swap time
     val logVictims = (retiredExpired ++ debrisGens)
-      .map(g => logDirOfGen(dir, g.name)).filter(LayoutFs.isDirectory)
+      .map(g => logDirOfGen(layout.dir, g.name)).filter(layout.fs.isDirectory)
     // orphan markers (their generation already reclaimed — e.g. a crash
     // mid-vacuum between the gen delete and the marker delete): reclaim
     // the log once expired, then the marker
     val orphanMarkers = markers.filter { case (gen, _) =>
       !genDirs.exists(_.name == gen) && gen != active }
     val orphanLogVictims = orphanMarkers.keys.filter(expired).toSeq
-      .map(g => logDirOfGen(dir, g)).filter(LayoutFs.isDirectory)
+      .map(g => logDirOfGen(layout.dir, g)).filter(layout.fs.isDirectory)
     val markerVictims = (retiredVictims.map(_.name) ++
       orphanMarkers.keys.filter(expired)).toSeq.distinct
       .flatMap(g => markers.get(g).map(_.path))
     // age-gated batch staging (live batches never straddle the window)
-    val stagingVictims = LayoutFs.list(s"$dir/_staging")
+    val stagingVictims = layout.fs.list(s"${layout.dir}/_staging")
       .filter(f => f.isDir && now - f.mtime >= retainMs).map(_.path)
     val dirVictims = retiredVictims.map(_.path) ++ debrisGens.map(_.path) ++
       logVictims ++ orphanLogVictims ++ stagingVictims
     // committed batches' stranded in-progress sentinels
-    val staleSentinels = LayoutFs.list(s"$dir/_commits")
-      .filter(_.isDir).flatMap(q => LayoutFs.list(q.path))
+    val staleSentinels = layout.fs.list(s"${layout.dir}/_commits")
+      .filter(_.isDir).flatMap(q => layout.fs.list(q.path))
       .filter(f => !f.isDir && f.name.endsWith(".inprogress") &&
-        LayoutFs.exists(f.path.stripSuffix(".inprogress")))
+        layout.fs.exists(f.path.stripSuffix(".inprogress")))
       .map(_.path)
-    val fileVictims = LayoutFs.list(dir).filter(f => !f.isDir &&
+    val fileVictims = layout.fs.list(layout.dir).filter(f => !f.isDir &&
       (f.name == "MANIFEST.tmp" ||
         f.name.startsWith("_maintenance.lock.broken-") ||
         f.name.startsWith("_maintenance.lock.break-"))).map(_.path) ++
-      LayoutFs.list(s"$dir/_retired")
+      layout.fs.list(s"${layout.dir}/_retired")
         .filter(f => !f.isDir && f.name.endsWith(".tmp")).map(_.path) ++
       staleSentinels ++ markerVictims
-    val sized = dirVictims.map(v => v -> LayoutFs.sizeOfDirectory(v)) ++
-      fileVictims.map(v => v -> LayoutFs.length(v))
-    dirVictims.foreach(LayoutFs.deleteRecursively)
-    fileVictims.foreach(LayoutFs.delete)
+    val sized = dirVictims.map(v => v -> layout.fs.sizeOfDirectory(v)) ++
+      fileVictims.map(v => v -> layout.fs.length(v))
+    dirVictims.foreach(layout.fs.deleteRecursively)
+    fileVictims.foreach(layout.fs.delete)
     // PARTIAL reclaim of expired retired generations that still back a
     // retained listing: every file NOT referenced goes now (stale split
     // clusters, sidecars, the generation's own `_CARRY` — it stopped
@@ -1801,14 +1797,14 @@ object RabitqIndex {
       // unreferenced and delete live data)
       def walk(f: String, rel: String): Boolean = { // true ⇒ subtree empty
         var empty = true
-        LayoutFs.list(f).foreach { k =>
+        layout.fs.list(f).foreach { k =>
           if (k.isDir) {
-            if (walk(k.path, s"$rel/${k.name}")) LayoutFs.delete(k.path)
+            if (walk(k.path, s"$rel/${k.name}")) layout.fs.delete(k.path)
             else empty = false
           } else if (referenced.contains(s"$rel/${k.name}") ||
               k.name == "_RECLAIMED")
             empty = false
-          else { bytes += k.length; n += 1; LayoutFs.delete(k.path) }
+          else { bytes += k.length; n += 1; layout.fs.delete(k.path) }
         }
         empty
       }
@@ -1817,8 +1813,8 @@ object RabitqIndex {
       // listing and sidecars are gone) — mark it so [[loadAt]] refuses
       // it instead of serving a partial snapshot; written AFTER the walk
       // (idempotent under crash-retry: the re-walk skips the marker)
-      if (!LayoutFs.isFile(s"${g.path}/_RECLAIMED"))
-        LayoutCommit.atomicWriteFile(s"${g.path}/_RECLAIMED",
+      if (!layout.fs.isFile(s"${g.path}/_RECLAIMED"))
+        layout.ops.atomicWriteFile(s"${g.path}/_RECLAIMED",
           System.currentTimeMillis().toString)
       s"${g.path} (partial: $n unreferenced files — " +
         "carry-listed survivors retained)" -> bytes
@@ -1853,8 +1849,8 @@ object RabitqIndex {
     * callers wanting full parity pass ~2.5× the tuned budget (the
     * frontier is in SCALE_r18.json).
     */
-  def scaledRerank(dir: String, numClusters: Int, rerank: Int): Int = {
-    val s = probeScale(dir, numClusters)
+  def scaledRerank(layout: Layout, numClusters: Int, rerank: Int): Int = {
+    val s = probeScale(layout, numClusters)
     math.ceil(rerank * s * s).toInt
   }
 
@@ -1865,16 +1861,16 @@ object RabitqIndex {
     * from a query path (the pre-rebalance budget is always a safe,
     * merely less-recall-accurate, fallback).
     */
-  def probeScale(dir: String, numClusters: Int): Double = {
-    val f = s"$dir/BUILT_K"
-    if (!LayoutFs.exists(f)) 1.0
+  def probeScale(layout: Layout, numClusters: Int): Double = {
+    val f = s"${layout.dir}/BUILT_K"
+    if (!layout.fs.exists(f)) 1.0
     else
       try numClusters.toDouble /
-        math.max(1, LayoutFs.readString(f).trim.toInt)
+        math.max(1, layout.fs.readString(f).trim.toInt)
       catch {
         case e @ (_: java.io.IOException | _: NumberFormatException) =>
           System.err.println(
-            s"[graft] WARN: unreadable BUILT_K sidecar at $dir (${e.getMessage}) " +
+            s"[graft] WARN: unreadable BUILT_K sidecar at ${layout.dir} (${e.getMessage}) " +
               "— rerank scaling degrades to 1.0 (pre-rebalance budgets)")
           1.0
       }
@@ -1892,43 +1888,43 @@ object RabitqIndex {
     * a concurrent publish hand back a TORN model/data pair — exactly
     * the tear the generation-local shape exists to prevent.
     */
-  private[graft] def modelSidecarDir(dir: String, genDir: String,
+  private[graft] def modelSidecarDir(layout: Layout, genDir: String,
                                      table: String): String = {
     val genLocal = s"$genDir/_$table"
-    if (LayoutFs.isDirectory(genLocal)) genLocal else s"$dir/$table"
+    if (layout.fs.isDirectory(genLocal)) genLocal else s"${layout.dir}/$table"
   }
 
-  def load(spark: SparkSession, dir: String): (RabitqModel, DataFrame) =
+  def load(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) =
     // ONE generation resolution per load — model sidecars and the data
     // scan must come from the SAME generation even when a concurrent
     // maintenance pass publishes a new one mid-call
-    loadOfGen(spark, dir, indexDataDir(dir))
+    loadOfGen(spark, layout, indexDataDir(layout))
 
-  private def loadOfGen(spark: SparkSession, dir: String,
+  private def loadOfGen(spark: SparkSession, layout: Layout,
                         gen: String): (RabitqModel, DataFrame) =
-    (modelOfGen(spark, dir, gen), scanOfGen(spark, dir, gen))
+    (modelOfGen(spark, layout, gen), scanOfGen(spark, layout, gen))
 
   /** The model HALF of [[load]]'s single-resolution read — for callers
     * that must know the model (to enumerate probed clusters) BEFORE
     * constructing the data scan ([[loadLiveProbed]]).
     */
-  private[graft] def modelOfGen(spark: SparkSession, dir: String,
+  private[graft] def modelOfGen(spark: SparkSession, layout: Layout,
                                 gen: String): RabitqModel = {
     // three independent tiny single-task reads — overlap them
     // so a model load pays one job latency, not three
     val (p, rotation, centroids) = Overlap(spark,
-      sidecarOf(spark, modelSidecarDir(dir, gen, "params")).head(),
-      sidecarOf(spark, s"$dir/rotation")
+      sidecarOf(spark, modelSidecarDir(layout, gen, "params")).head(),
+      sidecarOf(spark, s"${layout.dir}/rotation")
         .orderBy("row_id").collect()
         .map(r => r.getAs[Seq[Float]]("row").toArray),
-      sidecarOf(spark, modelSidecarDir(dir, gen, "centroids"))
+      sidecarOf(spark, modelSidecarDir(layout, gen, "centroids"))
         .orderBy("cluster_id").collect()
         .map(r => r.getAs[Seq[Float]]("centroid").toArray))
     val params = RabitqParams(p.getAs[Int]("dim"), p.getAs[Int]("pad_dim"),
       p.getAs[Int]("num_clusters"), p.getAs[Long]("seed"))
     val bias = p.getAs[Seq[Float]]("bias").toArray
     // quadratic in the cluster growth — see scaledRerank's frontier note
-    val ps = probeScale(dir, params.numClusters)
+    val ps = probeScale(layout, params.numClusters)
     RabitqModel(params, rotation, centroids, bias, rerankScale = ps * ps)
   }
 
@@ -1947,26 +1943,26 @@ object RabitqIndex {
     * restriction + filter commute.
     */
   private[graft] def loadLiveProbed(
-      spark: SparkSession, dir: String,
+      spark: SparkSession, layout: Layout,
       probeOf: (RabitqModel, () => DataFrame) => Seq[Int])
       : (RabitqModel, Seq[Int], DataFrame) = {
-    val gen = indexDataDir(dir)
+    val gen = indexDataDir(layout)
     val genName = LayoutFs.baseName(gen)
-    val model = modelOfGen(spark, dir, gen)
+    val model = modelOfGen(spark, layout, gen)
     // the FULL live scan of the SAME resolved generation, built only if
     // the probe derivation asks for it (the measured-selectivity
     // fallback) — never a second MANIFEST resolution or model load
     def fullLive(): DataFrame = {
-      val s = scanOfGen(spark, dir, gen)
-      logScanOfGen(spark, dir, genName).fold(s)(log =>
+      val s = scanOfGen(spark, layout, gen)
+      logScanOfGen(spark, layout, genName).fold(s)(log =>
         s.join(log.select(org.apache.spark.sql.functions.col("vec_id")),
           Seq("vec_id"), "left_anti"))
     }
     val probed = probeOf(model, () => fullLive())
-    val scan = scanOfGen(spark, dir, gen, Some(probed.toSet))
+    val scan = scanOfGen(spark, layout, gen, Some(probed.toSet))
       .filter(org.apache.spark.sql.functions.col("cluster_id")
         .isin(probed: _*))
-    val live = logScanOfGen(spark, dir, genName).fold(scan)(log =>
+    val live = logScanOfGen(spark, layout, genName).fold(scan)(log =>
       scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
     (model, probed, live)
   }
@@ -1981,13 +1977,13 @@ object RabitqIndex {
     * `VecsStream.compactIndex`) and for gates that assert physical
     * layout state.
     */
-  def loadLive(spark: SparkSession, dir: String): (RabitqModel, DataFrame) = {
+  def loadLive(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) = {
     // same single-resolution discipline as load: the tombstone log is
     // PER GENERATION, so it must be the log of the generation the data
     // scan resolved, not a re-read of a possibly-republished MANIFEST
-    val gen = indexDataDir(dir)
-    val (model, index) = loadOfGen(spark, dir, gen)
-    val live = logScanOfGen(spark, dir, LayoutFs.baseName(gen))
+    val gen = indexDataDir(layout)
+    val (model, index) = loadOfGen(spark, layout, gen)
+    val live = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
       .fold(index)(log =>
         index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
     (model, live)
@@ -2009,26 +2005,26 @@ object RabitqIndex {
     * deployment's `retainMs` policy, exactly like Delta/Iceberg time
     * travel.
     */
-  def loadAt(spark: SparkSession, dir: String,
+  def loadAt(spark: SparkSession, layout: Layout,
              gen: String): (RabitqModel, DataFrame) = {
-    val genDir = s"$dir/$gen"
-    val active = LayoutFs.baseName(indexDataDir(dir))
+    val genDir = s"${layout.dir}/$gen"
+    val active = LayoutFs.baseName(indexDataDir(layout))
     def refuse(why: String) =
       throw new IllegalStateException(
-        s"generation $gen is not resolvable under $dir: $why")
+        s"generation $gen is not resolvable under ${layout.dir}: $why")
     if (gen != active) {
-      if (!LayoutFs.isFile(s"$dir/_retired/$gen"))
+      if (!layout.fs.isFile(s"${layout.dir}/_retired/$gen"))
         refuse("neither active nor retired-retained (never published, " +
           "or reclaimed past the retention window)")
-      if (!LayoutFs.isDirectory(genDir))
+      if (!layout.fs.isDirectory(genDir))
         refuse("retired and already reclaimed")
-      if (LayoutFs.isFile(s"$genDir/_RECLAIMED"))
+      if (layout.fs.isFile(s"$genDir/_RECLAIMED"))
         refuse("retired and partially reclaimed past the retention " +
           "window — only its still-referenced files survive")
     }
-    val model = modelOfGen(spark, dir, genDir)
-    val scan = scanOfGen(spark, dir, genDir)
-    val live = logScanOfGen(spark, dir, gen).fold(scan)(log =>
+    val model = modelOfGen(spark, layout, genDir)
+    val scan = scanOfGen(spark, layout, genDir)
+    val live = logScanOfGen(spark, layout, gen).fold(scan)(log =>
       scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
     (model, live)
   }
@@ -2072,13 +2068,13 @@ object RabitqIndex {
     }
   }
 
-  private[graft] def indexHealth(spark: SparkSession, dir: String,
+  private[graft] def indexHealth(spark: SparkSession, layout: Layout,
                                  footerFastPath: Boolean = true): IndexHealth = {
     // single generation resolution (the load() discipline): model, data
     // scan, log, and footer listing all from ONE MANIFEST read
-    val gen = indexDataDir(dir)
+    val gen = indexDataDir(layout)
     val genName = LayoutFs.baseName(gen)
-    val log = tombstoneLogOfGenIfAny(dir, genName)
+    val log = tombstoneLogOfGenIfAny(layout, genName)
     // FOOTER fast path: with no tombstone log, every statistic here is a
     // row count per cluster_id= partition — parquet footers carry those
     // exactly, so read ONLY file metadata (one tiny distributed pass,
@@ -2087,17 +2083,17 @@ object RabitqIndex {
     // slim two-column scan. Footers count every file, so neither footer
     // read runs while a promoted-but-unmarked batch exists: the scans
     // exclude it (read-committed visibility, [[loadLive]]'s view).
-    val footerOk = footerFastPath && inProgressPrefixes(dir).isEmpty
+    val footerOk = footerFastPath && inProgressPrefixes(layout).isEmpty
     val footerSizes: Option[Array[(Int, Long)]] =
       if (footerOk && log.isEmpty)
-        clusterSizesFromFooters(spark, dir, gen)
+        clusterSizesFromFooters(spark, layout, gen)
       else None
     footerSizes match {
       case Some(fs) =>
-        IndexHealth(gen, modelOfGen(spark, dir, gen), fs.map(_._2).sum, 0L, fs)
+        IndexHealth(gen, modelOfGen(spark, layout, gen), fs.map(_._2).sum, 0L, fs)
       case None =>
-        val (model, index) = loadOfGen(spark, dir, gen)
-        val tomb = logScanOfGen(spark, dir, genName)
+        val (model, index) = loadOfGen(spark, layout, gen)
+        val tomb = logScanOfGen(spark, layout, genName)
           .map(_.select("vec_id").distinct())
         val live = tomb.map(t => index.join(t, Seq("vec_id"), "left_anti"))
           .getOrElse(index)
@@ -2108,7 +2104,7 @@ object RabitqIndex {
         // committed scan.
         val (nRowsOpt, nTomb, sizes) = Overlap(spark,
           if (footerOk)
-            clusterSizesFromFooters(spark, dir, gen).map(_.map(_._2).sum)
+            clusterSizesFromFooters(spark, layout, gen).map(_.map(_._2).sum)
           else None,
           tomb.map(_.count()).getOrElse(0L),
           live.groupBy("cluster_id").count().collect()
@@ -2117,11 +2113,11 @@ object RabitqIndex {
     }
   }
 
-  def describeIndex(spark: SparkSession, dir: String,
+  def describeIndex(spark: SparkSession, layout: Layout,
                     maxSizeFactor: Double = 1.5,
                     footerFastPath: Boolean = true): DataFrame = {
     import spark.implicits._
-    val h = indexHealth(spark, dir, footerFastPath)
+    val h = indexHealth(spark, layout, footerFastPath)
     val oversized = h.oversized(maxSizeFactor)
     val mean = h.meanSize
     Seq((h.model.params.numClusters, h.nRows, h.nLive, h.nTomb, h.debt,

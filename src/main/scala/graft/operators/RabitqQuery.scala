@@ -306,7 +306,7 @@ object RabitqQuery {
     * the saved index — one narrow scan, still cheaper than the recall
     * collapse it prevents, but at scale pass the statistic in.
     */
-  def filteredTopKFromDisk(spark: SparkSession, dir: String, base: DataFrame,
+  def filteredTopKFromDisk(spark: SparkSession, layout: Layout, base: DataFrame,
                            queries: DataFrame, pred: org.apache.spark.sql.Column,
                            nprobe: Int, topk: Int, rerank: Int,
                            selectivity: Option[Double] = None,
@@ -319,7 +319,7 @@ object RabitqQuery {
     // the SAME resolved generation (it needs every cluster, so no probe
     // pruning is possible there; the thunk avoids a second model load)
     var sel = Double.NaN
-    val (model, _, pruned0) = RabitqIndex.loadLiveProbed(spark, dir,
+    val (model, _, pruned0) = RabitqIndex.loadLiveProbed(spark, layout,
       (m, fullLive) => {
         sel = selectivity.getOrElse(measuredSelectivity(fullLive(), pred))
         probedClusterIds(m, queries,
@@ -470,7 +470,7 @@ object RabitqQuery {
     *             dominated and nearly flat in rerank, so paying more
     *             here is cheap — see `RabitqIndex.scaledRerank`.
     */
-  def topKFromDisk(spark: SparkSession, dir: String, base: DataFrame,
+  def topKFromDisk(spark: SparkSession, layout: Layout, base: DataFrame,
                    queries: DataFrame, nprobe: Int, topk: Int, rerank: Int,
                    pred: org.apache.spark.sql.Column = lit(true),
                    rerankScale: Option[Double] = None): DataFrame = {
@@ -479,7 +479,7 @@ object RabitqQuery {
     // the scan materialized from only the carry-manifest shards
     // overlapping the probed clusters — the planner never lists the
     // carried files of unprobed clusters
-    val (model, _, pruned0) = RabitqIndex.loadLiveProbed(spark, dir,
+    val (model, _, pruned0) = RabitqIndex.loadLiveProbed(spark, layout,
       (m, _) => probedClusterIds(m, queries, nprobe))
     // rebalance-grown layout: scale the RERANK budget by (k′/k0)²
     // (model.rerankScale, populated at load from BUILT_K — the measured

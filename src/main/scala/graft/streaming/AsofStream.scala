@@ -226,7 +226,7 @@ object AsofStream {
       graft.operators.LayoutFs.list(inDirNorm)
         .filter(e => !e.isDir && !stamped.contains(e.name))
         .foreach { e =>
-          graft.operators.LayoutFs.setLastModified(e.path, stampMs)
+          graft.operators.PosixFs.setLastModified(e.path, stampMs)
           stamped += e.name
         }
     (0 until effChunks).foreach { i =>

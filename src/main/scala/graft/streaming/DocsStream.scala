@@ -32,11 +32,7 @@ object DocsStream {
     */
   def distinctFingerprints(spark: SparkSession, path: String, queryName: String,
                            stateParts: Int = 4): DataFrame = {
-    val (dir, glob) =
-      if (graft.operators.LayoutFs.isFile(path))
-        (graft.operators.LayoutFs.parent(path),
-          graft.operators.LayoutFs.baseName(path))
-      else (path, "*")
+    val (dir, glob) = graft.operators.LayoutFs.streamSource(path)
     // state = first-seen fingerprints in the watermark horizon; size the
     // store width for the drive (StreamConf) instead of paying the full
     // session shuffle width in per-batch store commits
@@ -89,11 +85,7 @@ object DocsStream {
                       maxFilesPerTrigger: Option[Int] = None,
                       stateParts: Int = 4): DataFrame = {
     import graft.operators.Dedup
-    val (dir, glob) =
-      if (graft.operators.LayoutFs.isFile(path))
-        (graft.operators.LayoutFs.parent(path),
-          graft.operators.LayoutFs.baseName(path))
-      else (path, "*")
+    val (dir, glob) = graft.operators.LayoutFs.streamSource(path)
     val reader0 = spark.readStream
       .schema(docsSchema)
       .option("pathGlobFilter", glob)

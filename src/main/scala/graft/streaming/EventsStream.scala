@@ -66,11 +66,7 @@ object EventsStream {
     * directory, so stream the parent dir with a glob filter on the name.
     */
   def windowedCountsStream(spark: SparkSession, path: String, minutes: Int): DataFrame = {
-    val (dir, glob) =
-      if (graft.operators.LayoutFs.isFile(path))
-        (graft.operators.LayoutFs.parent(path),
-          graft.operators.LayoutFs.baseName(path))
-      else (path, "*")
+    val (dir, glob) = graft.operators.LayoutFs.streamSource(path)
     val raw = spark.readStream
       .schema(eventsSchema(tsReadType(spark, path)))
       .option("pathGlobFilter", glob)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{LayoutCommit, LayoutFs, RabitqIndex}
+import graft.operators.{Layout, RabitqIndex}
 
 /** Exactly-once parquet APPEND for foreachBatch sinks.
   *
@@ -40,8 +40,9 @@ import graft.operators.{LayoutCommit, LayoutFs, RabitqIndex}
   * second copy — is closed from the maintenance side:
   * [[settleInProgress]] sweeps promoted-but-unmarked batches out of the
   * layout before any rewrite reads it (the replay re-stages them in
-  * full, so nothing is lost). Commit primitives are `LayoutCommit`'s —
-  * see its filesystem contract before deploying on an object store.
+  * full, so nothing is lost). Commit primitives are the commit root's
+  * handle's `ops` — see the `CommitOps` filesystem contract before
+  * deploying on an object store.
   */
 object IdempotentSink {
 
@@ -50,19 +51,19 @@ object IdempotentSink {
     *         (callers that observe metrics on `df` branch on this — an
     *         `Observation` on a plan that never ran blocks forever).
     */
-  def appendBatch(df: DataFrame, targetDir: => String, commitRoot: String,
+  def appendBatch(df: DataFrame, targetDir: => String, commitRoot: Layout,
                   queryName: String, batchId: Long,
                   partitionCols: Seq[String] = Nil,
                   leaseWaitMs: Long = 10L * 60 * 1000,
                   onStaged: () => Unit = () => ()): Boolean = {
-    val marker = s"$commitRoot/_commits/$queryName/$batchId"
-    val inprog = s"$commitRoot/_commits/$queryName/$batchId.inprogress"
-    if (LayoutFs.exists(marker)) {
+    val marker = s"${commitRoot.dir}/_commits/$queryName/$batchId"
+    val inprog = s"${commitRoot.dir}/_commits/$queryName/$batchId.inprogress"
+    if (commitRoot.fs.exists(marker)) {
       // committed on a prior attempt — and a crash between that commit
       // and its sentinel delete must not strand the sentinel forever
       // (every later inspection would read the batch as a crashed
       // attempt, and vacuum deliberately preserves _commits)
-      LayoutFs.delete(inprog)
+      commitRoot.fs.delete(inprog)
       return false
     }
     val prefix = s"$queryName-$batchId"
@@ -71,10 +72,10 @@ object IdempotentSink {
     // somewhere, so only then pay the target-tree sweep (a partitioned
     // index target can hold thousands of cluster dirs; the common
     // first-attempt path must not walk them every batch)
-    val retry = LayoutFs.exists(inprog)
-    LayoutFs.mkdirs(s"$commitRoot/_commits/$queryName")
-    LayoutCommit.exclusiveCreate(inprog)
-    val staging = s"$commitRoot/_staging/$prefix"
+    val retry = commitRoot.fs.exists(inprog)
+    commitRoot.fs.mkdirs(s"${commitRoot.dir}/_commits/$queryName")
+    commitRoot.ops.exclusiveCreate(inprog)
+    val staging = s"${commitRoot.dir}/_staging/$prefix"
     graft.Overlap.labelled(df.sparkSession, s"sink: stage $prefix") {
       val w0 = df.write.mode("overwrite")
       val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
@@ -88,12 +89,12 @@ object IdempotentSink {
       // the target dir must exist even if every row of every batch was
       // filtered out — a downstream read of the sink must see an (empty)
       // directory, not path-not-found
-      LayoutFs.mkdirs(target)
-      if (retry) sweepPrefix(target, prefix)
-      RabitqIndex.promoteStaged(staging, target, prefix)
-      LayoutFs.deleteRecursively(staging)
-      LayoutCommit.exclusiveCreate(marker)
-      LayoutFs.delete(inprog)
+      commitRoot.fs.mkdirs(target)
+      if (retry) sweepPrefix(commitRoot, target, prefix)
+      RabitqIndex.promoteStaged(commitRoot, staging, target, prefix)
+      commitRoot.fs.deleteRecursively(staging)
+      commitRoot.ops.exclusiveCreate(marker)
+      commitRoot.fs.delete(inprog)
     }
     true
   }
@@ -102,11 +103,11 @@ object IdempotentSink {
     * SAME batch may have left anywhere in the target tree (attempts can
     * differ in file count, so name-overwrite alone is not enough).
     */
-  private def sweepPrefix(dir: String, prefix: String): Unit = {
-    val kids = LayoutFs.list(dir)
-    kids.filter(_.isDir).foreach(k => sweepPrefix(k.path, prefix))
+  private def sweepPrefix(layout: Layout, dir: String, prefix: String): Unit = {
+    val kids = layout.fs.list(dir)
+    kids.filter(_.isDir).foreach(k => sweepPrefix(layout, k.path, prefix))
     kids.filter(f => !f.isDir && f.name.startsWith(prefix + "-"))
-      .foreach(f => LayoutFs.delete(f.path))
+      .foreach(f => layout.fs.delete(f.path))
   }
 
   /** Maintenance-side half of the append-vs-maintenance closure: sweep
@@ -121,16 +122,16 @@ object IdempotentSink {
     * back exactly once, and the rewrite never folds rows a replay would
     * duplicate.
     */
-  private[graft] def settleInProgress(commitRoot: String,
+  private[graft] def settleInProgress(commitRoot: Layout,
                                       targetDirs: Seq[String]): Unit = {
-    val qs = LayoutFs.list(s"$commitRoot/_commits").filter(_.isDir)
+    val qs = commitRoot.fs.list(s"${commitRoot.dir}/_commits").filter(_.isDir)
     for {
       q <- qs
-      f <- LayoutFs.list(q.path)
+      f <- commitRoot.fs.list(q.path)
       if !f.isDir && f.name.endsWith(".inprogress")
       batchId = f.name.stripSuffix(".inprogress")
-      if !LayoutFs.exists(s"${q.path}/$batchId")
+      if !commitRoot.fs.exists(s"${q.path}/$batchId")
       t <- targetDirs
-    } sweepPrefix(t, s"${q.name}-$batchId")
+    } sweepPrefix(commitRoot, t, s"${q.name}-$batchId")
   }
 }

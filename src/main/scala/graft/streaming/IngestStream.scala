@@ -117,13 +117,9 @@ object IngestStream {
     val (histSets, histBands, histAssigned, cluster) =
       (st.histSets, st.histBands, st.histAssigned, st.cluster)
     val outDir = s"$workDir/out"
-    graft.operators.LayoutFs.mkdirs(outDir)
+    graft.operators.PosixFs.mkdirs(outDir)
 
-    val (dir, glob) =
-      if (graft.operators.LayoutFs.isFile(path))
-        (graft.operators.LayoutFs.parent(path),
-          graft.operators.LayoutFs.baseName(path))
-      else (path, "*")
+    val (dir, glob) = graft.operators.LayoutFs.streamSource(path)
     val reader0 = spark.readStream.schema(docsSchema)
       .option("pathGlobFilter", glob)
     val reader = maxFilesPerTrigger.fold(reader0)(m =>

@@ -30,11 +30,7 @@ object SessionStream {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
 
-    val (dir, glob) =
-      if (graft.operators.LayoutFs.isFile(path))
-        (graft.operators.LayoutFs.parent(path),
-          graft.operators.LayoutFs.baseName(path))
-      else (path, "*")
+    val (dir, glob) = graft.operators.LayoutFs.streamSource(path)
 
     val reader0 = spark.readStream
       .schema(EventsStream.eventsSchema(EventsStream.tsReadType(spark, path)))

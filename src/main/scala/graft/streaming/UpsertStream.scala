@@ -123,7 +123,7 @@ object UpsertStream {
     if (parquetSink) {
       // empty input ⇒ zero micro-batches ⇒ foreachBatch never ran and
       // $dir/out does not exist — an empty changelog, not an error
-      if (graft.operators.LayoutFs.exists(s"$dir/out".stripPrefix("file:")))
+      if (graft.operators.PosixFs.exists(s"$dir/out".stripPrefix("file:")))
         spark.read.parquet(s"$dir/out")
       else spark.emptyDataset[UpOut].toDF()
     } else spark.table(name)

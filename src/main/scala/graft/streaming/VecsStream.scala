@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{Curation, RabitqIndex, RabitqModel}
+import graft.operators.{Curation, Layout, LayoutFs, RabitqIndex, RabitqModel}
 
 /** Streaming incremental SEMANTIC dedup — the continuous counterpart of
   * `Curation.incrementalSemanticDedup` (batch q104) and the embedding-
@@ -33,19 +33,6 @@ import graft.operators.{Curation, RabitqIndex, RabitqModel}
   */
 object VecsStream {
 
-  /** A single-FILE input path streams as (parent dir, name glob); a
-    * directory streams whole. String path math (no `java.io.File` — the
-    * input may be any Hadoop filesystem), preserving the parent-of-root
-    * ("/x" → "/") and bare-relative-name ("x" → ".") edge cases.
-    */
-  private def splitFileGlob(path: String): (String, String) =
-    if (graft.operators.LayoutFs.isFile(path)) {
-      val i = path.lastIndexOf('/')
-      val dir =
-        if (i < 0) "." else if (i == 0) "/" else path.substring(0, i)
-      (dir, path.substring(i + 1))
-    } else (path, "*")
-
   val vecsSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
@@ -68,7 +55,7 @@ object VecsStream {
     // reuse-exchange keeps the broadcast across micro-batches
     val hist = history
       .select(col("embedding").as("he"), cluster.as("hcluster"))
-    val (dir, glob) = splitFileGlob(path)
+    val (dir, glob) = LayoutFs.streamSource(path)
     val reader0 = spark.readStream
       .schema(vecsSchema)
       .option("pathGlobFilter", glob)
@@ -110,10 +97,10 @@ object VecsStream {
     * partitioned layout itself: appends go executor→file into the
     * cluster directories, nothing crosses the driver.
     */
-  def appendToIndex(spark: SparkSession, path: String, idxDir: String,
+  def appendToIndex(spark: SparkSession, path: String, idx: Layout,
                     ckptDir: String, model: RabitqModel, queryName: String,
                     maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val (dir, glob) = splitFileGlob(path)
+    val (dir, glob) = LayoutFs.streamSource(path)
     val reader0 = spark.readStream
       .schema(vecsSchema)
       .option("pathGlobFilter", glob)
@@ -131,7 +118,7 @@ object VecsStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         IdempotentSink.appendBatch(
           RabitqIndex.appendVectors(spark, model, batch),
-          RabitqIndex.indexDataDir(idxDir), idxDir, queryName, batchId,
+          RabitqIndex.indexDataDir(idx), idx, queryName, batchId,
           partitionCols = Seq("cluster_id"))
         ()
       }
@@ -162,10 +149,10 @@ object VecsStream {
     * ops interleave across micro-batches — which is what makes the
     * q115 gate a deterministic real-rows oracle.
     */
-  def maintainIndex(spark: SparkSession, path: String, idxDir: String,
+  def maintainIndex(spark: SparkSession, path: String, idx: Layout,
                     ckptDir: String, model: RabitqModel, queryName: String,
                     maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val (dir, glob) = splitFileGlob(path)
+    val (dir, glob) = LayoutFs.streamSource(path)
     val reader0 = spark.readStream
       .schema(opsSchema)
       .option("pathGlobFilter", glob)
@@ -203,14 +190,14 @@ object VecsStream {
           count(when(col("op") === "del", lit(1))).as("n_dels"))
         val wrote = IdempotentSink.appendBatch(
           RabitqIndex.appendVectors(spark, model, observed.filter(col("op") === "add")),
-          RabitqIndex.indexDataDir(idxDir), idxDir, s"$queryName-add", batchId,
+          RabitqIndex.indexDataDir(idx), idx, s"$queryName-add", batchId,
           partitionCols = Seq("cluster_id"))
         val nDels =
           if (wrote) obs.get("n_dels").asInstanceOf[Long]
           else batch.filter(col("op") === "del").limit(1).count()
         if (nDels > 0L)
           IdempotentSink.appendBatch(batch.filter(col("op") === "del").select("vec_id"),
-            RabitqIndex.tombstoneLogDir(idxDir), idxDir, s"$queryName-del", batchId)
+            RabitqIndex.tombstoneLogDir(idx), idx, s"$queryName-del", batchId)
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -222,8 +209,8 @@ object VecsStream {
     * anti-joined out — an id-only join against the (delete-volume-
     * sized) log, broadcast at any realistic delete rate.
     */
-  def loadMaintained(spark: SparkSession, idxDir: String): (RabitqModel, DataFrame) =
-    RabitqIndex.loadLive(spark, idxDir)
+  def loadMaintained(spark: SparkSession, idx: Layout): (RabitqModel, DataFrame) =
+    RabitqIndex.loadLive(spark, idx)
 
   /** Scheduled compaction for [[maintainIndex]]: fold the tombstone log
     * into the layout. Scale-safe shape (the /reload snapshot pattern,
@@ -247,10 +234,11 @@ object VecsStream {
     * therefore see old-or-new, never partial (spec-asserted), and a
     * reader mid-scan of the old generation is never yanked.
     */
-  def compactIndex(spark: SparkSession, idxDir: String): Unit =
-    RabitqIndex.withLayoutLock(idxDir)(compactUnlocked(spark, idxDir))
+  def compactIndex(spark: SparkSession, idx: Layout): Unit =
+    RabitqIndex.withLayoutLock(idx)(
+      graft.Overlap.labelled(spark, s"compact: ${idx.dir}")(compactUnlocked(spark, idx)))
 
-  private[graft] def compactUnlocked(spark: SparkSession, idxDir: String,
+  private[graft] def compactUnlocked(spark: SparkSession, idx: Layout,
                                      recovered: Boolean = false): Unit = {
     if (!recovered)
       // settle crashed uncommitted appends BEFORE the rewrite reads the
@@ -261,23 +249,23 @@ object VecsStream {
       // mid-promote here (the promote takes the lease we hold).
       // `recovered = true` is the maintenanceLoop's contract: the pass
       // already settled ONCE under the same held lease.
-      IdempotentSink.settleInProgress(idxDir,
-        Seq(RabitqIndex.indexDataDir(idxDir), RabitqIndex.tombstoneLogDir(idxDir)))
+      IdempotentSink.settleInProgress(idx,
+        Seq(RabitqIndex.indexDataDir(idx), RabitqIndex.tombstoneLogDir(idx)))
     // presence judged by DATA files, not the directory: the streamed del
     // leg creates its (possibly forever-empty) target dir unconditionally
-    if (RabitqIndex.tombstoneLogIfAny(idxDir).isEmpty) return
-    compactSwap(idxDir, compactRewrite(spark, idxDir))
+    if (RabitqIndex.tombstoneLogIfAny(idx).isEmpty) return
+    compactSwap(idx, compactRewrite(spark, idx))
   }
 
   /** Phase 1 (durable, retry-safe): rewrite the live rows into the next
     * versioned data dir; returns its name. Nothing the current
     * generation's readers resolve is touched.
     */
-  private[graft] def compactRewrite(spark: SparkSession, idxDir: String): String = {
-    val cur = graft.operators.LayoutFs.baseName(RabitqIndex.indexDataDir(idxDir))
+  private[graft] def compactRewrite(spark: SparkSession, idx: Layout): String = {
+    val cur = LayoutFs.baseName(RabitqIndex.indexDataDir(idx))
     val curV = if (cur == "index") 1 else cur.stripPrefix("index-v").toInt
     val nextName = s"index-v${curV + 1}"
-    val (m, live) = loadMaintained(spark, idxDir)
+    val (m, live) = loadMaintained(spark, idx)
     // compaction's SECOND job: undo file fragmentation. Continuous
     // appends and rebalances leave O(write-tasks × clusters) small part
     // files (measured ~8k at 1M/256 — footer-describe and scan listing
@@ -287,7 +275,7 @@ object VecsStream {
     // moves exactly the rows the rewrite was going to write anyway.
     live.repartition(m.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$idxDir/$nextName")
+      .parquet(s"${idx.dir}/$nextName")
     // carry generation-LOCAL model sidecars: a rebalance
     // (RabitqIndex.rebalanceGenerationSwap) puts the grown model INSIDE
     // its generation so the MANIFEST write flips data and model together —
@@ -295,7 +283,7 @@ object VecsStream {
     // compacted generation would fall back to the STALE layout-root
     // pair (pre-split centroids against post-split cluster ids)
     for (t <- Seq("centroids", "params"))
-      RabitqIndex.copyParquetFiles(s"$idxDir/$cur/_$t", s"$idxDir/$nextName/_$t")
+      RabitqIndex.copyParquetFiles(idx, s"${idx.dir}/$cur/_$t", s"${idx.dir}/$nextName/_$t")
     nextName
   }
 
@@ -312,9 +300,9 @@ object VecsStream {
     * belongs to the old generation and anti-joins ids the rewrite
     * already dropped.
     */
-  private[graft] def compactSwap(idxDir: String, nextName: String): Unit =
-    RabitqIndex.publishGeneration(idxDir,
-      graft.operators.LayoutFs.baseName(RabitqIndex.indexDataDir(idxDir)), nextName)
+  private[graft] def compactSwap(idx: Layout, nextName: String): Unit =
+    RabitqIndex.publishGeneration(idx,
+      LayoutFs.baseName(RabitqIndex.indexDataDir(idx)), nextName)
 
   /** What one [[maintenanceLoop]] pass did. */
   case class MaintenanceReport(
@@ -332,7 +320,7 @@ object VecsStream {
     * action's cost is bounded by its own operator's shape (rewrite of
     * the live set / IO ∝ skew); the describe read is one slim scan.
     */
-  def maintenanceLoop(spark: SparkSession, idxDir: String,
+  def maintenanceLoop(spark: SparkSession, idx: Layout,
                       base: org.apache.spark.sql.DataFrame,
                       debtThreshold: Double = 0.2,
                       maxSizeFactor: Double = 1.5,
@@ -340,31 +328,31 @@ object VecsStream {
     // ONE lease across the whole pass: the describe→act sequence must
     // not interleave with another scheduler's pass (each acting on the
     // other's stale report), and the loop IS the maintenance window
-    RabitqIndex.withLayoutLock(idxDir)(graft.Overlap.labelled(spark, s"maintenance: $idxDir") {
+    RabitqIndex.withLayoutLock(idx)(graft.Overlap.labelled(spark, s"maintenance: ${idx.dir}") {
       // vacuum first: a crashed prior cycle's debris (unreferenced
       // generations, dead staging) must not ride along forever — pure
       // file metadata, no jobs; retired generations inside the retention
       // window survive (in-flight readers may still hold them).
-      val vac = RabitqIndex.vacuumUnlocked(idxDir, retainMs)
+      val vac = RabitqIndex.vacuumUnlocked(idx, retainMs)
       // settle crashed uncommitted appends ONCE for the whole pass (the
       // phases previously each re-ran the settle, re-listing the layout
       // under the same held lease)
-      IdempotentSink.settleInProgress(idxDir,
-        Seq(RabitqIndex.indexDataDir(idxDir), RabitqIndex.tombstoneLogDir(idxDir)))
+      IdempotentSink.settleInProgress(idx,
+        Seq(RabitqIndex.indexDataDir(idx), RabitqIndex.tombstoneLogDir(idx)))
       // ONE measurement for the whole pass: the health snapshot below is
       // what describeIndex renders, and the phases consume it directly —
       // the model and the LIVE per-cluster sizes are both invariant
       // across the compaction (the rewrite preserves exactly the live
       // rows and copies the model sidecars), so the rebalance phase needs
       // no re-load and no re-count (guide §1.2 run fewer passes).
-      val h = RabitqIndex.indexHealth(spark, idxDir)
+      val h = RabitqIndex.indexHealth(spark, idx)
       val compacted =
         if (h.debt >= debtThreshold && h.nTomb > 0L) {
-          compactUnlocked(spark, idxDir, recovered = true); true
+          compactUnlocked(spark, idx, recovered = true); true
         } else false
       val rebalanced =
         if (h.oversized(maxSizeFactor) > 0)
-          Some(RabitqIndex.rebalanceUnlocked(spark, idxDir, base,
+          Some(RabitqIndex.rebalanceUnlocked(spark, idx, base,
             maxSizeFactor, fitSampleCap = 100000L,
             known = Some((h.model, h.sizes.toMap)), recovered = true))
         else None

@@ -79,11 +79,9 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val beforeFiles = ownDataFiles(idxDir, "index")
     val liveBefore = RabitqIndex.loadLive(spark, idxDir)._2
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val (rep, m2, live) = LayoutCommit.withOps(CondPutCommit) {
-      val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-      val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
-      (rep, m2, live)
-    }
+    val layout = Layout(idxDir, CondPutCommit)
+    val rep = RabitqIndex.rebalanceIndex(spark, layout, emb, maxSizeFactor = 1.4)
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
     assert(rep.numClustersAfter > rep.numClustersBefore,
       "gate is vacuous: the skewed layout did not split")
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
@@ -296,76 +294,74 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val (idxDir, _) = skewedLayout()
     val beforeFiles = ownDataFiles(idxDir, "index")
-    LayoutCommit.withOps(CondPutCommit) {
-      val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-      val splitIds = rep.split.keySet
-      val carry = RabitqIndex.readCarry(idxDir, "index-v2").toSet
-      // vacuum at retain 0: `index` is retired AND expired, but its
-      // carried files back the active listing — partial reclaim
-      val report = RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      assert(report.removed.exists(_.contains("partial")),
-        s"expected a partial reclaim of the referenced generation, got " +
-          s"${report.removed.mkString("; ")}")
-      carry.foreach { e =>
-        assert(new java.io.File(s"$idxDir/$e").isFile,
-          s"vacuum reclaimed a file the active listing references: $e")
-      }
-      val staleSplit = beforeFiles.keySet.filter(p =>
-        splitIds.contains(RabitqIndex.clusterOfCarryEntry(p)))
-      staleSplit.foreach { e =>
-        assert(!new java.io.File(s"$idxDir/$e").exists,
-          s"vacuum kept an unreferenced stale split file: $e")
-      }
-      assert(new java.io.File(s"$idxDir/_retired/index").isFile,
-        "the partially reclaimed generation must stay marked for later passes")
-      // the reader is untouched by the partial reclaim
-      val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
-      val ids = live.select("vec_id").collect().map(_.getLong(0))
-      assert(ids.length == ids.distinct.length)
-      assert(ids.toSet == emb.select("vec_id").collect().map(_.getLong(0)).toSet)
-
-      // appends land in the carry-listed generation's OWN cluster dirs
-      // and union with the carried files — the live-generation contract
-      // survives the manifest shape (writers re-load post-rebalance,
-      // the q117 contract: the grown model from the generation-local
-      // sidecars)
-      val extra = emb.limit(50)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, m2, extra),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "cv-add", 0L,
-        partitionCols = Seq("cluster_id"))
-      val (_, liveApp) = RabitqIndex.loadLive(spark, idxDir)
-      val appIds = liveApp.select("vec_id").collect().map(_.getLong(0))
-      assert(appIds.length == appIds.distinct.length,
-        "append into a carry-listed generation duplicated rows")
-      assert(appIds.toSet == ids.toSet ++ extra.select("vec_id")
-        .collect().map(_.getLong(0)),
-        "append into a carry-listed generation lost or invented rows")
-      assert(RabitqIndex.describeIndex(spark, idxDir).head()
-        .getAs[Long]("n_rows") == appIds.length.toLong,
-        "footer fast path must count own appends beside carried files")
-
-      // a compaction rewrites the carried rows into a self-contained
-      // generation; the next vacuum finishes both predecessors
-      val delId = ids.min
-      graft.streaming.IdempotentSink.appendBatch(
-        Seq(delId).toDF("vec_id"),
-        RabitqIndex.tombstoneLogDir(idxDir), idxDir, "cv-del", 0L)
-      graft.streaming.VecsStream.compactIndex(spark, idxDir)
-      assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3")
-      assert(RabitqIndex.readCarry(idxDir, "index-v3").isEmpty,
-        "compaction must produce a self-contained generation")
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      assert(!new java.io.File(s"$idxDir/index").exists,
-        "with the last reference gone, the generation must be reclaimed")
-      assert(!new java.io.File(s"$idxDir/index-v2").exists)
-      assert(!new java.io.File(s"$idxDir/_retired/index").exists)
-      val (_, live3) = RabitqIndex.loadLive(spark, idxDir)
-      assert(live3.select("vec_id").collect().map(_.getLong(0)).toSet ==
-        appIds.toSet - delId)
-      ()
+    val layout = Layout(idxDir, CondPutCommit)
+    val rep = RabitqIndex.rebalanceIndex(spark, layout, emb, maxSizeFactor = 1.4)
+    val splitIds = rep.split.keySet
+    val carry = RabitqIndex.readCarry(layout, "index-v2").toSet
+    // vacuum at retain 0: `index` is retired AND expired, but its
+    // carried files back the active listing — partial reclaim
+    val report = RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    assert(report.removed.exists(_.contains("partial")),
+      s"expected a partial reclaim of the referenced generation, got " +
+        s"${report.removed.mkString("; ")}")
+    carry.foreach { e =>
+      assert(new java.io.File(s"$idxDir/$e").isFile,
+        s"vacuum reclaimed a file the active listing references: $e")
     }
+    val staleSplit = beforeFiles.keySet.filter(p =>
+      splitIds.contains(RabitqIndex.clusterOfCarryEntry(p)))
+    staleSplit.foreach { e =>
+      assert(!new java.io.File(s"$idxDir/$e").exists,
+        s"vacuum kept an unreferenced stale split file: $e")
+    }
+    assert(new java.io.File(s"$idxDir/_retired/index").isFile,
+      "the partially reclaimed generation must stay marked for later passes")
+    // the reader is untouched by the partial reclaim
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
+    val ids = live.select("vec_id").collect().map(_.getLong(0))
+    assert(ids.length == ids.distinct.length)
+    assert(ids.toSet == emb.select("vec_id").collect().map(_.getLong(0)).toSet)
+
+    // appends land in the carry-listed generation's OWN cluster dirs
+    // and union with the carried files — the live-generation contract
+    // survives the manifest shape (writers re-load post-rebalance,
+    // the q117 contract: the grown model from the generation-local
+    // sidecars)
+    val extra = emb.limit(50)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, m2, extra),
+      RabitqIndex.indexDataDir(layout), layout, "cv-add", 0L,
+      partitionCols = Seq("cluster_id"))
+    val (_, liveApp) = RabitqIndex.loadLive(spark, layout)
+    val appIds = liveApp.select("vec_id").collect().map(_.getLong(0))
+    assert(appIds.length == appIds.distinct.length,
+      "append into a carry-listed generation duplicated rows")
+    assert(appIds.toSet == ids.toSet ++ extra.select("vec_id")
+      .collect().map(_.getLong(0)),
+      "append into a carry-listed generation lost or invented rows")
+    assert(RabitqIndex.describeIndex(spark, layout).head()
+      .getAs[Long]("n_rows") == appIds.length.toLong,
+      "footer fast path must count own appends beside carried files")
+
+    // a compaction rewrites the carried rows into a self-contained
+    // generation; the next vacuum finishes both predecessors
+    val delId = ids.min
+    graft.streaming.IdempotentSink.appendBatch(
+      Seq(delId).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(layout), layout, "cv-del", 0L)
+    graft.streaming.VecsStream.compactIndex(spark, layout)
+    assert(RabitqIndex.indexDataDir(layout) == s"$idxDir/index-v3")
+    assert(RabitqIndex.readCarry(layout, "index-v3").isEmpty,
+      "compaction must produce a self-contained generation")
+    RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    assert(!new java.io.File(s"$idxDir/index").exists,
+      "with the last reference gone, the generation must be reclaimed")
+    assert(!new java.io.File(s"$idxDir/index-v2").exists)
+    assert(!new java.io.File(s"$idxDir/_retired/index").exists)
+    val (_, live3) = RabitqIndex.loadLive(spark, layout)
+    assert(live3.select("vec_id").collect().map(_.getLong(0)).toSet ==
+      appIds.toSet - delId)
   }
 
   test("concurrent-reader hammer: M readers resolving and scanning " +
@@ -400,53 +396,52 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val readerErrs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val nReads = new java.util.concurrent.atomic.AtomicInteger(0)
 
-    LayoutCommit.withOps(CondPutCommit) {
-      val readers = (1 to 3).map { rid =>
-        new Thread(() => {
-          try {
-            while (!mutatorDone) {
-              val snapshot = settledDels // BEFORE the resolve
-              val (_, live) = RabitqIndex.loadLive(spark, idxDir)
-              val ids = live.select("vec_id").collect().map(_.getLong(0))
-              nReads.incrementAndGet()
-              if (ids.length != ids.distinct.length)
-                readerErrs.add(s"r$rid: duplicated vec_ids in one read")
-              val set = ids.toSet
-              if (!stableCore.subsetOf(set))
-                readerErrs.add(s"r$rid: torn generation — stable core " +
-                  s"missing ${(stableCore -- set).take(5)}")
-              if (!set.subsetOf(allIds))
-                readerErrs.add(s"r$rid: invented rows ${(set -- allIds).take(5)}")
-              val res = set.intersect(snapshot)
-              if (res.nonEmpty)
-                readerErrs.add(s"r$rid: resurrected settled tombstones " +
-                  s"${res.take(5)}")
-            }
-          } catch {
-            case t: Throwable => readerErrs.add(s"r$rid: ${t.getMessage}")
+    val layout = Layout(idxDir, CondPutCommit)
+    val readers = (1 to 3).map { rid =>
+      new Thread(() => {
+        try {
+          while (!mutatorDone) {
+            val snapshot = settledDels // BEFORE the resolve
+            val (_, live) = RabitqIndex.loadLive(spark, layout)
+            val ids = live.select("vec_id").collect().map(_.getLong(0))
+            nReads.incrementAndGet()
+            if (ids.length != ids.distinct.length)
+              readerErrs.add(s"r$rid: duplicated vec_ids in one read")
+            val set = ids.toSet
+            if (!stableCore.subsetOf(set))
+              readerErrs.add(s"r$rid: torn generation — stable core " +
+                s"missing ${(stableCore -- set).take(5)}")
+            if (!set.subsetOf(allIds))
+              readerErrs.add(s"r$rid: invented rows ${(set -- allIds).take(5)}")
+            val res = set.intersect(snapshot)
+            if (res.nonEmpty)
+              readerErrs.add(s"r$rid: resurrected settled tombstones " +
+                s"${res.take(5)}")
           }
-        }, s"hammer-reader-$rid")
-      }
-      readers.foreach(_.start())
-      try {
-        batches.zip(dels).zipWithIndex.foreach { case ((b, d), i) =>
-          graft.streaming.IdempotentSink.appendBatch(
-            RabitqIndex.appendVectors(spark, model, b),
-            RabitqIndex.indexDataDir(idxDir), idxDir, "hm", i.toLong,
-            partitionCols = Seq("cluster_id"))
-          graft.streaming.IdempotentSink.appendBatch(
-            d.toDF("vec_id"),
-            RabitqIndex.tombstoneLogDir(idxDir), idxDir, "hm-del", i.toLong)
-          graft.streaming.VecsStream.compactIndex(spark, idxDir)
-          if (i == batches.length - 1)
-            RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-          RabitqIndex.vacuumIndex(idxDir, retainMs = 10L * 60 * 1000)
-          settledDels = settledDels ++ d
+        } catch {
+          case t: Throwable => readerErrs.add(s"r$rid: ${t.getMessage}")
         }
-      } catch { case t: Throwable => mutatorErr = Some(t) }
-      finally mutatorDone = true
-      readers.foreach(_.join(120000))
+      }, s"hammer-reader-$rid")
     }
+    readers.foreach(_.start())
+    try {
+      batches.zip(dels).zipWithIndex.foreach { case ((b, d), i) =>
+        graft.streaming.IdempotentSink.appendBatch(
+          RabitqIndex.appendVectors(spark, model, b),
+          RabitqIndex.indexDataDir(layout), layout, "hm", i.toLong,
+          partitionCols = Seq("cluster_id"))
+        graft.streaming.IdempotentSink.appendBatch(
+          d.toDF("vec_id"),
+          RabitqIndex.tombstoneLogDir(layout), layout, "hm-del", i.toLong)
+        graft.streaming.VecsStream.compactIndex(spark, layout)
+        if (i == batches.length - 1)
+          RabitqIndex.rebalanceIndex(spark, layout, emb, maxSizeFactor = 1.4)
+        RabitqIndex.vacuumIndex(layout, retainMs = 10L * 60 * 1000)
+        settledDels = settledDels ++ d
+      }
+    } catch { case t: Throwable => mutatorErr = Some(t) }
+    finally mutatorDone = true
+    readers.foreach(_.join(120000))
     mutatorErr.foreach(t => fail(s"mutator failed: $t"))
     assert(nReads.get() >= 10,
       s"hammer is vacuous: only ${nReads.get()} reads completed")
@@ -508,21 +503,22 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // where lagging is conservative)
     val maxCycles = 12
     val allPossibleDels = (0 until maxCycles).flatMap(cycleDels).toSet
-    def cycle(i: Int): Unit = {
+    def cycle(i: Int, ops: CommitOps): Unit = {
+      val layout = Layout(idxDir, ops)
       graft.streaming.IdempotentSink.appendBatch(
         RabitqIndex.appendVectors(spark, model, cycleBatch(i)),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "cx", i.toLong,
+        RabitqIndex.indexDataDir(layout), layout, "cx", i.toLong,
         partitionCols = Seq("cluster_id"))
       graft.streaming.IdempotentSink.appendBatch(
         cycleDels(i).toDF("vec_id"),
-        RabitqIndex.tombstoneLogDir(idxDir), idxDir, "cx-del", i.toLong)
-      graft.streaming.VecsStream.compactIndex(spark, idxDir)
+        RabitqIndex.tombstoneLogDir(layout), layout, "cx-del", i.toLong)
+      graft.streaming.VecsStream.compactIndex(spark, layout)
       if (i % 3 == 2) {
         val baseAll = emb.select("vec_id", "embedding")
           .unionByName((0 to i).map(cycleBatch).reduce(_.unionByName(_)))
-        RabitqIndex.rebalanceIndex(spark, idxDir, baseAll, maxSizeFactor = 1.4)
+        RabitqIndex.rebalanceIndex(spark, layout, baseAll, maxSizeFactor = 1.4)
       }
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 10L * 60 * 1000)
+      RabitqIndex.vacuumIndex(layout, retainMs = 10L * 60 * 1000)
       ()
     }
 
@@ -531,86 +527,84 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     @volatile var mutatorErr: Option[Throwable] = None
     val readerErrs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val nReads = new java.util.concurrent.atomic.AtomicInteger(0)
-    LayoutCommit.withOps(CondPutCommit) {
-      val readers = (1 to 3).map { rid =>
-        new Thread(() => {
-          try {
-            while (!mutatorDone) {
-              val (core, dels) = settled // BEFORE the resolve
-              val (_, live) = RabitqIndex.loadLive(spark, idxDir)
-              val ids = live.select("vec_id").collect().map(_.getLong(0))
-              nReads.incrementAndGet()
-              if (ids.length != ids.distinct.length)
-                readerErrs.add(s"r$rid: duplicated vec_ids in one read")
-              val set = ids.toSet
-              val missing = (core -- allPossibleDels) -- set
-              if (missing.nonEmpty)
-                readerErrs.add(s"r$rid: torn generation — settled core " +
-                  s"missing ${missing.take(5)}")
-              val res = set.intersect(dels)
-              if (res.nonEmpty)
-                readerErrs.add(s"r$rid: resurrected settled tombstones " +
-                  s"${res.take(5)}")
-            }
-          } catch {
-            case t: Throwable => readerErrs.add(s"r$rid: ${t.getMessage}")
+    val readers = (1 to 3).map { rid =>
+      new Thread(() => {
+        try {
+          while (!mutatorDone) {
+            val (core, dels) = settled // BEFORE the resolve
+            val (_, live) = RabitqIndex.loadLive(spark, idxDir)
+            val ids = live.select("vec_id").collect().map(_.getLong(0))
+            nReads.incrementAndGet()
+            if (ids.length != ids.distinct.length)
+              readerErrs.add(s"r$rid: duplicated vec_ids in one read")
+            val set = ids.toSet
+            val missing = (core -- allPossibleDels) -- set
+            if (missing.nonEmpty)
+              readerErrs.add(s"r$rid: torn generation — settled core " +
+                s"missing ${missing.take(5)}")
+            val res = set.intersect(dels)
+            if (res.nonEmpty)
+              readerErrs.add(s"r$rid: resurrected settled tombstones " +
+                s"${res.take(5)}")
           }
-        }, s"crash-race-reader-$rid")
-      }
-      readers.foreach(_.start())
-      try {
-        // cycle 0 clean — counts the primitives of a representative cycle
-        val counter = new CrashingOps(CondPutCommit, killAt = 0)
-        LayoutCommit.withOps(counter)(cycle(0))
-        settled = (settled._1 ++ cycleBatch(0).select("vec_id").collect()
-          .map(_.getLong(0)), settled._2 ++ cycleDels(0))
-        val n = counter.calls.get()
-        assert(n >= 10, s"cycle made only $n primitive calls — vacuous")
-        // stride-sampled kill points, one crashed-and-replayed cycle each
-        val stride = math.max(1, n / 8)
-        var i = 1
-        (1 to n by stride).take(maxCycles - 1).foreach { killAt =>
-          val ops = new CrashingOps(CondPutCommit, killAt)
-          val crashed =
-            try { LayoutCommit.withOps(ops)(cycle(i)); false }
-            catch { case _: InjectedCrash => true }
-          if (crashed) {
-            // a real crash leaves the dead holder's lease held — put it
-            // back, stale, so recovery crosses the claim-elected break
-            // WHILE readers race it
-            val lock = new java.io.File(idxDir, "_maintenance.lock")
-            if (!lock.exists) {
-              java.nio.file.Files.writeString(lock.toPath, "dead-holder")
-              assert(lock.setLastModified(
-                System.currentTimeMillis() - 2L * 60 * 60 * 1000))
-            }
-            cycle(i) // recovery = the replay (next maintenance pass)
-          }
-          settled = (settled._1 ++ cycleBatch(i).select("vec_id").collect()
-            .map(_.getLong(0)), settled._2 ++ cycleDels(i))
-          i += 1
+        } catch {
+          case t: Throwable => readerErrs.add(s"r$rid: ${t.getMessage}")
         }
-      } catch { case t: Throwable => mutatorErr = Some(t) }
-      finally mutatorDone = true
-      readers.foreach(_.join(120000))
-      mutatorErr.foreach(t => fail(s"mutator failed: $t"))
-      assert(nReads.get() >= 10,
-        s"hammer is vacuous: only ${nReads.get()} reads completed")
-      assert(readerErrs.isEmpty,
-        s"${readerErrs.size} torn reads under crash+race:\n  " +
-          readerErrs.toArray.take(8).mkString("\n  "))
-      // final integrity: every settled row exactly once, dels terminal
-      val (_, fin) = RabitqIndex.loadLive(spark, idxDir)
-      val finIds = fin.select("vec_id").collect().map(_.getLong(0))
-      assert(finIds.length == finIds.distinct.length,
-        "final layout duplicated rows")
-      assert(finIds.toSet == settled._1 -- settled._2,
-        s"final live set wrong (missing=" +
-          s"${((settled._1 -- settled._2) -- finIds.toSet).take(5)}, " +
-          s"extra=${(finIds.toSet -- (settled._1 -- settled._2)).take(5)})")
-      info(s"crash×race: ${nReads.get()} clean concurrent reads across " +
-        s"the stride-sampled kill points")
+      }, s"crash-race-reader-$rid")
     }
+    readers.foreach(_.start())
+    try {
+      // cycle 0 clean — counts the primitives of a representative cycle
+      val counter = new CrashingOps(CondPutCommit, killAt = 0)
+      cycle(0, counter)
+      settled = (settled._1 ++ cycleBatch(0).select("vec_id").collect()
+        .map(_.getLong(0)), settled._2 ++ cycleDels(0))
+      val n = counter.calls.get()
+      assert(n >= 10, s"cycle made only $n primitive calls — vacuous")
+      // stride-sampled kill points, one crashed-and-replayed cycle each
+      val stride = math.max(1, n / 8)
+      var i = 1
+      (1 to n by stride).take(maxCycles - 1).foreach { killAt =>
+        val ops = new CrashingOps(CondPutCommit, killAt)
+        val crashed =
+          try { cycle(i, ops); false }
+          catch { case _: InjectedCrash => true }
+        if (crashed) {
+          // a real crash leaves the dead holder's lease held — put it
+          // back, stale, so recovery crosses the claim-elected break
+          // WHILE readers race it
+          val lock = new java.io.File(idxDir, "_maintenance.lock")
+          if (!lock.exists) {
+            java.nio.file.Files.writeString(lock.toPath, "dead-holder")
+            assert(lock.setLastModified(
+              System.currentTimeMillis() - 2L * 60 * 60 * 1000))
+          }
+          cycle(i, CondPutCommit) // recovery = the replay (next maintenance pass)
+        }
+        settled = (settled._1 ++ cycleBatch(i).select("vec_id").collect()
+          .map(_.getLong(0)), settled._2 ++ cycleDels(i))
+        i += 1
+      }
+    } catch { case t: Throwable => mutatorErr = Some(t) }
+    finally mutatorDone = true
+    readers.foreach(_.join(120000))
+    mutatorErr.foreach(t => fail(s"mutator failed: $t"))
+    assert(nReads.get() >= 10,
+      s"hammer is vacuous: only ${nReads.get()} reads completed")
+    assert(readerErrs.isEmpty,
+      s"${readerErrs.size} torn reads under crash+race:\n  " +
+        readerErrs.toArray.take(8).mkString("\n  "))
+    // final integrity: every settled row exactly once, dels terminal
+    val (_, fin) = RabitqIndex.loadLive(spark, idxDir)
+    val finIds = fin.select("vec_id").collect().map(_.getLong(0))
+    assert(finIds.length == finIds.distinct.length,
+      "final layout duplicated rows")
+    assert(finIds.toSet == settled._1 -- settled._2,
+      s"final live set wrong (missing=" +
+        s"${((settled._1 -- settled._2) -- finIds.toSet).take(5)}, " +
+        s"extra=${(finIds.toSet -- (settled._1 -- settled._2)).take(5)})")
+    info(s"crash×race: ${nReads.get()} clean concurrent reads across " +
+      s"the stride-sampled kill points")
   }
 
   test("chained generations: a SECOND rebalance on a carry-listed " +
@@ -618,11 +612,9 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       "guard) and flattens inherited entries across two source generations") {
     import spark.implicits._
     val (idxDir, _) = skewedLayout()
-    LayoutCommit.withOps(CondPutCommit) {
-      val rep1 = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-      assert(rep1.numClustersAfter > rep1.numClustersBefore)
-      ()
-    }
+    val condPut = Layout(idxDir, CondPutCommit)
+    val rep1 = RabitqIndex.rebalanceIndex(spark, condPut, emb, maxSizeFactor = 1.4)
+    assert(rep1.numClustersAfter > rep1.numClustersBefore)
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
     // back under the DEFAULT PosixCommit: the second rebalance takes the
     // same generation shape (the only one) over a carry-listed active
@@ -691,156 +683,152 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       "resolution unchanged, probe-pruned reads touch ONLY overlapping " +
       "shards, the distributed builder equals the driver walk, and a " +
       "retain-0 refcount vacuum keeps every listed file") {
-    val prevTarget = RabitqIndex.carryShardTarget
-    RabitqIndex.carryShardTarget = 2
-    try {
-      val (idxDir, _) = skewedLayout()
-      val beforeFiles = ownDataFiles(idxDir, "index")
-      val liveBefore = RabitqIndex.loadLive(spark, idxDir)._2
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      val rep = LayoutCommit.withOps(CondPutCommit) {
-        RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
+    val (idxDir, _) = skewedLayout()
+    // a low shard target forces the sharded shape at spec scale
+    val posix = Layout(idxDir, carryShardTarget = 2)
+    val beforeFiles = ownDataFiles(idxDir, "index")
+    val liveBefore = RabitqIndex.loadLive(spark, idxDir)._2
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val rep = RabitqIndex.rebalanceIndex(spark, posix.copy(ops = CondPutCommit),
+      emb, maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore,
+      "gate is vacuous: the skewed layout did not split")
+    val splitIds = rep.split.keySet
+    val untouched = beforeFiles.keySet.filterNot(p =>
+      splitIds.contains(RabitqIndex.clusterOfCarryEntry(p)))
+    assert(untouched.size > posix.carryShardTarget,
+      "gate is vacuous: not enough carry entries to force sharding")
+
+    // 1. SHAPE: no flat file; ordered, disjoint, cluster-aligned,
+    // size-bounded shards whose counts match their files
+    assert(!new java.io.File(s"$idxDir/index-v2/_CARRY").exists,
+      "the sharded shape must not also write a flat _CARRY")
+    val shards = RabitqIndex.readCarryShards(idxDir, "index-v2")
+    assert(shards.size >= 3, s"expected >2 shards at target 2: $shards")
+    shards.sliding(2).foreach {
+      case Seq(a, b) => assert(a.hi < b.lo,
+        s"shard ranges must be ordered and disjoint: $a then $b")
+      case _ => ()
+    }
+    val clustersWithManyFiles = untouched
+      .groupBy(RabitqIndex.clusterOfCarryEntry).values.map(_.size).max
+    val byShardEntries = shards.map { s =>
+      val es = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$idxDir/index-v2/_carry/${s.name}")))
+        .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+      assert(es.length == s.count, s"shard ${s.name} count lies")
+      assert(es.length <= math.max(posix.carryShardTarget,
+        clustersWithManyFiles),
+        s"shard ${s.name} exceeds the size bound without an " +
+          s"oversized-cluster excuse: ${es.length}")
+      es.foreach { e =>
+        val c = RabitqIndex.clusterOfCarryEntry(e)
+        assert(c >= s.lo && c <= s.hi,
+          s"entry $e outside its shard's range [${s.lo},${s.hi}]")
       }
-      assert(rep.numClustersAfter > rep.numClustersBefore,
-        "gate is vacuous: the skewed layout did not split")
-      val splitIds = rep.split.keySet
-      val untouched = beforeFiles.keySet.filterNot(p =>
-        splitIds.contains(RabitqIndex.clusterOfCarryEntry(p)))
-      assert(untouched.size > RabitqIndex.carryShardTarget,
-        "gate is vacuous: not enough carry entries to force sharding")
-
-      // 1. SHAPE: no flat file; ordered, disjoint, cluster-aligned,
-      // size-bounded shards whose counts match their files
-      assert(!new java.io.File(s"$idxDir/index-v2/_CARRY").exists,
-        "the sharded shape must not also write a flat _CARRY")
-      val shards = RabitqIndex.readCarryShards(idxDir, "index-v2")
-      assert(shards.size >= 3, s"expected >2 shards at target 2: $shards")
-      shards.sliding(2).foreach {
-        case Seq(a, b) => assert(a.hi < b.lo,
-          s"shard ranges must be ordered and disjoint: $a then $b")
-        case _ => ()
+      es
+    }
+    // a cluster's entries never straddle shards
+    val shardOfCluster = scala.collection.mutable.Map.empty[Int, Int]
+    byShardEntries.zipWithIndex.foreach { case (es, i) =>
+      es.map(RabitqIndex.clusterOfCarryEntry).distinct.foreach { c =>
+        assert(!shardOfCluster.contains(c),
+          s"cluster $c straddles shards " +
+            s"${shardOfCluster.getOrElse(c, -1)} and $i")
+        shardOfCluster(c) = i
       }
-      val clustersWithManyFiles = untouched
-        .groupBy(RabitqIndex.clusterOfCarryEntry).values.map(_.size).max
-      val byShardEntries = shards.map { s =>
-        val es = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$idxDir/index-v2/_carry/${s.name}")))
-          .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-        assert(es.length == s.count, s"shard ${s.name} count lies")
-        assert(es.length <= math.max(RabitqIndex.carryShardTarget,
-          clustersWithManyFiles),
-          s"shard ${s.name} exceeds the size bound without an " +
-            s"oversized-cluster excuse: ${es.length}")
-        es.foreach { e =>
-          val c = RabitqIndex.clusterOfCarryEntry(e)
-          assert(c >= s.lo && c <= s.hi,
-            s"entry $e outside its shard's range [${s.lo},${s.hi}]")
-        }
-        es
-      }
-      // a cluster's entries never straddle shards
-      val shardOfCluster = scala.collection.mutable.Map.empty[Int, Int]
-      byShardEntries.zipWithIndex.foreach { case (es, i) =>
-        es.map(RabitqIndex.clusterOfCarryEntry).distinct.foreach { c =>
-          assert(!shardOfCluster.contains(c),
-            s"cluster $c straddles shards " +
-              s"${shardOfCluster.getOrElse(c, -1)} and $i")
-          shardOfCluster(c) = i
-        }
-      }
+    }
 
-      // 2. full resolution identical to the flat shape's contract
-      assert(RabitqIndex.readCarry(idxDir, "index-v2").toSet == untouched,
-        "sharded readCarry must resolve exactly the untouched files")
+    // 2. full resolution identical to the flat shape's contract
+    assert(RabitqIndex.readCarry(idxDir, "index-v2").toSet == untouched,
+      "sharded readCarry must resolve exactly the untouched files")
 
-      // 3. the distributed builder and the driver walk agree
-      assert(RabitqIndex.buildCarryEntriesDistributed(
-          spark, idxDir, "index", splitIds).toSet ==
-        RabitqIndex.buildCarryListing(idxDir, "index", splitIds).toSet,
-        "distributed carry enumeration diverged from the driver walk")
+    // 3. the distributed builder and the driver walk agree
+    assert(RabitqIndex.buildCarryEntriesDistributed(
+        spark, idxDir, "index", splitIds).toSet ==
+      RabitqIndex.buildCarryListing(idxDir, "index", splitIds).toSet,
+      "distributed carry enumeration diverged from the driver walk")
 
-      // 4. LAZY RESOLUTION: a single-cluster restriction reads only the
-      // one shard covering it; the disk query path goes through the
-      // same restricted read and its result matches the in-memory path
-      // over the full live scan (restriction + filter commute)
-      val probeCluster = byShardEntries.head
-        .map(RabitqIndex.clusterOfCarryEntry).head
-      val rec = new RecordingFs(PosixFs)
-      val restricted = LayoutFs.withFs(rec)(
-        RabitqIndex.readCarryForClusters(idxDir, "index-v2", Set(probeCluster)))
-      assert(restricted.toSet ==
-        untouched.filter(e =>
-          RabitqIndex.clusterOfCarryEntry(e) == probeCluster),
-        "restricted resolution returned the wrong entries")
-      val shardReads = rec.reads.filter(_.contains("/_carry/"))
-      assert(shardReads.size == 1 &&
-        shardReads.head.endsWith(shards.head.name),
-        s"a one-cluster restriction must read exactly its one " +
-          s"overlapping shard (read: $shardReads)")
-      val qs = ExactKnn.queriesFromEmbeddings(emb, 5)
-      val qsNarrow = ExactKnn.queriesFromEmbeddings(emb, 2)
-      val rec2 = new RecordingFs(PosixFs)
-      val disk = LayoutFs.withFs(rec2)(
-        RabitqQuery.topKFromDisk(spark, idxDir, emb, qsNarrow,
-          nprobe = 1, topk = 5, rerank = 64)
-          .select("query_id", "neighbor_id", "rank").collect())
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val diskShardReads = rec2.reads.filter(_.contains("/_carry/")).distinct
-      assert(diskShardReads.size < shards.size,
-        s"the probe-pruned disk read touched every shard " +
-          s"(${diskShardReads.size} of ${shards.size}) — resolution is " +
-          "not lazy")
-      val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
-      val mem = RabitqQuery.topK(spark, m2, live, emb, qsNarrow,
-        nprobe = 1, topk = 5, rerank = 64)
-        .select("query_id", "neighbor_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(disk == mem,
-        "probe-pruned disk read diverged from the in-memory path")
+    // 4. LAZY RESOLUTION: a single-cluster restriction reads only the
+    // one shard covering it; the disk query path goes through the
+    // same restricted read and its result matches the in-memory path
+    // over the full live scan (restriction + filter commute)
+    val probeCluster = byShardEntries.head
+      .map(RabitqIndex.clusterOfCarryEntry).head
+    val rec = new RecordingFs(PosixFs)
+    val restricted = RabitqIndex.readCarryForClusters(
+      Layout(idxDir, fs = rec), "index-v2", Set(probeCluster))
+    assert(restricted.toSet ==
+      untouched.filter(e =>
+        RabitqIndex.clusterOfCarryEntry(e) == probeCluster),
+      "restricted resolution returned the wrong entries")
+    val shardReads = rec.reads.filter(_.contains("/_carry/"))
+    assert(shardReads.size == 1 &&
+      shardReads.head.endsWith(shards.head.name),
+      s"a one-cluster restriction must read exactly its one " +
+        s"overlapping shard (read: $shardReads)")
+    val qs = ExactKnn.queriesFromEmbeddings(emb, 5)
+    val qsNarrow = ExactKnn.queriesFromEmbeddings(emb, 2)
+    val rec2 = new RecordingFs(PosixFs)
+    val disk = RabitqQuery.topKFromDisk(spark, Layout(idxDir, fs = rec2), emb,
+        qsNarrow, nprobe = 1, topk = 5, rerank = 64)
+      .select("query_id", "neighbor_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val diskShardReads = rec2.reads.filter(_.contains("/_carry/")).distinct
+    assert(diskShardReads.size < shards.size,
+      s"the probe-pruned disk read touched every shard " +
+        s"(${diskShardReads.size} of ${shards.size}) — resolution is " +
+        "not lazy")
+    val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
+    val mem = RabitqQuery.topK(spark, m2, live, emb, qsNarrow,
+      nprobe = 1, topk = 5, rerank = 64)
+      .select("query_id", "neighbor_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(disk == mem,
+      "probe-pruned disk read diverged from the in-memory path")
 
-      // 5. refcount vacuum on the sharded shape: retain-0 keeps every
-      // listed file, the live set survives intact
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      RabitqIndex.readCarry(idxDir, "index-v2").foreach(e =>
-        assert(new java.io.File(s"$idxDir/$e").isFile,
-          s"retain-0 vacuum reclaimed a listed file: $e"))
-      val idsAfter = RabitqIndex.loadLive(spark, idxDir)._2
-        .select("vec_id").collect().map(_.getLong(0))
-      assert(idsAfter.length == idsAfter.distinct.length)
-      assert(idsAfter.toSet == liveBefore, "vacuum changed the live set")
+    // 5. refcount vacuum on the sharded shape: retain-0 keeps every
+    // listed file, the live set survives intact
+    RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
+    RabitqIndex.readCarry(idxDir, "index-v2").foreach(e =>
+      assert(new java.io.File(s"$idxDir/$e").isFile,
+        s"retain-0 vacuum reclaimed a listed file: $e"))
+    val idsAfter = RabitqIndex.loadLive(spark, idxDir)._2
+      .select("vec_id").collect().map(_.getLong(0))
+    assert(idsAfter.length == idsAfter.distinct.length)
+    assert(idsAfter.toSet == liveBefore, "vacuum changed the live set")
 
-      // 6. CHAINED inheritance from a sharded listing: a second
-      // rebalance flattens surviving sharded entries into ITS listing
-      val (m2b, _) = RabitqIndex.load(spark, idxDir)
-      val extra = emb.filter(element_at(col("embedding"), 1) >= 0f)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, m2b, extra),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "shard_cg", 0L,
-        partitionCols = Seq("cluster_id"))
-      val base2 = emb.select("vec_id", "embedding").unionByName(extra)
-      val rep2 = RabitqIndex.rebalanceIndex(spark, idxDir, base2,
-        maxSizeFactor = 1.4)
-      assert(rep2.numClustersAfter > rep2.numClustersBefore,
-        "gate is vacuous: the re-skewed layout did not split again")
-      assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3")
-      val carry3 = RabitqIndex.readCarry(idxDir, "index-v3")
-      assert(carry3.map(_.takeWhile(_ != '/')).toSet.size >= 2,
-        "chained sharded listing must reference both source generations")
-      carry3.foreach(e => assert(new java.io.File(s"$idxDir/$e").isFile,
-        s"chained carry entry vanished: $e"))
-      val (m3, live3) = RabitqIndex.loadLive(spark, idxDir)
-      val ids3 = live3.select("vec_id").collect().map(_.getLong(0))
-      assert(ids3.length == ids3.distinct.length, "chained union duplicated rows")
-      assert(ids3.toSet == base2.select("vec_id").collect()
-        .map(_.getLong(0)).toSet)
-      val truth3 = ExactKnn.l2TopK(base2, qs, 10)
-      val res3 = RabitqQuery.topK(spark, m3, live3, base2, qs,
-        m3.params.numClusters, 10, 1000000)
-      assert(ExactKnn.recall(res3, truth3, 10).head().getDouble(0) == 1.0,
-        "full-probe search through chained sharded generations must " +
-          "equal brute force")
-    } finally RabitqIndex.carryShardTarget = prevTarget
+    // 6. CHAINED inheritance from a sharded listing: a second
+    // rebalance flattens surviving sharded entries into ITS listing
+    val (m2b, _) = RabitqIndex.load(spark, idxDir)
+    val extra = emb.filter(element_at(col("embedding"), 1) >= 0f)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, m2b, extra),
+      RabitqIndex.indexDataDir(idxDir), posix, "shard_cg", 0L,
+      partitionCols = Seq("cluster_id"))
+    val base2 = emb.select("vec_id", "embedding").unionByName(extra)
+    val rep2 = RabitqIndex.rebalanceIndex(spark, posix, base2,
+      maxSizeFactor = 1.4)
+    assert(rep2.numClustersAfter > rep2.numClustersBefore,
+      "gate is vacuous: the re-skewed layout did not split again")
+    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3")
+    val carry3 = RabitqIndex.readCarry(idxDir, "index-v3")
+    assert(carry3.map(_.takeWhile(_ != '/')).toSet.size >= 2,
+      "chained sharded listing must reference both source generations")
+    carry3.foreach(e => assert(new java.io.File(s"$idxDir/$e").isFile,
+      s"chained carry entry vanished: $e"))
+    val (m3, live3) = RabitqIndex.loadLive(spark, idxDir)
+    val ids3 = live3.select("vec_id").collect().map(_.getLong(0))
+    assert(ids3.length == ids3.distinct.length, "chained union duplicated rows")
+    assert(ids3.toSet == base2.select("vec_id").collect()
+      .map(_.getLong(0)).toSet)
+    val truth3 = ExactKnn.l2TopK(base2, qs, 10)
+    val res3 = RabitqQuery.topK(spark, m3, live3, base2, qs,
+      m3.params.numClusters, 10, 1000000)
+    assert(ExactKnn.recall(res3, truth3, 10).head().getDouble(0) == 1.0,
+      "full-probe search through chained sharded generations must " +
+        "equal brute force")
   }
 
   test("time travel: loadAt resolves a retired generation inside its " +
@@ -851,13 +839,11 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pre = spark.read.parquet(s"$idxDir/index")
       .select("vec_id", "cluster_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    LayoutCommit.withOps(CondPutCommit) {
-      val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-      assert(rep.numClustersAfter > rep.numClustersBefore)
-      // a maintenance pass INSIDE the window must not disturb the snapshot
-      RabitqIndex.vacuumIndex(idxDir)
-      ()
-    }
+    val condPut = Layout(idxDir, CondPutCommit)
+    val rep = RabitqIndex.rebalanceIndex(spark, condPut, emb, maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore)
+    // a maintenance pass INSIDE the window must not disturb the snapshot
+    RabitqIndex.vacuumIndex(condPut)
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
     // content churn AFTER the retirement: an append into the active
     // generation must be invisible to the snapshot
@@ -904,10 +890,8 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("per-call rerankScale override: the disk entry point's override " +
       "replaces the loaded model's grown-layout default") {
     val (idxDir, _) = skewedLayout()
-    LayoutCommit.withOps(CondPutCommit) {
-      RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-      ()
-    }
+    val condPut = Layout(idxDir, CondPutCommit)
+    RabitqIndex.rebalanceIndex(spark, condPut, emb, maxSizeFactor = 1.4)
     val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
     assert(m2.rerankScale > 1.0,
       "gate is vacuous: the rebalance did not grow the layout")

@@ -10,14 +10,17 @@ import graft.operators._
 /** Systematic kill-point sweep over the saved-index lifecycle: a crash
   * is injected at EVERY commit-primitive call of a full
   * bootstrap → append → delete → compact → append → rebalance → vacuum
-  * schedule (enumeration at the `LayoutCommit` seam — the complete
+  * schedule (enumeration at the layout handle's `ops` — the complete
   * version of a randomized sweep: every interleaving of "crash between
   * primitive k and k+1" is covered, and intra-primitive atomicity is
   * exactly what the filesystem contract guarantees), under BOTH
   * commit implementations: `PosixCommit` and `CondPutCommit` (the
   * object-store shape). Both drive the same generation-versioned
   * rebalance — unreferenced `index-vN` built, `_CARRY` listing written,
-  * one atomic MANIFEST publish — through different primitives.
+  * one atomic MANIFEST publish — through different primitives. The two
+  * implementations sweep CONCURRENTLY, each on its own layouts through
+  * its own handle, so every kill point also runs beside the other
+  * protocol's traffic in the same JVM.
   * Recovery is THE REPLAY: the schedule re-runs from the top, the way a
   * restarted stream replays its batches — commit markers must no-op
   * completed steps, settle must finish crashed ones — and the layout
@@ -108,23 +111,23 @@ class KillSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     * (queryName, batchId), compaction no-ops once the log is folded,
     * rebalance no-ops once balanced, vacuum is pure GC.
     */
-  private def schedule(idxDir: String, order: Int): Unit = {
+  private def schedule(layout: Layout, order: Int): Unit = {
     import spark.implicits._
     def appendA() = graft.streaming.IdempotentSink.appendBatch(
       RabitqIndex.appendVectors(spark, model, upperA),
-      RabitqIndex.indexDataDir(idxDir), idxDir, "ks", 0L,
+      RabitqIndex.indexDataDir(layout), layout, "ks", 0L,
       partitionCols = Seq("cluster_id"))
     def appendDels() = graft.streaming.IdempotentSink.appendBatch(
       delIds.toDF("vec_id"),
-      RabitqIndex.tombstoneLogDir(idxDir), idxDir, "ks-del", 1L)
-    def compact() = graft.streaming.VecsStream.compactIndex(spark, idxDir)
+      RabitqIndex.tombstoneLogDir(layout), layout, "ks-del", 1L)
+    def compact() = graft.streaming.VecsStream.compactIndex(spark, layout)
     def appendB() = graft.streaming.IdempotentSink.appendBatch(
       RabitqIndex.appendVectors(spark, model, upperB),
-      RabitqIndex.indexDataDir(idxDir), idxDir, "ks", 2L,
+      RabitqIndex.indexDataDir(layout), layout, "ks", 2L,
       partitionCols = Seq("cluster_id"))
     def rebalance() =
-      RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
-    def vacuum() = RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
+      RabitqIndex.rebalanceIndex(spark, layout, emb, maxSizeFactor = 1.4)
+    def vacuum() = RabitqIndex.vacuumIndex(layout, retainMs = 0L)
     if (order == 0) {
       appendA(); appendDels(); compact(); appendB(); rebalance(); vacuum()
     } else {
@@ -173,64 +176,68 @@ class KillSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kill-point sweep: a crash before EVERY commit-primitive call of " +
       "two full lifecycle schedules recovers to an intact layout on replay " +
       "(>= 50 schedules)") {
-    var totalSchedules = 0
     // exercise the SHARDED manifest shape: with the target lowered, the
     // generation-versioned rebalance writes `_carry/shard-*.list` +
-    // `_CARRY_LIST` through the seam — each write becomes an enumerated
-    // kill point, so the sweep covers the round-20 write points too
-    val prevShardTarget = RabitqIndex.carryShardTarget
-    RabitqIndex.carryShardTarget = 8
-    try {
-    // both schedule orders × both commit implementations: the rebalance
+    // `_CARRY_LIST` through the handle — each write becomes an enumerated
+    // kill point, so the sweep covers those write points too
+    def handle(dir: String, ops: CommitOps) = Layout(dir, ops, carryShardTarget = 8)
+    // both schedule orders under one commit implementation: the rebalance
     // publishes a generation under each (unreferenced index-vN, sharded
     // carry listing, atomic MANIFEST write), but PosixCommit does it by
     // rename(2) and CondPutCommit by conditional PUT, and the appends'
     // moves differ too — every commit-primitive call of BOTH gets a crash
-    // injected before it
-    for (order <- Seq(0, 1); impl <- Seq(
-        "posix" -> (PosixCommit: CommitOps),
-        "condput" -> (CondPutCommit: CommitOps))) {
-      val (implTag, inner) = impl
-      // pass 1: count the primitive calls of this schedule order
-      val counter = new CrashingOps(inner, killAt = 0)
-      val base = freshCopy()
-      LayoutCommit.withOps(counter)(schedule(base, order))
-      assertIntact(base, s"$implTag order=$order no-crash", checkRecall = true)
-      val n = counter.calls.get()
-      assert(n >= 20, s"schedule $implTag order=$order only touched $n " +
-        "primitives — the sweep would be vacuous; did a protocol stop " +
-        "using the seam?")
-      totalSchedules += 1
-      // pass 2: enumerate every kill point
-      for (killAt <- 1 to n) {
-        val dir = freshCopy()
-        val ops = new CrashingOps(inner, killAt)
-        val crashed =
-          try { LayoutCommit.withOps(ops)(schedule(dir, order)); false }
-          catch { case _: InjectedCrash => true }
-        assert(crashed, s"$implTag order=$order killAt=$killAt: expected " +
-          s"a crash (schedule made ${ops.calls.get()} primitive calls)")
-        // a REAL crash leaves the lease held by the dead process (the
-        // injected exception released it through the finally) — put the
-        // dead holder's lock back, 2h stale, so the replay's first
-        // mutator must go through the claim-elected stale-break path
-        val lock = new java.io.File(dir, "_maintenance.lock")
-        if (!lock.exists) {
-          java.nio.file.Files.writeString(lock.toPath, "dead-holder-token")
-          assert(lock.setLastModified(
-            System.currentTimeMillis() - 2L * 60 * 60 * 1000))
+    // injected before it. Returns the number of green schedules.
+    def sweep(implTag: String, inner: CommitOps): Int = {
+      var schedules = 0
+      for (order <- Seq(0, 1)) {
+        // pass 1: count the primitive calls of this schedule order
+        val counter = new CrashingOps(inner, killAt = 0)
+        val base = freshCopy()
+        schedule(handle(base, counter), order)
+        assertIntact(base, s"$implTag order=$order no-crash", checkRecall = true)
+        val n = counter.calls.get()
+        assert(n >= 20, s"schedule $implTag order=$order only touched $n " +
+          "primitives — the sweep would be vacuous; did a protocol stop " +
+          "using the handle?")
+        info(s"$implTag order=$order: $n kill points")
+        schedules += 1
+        // pass 2: enumerate every kill point
+        for (killAt <- 1 to n) {
+          val dir = freshCopy()
+          val ops = new CrashingOps(inner, killAt)
+          val crashed =
+            try { schedule(handle(dir, ops), order); false }
+            catch { case _: InjectedCrash => true }
+          assert(crashed, s"$implTag order=$order killAt=$killAt: expected " +
+            s"a crash (schedule made ${ops.calls.get()} primitive calls)")
+          // a REAL crash leaves the lease held by the dead process (the
+          // injected exception released it through the finally) — put the
+          // dead holder's lock back, 2h stale, so the replay's first
+          // mutator must go through the claim-elected stale-break path
+          val lock = new java.io.File(dir, "_maintenance.lock")
+          if (!lock.exists) {
+            java.nio.file.Files.writeString(lock.toPath, "dead-holder-token")
+            assert(lock.setLastModified(
+              System.currentTimeMillis() - 2L * 60 * 60 * 1000))
+          }
+          // recovery = the replay, under the same (healthy) deployment shape
+          schedule(handle(dir, inner), order)
+          assertIntact(dir, s"$implTag order=$order killAt=$killAt",
+            checkRecall = killAt % 7 == 0)
+          schedules += 1
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
         }
-        // recovery = the replay, under the same (healthy) deployment shape
-        LayoutCommit.withOps(inner)(schedule(dir, order))
-        assertIntact(dir, s"$implTag order=$order killAt=$killAt",
-          checkRecall = killAt % 7 == 0)
-        totalSchedules += 1
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       }
+      schedules
     }
-    } finally RabitqIndex.carryShardTarget = prevShardTarget
+    // build the shared fixture once, before the legs race for it
+    assert(expectedLive.nonEmpty && new java.io.File(templateDir).isDirectory)
+    val (posixN, condPutN) = Overlap(spark,
+      sweep("posix", PosixCommit), sweep("condput", CondPutCommit))
+    val totalSchedules = posixN + condPutN
     assert(totalSchedules >= 50,
       s"sweep covered only $totalSchedules schedules — add kill points")
-    info(s"kill-point sweep: $totalSchedules schedules green")
+    info(s"kill-point sweep: $totalSchedules schedules green " +
+      s"(posix $posixN, condput $condPutN)")
   }
 }

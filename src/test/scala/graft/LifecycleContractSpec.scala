@@ -77,7 +77,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** N mutators racing for the lease; returns (maxConcurrent, completed). */
-  private def leaseHammer(dir: String, n: Int): (Int, Int) = {
+  private def leaseHammer(layout: Layout, n: Int): (Int, Int) = {
     val inside = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxInside = new java.util.concurrent.atomic.AtomicInteger(0)
     val completed = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -86,7 +86,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       new Thread(() => {
         gate.await()
         try {
-          RabitqIndex.withLayoutLock(dir, waitMs = 20000L) {
+          RabitqIndex.withLayoutLock(layout, waitMs = 20000L) {
             val now = inside.incrementAndGet()
             maxInside.updateAndGet(m => math.max(m, now))
             Thread.sleep(150)
@@ -106,9 +106,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       "maintenance mutators through the real lease protocol") {
     val dir = Files.createTempDirectory("naive_lease").toString
     val (maxConc, completed) =
-      LayoutCommit.withOps(new NaiveObjectStoreOps()) {
-        leaseHammer(dir, 4)
-      }
+      leaseHammer(Layout(dir, new NaiveObjectStoreOps()), 4)
     // every acquirer's PUT "succeeded", so mutual exclusion is GONE —
     // this is the torn state the CommitOps scaladoc warns an object-store
     // deployment of the POSIX impl silently reaches
@@ -122,10 +120,7 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("SURVIVE (executed): the SAME lease schedule under the " +
       "conditional-PUT impl keeps mutators mutually exclusive") {
     val dir = Files.createTempDirectory("condput_lease").toString
-    val (maxConc, completed) =
-      LayoutCommit.withOps(CondPutCommit) {
-        leaseHammer(dir, 4)
-      }
+    val (maxConc, completed) = leaseHammer(Layout(dir, CondPutCommit), 4)
     assert(maxConc == 1,
       s"conditional-PUT exclusive create must admit one holder at a time " +
         s"(saw max $maxConc)")
@@ -159,14 +154,13 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       "publish under the naive double resolves a RECLAIMED generation") {
     val idxDir = vacuumedV2Layout()
     @volatile var midPublish: Option[String] = None
-    LayoutCommit.withOps(new NaiveObjectStoreOps((tag, p) => {
+    val naive = new NaiveObjectStoreOps((tag, p) => {
       if (tag == "write-gap" && p.getFileName.toString == "MANIFEST" &&
           midPublish.isEmpty)
         // a REAL reader resolving the layout inside the publish window
         midPublish = Some(RabitqIndex.indexDataDir(idxDir))
-    })) {
-      graft.streaming.VecsStream.compactIndex(spark, idxDir) // v2 → v3
-    }
+    })
+    graft.streaming.VecsStream.compactIndex(spark, Layout(idxDir, naive)) // v2 → v3
     assert(midPublish.contains(s"$idxDir/index"),
       s"mid-publish the MANIFEST was missing, so the reader fell back to " +
         s"the base generation (saw $midPublish)")
@@ -193,9 +187,9 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     })
     reader.start()
-    try LayoutCommit.withOps(CondPutCommit) {
-      graft.streaming.VecsStream.compactIndex(spark, idxDir) // v2 → v3
-    } finally { stop = true; reader.join() }
+    try graft.streaming.VecsStream.compactIndex(spark,
+      Layout(idxDir, CondPutCommit)) // v2 → v3
+    finally { stop = true; reader.join() }
     assert(nReads.get() > 0)
     assert(bad.isEmpty,
       s"readers racing a conditional-PUT publish saw torn resolutions: " +
@@ -216,22 +210,21 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!ops.exclusiveCreate(probe.toString, "b"))
     assert(new String(Files.readAllBytes(probe), "UTF-8") == "a")
     val idxDir = Files.createTempDirectory("hadoop_life").toString
-    val (m2, live) = LayoutCommit.withOps(ops) {
-      val initial = emb.filter(col("vec_id") < 150)
-      val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
-      RabitqIndex.save(spark, model, index0, idxDir)
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, model,
-          emb.filter(col("vec_id") >= 150 && col("vec_id") < 200)),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "hd_life", 0L,
-        partitionCols = Seq("cluster_id"))
-      graft.streaming.IdempotentSink.appendBatch(
-        Seq(9L, 160L).toDF("vec_id"),
-        RabitqIndex.tombstoneLogDir(idxDir), idxDir, "hd_life-del", 1L)
-      graft.streaming.VecsStream.compactIndex(spark, idxDir)
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      RabitqIndex.loadLive(spark, idxDir)
-    }
+    val layout = Layout(idxDir, ops)
+    val initial = emb.filter(col("vec_id") < 150)
+    val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
+    RabitqIndex.save(spark, model, index0, layout)
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 150 && col("vec_id") < 200)),
+      RabitqIndex.indexDataDir(layout), layout, "hd_life", 0L,
+      partitionCols = Seq("cluster_id"))
+    graft.streaming.IdempotentSink.appendBatch(
+      Seq(9L, 160L).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(layout), layout, "hd_life-del", 1L)
+    graft.streaming.VecsStream.compactIndex(spark, layout)
+    RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
     val expected = (0L until 200L).toSet -- Set(9L, 160L)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet == expected)
     val baseFinal = emb.filter(col("vec_id") < 200 && !col("vec_id").isin(9L, 160L))
@@ -256,32 +249,29 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // file: — the grep gate below is the companion that proves there
     // isn't one; this leg proves the Hadoop plumbing ROUND-TRIPS the
     // full protocol including the rebalance's generation publish.
-    val (m2, live) = LayoutFs.withFs(new HadoopFs(conf)) {
-      LayoutCommit.withOps(new HadoopFsCommit(conf)) {
-        // skew recipe so the rebalance really splits
-        val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
-        val (model, _) = RabitqIndex.build(spark, lowerHalf, numClusters = 8, seed = 7L)
-        RabitqIndex.save(spark, model,
-          RabitqIndex.appendVectors(spark, model,
-            emb.filter(col("vec_id") < 400)), idxDir)
-        graft.streaming.IdempotentSink.appendBatch(
-          RabitqIndex.appendVectors(spark, model,
-            emb.filter(col("vec_id") >= 400)),
-          RabitqIndex.indexDataDir(idxDir), idxDir, "hd_full", 0L,
-          partitionCols = Seq("cluster_id"))
-        graft.streaming.IdempotentSink.appendBatch(
-          Seq(9L, 410L).toDF("vec_id"),
-          RabitqIndex.tombstoneLogDir(idxDir), idxDir, "hd_full-del", 1L)
-        graft.streaming.VecsStream.compactIndex(spark, idxDir)
-        assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
-        val rep = RabitqIndex.rebalanceIndex(spark, idxDir,
-          emb.filter(!col("vec_id").isin(9L, 410L)), maxSizeFactor = 1.4)
-        assert(rep.numClustersAfter > rep.numClustersBefore,
-          s"gate is vacuous: the skewed layout did not split ($rep)")
-        RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-        RabitqIndex.loadLive(spark, idxDir)
-      }
-    }
+    val layout = Layout(idxDir, new HadoopFsCommit(conf), new HadoopFs(conf))
+    // skew recipe so the rebalance really splits
+    val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+    val (model, _) = RabitqIndex.build(spark, lowerHalf, numClusters = 8, seed = 7L)
+    RabitqIndex.save(spark, model,
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") < 400)), layout)
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 400)),
+      RabitqIndex.indexDataDir(layout), layout, "hd_full", 0L,
+      partitionCols = Seq("cluster_id"))
+    graft.streaming.IdempotentSink.appendBatch(
+      Seq(9L, 410L).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(layout), layout, "hd_full-del", 1L)
+    graft.streaming.VecsStream.compactIndex(spark, layout)
+    assert(RabitqIndex.indexDataDir(layout) == s"$idxDir/index-v2")
+    val rep = RabitqIndex.rebalanceIndex(spark, layout,
+      emb.filter(!col("vec_id").isin(9L, 410L)), maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore,
+      s"gate is vacuous: the skewed layout did not split ($rep)")
+    RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
     val expected = emb.select("vec_id").collect().map(_.getLong(0)).toSet -- Set(9L, 410L)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet == expected,
       "live set after the Hadoop-addressed lifecycle")
@@ -357,6 +347,91 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     allowedRabitq.foreach(l => assert(l.contains("mkdirs"),
       s"the one allowed RabitqIndex use must be the fvecs exporter's " +
         s"local mkdirs, found: $l"))
+    // layout I/O goes through the layout's handle: no process-wide
+    // commit or probe call and no hard-wired POSIX implementation on the
+    // lifecycle paths, so the Hadoop leg's "every probe through HadoopFs"
+    // holds by construction. `streamSource` probes a stream's INPUT path
+    // (local by contract), not a layout.
+    val bypass = java.util.regex.Pattern.compile(
+      "LayoutCommit\\.\\w+\\(|LayoutFs\\.(?!baseName\\(|parent\\(|streamSource\\()\\w+\\(" +
+        "|\\bPosixCommit\\b|\\bPosixFs\\b")
+    for (rel <- Seq("operators/RabitqIndex.scala", "operators/RabitqQuery.scala",
+        "streaming/VecsStream.scala", "streaming/IdempotentSink.scala")) {
+      val path = repoRoot.resolve(s"src/main/scala/graft/$rel")
+      assert(java.nio.file.Files.isRegularFile(path), s"grep gate target missing: $path")
+      val lines = java.nio.file.Files.readAllLines(path).toArray(Array.empty[String])
+      val hits = lines.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        bypass.matcher(l).find() &&
+          !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/**")
+      }
+      assert(hits.isEmpty, s"$path: layout I/O bypassing the handle:\n  " +
+        hits.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("\n  "))
+    }
+  }
+
+  test("two protocols at once: a PosixCommit lifecycle and a CondPutCommit " +
+      "lifecycle run concurrently in one JVM, each through its own handle") {
+    import spark.implicits._
+    final class RecordingOps(inner: CommitOps) extends CommitOps {
+      val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      def atomicWriteFile(t: String, c: String): Unit = {
+        paths.add(t); inner.atomicWriteFile(t, c) }
+      def atomicMoveFile(s: String, d: String): Unit = {
+        paths.add(s); paths.add(d); inner.atomicMoveFile(s, d) }
+      def atomicRenameDir(s: String, d: String): Unit = {
+        paths.add(s); paths.add(d); inner.atomicRenameDir(s, d) }
+      def exclusiveCreate(p: String, c: String = ""): Boolean = {
+        paths.add(p); inner.exclusiveCreate(p, c) }
+    }
+    // skew recipe so the rebalance really splits
+    val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+    val (model, _) = RabitqIndex.build(spark, lowerHalf, numClusters = 8, seed = 7L)
+    val dels = Seq(9L, 410L)
+    val baseFinal = emb.filter(!col("vec_id").isin(dels: _*))
+    // append → delete → compact → rebalance → vacuum
+    def lifecycle(layout: Layout, tag: String): (RabitqModel, DataFrame) = {
+      RabitqIndex.save(spark, model, RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") < 400)), layout)
+      graft.streaming.IdempotentSink.appendBatch(
+        RabitqIndex.appendVectors(spark, model, emb.filter(col("vec_id") >= 400)),
+        RabitqIndex.indexDataDir(layout), layout, tag, 0L,
+        partitionCols = Seq("cluster_id"))
+      graft.streaming.IdempotentSink.appendBatch(dels.toDF("vec_id"),
+        RabitqIndex.tombstoneLogDir(layout), layout, s"$tag-del", 1L)
+      graft.streaming.VecsStream.compactIndex(spark, layout)
+      val rep = RabitqIndex.rebalanceIndex(spark, layout, baseFinal, maxSizeFactor = 1.4)
+      assert(rep.numClustersAfter > rep.numClustersBefore,
+        s"$tag: gate is vacuous: the skewed layout did not split ($rep)")
+      RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+      RabitqIndex.loadLive(spark, layout)
+    }
+    val root = Files.createTempDirectory("two_protocols").toString
+    val (posixDir, condPutDir) = (s"$root/posix", s"$root/condput")
+    val posix = new RecordingOps(PosixCommit)
+    val condPut = new RecordingOps(CondPutCommit)
+    val (posixOut, condPutOut) = Overlap(spark,
+      lifecycle(Layout(posixDir, posix), "two_posix"),
+      lifecycle(Layout(condPutDir, condPut), "two_condput"))
+    val expected = baseFinal.select("vec_id").collect().map(_.getLong(0)).toSet
+    val qs = ExactKnn.queriesFromEmbeddings(emb, 5)
+    val truth = ExactKnn.l2TopK(baseFinal, qs, 10)
+    for (((tag, dir, rec), (m2, live)) <- Seq(
+        ("posix", posixDir, posix), ("condput", condPutDir, condPut))
+        .zip(Seq(posixOut, condPutOut))) {
+      val seen = rec.paths.toArray(Array.empty[String]).toSeq
+      assert(seen.nonEmpty, s"$tag: its commit protocol saw no call")
+      val foreign = seen.filterNot(_.startsWith(s"$dir/"))
+      assert(foreign.isEmpty,
+        s"$tag: its protocol committed outside its layout: ${foreign.take(5)}")
+      val ids = live.select("vec_id").collect().map(_.getLong(0))
+      assert(ids.length == ids.distinct.length, s"$tag: duplicated rows")
+      assert(ids.toSet == expected, s"$tag: live set wrong")
+      val res = RabitqQuery.topK(spark, m2, live, baseFinal, qs,
+        m2.params.numClusters, 10, 100000)
+      assert(ExactKnn.recall(res, truth, 10).head().getDouble(0) == 1.0,
+        s"$tag: full-probe search must equal brute force")
+    }
   }
 
   test("SURVIVE (executed): the rebalance under the conditional-PUT impl " +
@@ -371,29 +446,28 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     RabitqIndex.save(spark, model,
       RabitqIndex.appendVectors(spark, model, emb), idxDir)
     val delId = emb.select(min("vec_id")).head().getLong(0)
-    val (m2, live) = LayoutCommit.withOps(CondPutCommit) {
-      // an uncompacted tombstone the generation swap must CARRY
-      graft.streaming.IdempotentSink.appendBatch(
-        Seq(delId).toDF("vec_id"),
-        RabitqIndex.tombstoneLogDir(idxDir), idxDir, "cp_reb-del", 0L)
-      val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb,
-        maxSizeFactor = 1.4)
-      assert(rep.numClustersAfter > rep.numClustersBefore,
-        s"gate is vacuous: the skewed layout did not split " +
-          s"(${rep.numClustersBefore} → ${rep.numClustersAfter})")
-      // published as a NEW generation; the old one retired, not mutated
-      assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
-      assert(new java.io.File(s"$idxDir/index").isDirectory,
-        "the old generation must stay intact for retention-window readers")
-      assert(new java.io.File(s"$idxDir/_retired/index").isFile)
-      // the GROWN model rides inside the generation; the layout-root
-      // pair still holds the pre-split model (nothing reader-visible
-      // was replaced in place)
-      assert(new java.io.File(s"$idxDir/index-v2/_centroids").isDirectory)
-      val rootK = spark.read.parquet(s"$idxDir/centroids").count()
-      assert(rootK == rep.numClustersBefore.toLong)
-      RabitqIndex.loadLive(spark, idxDir)
-    }
+    val layout = Layout(idxDir, CondPutCommit)
+    // an uncompacted tombstone the generation swap must CARRY
+    graft.streaming.IdempotentSink.appendBatch(
+      Seq(delId).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(layout), layout, "cp_reb-del", 0L)
+    val rep = RabitqIndex.rebalanceIndex(spark, layout, emb,
+      maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore,
+      s"gate is vacuous: the skewed layout did not split " +
+        s"(${rep.numClustersBefore} → ${rep.numClustersAfter})")
+    // published as a NEW generation; the old one retired, not mutated
+    assert(RabitqIndex.indexDataDir(layout) == s"$idxDir/index-v2")
+    assert(new java.io.File(s"$idxDir/index").isDirectory,
+      "the old generation must stay intact for retention-window readers")
+    assert(new java.io.File(s"$idxDir/_retired/index").isFile)
+    // the GROWN model rides inside the generation; the layout-root
+    // pair still holds the pre-split model (nothing reader-visible
+    // was replaced in place)
+    assert(new java.io.File(s"$idxDir/index-v2/_centroids").isDirectory)
+    val rootK = spark.read.parquet(s"$idxDir/centroids").count()
+    assert(rootK == rep.numClustersBefore.toLong)
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
     assert(m2.params.numClusters > 4,
       "load() must resolve the generation-local (grown) model sidecars")
     assert(live.filter(col("vec_id") === delId).isEmpty,
@@ -409,14 +483,12 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         "equal brute force")
     // a later compaction must CARRY the generation-local model forward
     // (else readers of index-v3 would fall back to the stale root pair)
-    val m3 = LayoutCommit.withOps(CondPutCommit) {
-      graft.streaming.VecsStream.compactIndex(spark, idxDir) // folds the log
-      assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3")
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      assert(!new java.io.File(s"$idxDir/index").exists)
-      assert(!new java.io.File(s"$idxDir/index-v2").exists)
-      RabitqIndex.load(spark, idxDir)._1
-    }
+    graft.streaming.VecsStream.compactIndex(spark, layout) // folds the log
+    assert(RabitqIndex.indexDataDir(layout) == s"$idxDir/index-v3")
+    RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    assert(!new java.io.File(s"$idxDir/index").exists)
+    assert(!new java.io.File(s"$idxDir/index-v2").exists)
+    val m3 = RabitqIndex.load(spark, layout)._1
     assert(m3.params.numClusters == m2.params.numClusters,
       "compaction must carry the generation-local model sidecars into " +
         "the next generation")
@@ -441,59 +513,58 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     for ((tag, ops) <- Seq("condput" -> (CondPutCommit: CommitOps),
         "posix" -> (PosixCommit: CommitOps))) {
       val idxDir = Files.createTempDirectory(s"unmarked_carry_$tag").toString
-      LayoutCommit.withOps(ops) {
-        // skew so the rebalance really splits: model fit on the lower
-        // halfspace, layout holding everything (the q120 recipe)
-        val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
-        val (model, _) = RabitqIndex.build(spark, lowerHalf,
-          numClusters = 4, seed = 7L)
-        val index0 = RabitqIndex.appendVectors(spark, model, emb)
-        RabitqIndex.save(spark, model, index0, idxDir)
-        // the smallest cluster is at most the mean size: never split
-        val quietId = index0.groupBy("cluster_id").count()
-          .orderBy(col("count")).head().getInt(0)
-        // the racing batch: fresh ids that ASSIGN to the untouched
-        // cluster, so its files are exactly what the listing would carry
-        val quietMembers = index0.filter(col("cluster_id") === quietId)
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        val extra = emb.filter(col("vec_id").isin(
-            quietMembers.take(15).toSeq.map(Long.box): _*))
-          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
-        val enc = RabitqIndex.appendVectors(spark, model, extra)
-        assert(enc.filter(col("cluster_id") === quietId).count() > 0,
-          s"$tag: gate is vacuous: the racing batch missed the untouched cluster")
-        val extraIds = extra.select("vec_id").collect().map(_.getLong(0)).toSet
-        // promote-then-crash: everything appendBatch does EXCEPT the
-        // commit marker — the stranded in-progress sentinel is the
-        // crash's evidence the settle keys on
-        LayoutFs.mkdirs(s"$idxDir/_commits/unmk")
-        LayoutCommit.exclusiveCreate(s"$idxDir/_commits/unmk/0.inprogress")
-        val stg = s"$idxDir/_staging/unmk-0"
-        enc.write.mode("overwrite").partitionBy("cluster_id").parquet(stg)
-        RabitqIndex.promoteStaged(stg, RabitqIndex.indexDataDir(idxDir), "unmk-0")
-        LayoutFs.deleteRecursively(stg)
-        // the rebalance phase of a pass that settled before the promote
-        val rep = RabitqIndex.rebalanceUnlocked(spark, idxDir, emb,
-          maxSizeFactor = 1.4, fitSampleCap = 100000L, recovered = true)
-        assert(rep.numClustersAfter > rep.numClustersBefore,
-          s"$tag: gate is vacuous: the skewed layout did not split ($rep)")
-        assert(!rep.split.contains(quietId))
-        assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
-          s"$tag: the rebalance must have published a generation")
-        // the stream's replay of the unmarked batch
-        graft.streaming.IdempotentSink.appendBatch(enc,
-          RabitqIndex.indexDataDir(idxDir), idxDir, "unmk", 0L,
-          partitionCols = Seq("cluster_id"))
-        val (_, live) = RabitqIndex.loadLive(spark, idxDir)
-        val ids = live.select("vec_id").collect().map(_.getLong(0))
-        assert(ids.length == ids.distinct.length,
-          s"$tag: the carried-by-reference unmarked batch was served " +
-            "twice — the publish must settle unmarked appends against " +
-            "the source generation before building its carry listing")
-        assert(extraIds.subsetOf(ids.toSet), s"$tag: the replayed batch was lost")
-        assert(index0.select("vec_id").collect().map(_.getLong(0)).toSet
-          .subsetOf(ids.toSet), s"$tag: original rows lost")
-      }
+      val layout = Layout(idxDir, ops)
+      // skew so the rebalance really splits: model fit on the lower
+      // halfspace, layout holding everything (the q120 recipe)
+      val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+      val (model, _) = RabitqIndex.build(spark, lowerHalf,
+        numClusters = 4, seed = 7L)
+      val index0 = RabitqIndex.appendVectors(spark, model, emb)
+      RabitqIndex.save(spark, model, index0, layout)
+      // the smallest cluster is at most the mean size: never split
+      val quietId = index0.groupBy("cluster_id").count()
+        .orderBy(col("count")).head().getInt(0)
+      // the racing batch: fresh ids that ASSIGN to the untouched
+      // cluster, so its files are exactly what the listing would carry
+      val quietMembers = index0.filter(col("cluster_id") === quietId)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      val extra = emb.filter(col("vec_id").isin(
+          quietMembers.take(15).toSeq.map(Long.box): _*))
+        .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
+      val enc = RabitqIndex.appendVectors(spark, model, extra)
+      assert(enc.filter(col("cluster_id") === quietId).count() > 0,
+        s"$tag: gate is vacuous: the racing batch missed the untouched cluster")
+      val extraIds = extra.select("vec_id").collect().map(_.getLong(0)).toSet
+      // promote-then-crash: everything appendBatch does EXCEPT the
+      // commit marker — the stranded in-progress sentinel is the
+      // crash's evidence the settle keys on
+      layout.fs.mkdirs(s"$idxDir/_commits/unmk")
+      layout.ops.exclusiveCreate(s"$idxDir/_commits/unmk/0.inprogress")
+      val stg = s"$idxDir/_staging/unmk-0"
+      enc.write.mode("overwrite").partitionBy("cluster_id").parquet(stg)
+      RabitqIndex.promoteStaged(layout, stg, RabitqIndex.indexDataDir(layout), "unmk-0")
+      layout.fs.deleteRecursively(stg)
+      // the rebalance phase of a pass that settled before the promote
+      val rep = RabitqIndex.rebalanceUnlocked(spark, layout, emb,
+        maxSizeFactor = 1.4, fitSampleCap = 100000L, recovered = true)
+      assert(rep.numClustersAfter > rep.numClustersBefore,
+        s"$tag: gate is vacuous: the skewed layout did not split ($rep)")
+      assert(!rep.split.contains(quietId))
+      assert(RabitqIndex.indexDataDir(layout) == s"$idxDir/index-v2",
+        s"$tag: the rebalance must have published a generation")
+      // the stream's replay of the unmarked batch
+      graft.streaming.IdempotentSink.appendBatch(enc,
+        RabitqIndex.indexDataDir(layout), layout, "unmk", 0L,
+        partitionCols = Seq("cluster_id"))
+      val (_, live) = RabitqIndex.loadLive(spark, layout)
+      val ids = live.select("vec_id").collect().map(_.getLong(0))
+      assert(ids.length == ids.distinct.length,
+        s"$tag: the carried-by-reference unmarked batch was served " +
+          "twice — the publish must settle unmarked appends against " +
+          "the source generation before building its carry listing")
+      assert(extraIds.subsetOf(ids.toSet), s"$tag: the replayed batch was lost")
+      assert(index0.select("vec_id").collect().map(_.getLong(0)).toSet
+        .subsetOf(ids.toSet), s"$tag: original rows lost")
     }
   }
 
@@ -501,37 +572,35 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       "query lifecycle runs end-to-end on the conditional-PUT impl") {
     import spark.implicits._
     val idxDir = Files.createTempDirectory("condput_life").toString
-    val out = LayoutCommit.withOps(CondPutCommit) {
-      val initial = emb.filter(col("vec_id") < 150)
-      val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
-      RabitqIndex.save(spark, model, index0, idxDir)
-      // two exactly-once appends through the real sink (staged write +
-      // lease-guarded promote + commit marker — all through the seam)
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, model,
-          emb.filter(col("vec_id") >= 150 && col("vec_id") < 180)),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "cp_life", 0L,
-        partitionCols = Seq("cluster_id"))
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, model,
-          emb.filter(col("vec_id") >= 180 && col("vec_id") < 200)),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "cp_life", 1L,
-        partitionCols = Seq("cluster_id"))
-      // a replay of batch 1 must still be a no-op under this impl
-      graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, model,
-          emb.filter(col("vec_id") >= 180 && col("vec_id") < 200)),
-        RabitqIndex.indexDataDir(idxDir), idxDir, "cp_life", 1L,
-        partitionCols = Seq("cluster_id"))
-      // tombstones + compaction (MANIFEST publish) + retention vacuum
-      graft.streaming.IdempotentSink.appendBatch(
-        Seq(7L, 155L).toDF("vec_id"),
-        RabitqIndex.tombstoneLogDir(idxDir), idxDir, "cp_life-del", 2L)
-      graft.streaming.VecsStream.compactIndex(spark, idxDir)
-      RabitqIndex.vacuumIndex(idxDir, retainMs = 0L)
-      RabitqIndex.loadLive(spark, idxDir)
-    }
-    val (m2, live) = out
+    val layout = Layout(idxDir, CondPutCommit)
+    val initial = emb.filter(col("vec_id") < 150)
+    val (model, index0) = RabitqIndex.build(spark, initial, numClusters = 4, seed = 7L)
+    RabitqIndex.save(spark, model, index0, layout)
+    // two exactly-once appends through the real sink (staged write +
+    // lease-guarded promote + commit marker — all through the handle)
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 150 && col("vec_id") < 180)),
+      RabitqIndex.indexDataDir(layout), layout, "cp_life", 0L,
+      partitionCols = Seq("cluster_id"))
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 180 && col("vec_id") < 200)),
+      RabitqIndex.indexDataDir(layout), layout, "cp_life", 1L,
+      partitionCols = Seq("cluster_id"))
+    // a replay of batch 1 must still be a no-op under this impl
+    graft.streaming.IdempotentSink.appendBatch(
+      RabitqIndex.appendVectors(spark, model,
+        emb.filter(col("vec_id") >= 180 && col("vec_id") < 200)),
+      RabitqIndex.indexDataDir(layout), layout, "cp_life", 1L,
+      partitionCols = Seq("cluster_id"))
+    // tombstones + compaction (MANIFEST publish) + retention vacuum
+    graft.streaming.IdempotentSink.appendBatch(
+      Seq(7L, 155L).toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(layout), layout, "cp_life-del", 2L)
+    graft.streaming.VecsStream.compactIndex(spark, layout)
+    RabitqIndex.vacuumIndex(layout, retainMs = 0L)
+    val (m2, live) = RabitqIndex.loadLive(spark, layout)
     val expected = (0L until 200L).toSet -- Set(7L, 155L)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet == expected,
       "live set after the conditional-PUT lifecycle")

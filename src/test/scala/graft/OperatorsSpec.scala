@@ -209,9 +209,10 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("model JSON sidecar roundtrips") {
     val (model, _) = RabitqIndex.build(spark, emb, numClusters = 4, seed = 2L)
-    val path = java.nio.file.Files.createTempDirectory("mj").toString + "/model.json"
-    RabitqIndex.dumpModelJson(model, path)
-    val back = RabitqIndex.loadModelJson(path)
+    val dir = java.nio.file.Files.createTempDirectory("mj").toString
+    RabitqIndex.dumpModelJson(model, dir)
+    assert(new java.io.File(s"$dir/model.json").isFile)
+    val back = RabitqIndex.loadModelJson(dir)
     assert(back.params == model.params)
     assert(back.rotation.flatMap(_.toList).sameElements(model.rotation.flatMap(_.toList)))
     assert(back.centroids.flatMap(_.toList).sameElements(model.centroids.flatMap(_.toList)))
@@ -2032,13 +2033,13 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // marker — the batch's files sit in the target, its sentinel stranded
     def unmarked(root: String, query: String, df: DataFrame, target: String,
                  partitionCols: Seq[String]): Unit = {
-      LayoutFs.mkdirs(s"$root/_commits/$query")
-      LayoutCommit.exclusiveCreate(s"$root/_commits/$query/1.inprogress")
+      PosixFs.mkdirs(s"$root/_commits/$query")
+      PosixCommit.exclusiveCreate(s"$root/_commits/$query/1.inprogress")
       val stg = s"$root/_staging/$query-1"
       val w = df.write.mode("overwrite")
       (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(stg)
-      RabitqIndex.promoteStaged(stg, target, s"$query-1")
-      LayoutFs.deleteRecursively(stg)
+      RabitqIndex.promoteStaged(root, stg, target, s"$query-1")
+      PosixFs.deleteRecursively(stg)
     }
     def liveIds(dir: String): Set[Long] = RabitqIndex.loadLive(spark, dir)._2
       .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -2604,6 +2605,44 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 160L).toSet)
   }
 
+  test("compactIndex labels every job it submits: a listener sees a " +
+      "non-empty description on each") {
+    import spark.implicits._
+    val idxDir = java.nio.file.Files.createTempDirectory("compact_label").toString
+    val (model, index0) = RabitqIndex.build(spark,
+      emb.filter(col("vec_id") < 200), numClusters = 4, seed = 7L)
+    RabitqIndex.save(spark, model, index0, idxDir)
+    Seq(3L, 5L).toDF("vec_id").write.parquet(RabitqIndex.tombstoneLogDir(idxDir))
+    val sc = spark.sparkContext
+    val marker = "compact-label drain marker"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (d == marker) drained.countDown() else descs.add(d)
+      }
+    }
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(null)
+    sc.addSparkListener(listener)
+    try {
+      graft.streaming.VecsStream.compactIndex(spark, idxDir)
+      // the bus is FIFO: once the marker job is seen, every compact job was
+      Overlap.labelled(spark, marker)(sc.parallelize(1 to 1, 1).count())
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.removeSparkListener(listener); sc.setJobDescription(prev) }
+    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
+      "gate is vacuous: the compaction did not run")
+    val seen = descs.toArray(Array.empty[String]).toSeq
+    assert(seen.nonEmpty, "gate is vacuous: compactIndex submitted no job")
+    assert(seen.forall(_.nonEmpty),
+      s"${seen.count(_.isEmpty)} of ${seen.length} compact jobs carry no " +
+        s"description: ${seen.distinct.mkString(" | ")}")
+  }
+
   test("a maintain stream that never saw a delete leaves a HEALTHY layout: " +
       "the empty del-leg dir is not read as a tombstone log") {
     import spark.implicits._
@@ -2649,14 +2688,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gate = new java.util.concurrent.CyclicBarrier(8)
     val ts = (1 to 8).map(i => new Thread(() => {
       gate.await()
-      if (LayoutCommit.exclusiveCreate(p.toString, s"t$i")) wins.incrementAndGet()
+      if (PosixCommit.exclusiveCreate(p.toString, s"t$i")) wins.incrementAndGet()
     }))
     ts.foreach(_.start()); ts.foreach(_.join())
     assert(wins.get() == 1)
     // atomicWriteFile: a reader hammering the target during 200 rewrites
     // only ever observes a complete previous or next value
     val tgt = dir.resolve("MANIFEST")
-    LayoutCommit.atomicWriteFile(tgt.toString, "gen-0")
+    PosixCommit.atomicWriteFile(tgt.toString, "gen-0")
     val bad = new java.util.concurrent.atomic.AtomicInteger(0)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reader = new Thread(() => {
@@ -2667,7 +2706,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     })
     reader.start()
-    (1 to 200).foreach(i => LayoutCommit.atomicWriteFile(tgt.toString, s"gen-$i"))
+    (1 to 200).foreach(i => PosixCommit.atomicWriteFile(tgt.toString, s"gen-$i"))
     stop.set(true); reader.join()
     assert(bad.get() == 0, s"reader observed ${bad.get()} torn manifests")
     assert(new String(java.nio.file.Files.readAllBytes(tgt), "UTF-8") == "gen-200")
@@ -2675,14 +2714,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // retry-overwrites-its-own-name contract)
     val a = dir.resolve("a"); val b = dir.resolve("b")
     java.nio.file.Files.writeString(a, "A"); java.nio.file.Files.writeString(b, "B")
-    LayoutCommit.atomicMoveFile(a.toString, b.toString)
+    PosixCommit.atomicMoveFile(a.toString, b.toString)
     assert(new String(java.nio.file.Files.readAllBytes(b), "UTF-8") == "A")
     assert(!java.nio.file.Files.exists(a))
     // atomicRenameDir: losing racer of the same src observes NoSuchFile
     val src = dir.resolve("d1"); java.nio.file.Files.createDirectory(src)
-    LayoutCommit.atomicRenameDir(src.toString, dir.resolve("d2").toString)
+    PosixCommit.atomicRenameDir(src.toString, dir.resolve("d2").toString)
     intercept[java.nio.file.NoSuchFileException] {
-      LayoutCommit.atomicRenameDir(src.toString, dir.resolve("d3").toString)
+      PosixCommit.atomicRenameDir(src.toString, dir.resolve("d3").toString)
     }
   }
 
