@@ -6,8 +6,8 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Driver-side overlap of independent legs (guide §2.6): sidecar reads
-  * and writes, an ops-file write beside a layout op, a query's
+/** Driver-side overlap of independent legs (guide §2.6): a listing
+  * write beside a sizes pass, an ops-file write beside a layout op, a query's
   * independent gate legs — chains of small jobs whose cost is per-job
   * latency, not compute, so submitting them from several threads lets
   * the scheduler interleave their stages.
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *     thread would keep the label it was created under.
   *   - When a leg fails its siblings' jobs are cancelled by that tag.
   *   - ALL legs settle before the first failure (in time) rethrows: a
-  *     detached leg still writing a LIVE sidecar dir must never outlive
+  *     detached leg still writing into a LIVE dir must never outlive
   *     the call, or a caller that retries could race its own zombie write.
   *   - The wait is bounded (30 min): a write hung on a flaky object store
   *     fails the op loudly instead of wedging maintenance while the lease

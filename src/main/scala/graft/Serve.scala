@@ -85,16 +85,13 @@ object Serve {
     // /reload would serve it. A checkpoint matches no other plan; the
     // ContextCleaner reclaims its blocks once no engine snapshot (and so
     // no request) holds it.
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet").localCheckpoint()
+    val basePath = s"$sfDir/embeddings.parquet"
     // load a persisted index when given one (the reference service's cold
     // start: model from disk, no training); otherwise train in-process.
-    // loadLive, not load: a maintained layout (VecsStream.maintainIndex)
-    // carries an uncompacted tombstone log, and serving the raw layout
-    // would RESURRECT deleted vectors — the anti-join is a no-op when no
-    // log exists
-    val (model, index0) = indexDir match {
-      case Some(dir) => RabitqIndex.loadLive(spark, dir)
+    val engine = indexDir match {
+      case Some(dir) => loadEngine(spark, dir, basePath)._1
       case None =>
+        val base = spark.read.parquet(basePath).localCheckpoint()
         // √n clusters (IVF rule of thumb, clamped): a fixed small k makes
         // every query rough-scan n·nprobe/k candidates — at 200k vectors
         // and k=16 that is ~100k asymDots per request (p50 ≈ 58 ms where
@@ -102,34 +99,15 @@ object Serve {
         val nBase = base.count()
         val k = math.max(16, math.min(1024, math.sqrt(nBase.toDouble).toInt))
         // sampled fit beyond the driver-friendly range, exact fit below it
-        if (nBase > 100000L)
-          RabitqIndex.buildSampled(spark, base, numClusters = k, sampleN = 100000L, seed = 42L)
-        else RabitqIndex.build(spark, base, numClusters = k, seed = 42L)
+        val (model, index0) =
+          if (nBase > 100000L)
+            RabitqIndex.buildSampled(spark, base, numClusters = k, sampleN = 100000L, seed = 42L)
+          else RabitqIndex.build(spark, base, numClusters = k, seed = 42L)
+        val index = withLabels(index0, base).localCheckpoint()
+        // a freshly trained engine has no tombstone log: every row is live
+        val nLive = index.count()
+        Engine(model, index, base, HotTier.fromIndex(spark, model, index, base), nLive, 0L)
     }
-    // fail fast on a mismatched saved index (wrong dataset/scale factor):
-    // a silent mismatch surfaces later as per-query NPEs (index vec_ids
-    // absent from the base map) or quietly wrong neighbors. Only the
-    // load path can mismatch — a freshly built index is tautologically
-    // consistent, so skip the extra job there.
-    indexDir.foreach { dir =>
-      val baseDim = base.select(size(col("embedding"))).limit(1).collect()
-        .headOption.map(_.getInt(0))
-        .getOrElse(throw new IllegalArgumentException(
-          s"base embeddings at $sfDir are empty — nothing to serve"))
-      require(model.params.dim == baseDim,
-        s"saved index dim ${model.params.dim} != base embedding dim $baseDim — " +
-          s"index at $dir was built from a different dataset")
-    }
-    val index = withLabels(index0, base).localCheckpoint()
-    val nLiveWarm = index.count()
-    // tombstone debt for /describe: the snapshot is already live
-    // (anti-joined), so the raw-row/tombstone half comes from the layout
-    // once per engine build. A freshly trained engine has no log.
-    val (nRows, nTomb) = indexDir match {
-      case Some(d) => RabitqIndex.layoutStats(spark, d)
-      case None    => (nLiveWarm, 0L)
-    }
-    val hot = HotTier.fromIndex(spark, model, index, base)
     // SERVING UNDER MUTATION: every request reads ONE immutable Engine
     // snapshot from this reference, so an index swap (`/reload`) is
     // atomic per request — a query sees entirely the old or entirely the
@@ -141,8 +119,7 @@ object Serve {
     // now (RabitqModel.rerankScale, populated by load from the BUILT_K
     // sidecar) — every engine leg reads it from there, so the serving
     // tier and the batch paths can never disagree.
-    val engineRef = new java.util.concurrent.atomic.AtomicReference(
-      Engine(model, index, base, hot, nRows, nTomb))
+    val engineRef = new java.util.concurrent.atomic.AtomicReference(engine)
     // per-server counter (a JVM-global would bleed across serve instances)
     val queriesServed = new AtomicLong(0)
 
@@ -154,30 +131,25 @@ object Serve {
       respond(ex, 200, s"""{"queries_served":${queriesServed.get()}}"""))
     // GET/POST /describe: the FULL RabitqIndex.describeIndex health
     // report for the LIVE engine snapshot (ops hit this to decide when
-    // to compact/rebalance off-path and /reload). Same split criterion
-    // as rebalanceIndex at its default maxSizeFactor — the spec pins
-    // field-for-field equality with describeIndex over the same dir,
-    // tombstone-debt fields included. Served from the index snapshot
-    // (tombstones were already anti-joined at load; the raw/tombstone
-    // counts ride in the snapshot), so the cost is one numClusters-row
-    // aggregate per call.
+    // to compact/rebalance off-path and /reload), computed by the same
+    // IndexHealth describeIndex renders, at rebalanceIndex's default
+    // maxSizeFactor — the spec pins field-for-field equality with
+    // describeIndex over the same dir, tombstone-debt fields included.
+    // Served from the index snapshot (tombstones were already
+    // anti-joined at load; the raw/tombstone counts ride in the
+    // snapshot), so the cost is one numClusters-row aggregate per call.
     server.createContext("/describe", (ex: HttpExchange) => {
       try {
         val eng = engineRef.get()
-        val sizes = eng.index.groupBy("cluster_id").count()
-          .collect().map(_.getLong(1))
-        val nLive = sizes.sum
-        val k = eng.model.params.numClusters
-        val maxSize = if (sizes.isEmpty) 0L else sizes.max
-        val mean = nLive.toDouble / k
-        val oversized = sizes.count(s => s > 1.5 * mean && math.ceil(s / mean) >= 2)
-        val debt =
-          if (eng.nRows == 0) 0.0 else eng.nTombstones.toDouble / eng.nRows
+        val h = RabitqIndex.IndexHealth(eng.model, eng.nRows, eng.nTombstones,
+          eng.index.groupBy("cluster_id").count().collect()
+            .map(r => r.getInt(0) -> r.getLong(1)))
+        val oversized = h.oversized(1.5)
         respond(ex, 200,
-          s"""{"num_clusters":$k,"n_rows":${eng.nRows},"n_live":$nLive,""" +
-          s""""n_tombstones":${eng.nTombstones},"tombstone_debt":$debt,""" +
-          s""""max_cluster_size":$maxSize,"mean_cluster_size":$mean,""" +
-          s""""skew":${if (mean == 0) 0.0 else maxSize / mean},""" +
+          s"""{"num_clusters":${h.model.params.numClusters},"n_rows":${h.nRows},""" +
+          s""""n_live":${h.nLive},"n_tombstones":${h.nTomb},"tombstone_debt":${h.debt},""" +
+          s""""max_cluster_size":${h.maxSize},"mean_cluster_size":${h.meanSize},""" +
+          s""""skew":${h.skew},""" +
           s""""clusters_oversized":$oversized,"needs_rebalance":${oversized > 0}}""")
       } catch {
         case e: Throwable =>
@@ -256,24 +228,9 @@ object Serve {
         val basePath = parseString(body, "base")
           .getOrElse(s"$sfDir/embeddings.parquet")
         val nBase = Overlap.labelled(spark, s"reload: $idxDir") {
-          // loadLive: respect an uncompacted tombstone log (see start)
-          val (m2, i2raw) = RabitqIndex.loadLive(spark, idxDir)
-          // validate BEFORE snapshotting: an empty base is the same fatal
-          // state start() rejects — a 200 here would silently serve nothing
-          val b2raw = spark.read.parquet(basePath)
-          val baseDim = b2raw.select(size(col("embedding"))).limit(1)
-            .collect().headOption.map(_.getInt(0))
-            .getOrElse(throw new IllegalArgumentException(
-              s"reload base at $basePath is empty — nothing to serve"))
-          require(m2.params.dim == baseDim,
-            s"reloaded index dim ${m2.params.dim} != base embedding dim $baseDim")
-          val b2 = b2raw.localCheckpoint()
-          val i2 = withLabels(i2raw, b2).localCheckpoint()
-          val n2 = b2.count()
-          val (nRows2, nTomb2) = RabitqIndex.layoutStats(spark, idxDir)
-          val hot2 = HotTier.fromIndex(spark, m2, i2, b2)
-          engineRef.set(Engine(m2, i2, b2, hot2, nRows2, nTomb2))
-          n2
+          val (eng, n) = loadEngine(spark, idxDir, basePath)
+          engineRef.set(eng)
+          n
         }
         respond(ex, 200, s"""{"reloaded":true,"n_base":$nBase}""")
       } catch {
@@ -290,6 +247,43 @@ object Serve {
       (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t }))
     server.start()
     server
+  }
+
+  /** Build a serving snapshot of the saved layout at `idxDir` over the
+    * base at `basePath` — `start` (given an index dir) and `/reload`
+    * both build through here: the live model and index, the base
+    * validated against the index's dim, both frames checkpointed, the
+    * layout stats /describe reports and the hot tier. Returns the engine
+    * and the base's row count.
+    */
+  private def loadEngine(spark: SparkSession, idxDir: String,
+                         basePath: String): (Engine, Long) = {
+    // loadLive, not load: a maintained layout (VecsStream.maintainIndex)
+    // carries an uncompacted tombstone log, and serving the raw layout
+    // would RESURRECT deleted vectors — the anti-join is a no-op when no
+    // log exists
+    val (model, indexRaw) = RabitqIndex.loadLive(spark, idxDir)
+    // fail fast on a mismatched saved index (wrong dataset/scale factor)
+    // BEFORE snapshotting: a silent mismatch surfaces later as per-query
+    // NPEs (index vec_ids absent from the base map) or quietly wrong
+    // neighbors, and an empty base would serve 200s that return nothing
+    val baseRaw = spark.read.parquet(basePath)
+    val baseDim = baseRaw.select(size(col("embedding"))).limit(1).collect()
+      .headOption.map(_.getInt(0))
+      .getOrElse(throw new IllegalArgumentException(
+        s"base embeddings at $basePath are empty — nothing to serve"))
+    require(model.params.dim == baseDim,
+      s"saved index dim ${model.params.dim} != base embedding dim $baseDim — " +
+        s"index at $idxDir was built from a different dataset")
+    val base = baseRaw.localCheckpoint()
+    val index = withLabels(indexRaw, base).localCheckpoint()
+    val nBase = base.count()
+    // tombstone debt for /describe: the snapshot is already live
+    // (anti-joined), so the raw-row/tombstone half comes from the layout
+    // once per engine build
+    val (nRows, nTomb) = RabitqIndex.layoutStats(spark, idxDir)
+    (Engine(model, index, base, HotTier.fromIndex(spark, model, index, base),
+      nRows, nTomb), nBase)
   }
 
   /** The filtered-vector-search layout at serve time: when the base

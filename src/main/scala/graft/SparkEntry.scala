@@ -1853,7 +1853,7 @@ object SparkEntry {
       // and streamed-in rows, in arbitrary batch order) append to the
       // id-only tombstone log. Tombstones are terminal until
       // compaction, so the final logical set is (initial ∪ adds) ∖ dels
-      // regardless of interleaving. loadMaintained anti-joins the log;
+      // regardless of interleaving. loadLive anti-joins the log;
       // full probe + full rerank over the live rows must equal brute
       // force over vec_id % 7 ≠ 3 — q91's oracle through the streamed
       // maintenance path (surviving tombstoned row, dropped add, or
@@ -1873,7 +1873,7 @@ object SparkEntry {
         s"$tmp/ckpt", model,
         s"index_maint_stream_${streamCounter.incrementAndGet()}",
         maxFilesPerTrigger = Some(1))
-      val (m2, live) = graft.streaming.VecsStream.loadMaintained(s, s"$tmp/idx")
+      val (m2, live) = RabitqIndex.loadLive(s, s"$tmp/idx")
       val baseFinal = emb.filter(col("vec_id") % 7 =!= 3)
       RabitqQuery.topK(s, m2, live, baseFinal, annQueries(s, dir),
         nprobe = NumClusters, topk = 10, rerank = fullRerank(s, dir))
@@ -1922,7 +1922,7 @@ object SparkEntry {
       // model (rebalance invalidates frozen models — split ids are
       // re-used with new centroids, the q116 contract) → maintenance
       // stream 2 with the reloaded model (adds: upper halfspace odds;
-      // dels: vec_id % 13 = 6) → loadMaintained. Tombstones are
+      // dels: vec_id % 13 = 6) → loadLive. Tombstones are
       // terminal and never compacted here, so the final logical set is
       // simply ALL ∖ dels regardless of phase interleaving; full probe
       // + full rerank must equal brute force over vec_id % 11 ≠ 4 ∧
@@ -1969,7 +1969,7 @@ object SparkEntry {
         s"$tmp/ckpt2", m2,
         s"lifecycle_p2_${streamCounter.incrementAndGet()}",
         maxFilesPerTrigger = Some(1))
-      val (m3, live) = graft.streaming.VecsStream.loadMaintained(s, s"$tmp/idx")
+      val (m3, live) = RabitqIndex.loadLive(s, s"$tmp/idx")
       val baseFinal = emb.filter(col("vec_id") % 11 =!= 4 && col("vec_id") % 13 =!= 6)
       RabitqQuery.topK(s, m3, live, baseFinal, annQueries(s, dir),
         nprobe = m3.params.numClusters, topk = 10, rerank = fullRerank(s, dir))
@@ -2037,7 +2037,7 @@ object SparkEntry {
       // CRASH-WINDOW gate for the rebalance publish: a process died after
       // writing a COMPLETE next generation but before the MANIFEST write
       // — index-v2 holds its re-encoded data, its `_CARRY` listing and
-      // the grown `_centroids`/`_params`, and nothing references it.
+      // the grown model's `_model.json`, and nothing references it.
       // Readers must keep resolving `index`, vacuumIndex must reclaim
       // index-v2 as unreferenced debris (without following its listing
       // into the live generation's files), and search through the
@@ -2062,13 +2062,9 @@ object SparkEntry {
         .write.partitionBy("cluster_id").parquet(next)
       RabitqIndex.writeCarryListing(idx, "index-v2",
         RabitqIndex.buildCarryListing(idx, "index", Set(0)))
-      val cents = s.read.parquet(s"$idx/centroids")
-      cents.unionByName(cents.filter(col("cluster_id") === 0)
-          .withColumn("cluster_id", lit(NumClusters)))
-        .coalesce(1).write.parquet(s"$next/_centroids")
-      s.read.parquet(s"$idx/params")
-        .withColumn("num_clusters", lit(NumClusters + 1))
-        .coalesce(1).write.parquet(s"$next/_params")
+      RabitqIndex.writeModel(idx, next, model.copy(
+        params = model.params.copy(numClusters = NumClusters + 1),
+        centroids = model.centroids :+ model.centroids(0)))
       require(RabitqIndex.readCarry(idx, "index-v2").nonEmpty,
         "gate is vacuous: the unpublished generation carries nothing")
       require(RabitqIndex.indexDataDir(idx) == s"$idx/index",
@@ -2136,7 +2132,7 @@ object SparkEntry {
       // row set here: a non-exclusive batch marker double-appends the
       // replay, a torn MANIFEST publish loses the generation, a
       // mis-swept staging loses the batch, a mis-carried tombstone log
-      // resurrects deletes, a dropped generation-local model sidecar
+      // resurrects deletes, a generation missing its grown `_model.json`
       // decodes against pre-split centroids — all flip the full-probe +
       // full-rerank oracle. Construction (the q120 skew recipe so the
       // rebalance REALLY splits): build on the lower halfspace, append
@@ -2146,7 +2142,7 @@ object SparkEntry {
       // (index-v2 with the grown model riding inside it and the
       // uncompacted log carried, published by one atomic MANIFEST PUT),
       // compact (folds the carried log into
-      // index-v3 AND carries the generation-local sidecars forward),
+      // index-v3 AND writes the grown model into it),
       // vacuum at retain 0 (reclaims both retired generations) — live
       // set = ALL ∖ (% 9 = 2).
       val emb = T(s, dir, "embeddings")
@@ -2182,7 +2178,7 @@ object SparkEntry {
         "vacuum under CondPutCommit failed to reclaim the retired generations")
       val (m2, live) = RabitqIndex.loadLive(s, idx)
       require(m2.params.numClusters > NumClusters,
-        "load() did not resolve the generation-local (grown) model sidecars")
+        "load() did not resolve the generation's (grown) model file")
       val baseFinal = emb.filter(col("vec_id") % 9 =!= 2)
       RabitqQuery.topK(s, m2, live, baseFinal, annQueries(s, dir),
         nprobe = m2.params.numClusters, topk = 10, rerank = fullRerank(s, dir))

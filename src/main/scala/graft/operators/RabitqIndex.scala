@@ -323,7 +323,7 @@ object RabitqIndex {
     * rewrite — the generation is self-contained and the relation holds
     * its own files only.
     * Underscore name = invisible to Spark's file listing, exactly like
-    * the `_centroids`/`_params` generation-local sidecars. Reference
+    * the generation's `_model.json`. Reference
     * analog: the reference's S3 tier only ever GETs immutable objects
     * (`/root/reference/crates/disk/src/cache.rs:24-52`) — this keeps
     * layout MUTATION metadata-sized on the same store.
@@ -650,16 +650,20 @@ object RabitqIndex {
       () => committed(ownFiles(clusters), inProgressPrefixes(layout)), carried)
   }
 
-  /** A flat parquet table (a tombstone log, a model sidecar) as one
-    * relation over the files in `path` outside the batches `inprog`
-    * names, both re-read on `refresh()`, with the footer schema of the
-    * first — opened without a Spark job. None when no file qualifies.
+  /** The tombstone-log scan of a generation with the same read-committed
+    * exclusion and the same job-free open as [[scanOfGen]]: one relation
+    * over the log's files outside uncommitted batches, both re-read on
+    * `refresh()`, with the footer schema of the first. The log is an
+    * append target too, so a crashed delete batch's files are excluded
+    * (and safe from the replay's sweep racing this read). EVERY reader of
+    * the log goes through here. None when the log is empty or holds only
+    * uncommitted batches.
     */
-  private def flatScanOf(spark: SparkSession, path: String,
-                         inprog: () => Seq[String]): Option[DataFrame] = {
-    val root = hpath(spark, path)
+  private[graft] def logScanOfGen(spark: SparkSession, layout: Layout,
+                                  gen: String): Option[DataFrame] = {
+    val root = hpath(spark, logDirOfGen(layout.dir, gen))
     def files(): Seq[FileStatus] = {
-      val excluded = inprog()
+      val excluded = inProgressPrefixes(layout)
       parquetFiles(spark, root)
         .filterNot(f => excludedByInProgress(f.getPath.getName, excluded))
     }
@@ -667,22 +671,6 @@ object RabitqIndex {
     initial.headOption.map(f => SeededRelation.open(spark,
       SeededRelation.footerSchema(spark, f.getPath), None, root, initial, () => files()))
   }
-
-  /** A model sidecar table, read with its footer schema. */
-  private[graft] def sidecarOf(spark: SparkSession, path: String): DataFrame =
-    flatScanOf(spark, path, () => Nil).getOrElse(
-      throw new IllegalStateException(s"model table $path holds no parquet file"))
-
-  /** The tombstone-log scan of a generation with the same read-committed
-    * exclusion and the same job-free open as [[scanOfGen]]: the log is an
-    * append target too, so a crashed delete batch's files are excluded
-    * (and safe from the replay's sweep racing this read). EVERY reader of
-    * the log goes through here. None when the log is empty or holds only
-    * uncommitted batches.
-    */
-  private[graft] def logScanOfGen(spark: SparkSession, layout: Layout,
-                                  gen: String): Option[DataFrame] =
-    flatScanOf(spark, logDirOfGen(layout.dir, gen), () => inProgressPrefixes(layout))
 
   /** Mark a generation as RETIRED (superseded by a compaction swap) —
     * the marker's mtime starts the retention clock [[vacuumIndex]]
@@ -736,8 +724,10 @@ object RabitqIndex {
 
   /** Persist as a parquet directory (S6 analog of the reference's 5-file
     * layout `/root/reference/src/rabitq.rs:128-156`): index partitioned by
-    * cluster_id (→ partition pruning on probes), model sidecar tables.
-    * A save RESETS the layout to generation zero: any MANIFEST, old
+    * cluster_id (→ partition pruning on probes), the model in the
+    * generation's `_model.json` ([[writeModel]]), written right after the
+    * data, before any history is removed. A save RESETS the layout to
+    * generation zero: any MANIFEST, old
     * versioned data dirs, stale tombstone logs, retirement markers, AND
     * every lifecycle-protocol leftover from a previous life of the dir
     * are removed (a brand-new index has no history) — data is written
@@ -752,35 +742,22 @@ object RabitqIndex {
     */
   def save(spark: SparkSession, model: RabitqModel, index: DataFrame,
            layout: Layout): Unit = Overlap.labelled(spark, s"rabitq: save ${layout.dir}") {
-    import spark.implicits._
     index.write.mode("overwrite").partitionBy("cluster_id").parquet(s"${layout.dir}/index")
+    writeModel(layout, s"${layout.dir}/index", model)
     layout.fs.delete(s"${layout.dir}/MANIFEST")
     layout.fs.list(layout.dir)
       .filter(f => f.isDir &&
         (f.name.startsWith("index-v") || f.name == "deletes" ||
           f.name.startsWith("deletes-") || f.name == "_retired" ||
           f.name == "_rebalance_staging" || f.name == "_commits" ||
-          f.name == "_staging"))
+          f.name == "_staging" ||
+          // the root model tables an older build wrote
+          f.name == "rotation" || f.name == "centroids" || f.name == "params"))
       .foreach(f => layout.fs.deleteRecursively(f.path))
     layout.fs.list(layout.dir)
       .filter(f => !f.isDir &&
         (f.name == "MANIFEST.tmp" || f.name == "BUILT_K"))
       .foreach(f => layout.fs.delete(f.path))
-    // the three model sidecars are independent tiny single-task writes —
-    // overlap them so the save pays one write latency, not
-    // three; data-first crash ordering is preserved (index wrote above)
-    Overlap(spark,
-      model.rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-        .toDF("row_id", "row").coalesce(1)
-        .write.mode("overwrite").parquet(s"${layout.dir}/rotation"),
-      model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cluster_id", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"${layout.dir}/centroids"),
-      Seq((model.params.dim, model.params.padDim, model.params.numClusters,
-           model.params.seed, model.bias.toSeq))
-        .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
-        .write.mode("overwrite").parquet(s"${layout.dir}/params"))
-    ()
   }
 
   /** Incremental maintenance: encode NEW vectors against the existing
@@ -852,60 +829,6 @@ object RabitqIndex {
   def upsertVectors(spark: SparkSession, model: RabitqModel, index: DataFrame,
                     vecs: DataFrame): DataFrame =
     deleteVectors(index, vecs).unionByName(appendVectors(spark, model, vecs))
-
-  /** Whole-model JSON serialization (S8 analog of the reference's serde
-    * JSON, `/root/reference/src/rabitq.rs:72-81`): params + rotation +
-    * rotated centroids + dither bias in one self-describing file,
-    * `model.json` in the layout's dir. Index DATA stays parquet — this
-    * is only the small driver-side state.
-    */
-  def dumpModelJson(model: RabitqModel, layout: Layout): Unit = {
-    def arr(a: Array[Float]): String = a.mkString("[", ",", "]")
-    def mat(m: Array[Array[Float]]): String = m.map(arr).mkString("[", ",", "]")
-    val json =
-      s"""{"dim":${model.params.dim},"pad_dim":${model.params.padDim},""" +
-        s""""num_clusters":${model.params.numClusters},"seed":${model.params.seed},""" +
-        s""""rotation":${mat(model.rotation)},"centroids":${mat(model.centroids)},""" +
-        s""""bias":${arr(model.bias)}}"""
-    // through the handle: an atomic publish readable on any deployment fs
-    layout.ops.atomicWriteFile(s"${layout.dir}/model.json", json)
-  }
-
-  def loadModelJson(layout: Layout): RabitqModel = {
-    // dependency-free parser for the fixed shape written above
-    val s = layout.fs.readString(s"${layout.dir}/model.json")
-    def long(key: String): Long = {
-      val m = java.util.regex.Pattern.compile("\"" + key + "\":(-?\\d+)").matcher(s)
-      require(m.find(), s"missing $key"); m.group(1).toLong
-    }
-    def floats(body: String): Array[Float] =
-      if (body.trim.isEmpty) Array.empty
-      else body.split(",").map(_.trim.toFloat)
-    def matrix(key: String): Array[Array[Float]] = {
-      val start = s.indexOf("\"" + key + "\":[[")
-      require(start >= 0, s"missing $key")
-      val open = s.indexOf("[[", start)
-      var depth = 0; var i = open; var end = -1
-      while (end < 0) {
-        s.charAt(i) match {
-          case '[' => depth += 1
-          case ']' => depth -= 1; if (depth == 0) end = i
-          case _ =>
-        }
-        i += 1
-      }
-      s.substring(open + 1, end).split("\\],\\s*\\[")
-        .map(row => floats(row.replaceAll("[\\[\\]]", "")))
-    }
-    def vector(key: String): Array[Float] = {
-      val m = java.util.regex.Pattern.compile("\"" + key + "\":\\[([^\\]]*)\\]").matcher(s)
-      require(m.find(), s"missing $key"); floats(m.group(1))
-    }
-    RabitqModel(
-      RabitqParams(long("dim").toInt, long("pad_dim").toInt,
-        long("num_clusters").toInt, long("seed")),
-      matrix("rotation"), matrix("centroids"), vector("bias"))
-  }
 
   /** Export the index in the reference's exact 5-file directory layout
     * (`/root/reference/src/rabitq.rs:128-156`): `orthogonal.fvecs` (dim
@@ -1209,12 +1132,12 @@ object RabitqIndex {
     // `known` threads the maintenance pass's one measurement through
     // (model + LIVE per-cluster sizes — both invariant across the
     // compaction that may have run in between: the rewrite preserves
-    // exactly the live rows with their cluster_id and copies the model
-    // sidecars verbatim), replacing this phase's own model load and
-    // full-scan size count. The data scan below still resolves the
+    // exactly the live rows with their cluster_id and writes the same
+    // model into the next generation), replacing this phase's own model
+    // load and full-scan size count. The data scan below still resolves the
     // CURRENT generation — only the measurement is reused.
     val gen = indexDataDir(layout)
-    val model = known.map(_._1).getOrElse(modelOfGen(spark, layout, gen))
+    val model = known.map(_._1).getOrElse(modelOfGen(layout, gen))
     val index = scanOfGen(spark, layout, gen)
     val live = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
       .fold(index)(log => index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
@@ -1386,15 +1309,15 @@ object RabitqIndex {
     *     untouched rows still include tombstoned members (the re-encode
     *     dropped them only for split clusters); the anti-join is
     *     idempotent, so split members' ids matching nothing is harmless.
-    *  4. The GROWN model rides INSIDE the generation (`_centroids` /
-    *     `_params` — underscore dirs are invisible to the data scan), so
-    *     the MANIFEST write flips data and model TOGETHER. [[load]]
-    *     prefers generation-local sidecars; `VecsStream.compactRewrite`
-    *     carries them into every later generation.
+    *  4. The GROWN model is written into the generation's own
+    *     `_model.json` ([[writeModel]]; underscore files are invisible to
+    *     the data scan), so the MANIFEST write flips data and model
+    *     TOGETHER. Every generation carries its model:
+    *     `VecsStream.compactRewrite` writes it into every later one.
     *  5. Publish: [[publishGeneration]] — `VecsStream.compactSwap`'s
     *     exact sequence.
     *
-    * Steps 2–4 and the per-destination sizes it returns (one pass over
+    * Steps 2–3 and the per-destination sizes it returns (one pass over
     * the written files; moved rows = Σ sizes) are independent and run
     * under one [[Overlap]]. Crash anywhere before 5: readers keep
     * resolving the old generation; the partial next generation is
@@ -1406,7 +1329,6 @@ object RabitqIndex {
   private[graft] def rebalanceGenerationSwap(
       spark: SparkSession, layout: Layout, model2: RabitqModel,
       reencWide: DataFrame, splitIds: Seq[Int]): Map[Int, Long] = {
-    import spark.implicits._
     val curName = LayoutFs.baseName(indexDataDir(layout))
     val curV = if (curName == "index") 1 else curName.stripPrefix("index-v").toInt
     val nextName = s"index-v${curV + 1}"
@@ -1415,21 +1337,14 @@ object RabitqIndex {
     reencWide.repartition(model2.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(nextDir)
+    writeModel(layout, nextDir, model2)
     // step 2's settle: no unmarked batch may enter the listing below
     graft.streaming.IdempotentSink.settleInProgress(layout,
       Seq(s"${layout.dir}/$curName", logDirOfGen(layout.dir, curName)))
     // the written schema is known: reading it back with it skips the
-    // footer-inference job. Underscore-named sidecars and listing files
-    // the other legs write into `nextDir` are invisible to this scan.
-    val (_, _, reencSizes) = Overlap(spark,
-      Overlap(spark,
-        model2.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cluster_id", "centroid").coalesce(1)
-          .write.mode("overwrite").parquet(s"$nextDir/_centroids"),
-        Seq((model2.params.dim, model2.params.padDim, model2.params.numClusters,
-             model2.params.seed, model2.bias.toSeq))
-          .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1)
-          .write.mode("overwrite").parquet(s"$nextDir/_params")),
+    // footer-inference job. The listing files the other leg writes into
+    // `nextDir` are underscore-named, invisible to this scan.
+    val (_, reencSizes) = Overlap(spark,
       {
         writeCarryListing(layout, nextName,
           buildCarryEntriesDistributed(spark, layout, curName, splitIds.toSet))
@@ -1444,11 +1359,10 @@ object RabitqIndex {
   }
 
   /** Copy a directory's parquet data files into `tgt` (flat), replacing
-    * on retry, in parallel — used only for DELETE-VOLUME- and
-    * MODEL-sized payloads (tombstone-log carry, generation-local sidecar
-    * tables); the corpus-sized untouched-cluster carry rides in the
-    * `_CARRY` listing instead and never copies. Staging, not a commit
-    * primitive: nothing resolves the destination until the MANIFEST
+    * on retry, in parallel — used only for the DELETE-VOLUME-sized
+    * tombstone-log carry; the corpus-sized untouched-cluster carry rides
+    * in the `_CARRY` listing instead and never copies. Staging, not a
+    * commit primitive: nothing resolves the destination until the MANIFEST
     * publish, and on a real object store each copy is a server-side
     * CopyObject. A DEDICATED bounded pool, not the JVM-global common
     * ForkJoinPool — blocking file IO on the common pool from the Spark
@@ -1695,7 +1609,7 @@ object RabitqIndex {
     * attempt).
     *
     * Never touches the ACTIVE generation or its log (folding is
-    * compaction's job), the model sidecars, or the `_commits` markers (a
+    * compaction's job), its `_model.json`, or the `_commits` markers (a
     * restarted stream needs its replay evidence), or the
     * `_maintenance.lock` lease (held by the caller — [[withLayoutLock]]
     * breaks stale ones itself). Mutual exclusion with the other
@@ -1780,7 +1694,7 @@ object RabitqIndex {
     fileVictims.foreach(layout.fs.delete)
     // PARTIAL reclaim of expired retired generations that still back a
     // retained listing: every file NOT referenced goes now (stale split
-    // clusters, sidecars, the generation's own `_CARRY` — it stopped
+    // clusters, `_model.json`, the generation's own `_CARRY` — it stopped
     // being load-bearing when its last in-window reader left; the
     // retained successors' listings reference the survivors DIRECTLY,
     // flattened at swap time). The `_retired` marker stays so later
@@ -1810,7 +1724,7 @@ object RabitqIndex {
       }
       walk(g.path, g.name)
       // the generation is no longer resolvable AS a generation (its own
-      // listing and sidecars are gone) — mark it so [[loadAt]] refuses
+      // listing and model file are gone) — mark it so [[loadAt]] refuses
       // it instead of serving a partial snapshot; written AFTER the walk
       // (idempotent under crash-retry: the re-walk skips the marker)
       if (!layout.fs.isFile(s"${g.path}/_RECLAIMED"))
@@ -1876,56 +1790,100 @@ object RabitqIndex {
       }
   }
 
-  /** Resolve a model sidecar table against an ALREADY-RESOLVED
-    * generation dir: a generation-LOCAL `_<table>` dir (written by
-    * every [[rebalanceGenerationSwap]], carried forward by every
-    * compaction) SHADOWS the layout-root dir [[save]] writes — the root
-    * pair cannot be replaced atomically without a directory rename, so
-    * the model travels with the generation and the MANIFEST write flips
-    * data and model together. Callers must
-    * resolve the generation ONCE and derive every path from it (the
-    * [[load]] discipline): re-reading the MANIFEST per table would let
-    * a concurrent publish hand back a TORN model/data pair — exactly
-    * the tear the generation-local shape exists to prevent.
-    */
-  private[graft] def modelSidecarDir(layout: Layout, genDir: String,
-                                     table: String): String = {
-    val genLocal = s"$genDir/_$table"
-    if (layout.fs.isDirectory(genLocal)) genLocal else s"${layout.dir}/$table"
-  }
-
   def load(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) =
-    // ONE generation resolution per load — model sidecars and the data
+    // ONE generation resolution per load — the model file and the data
     // scan must come from the SAME generation even when a concurrent
     // maintenance pass publishes a new one mid-call
     loadOfGen(spark, layout, indexDataDir(layout))
 
   private def loadOfGen(spark: SparkSession, layout: Layout,
                         gen: String): (RabitqModel, DataFrame) =
-    (modelOfGen(spark, layout, gen), scanOfGen(spark, layout, gen))
+    (modelOfGen(layout, gen), scanOfGen(spark, layout, gen))
 
-  /** The model HALF of [[load]]'s single-resolution read — for callers
-    * that must know the model (to enumerate probed clusters) BEFORE
-    * constructing the data scan ([[loadLiveProbed]]).
+  /** The file a generation's model lives in, inside the generation dir.
+    * The MANIFEST write that publishes a generation therefore flips data
+    * and model together, and a retired generation keeps the model its
+    * rows were encoded against. Underscore-named: the data scan never
+    * sees it.
     */
-  private[graft] def modelOfGen(spark: SparkSession, layout: Layout,
-                                gen: String): RabitqModel = {
-    // three independent tiny single-task reads — overlap them
-    // so a model load pays one job latency, not three
-    val (p, rotation, centroids) = Overlap(spark,
-      sidecarOf(spark, modelSidecarDir(layout, gen, "params")).head(),
-      sidecarOf(spark, s"${layout.dir}/rotation")
-        .orderBy("row_id").collect()
-        .map(r => r.getAs[Seq[Float]]("row").toArray),
-      sidecarOf(spark, modelSidecarDir(layout, gen, "centroids"))
-        .orderBy("cluster_id").collect()
-        .map(r => r.getAs[Seq[Float]]("centroid").toArray))
-    val params = RabitqParams(p.getAs[Int]("dim"), p.getAs[Int]("pad_dim"),
-      p.getAs[Int]("num_clusters"), p.getAs[Long]("seed"))
-    val bias = p.getAs[Seq[Float]]("bias").toArray
+  private[graft] val ModelFile = "_model.json"
+
+  /** Write `model` as `genDir`'s [[ModelFile]] through the handle's
+    * atomic write. S8 analog of the reference's whole-model serde JSON
+    * (its `src/rabitq.rs:72-81`), one line:
+    * `{"dim":D,"pad_dim":P,"num_clusters":K,"seed":S,"bias":"…",
+    * "centroids":"…","rotation":"…"}`. Each float array is base64 of
+    * little-endian f32, shaped by the params (bias P, centroids K×P,
+    * rotation P×P): bit-exact by construction, and a dim-960 rotation
+    * encodes and decodes in tens of ms where a decimal-text codec takes
+    * hundreds.
+    */
+  private[graft] def writeModel(layout: Layout, genDir: String,
+                                model: RabitqModel): Unit = {
+    val p = model.params
+    require(model.bias.length == p.padDim &&
+      model.centroids.length == p.numClusters && model.rotation.length == p.padDim &&
+      (model.centroids ++ model.rotation).forall(_.length == p.padDim),
+      s"model shape does not match its params $p")
+    def blob(a: Array[Float]): String = {
+      val b = java.nio.ByteBuffer.allocate(4 * a.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.asFloatBuffer().put(a)
+      java.util.Base64.getEncoder.encodeToString(b.array())
+    }
+    layout.ops.atomicWriteFile(s"$genDir/$ModelFile",
+      s"""{"dim":${p.dim},"pad_dim":${p.padDim},"num_clusters":${p.numClusters},""" +
+        s""""seed":${p.seed},"bias":"${blob(model.bias)}",""" +
+        s""""centroids":"${blob(model.centroids.flatten)}",""" +
+        s""""rotation":"${blob(model.rotation.flatten)}"}""")
+  }
+
+  /** The model HALF of [[load]]'s single-resolution read: the
+    * generation's [[ModelFile]], decoded on the driver — no Spark job.
+    * Also for callers that must know the model (to enumerate probed
+    * clusters) BEFORE constructing the data scan ([[loadLiveProbed]]).
+    * The file is outside input, so every blob's length is checked
+    * against its shape. A generation without one (a layout an older
+    * build wrote) is refused.
+    */
+  private[graft] def modelOfGen(layout: Layout, gen: String): RabitqModel = {
+    val path = s"$gen/$ModelFile"
+    if (!layout.fs.isFile(path))
+      throw new IllegalStateException(s"$path is missing: this generation " +
+        "carries no model file (a layout an older build wrote) — re-save the " +
+        "layout with RabitqIndex.save")
+    val json = layout.fs.readString(path)
+    def field(key: String): String = {
+      val k = "\"" + key + "\":"
+      val at = json.indexOf(k)
+      require(at >= 0, s"$path: no \"$key\" field")
+      val from = at + k.length
+      val quoted = from < json.length && json.charAt(from) == '"'
+      val to =
+        if (quoted) json.indexOf('"', from + 1)
+        else json.indexWhere(c => c == ',' || c == '}', from)
+      require(to > from, s"$path: unterminated \"$key\" field")
+      if (quoted) json.substring(from + 1, to) else json.substring(from, to)
+    }
+    def floats(key: String, n: Long): Array[Float] = {
+      val bytes = java.util.Base64.getDecoder.decode(field(key))
+      require(bytes.length == 4L * n,
+        s"$path: \"$key\" holds ${bytes.length} bytes, its shape needs ${4L * n}")
+      val a = new Array[Float](n.toInt)
+      java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .asFloatBuffer().get(a)
+      a
+    }
+    val params = RabitqParams(field("dim").toInt, field("pad_dim").toInt,
+      field("num_clusters").toInt, field("seed").toLong)
+    val (p, k) = (params.padDim, params.numClusters)
+    require(p > 0 && k > 0, s"$path: non-positive shape in $params")
     // quadratic in the cluster growth — see scaledRerank's frontier note
-    val ps = probeScale(layout, params.numClusters)
-    RabitqModel(params, rotation, centroids, bias, rerankScale = ps * ps)
+    val ps = probeScale(layout, k)
+    RabitqModel(params,
+      floats("rotation", p.toLong * p).grouped(p).toArray,
+      floats("centroids", k.toLong * p).grouped(p).toArray,
+      floats("bias", p), rerankScale = ps * ps)
   }
 
   /** Single-resolution PROBE-PRUNED live read — the disk query paths'
@@ -1948,7 +1906,7 @@ object RabitqIndex {
       : (RabitqModel, Seq[Int], DataFrame) = {
     val gen = indexDataDir(layout)
     val genName = LayoutFs.baseName(gen)
-    val model = modelOfGen(spark, layout, gen)
+    val model = modelOfGen(layout, gen)
     // the FULL live scan of the SAME resolved generation, built only if
     // the probe derivation asks for it (the measured-selectivity
     // fallback) — never a second MANIFEST resolution or model load
@@ -1993,7 +1951,7 @@ object RabitqIndex {
     * active one, or a RETIRED generation still inside its retention
     * window. The generation manifest makes this nearly free: a retired
     * generation keeps its own `_CARRY` listing (or flat directory), its
-    * generation-local model sidecars, and its own tombstone log, and
+    * own `_model.json`, and its own tombstone log, and
     * the refcounted vacuum keeps every file a RETAINED listing
     * references alive — so the snapshot resolves exactly as it did
     * while active, row for row, even after later rebalances rewrote
@@ -2022,7 +1980,7 @@ object RabitqIndex {
         refuse("retired and partially reclaimed past the retention " +
           "window — only its still-referenced files survive")
     }
-    val model = modelOfGen(spark, layout, genDir)
+    val model = modelOfGen(layout, genDir)
     val scan = scanOfGen(spark, layout, genDir)
     val live = logScanOfGen(spark, layout, gen).fold(scan)(log =>
       scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
@@ -2055,12 +2013,12 @@ object RabitqIndex {
     * corpus scale, one set of object-store LIST calls instead of three).
     */
   private[graft] final case class IndexHealth(
-      gen: String, model: RabitqModel,
-      nRows: Long, nTomb: Long, sizes: Array[(Int, Long)]) {
+      model: RabitqModel, nRows: Long, nTomb: Long, sizes: Array[(Int, Long)]) {
     def nLive: Long = sizes.map(_._2).sum
     def maxSize: Long = if (sizes.isEmpty) 0L else sizes.map(_._2).max
     def meanSize: Double = nLive.toDouble / model.params.numClusters
     def debt: Double = if (nRows == 0) 0.0 else nTomb.toDouble / nRows
+    def skew: Double = if (meanSize == 0) 0.0 else maxSize / meanSize
     def oversized(maxSizeFactor: Double): Int = {
       val mean = meanSize
       sizes.count { case (_, s) =>
@@ -2090,7 +2048,7 @@ object RabitqIndex {
       else None
     footerSizes match {
       case Some(fs) =>
-        IndexHealth(gen, modelOfGen(spark, layout, gen), fs.map(_._2).sum, 0L, fs)
+        IndexHealth(modelOfGen(layout, gen), fs.map(_._2).sum, 0L, fs)
       case None =>
         val (model, index) = loadOfGen(spark, layout, gen)
         val tomb = logScanOfGen(spark, layout, genName)
@@ -2109,7 +2067,7 @@ object RabitqIndex {
           tomb.map(_.count()).getOrElse(0L),
           live.groupBy("cluster_id").count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)))
-        IndexHealth(gen, model, nRowsOpt.getOrElse(index.count()), nTomb, sizes)
+        IndexHealth(model, nRowsOpt.getOrElse(index.count()), nTomb, sizes)
     }
   }
 
@@ -2119,10 +2077,8 @@ object RabitqIndex {
     import spark.implicits._
     val h = indexHealth(spark, layout, footerFastPath)
     val oversized = h.oversized(maxSizeFactor)
-    val mean = h.meanSize
     Seq((h.model.params.numClusters, h.nRows, h.nLive, h.nTomb, h.debt,
-        h.maxSize, mean, if (mean == 0) 0.0 else h.maxSize / mean,
-        oversized, oversized > 0))
+        h.maxSize, h.meanSize, h.skew, oversized, oversized > 0))
       .toDF("num_clusters", "n_rows", "n_live", "n_tombstones",
         "tombstone_debt", "max_cluster_size", "mean_cluster_size",
         "skew", "clusters_oversized", "needs_rebalance")

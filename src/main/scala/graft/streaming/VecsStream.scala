@@ -141,7 +141,7 @@ object VecsStream {
     * (`RabitqIndex.tombstoneLogDir`, resolved per batch) — the
     * append-log shape every LSM/lakehouse delete takes: nothing
     * rewrites at ingest time, reads anti-join the tombstones
-    * ([[loadMaintained]]), and a scheduled [[compactIndex]] folds them
+    * (`RabitqIndex.loadLive`), and a scheduled [[compactIndex]] folds them
     * in. Contract: tombstones are TERMINAL until compaction (an add of
     * an already-tombstoned id stays invisible — updates go through the
     * batch `upsertVectors` path or post-compaction re-add), so the
@@ -205,13 +205,6 @@ object VecsStream {
     q.awaitTermination()
   }
 
-  /** Read side of [[maintainIndex]]: the saved index with tombstones
-    * anti-joined out — an id-only join against the (delete-volume-
-    * sized) log, broadcast at any realistic delete rate.
-    */
-  def loadMaintained(spark: SparkSession, idx: Layout): (RabitqModel, DataFrame) =
-    RabitqIndex.loadLive(spark, idx)
-
   /** Scheduled compaction for [[maintainIndex]]: fold the tombstone log
     * into the layout. Scale-safe shape (the /reload snapshot pattern,
     * and the reference's immutable-model-dir contract,
@@ -257,15 +250,15 @@ object VecsStream {
     compactSwap(idx, compactRewrite(spark, idx))
   }
 
-  /** Phase 1 (durable, retry-safe): rewrite the live rows into the next
-    * versioned data dir; returns its name. Nothing the current
+  /** Phase 1 (durable, retry-safe): rewrite the live rows, then the
+    * model, into the next versioned data dir; returns its name. Nothing the current
     * generation's readers resolve is touched.
     */
   private[graft] def compactRewrite(spark: SparkSession, idx: Layout): String = {
     val cur = LayoutFs.baseName(RabitqIndex.indexDataDir(idx))
     val curV = if (cur == "index") 1 else cur.stripPrefix("index-v").toInt
     val nextName = s"index-v${curV + 1}"
-    val (m, live) = loadMaintained(spark, idx)
+    val (m, live) = RabitqIndex.loadLive(spark, idx)
     // compaction's SECOND job: undo file fragmentation. Continuous
     // appends and rebalances leave O(write-tasks × clusters) small part
     // files (measured ~8k at 1M/256 — footer-describe and scan listing
@@ -276,14 +269,9 @@ object VecsStream {
     live.repartition(m.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(s"${idx.dir}/$nextName")
-    // carry generation-LOCAL model sidecars: a rebalance
-    // (RabitqIndex.rebalanceGenerationSwap) puts the grown model INSIDE
-    // its generation so the MANIFEST write flips data and model together —
-    // every later generation must keep carrying it, or readers of the
-    // compacted generation would fall back to the STALE layout-root
-    // pair (pre-split centroids against post-split cluster ids)
-    for (t <- Seq("centroids", "params"))
-      RabitqIndex.copyParquetFiles(idx, s"${idx.dir}/$cur/_$t", s"${idx.dir}/$nextName/_$t")
+    // every generation carries the model its rows were encoded against,
+    // so the MANIFEST write flips data and model together
+    RabitqIndex.writeModel(idx, s"${idx.dir}/$nextName", m)
     nextName
   }
 
@@ -343,7 +331,7 @@ object VecsStream {
       // what describeIndex renders, and the phases consume it directly —
       // the model and the LIVE per-cluster sizes are both invariant
       // across the compaction (the rewrite preserves exactly the live
-      // rows and copies the model sidecars), so the rebalance phase needs
+      // rows and writes the same model), so the rebalance phase needs
       // no re-load and no re-count (guide §1.2 run fewer passes).
       val h = RabitqIndex.indexHealth(spark, idx)
       val compacted =

@@ -27,6 +27,12 @@ import graft.operators._
   *  4. RERANK-SCALE OVERRIDE — the per-call `rerankScale` on the disk
   *     entry points demonstrably replaces the loaded model's default
   *     (the operating-point frontier is documented at the API).
+  *  5. MODEL PER GENERATION — every generation carries its model in one
+  *     `_model.json`, read on the driver without a Spark job: after
+  *     save → maintain → compact → rebalance the active and both
+  *     retained retired generations load bit-identical models with no
+  *     job, and a generation whose model file is gone is refused even
+  *     with the parquet model tables an older build wrote in its place.
   */
 class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -227,18 +233,14 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
         "opening the probe-restricted scan must run no job")
       assert(jobsOf(RabitqIndex.logScanOfGen(spark, idxDir, "index-v2")) == 0,
         "opening the tombstone log must run no job")
-      Seq(RabitqIndex.modelSidecarDir(idxDir, gen, "params"), s"$idxDir/rotation",
-          RabitqIndex.modelSidecarDir(idxDir, gen, "centroids")).foreach { t =>
-        assert(jobsOf(RabitqIndex.sidecarOf(spark, t)) == 0,
-          s"opening the model table $t must run no job")
-      }
-      // the full opens: their frames add no job to the model's collects
-      val modelJobs = jobsOf(RabitqIndex.modelOfGen(spark, idxDir, gen))
-      assert(jobsOf(RabitqIndex.loadLive(spark, idxDir)) == modelJobs,
-        "loadLive's frames must add no job to its model read")
+      assert(jobsOf(RabitqIndex.modelOfGen(idxDir, gen)) == 0,
+        "reading the generation's model must run no job")
+      // the full opens: model and frames together run no job
+      assert(jobsOf(RabitqIndex.loadLive(spark, idxDir)) == 0,
+        "loadLive must run no job")
       assert(jobsOf(RabitqIndex.loadLiveProbed(spark, idxDir,
-          (_, _) => probed.toSeq)) == modelJobs,
-        "loadLiveProbed's frames must add no job to its model read")
+          (_, _) => probed.toSeq)) == 0,
+        "loadLiveProbed must run no job")
     } finally sc.removeSparkListener(listener)
 
     // the rows are those of the plain per-source reads
@@ -271,7 +273,7 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       val extra = emb.limit(20)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       graft.streaming.IdempotentSink.appendBatch(
-        RabitqIndex.appendVectors(spark, RabitqIndex.modelOfGen(spark, idxDir, gen), extra),
+        RabitqIndex.appendVectors(spark, RabitqIndex.modelOfGen(idxDir, gen), extra),
         gen, idxDir, "open-add", 0L, partitionCols = Seq("cluster_id"))
       spark.catalog.refreshByPath(gen)
       assert(cached.count() == n0 + 20, "the refreshed relation must read the appended rows")
@@ -917,5 +919,143 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(diskDefault != disk,
       "expected the scaled default to differ from the 1.0 override at a " +
         "tight budget — the model default appears to be ignored")
+  }
+
+  private def bits(m: Array[Array[Float]]): Seq[Int] =
+    m.flatten.map(java.lang.Float.floatToRawIntBits).toSeq
+
+  private def assertSameModel(got: RabitqModel, want: RabitqModel, tag: String): Unit = {
+    assert(got.params == want.params, s"$tag: params")
+    assert(bits(got.rotation) == bits(want.rotation), s"$tag: rotation bits")
+    assert(bits(got.centroids) == bits(want.centroids), s"$tag: centroid bits")
+    assert(bits(Array(got.bias)) == bits(Array(want.bias)), s"$tag: bias bits")
+  }
+
+  test("model per generation: save → maintain → compact → rebalance leaves " +
+      "every retained generation's model loadable with 0 Spark jobs and " +
+      "bit-identical, and a generation without `_model.json` is refused") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val idxDir = java.nio.file.Files.createTempDirectory("gen_model").toString
+    // skew: model fit on the lower halfspace, layout holding everything
+    // (the q120 recipe), so the rebalance really splits
+    val lowerHalf = emb.filter(element_at(col("embedding"), 1) < 0f)
+    val (m0, _) = RabitqIndex.build(spark, lowerHalf, numClusters = 8, seed = 7L)
+    RabitqIndex.save(spark, m0,
+      RabitqIndex.appendVectors(spark, m0, emb.filter(col("vec_id") % 10 =!= 0)), idxDir)
+
+    // maintain: stream in the held-out tenth, tombstone a few saved rows
+    val ops = java.nio.file.Files.createTempDirectory("gen_model_ops").toString
+    emb.filter(col("vec_id") % 10 === 0)
+      .select(lit("add").as("op"), col("vec_id"), col("embedding"))
+      .unionByName(emb.filter(col("vec_id") % 17 === 3 && col("vec_id") % 10 =!= 0)
+        .select(lit("del").as("op"), col("vec_id"),
+          lit(null).cast("array<float>").as("embedding")))
+      .coalesce(1).write.parquet(s"$ops/in")
+    graft.streaming.VecsStream.maintainIndex(spark, s"$ops/in", idxDir,
+      s"$ops/ckpt", m0, "gen_model_maint")
+    assert(RabitqIndex.tombstoneLogIfAny(idxDir).nonEmpty,
+      "gate is vacuous: the maintain stream wrote no tombstone")
+
+    graft.streaming.VecsStream.compactIndex(spark, idxDir)
+    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
+    val rep = RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
+    assert(rep.numClustersAfter > rep.numClustersBefore,
+      s"gate is vacuous: the skewed layout did not split ($rep)")
+    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v3")
+    val gens = Seq("index", "index-v2", "index-v3")
+    gens.foreach(g => assert(new java.io.File(s"$idxDir/$g/_model.json").isFile,
+      s"$g carries no model file"))
+
+    // jobs submitted under one job group; a marker job in its own group
+    // closes each window, so every earlier job start has reached the
+    // listener when the count is read
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    var window = 0
+    def jobsOf[A](body: => A): (Int, A) = {
+      window += 1
+      val g = s"model-load-$window"
+      sc.setJobGroup(g, g)
+      val a = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$g-end", s"$g-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains(s"$g-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(s"$g-end"), "the marker job never reached the listener")
+      (started.toArray.count(_ == g), a)
+    }
+    val loaded: Map[String, RabitqModel] = {
+      sc.addSparkListener(listener)
+      try {
+        val (liveJobs, (liveModel, _)) = jobsOf(RabitqIndex.loadLive(spark, idxDir))
+        assert(liveJobs == 0, s"loadLive ran $liveJobs Spark jobs")
+        val byGen = gens.map { g =>
+          val (modelJobs, m) = jobsOf(RabitqIndex.modelOfGen(idxDir, s"$idxDir/$g"))
+          assert(modelJobs == 0, s"modelOfGen($g) ran $modelJobs Spark jobs")
+          val (atJobs, (atModel, _)) = jobsOf(RabitqIndex.loadAt(spark, idxDir, g))
+          assert(atJobs == 0, s"loadAt($g) ran $atJobs Spark jobs")
+          assertSameModel(atModel, m, s"loadAt($g) vs modelOfGen($g)")
+          g -> m
+        }.toMap
+        assertSameModel(liveModel, byGen("index-v3"), "loadLive vs the active generation")
+        byGen
+      } finally sc.removeSparkListener(listener)
+    }
+
+    // the saved and the compacted generation hold the saved model
+    assertSameModel(loaded("index"), m0, "index")
+    assertSameModel(loaded("index-v2"), m0, "index-v2")
+    // the rebalanced generation holds the grown model: the saved one
+    // with the split clusters' centroids replaced and the new ones
+    // appended ...
+    val m3 = loaded("index-v3")
+    val k0 = m0.params.numClusters
+    assert(m3.params == m0.params.copy(numClusters = rep.numClustersAfter))
+    assert(bits(m3.rotation) == bits(m0.rotation) &&
+      bits(Array(m3.bias)) == bits(Array(m0.bias)))
+    val untouched = (0 until k0).filterNot(rep.split.contains)
+    assert(untouched.nonEmpty, "gate is vacuous: every cluster split")
+    assert(bits(untouched.map(m3.centroids).toArray) == bits(untouched.map(m0.centroids).toArray),
+      "untouched centroids must be the saved model's, bit for bit")
+    // ... and exactly the model its re-encoded rows were encoded with:
+    // re-encoding them with the loaded model reproduces every stored bit
+    val cols = Seq("vec_id", "cluster_id", "code", "factor_ip", "factor_ppc",
+      "error_bound", "cds").map(col)
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.select(cols: _*).collect()
+      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val own = spark.read.parquet(s"$idxDir/index-v3")
+    val stored = rows(own)
+    assert(stored.map(_(1).asInstanceOf[Int]).toSet.exists(_ >= k0),
+      "gate is vacuous: no re-encoded row landed in a new cluster")
+    assert(rows(RabitqIndex.appendVectors(spark, m3,
+        emb.join(own.select("vec_id"), Seq("vec_id")))) == stored,
+      "the rebalanced generation's model is not the one its rows were encoded with")
+
+    // refusal: the active generation's model file replaced by the parquet
+    // model tables an older build wrote, at the root and in the generation
+    val active = s"$idxDir/index-v3"
+    assert(new java.io.File(s"$active/_model.json").delete())
+    val p = m3.params
+    m3.rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
+      .toDF("row_id", "row").coalesce(1).write.parquet(s"$idxDir/rotation")
+    for (d <- Seq(s"$idxDir/centroids", s"$active/_centroids"))
+      m3.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cluster_id", "centroid").coalesce(1).write.parquet(d)
+    for (d <- Seq(s"$idxDir/params", s"$active/_params"))
+      Seq((p.dim, p.padDim, p.numClusters, p.seed, m3.bias.toSeq))
+        .toDF("dim", "pad_dim", "num_clusters", "seed", "bias").coalesce(1).write.parquet(d)
+    val e = intercept[IllegalStateException](RabitqIndex.loadLive(spark, idxDir))
+    assert(e.getMessage.contains(s"$active/_model.json") && e.getMessage.contains("re-save"),
+      e.getMessage)
+    // a retained retired generation still loads from its own model file
+    assertSameModel(RabitqIndex.loadAt(spark, idxDir, "index-v2")._1, m0,
+      "index-v2 after the active generation lost its model")
   }
 }

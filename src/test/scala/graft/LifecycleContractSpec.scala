@@ -368,6 +368,27 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(hits.isEmpty, s"$path: layout I/O bypassing the handle:\n  " +
         hits.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("\n  "))
     }
+    // one model store: a generation's `_model.json`. No parquet model
+    // table (root `rotation`/`centroids`/`params`, generation-local
+    // `_centroids`/`_params`) is written or read on these paths. The
+    // deleted reader's name is spelled as a class so that this file does
+    // not match a repo-wide grep for it.
+    val modelTable = java.util.regex.Pattern.compile(
+      "(?<![A-Za-z0-9])_(centroids|params)\\b|\\bsidecarO[f]\\b" +
+        "|\\.parquet\\([^)]*/(rotation|centroids|params)\"\\)")
+    for (rel <- Seq("operators/RabitqIndex.scala", "streaming/VecsStream.scala",
+        "SparkEntry.scala")) {
+      val path = repoRoot.resolve(s"src/main/scala/graft/$rel")
+      assert(java.nio.file.Files.isRegularFile(path), s"grep gate target missing: $path")
+      val lines = java.nio.file.Files.readAllLines(path).toArray(Array.empty[String])
+      val hits = lines.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        modelTable.matcher(l).find() &&
+          !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/**")
+      }
+      assert(hits.isEmpty, s"$path: a parquet model table beside `_model.json`:\n  " +
+        hits.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("\n  "))
+    }
   }
 
   test("two protocols at once: a PosixCommit lifecycle and a CondPutCommit " +
@@ -461,12 +482,12 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new java.io.File(s"$idxDir/index").isDirectory,
       "the old generation must stay intact for retention-window readers")
     assert(new java.io.File(s"$idxDir/_retired/index").isFile)
-    // the GROWN model rides inside the generation; the layout-root
-    // pair still holds the pre-split model (nothing reader-visible
-    // was replaced in place)
-    assert(new java.io.File(s"$idxDir/index-v2/_centroids").isDirectory)
-    val rootK = spark.read.parquet(s"$idxDir/centroids").count()
-    assert(rootK == rep.numClustersBefore.toLong)
+    // the GROWN model rides inside the generation; the retired
+    // generation still holds the pre-split model (nothing
+    // reader-visible was replaced in place)
+    assert(new java.io.File(s"$idxDir/index-v2/_model.json").isFile)
+    val retiredK = RabitqIndex.modelOfGen(layout, s"$idxDir/index").centroids.length
+    assert(retiredK == rep.numClustersBefore)
     val (m2, live) = RabitqIndex.loadLive(spark, layout)
     assert(m2.params.numClusters > 4,
       "load() must resolve the generation-local (grown) model sidecars")

@@ -210,13 +210,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("model JSON sidecar roundtrips") {
     val (model, _) = RabitqIndex.build(spark, emb, numClusters = 4, seed = 2L)
     val dir = java.nio.file.Files.createTempDirectory("mj").toString
-    RabitqIndex.dumpModelJson(model, dir)
-    assert(new java.io.File(s"$dir/model.json").isFile)
-    val back = RabitqIndex.loadModelJson(dir)
+    RabitqIndex.writeModel(dir, dir, model)
+    assert(new java.io.File(s"$dir/_model.json").isFile)
+    val back = RabitqIndex.modelOfGen(dir, dir)
+    def bits(m: Array[Array[Float]]) = m.flatten.map(java.lang.Float.floatToRawIntBits).toSeq
     assert(back.params == model.params)
-    assert(back.rotation.flatMap(_.toList).sameElements(model.rotation.flatMap(_.toList)))
-    assert(back.centroids.flatMap(_.toList).sameElements(model.centroids.flatMap(_.toList)))
-    assert(back.bias.sameElements(model.bias))
+    assert(bits(back.rotation) == bits(model.rotation))
+    assert(bits(back.centroids) == bits(model.centroids))
+    assert(bits(Array(back.bias)) == bits(Array(model.bias)))
+    // a file whose params disagree with its blobs is refused, not decoded
+    val f = java.nio.file.Paths.get(dir, "_model.json")
+    val k = model.params.numClusters
+    java.nio.file.Files.writeString(f, java.nio.file.Files.readString(f)
+      .replace(s""""num_clusters":$k,""", s""""num_clusters":${k + 1},"""))
+    val e = intercept[IllegalArgumentException](RabitqIndex.modelOfGen(dir, dir))
+    assert(e.getMessage.contains("\"centroids\""), e.getMessage)
   }
 
   test("BASELINE.md e2e recall gate: sf0.1, recall@10 >= 0.9 at nprobe >= k/4") {
@@ -1747,7 +1755,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.streaming.VecsStream.maintainIndex(spark, s"$srcDir/in", idxDir,
       s"$srcDir/ckpt", model, "maint_spec", maxFilesPerTrigger = Some(1))
     val expected = ((0L until 200L) ++ (200L until 260L)).toSet -- delIds
-    val (m2, live) = graft.streaming.VecsStream.loadMaintained(spark, idxDir)
+    val (m2, live) = RabitqIndex.loadLive(spark, idxDir)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet == expected,
       "live set after stream must be (initial ∪ adds) ∖ dels")
     // exactness through the maintained index: full probe + full rerank
@@ -1771,7 +1779,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.streaming.VecsStream.compactIndex(spark, idxDir)
     assert(!new java.io.File(RabitqIndex.tombstoneLogDir(idxDir)).exists,
       "active generation must start with no log")
-    val (m3, live2) = graft.streaming.VecsStream.loadMaintained(spark, idxDir)
+    val (m3, live2) = RabitqIndex.loadLive(spark, idxDir)
     assert(live2.select("vec_id").collect().map(_.getLong(0)).toSet == expected)
     val res2 = RabitqQuery.topK(spark, m3, live2, baseFinal, qs, 4, 10, 4096)
     assert(res2.collect().map(_.toSeq).toSet == resRows)
@@ -2600,7 +2608,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"(the staged write) — saw ${jobs.get()}")
     // and the stream still must not have manufactured a del log
     assert(RabitqIndex.tombstoneLogIfAny(idxDir).isEmpty)
-    val (_, live) = graft.streaming.VecsStream.loadMaintained(spark, idxDir)
+    val (_, live) = RabitqIndex.loadLive(spark, idxDir)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet ==
       (0L until 160L).toSet)
   }
