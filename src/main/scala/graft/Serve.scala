@@ -4,7 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -23,12 +23,11 @@ object Serve {
   /** One immutable serving snapshot: swapped atomically by `/reload`,
     * read once per request — the unit of consistency under mutation.
     * `nRows`/`nTombstones` are the layout stats captured at load/reload
-    * time (the index snapshot is already tombstone-anti-joined, so
-    * the debt half of the health report must ride in the snapshot —
-    * it's what schedules compaction).
+    * time (the hot tier holds only live rows, so the debt half of the
+    * health report must ride in the snapshot — it's what schedules
+    * compaction).
     */
-  private final case class Engine(model: RabitqModel, index: org.apache.spark.sql.DataFrame,
-                                  base: org.apache.spark.sql.DataFrame, hot: HotTier,
+  private final case class Engine(model: RabitqModel, hot: HotTier,
                                   nRows: Long, nTombstones: Long)
 
   // must be set before the HttpServer class initializes: without
@@ -64,33 +63,27 @@ object Serve {
   def gracefulStop(server: HttpServer, drainSeconds: Int = 5): Unit =
     server.stop(drainSeconds)
 
-  /** Build the index, snapshot base + index, and start serving. Returns the
-    * server (caller stops it).
+  /** Build the index, snapshot it into a hot tier, and start serving.
+    * Returns the server (caller stops it).
     *
-    * Two engines per request (reference-parity default, Spark opt-in):
-    *  - default: the driver-memory HotTier — microsecond arithmetic, no
-    *    job scheduling, byte-identical results (the reference service's
-    *    in-RAM shape, `crates/service/src/main.rs:68-96`);
-    *  - `"engine":"spark"` in the body: the distributed plan
-    *    (`RabitqQuery.topK`) — the path that scales past driver RAM.
+    * One engine answers every request: the driver-memory `HotTier` —
+    * microsecond arithmetic, no job scheduling (the reference service's
+    * in-RAM shape, `crates/service/src/main.rs:68-96`). Its results are
+    * byte-identical to the batch ANN queries (`topK`, `filteredTopK`) at
+    * the same parameters (spec-asserted); an index beyond driver RAM is
+    * queried through those batch paths, not this tier. A request's
+    * `"engine"` field, if any, is ignored.
     */
   def start(spark: SparkSession, sfDir: String, port: Int,
             indexDir: Option[String] = None): HttpServer = {
-    // engine frames are eager LOCAL CHECKPOINTS, not persist(): Spark
-    // keys its cache by analyzed plan, so a persisted read of the base or
-    // layout path would also answer every later read of that path in the
-    // session — and VecsStream.maintainIndex publishes by staging +
-    // rename, which no writer recaches, so a following compactIndex would
-    // rewrite the stale cached layout (dropping the streamed adds) and
-    // /reload would serve it. A checkpoint matches no other plan; the
-    // ContextCleaner reclaims its blocks once no engine snapshot (and so
-    // no request) holds it.
     val basePath = s"$sfDir/embeddings.parquet"
     // load a persisted index when given one (the reference service's cold
     // start: model from disk, no training); otherwise train in-process.
     val engine = indexDir match {
-      case Some(dir) => loadEngine(spark, dir, basePath)._1
+      case Some(dir) => loadEngine(spark, dir, basePath)
       case None =>
+        // checkpointed: k-means iterates over the base, and a checkpoint
+        // (unlike persist()) matches no later read of the same path
         val base = spark.read.parquet(basePath).localCheckpoint()
         // √n clusters (IVF rule of thumb, clamped): a fixed small k makes
         // every query rough-scan n·nprobe/k candidates — at 200k vectors
@@ -99,26 +92,25 @@ object Serve {
         val nBase = base.count()
         val k = math.max(16, math.min(1024, math.sqrt(nBase.toDouble).toInt))
         // sampled fit beyond the driver-friendly range, exact fit below it
-        val (model, index0) =
+        val (model, index) =
           if (nBase > 100000L)
             RabitqIndex.buildSampled(spark, base, numClusters = k, sampleN = 100000L, seed = 42L)
           else RabitqIndex.build(spark, base, numClusters = k, seed = 42L)
-        val index = withLabels(index0, base).localCheckpoint()
+        val hot = HotTier.fromIndex(spark, model, index, base)
         // a freshly trained engine has no tombstone log: every row is live
-        val nLive = index.count()
-        Engine(model, index, base, HotTier.fromIndex(spark, model, index, base), nLive, 0L)
+        Engine(model, hot, hot.nIndexed, 0L)
     }
     // SERVING UNDER MUTATION: every request reads ONE immutable Engine
     // snapshot from this reference, so an index swap (`/reload`) is
     // atomic per request — a query sees entirely the old or entirely the
-    // new index, never a torn mix of model/index/base/hot-tier. The
+    // new index, never a torn mix of model and hot tier. The
     // reference serves read-only (`crates/service`); composing its
     // mutation boxes (README:18) with serving needs exactly this
     // copy-on-swap discipline.
     // probe-budget scale for a rebalance-grown layout rides in the MODEL
-    // now (RabitqModel.rerankScale, populated by load from the BUILT_K
-    // sidecar) — every engine leg reads it from there, so the serving
-    // tier and the batch paths can never disagree.
+    // (RabitqModel.rerankScale, populated by load from the BUILT_K
+    // sidecar) — the serving tier and the batch paths both read it from
+    // there, so they can never disagree.
     val engineRef = new java.util.concurrent.atomic.AtomicReference(engine)
     // per-server counter (a JVM-global would bleed across serve instances)
     val queriesServed = new AtomicLong(0)
@@ -135,15 +127,14 @@ object Serve {
     // IndexHealth describeIndex renders, at rebalanceIndex's default
     // maxSizeFactor — the spec pins field-for-field equality with
     // describeIndex over the same dir, tombstone-debt fields included.
-    // Served from the index snapshot (tombstones were already
-    // anti-joined at load; the raw/tombstone counts ride in the
-    // snapshot), so the cost is one numClusters-row aggregate per call.
+    // Served from the hot tier's per-cluster sizes (it holds only live
+    // rows; the raw/tombstone counts ride in the snapshot), so a call
+    // runs no Spark job.
     server.createContext("/describe", (ex: HttpExchange) => {
       try {
         val eng = engineRef.get()
         val h = RabitqIndex.IndexHealth(eng.model, eng.nRows, eng.nTombstones,
-          eng.index.groupBy("cluster_id").count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)))
+          eng.hot.clusterSizes)
         val oversized = h.oversized(1.5)
         respond(ex, 200,
           s"""{"num_clusters":${h.model.params.numClusters},"n_rows":${h.nRows},""" +
@@ -171,40 +162,17 @@ object Serve {
         // numClusters/BUILT_K (model.rerankScale) like the batch paths —
         // the measured post-split recall loss is shortlist displacement,
         // not probe coverage (RabitqIndex.scaledRerank), so the probe
-        // itself is left as requested. The spark leg scales INSIDE
-        // RabitqQuery.topK (the model carries the factor), so only the
-        // hot-tier leg applies it here — both legs see the same budget.
+        // itself is left as requested.
         val k = eng.model.params.numClusters
         val probe = parseInt(body, "probe")
           .getOrElse(math.max(8, (k + 1) / 2))
-        val rerankRaw = math.max(4 * topK, 64)
-        val rerank = math.ceil(rerankRaw * eng.model.rerankScale).toInt
+        val rerank = math.ceil(math.max(4 * topK, 64) * eng.model.rerankScale).toInt
         // optional "label": filtered vector search on the serving path —
         // the batch filteredTopK composition (selectivity-aware probe
         // widening + in-scan label skip), reference-style metadata-aware
         // serving the reference itself lacks
         val label = parseInt(body, "label").map(_.toLong)
-        val results: Array[(Long, Double)] =
-          if (parseString(body, "engine").contains("spark")) {
-            import spark.implicits._
-            val qDf = Seq((0L, vec.toSeq)).toDF("query_id", "qvec")
-            val res = label match {
-              case Some(l) =>
-                // the hot tier's label histogram IS the catalog statistic,
-                // so both engines widen identically → identical results.
-                // rerankRaw, not rerank: topK scales by model.rerankScale
-                // internally — passing the pre-scaled budget would square
-                // the factor
-                RabitqQuery.filteredTopK(spark, eng.model, eng.index, eng.base,
-                  qDf, col("label") === l, nprobe = probe, topk = topK,
-                  rerank = rerankRaw, selectivity = Some(eng.hot.labelSelectivity(l)))
-              case None =>
-                RabitqQuery.topK(spark, eng.model, eng.index, eng.base, qDf,
-                  nprobe = probe, topk = topK, rerank = rerankRaw)
-            }
-            res.orderBy(col("rank")).select("neighbor_id", "dist").collect()
-              .map(r => (r.getLong(0), r.getDouble(1)))
-          } else eng.hot.query(vec, probe, topK, rerank, label)
+        val results = eng.hot.query(vec, probe, topK, rerank, label)
         queriesServed.incrementAndGet()
         val ids = results.map(_._1).mkString("[", ",", "]")
         val scores = results.map(_._2).mkString("[", ",", "]")
@@ -218,8 +186,8 @@ object Serve {
     // POST /reload {"index_dir": "...", "base": "<parquet path>"}: load a
     // saved (possibly mutated — appendVectors/upsertVectors output) index
     // and its base vectors, build the new hot tier OFF the serving path,
-    // then swap atomically. In-flight queries keep the old snapshot; its
-    // checkpoint blocks are reclaimed once no request holds it (see start).
+    // then swap atomically. In-flight queries keep the old snapshot until
+    // they answer.
     server.createContext("/reload", (ex: HttpExchange) => {
       try {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -227,22 +195,19 @@ object Serve {
           .getOrElse(throw new IllegalArgumentException("missing 'index_dir'"))
         val basePath = parseString(body, "base")
           .getOrElse(s"$sfDir/embeddings.parquet")
-        val nBase = Overlap.labelled(spark, s"reload: $idxDir") {
-          val (eng, n) = loadEngine(spark, idxDir, basePath)
-          engineRef.set(eng)
-          n
-        }
-        respond(ex, 200, s"""{"reloaded":true,"n_base":$nBase}""")
+        val eng = Overlap.labelled(spark, s"reload: $idxDir")(
+          loadEngine(spark, idxDir, basePath))
+        engineRef.set(eng)
+        respond(ex, 200, s"""{"reloaded":true,"n_base":${eng.hot.nBase}}""")
       } catch {
         case e: Throwable =>
           val msg = jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
           respond(ex, 400, s"""{"error":"$msg"}""")
       }
     })
-    // pooled: the Spark scheduler runs concurrent jobs from separate
-    // threads (FIFO across stages), so overlapping requests pipeline
-    // instead of queueing behind one another. Daemon threads — the pool
-    // must not outlive server.stop() and pin the JVM.
+    // pooled: overlapping requests are answered concurrently from their
+    // own snapshots, and a /reload's Spark jobs hold up no query. Daemon
+    // threads — the pool must not outlive server.stop() and pin the JVM.
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8,
       (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t }))
     server.start()
@@ -252,76 +217,33 @@ object Serve {
   /** Build a serving snapshot of the saved layout at `idxDir` over the
     * base at `basePath` — `start` (given an index dir) and `/reload`
     * both build through here: the live model and index, the base
-    * validated against the index's dim, both frames checkpointed, the
-    * layout stats /describe reports and the hot tier. Returns the engine
-    * and the base's row count.
+    * validated against the index's dim, the layout stats /describe
+    * reports and the hot tier (which checks the base against the index
+    * rows).
     */
   private def loadEngine(spark: SparkSession, idxDir: String,
-                         basePath: String): (Engine, Long) = {
+                         basePath: String): Engine = {
     // loadLive, not load: a maintained layout (VecsStream.maintainIndex)
     // carries an uncompacted tombstone log, and serving the raw layout
     // would RESURRECT deleted vectors — the anti-join is a no-op when no
     // log exists
-    val (model, indexRaw) = RabitqIndex.loadLive(spark, idxDir)
+    val (model, index) = RabitqIndex.loadLive(spark, idxDir)
     // fail fast on a mismatched saved index (wrong dataset/scale factor)
-    // BEFORE snapshotting: a silent mismatch surfaces later as per-query
-    // NPEs (index vec_ids absent from the base map) or quietly wrong
-    // neighbors, and an empty base would serve 200s that return nothing
-    val baseRaw = spark.read.parquet(basePath)
-    val baseDim = baseRaw.select(size(col("embedding"))).limit(1).collect()
+    // BEFORE collecting: an empty base would serve 200s that return nothing
+    val base = spark.read.parquet(basePath)
+    val baseDim = base.select(size(col("embedding"))).limit(1).collect()
       .headOption.map(_.getInt(0))
       .getOrElse(throw new IllegalArgumentException(
         s"base embeddings at $basePath are empty — nothing to serve"))
     require(model.params.dim == baseDim,
       s"saved index dim ${model.params.dim} != base embedding dim $baseDim — " +
         s"index at $idxDir was built from a different dataset")
-    val base = baseRaw.localCheckpoint()
-    val index = withLabels(indexRaw, base).localCheckpoint()
-    val nBase = base.count()
-    // tombstone debt for /describe: the snapshot is already live
-    // (anti-joined), so the raw-row/tombstone half comes from the layout
-    // once per engine build
+    // tombstone debt for /describe: the hot tier holds only live rows,
+    // so the raw-row/tombstone half comes from the layout once per
+    // engine build
     val (nRows, nTomb) = RabitqIndex.layoutStats(spark, idxDir)
-    (Engine(model, index, base, HotTier.fromIndex(spark, model, index, base),
-      nRows, nTomb), nBase)
+    Engine(model, HotTier.fromIndex(spark, model, index, base), nRows, nTomb)
   }
-
-  /** The filtered-vector-search layout at serve time: when the base
-    * carries a `label` column and the index rows don't already, join it
-    * in ONCE at engine build (the annIndexLabeled shape) — label
-    * predicates then filter index rows directly instead of joining base
-    * per query. A label-free corpus serves exactly as before.
-    */
-  private def withLabels(index: DataFrame, base: DataFrame): DataFrame =
-    if (base.columns.contains("label") && !index.columns.contains("label")) {
-      // LEFT join + coverage check, not inner: an inner join would
-      // silently drop index rows whose vec_id is missing from the base
-      // (e.g. an upserted index reloaded against a stale base) and the
-      // engine would serve 200s that can never return those vectors.
-      // Mismatches must fail the build/reload loudly instead. The extra
-      // counts run once per engine build, beside the existing warm-up
-      // counts.
-      // Uniqueness first: a base with DUPLICATED vec_ids would silently
-      // multiply index rows through the join — inflated candidate sets
-      // and duplicate neighbors in every response.
-      val idCounts = base.agg(
-        org.apache.spark.sql.functions.count(col("vec_id")).as("n"),
-        org.apache.spark.sql.functions.countDistinct(col("vec_id")).as("nd")).head()
-      require(idCounts.getLong(0) == idCounts.getLong(1),
-        s"labeled base has duplicate vec_ids (${idCounts.getLong(0)} rows, " +
-          s"${idCounts.getLong(1)} distinct) — joining labels would " +
-          "multiply index rows; fix the base before serving")
-      val lbl = base.select(col("vec_id"), col("label"),
-        org.apache.spark.sql.functions.lit(true).as("__covered"))
-      val joined = index.join(lbl, Seq("vec_id"), "left_outer")
-      val missing = joined.filter(
-        !org.apache.spark.sql.functions.coalesce(col("__covered"),
-          org.apache.spark.sql.functions.lit(false))).count()
-      require(missing == 0L,
-        s"$missing index rows have no vec_id in the labeled base — " +
-          "index/base mismatch (wrong base path for this index_dir?)")
-      joined.drop("__covered")
-    } else index
 
   /** Escape quotes/backslashes/control chars so exception messages can't
     * break the JSON error body.

@@ -13,7 +13,7 @@ import graft.functions.VectorOps
   *
   * SIZE BOUND: `fromIndex` collects index AND base to the driver — a
   * RAM-sized-index contract identical to the reference service's. At
-  * index sizes beyond driver memory, serve through the Spark path
+  * index sizes beyond driver memory, query through the batch Spark path
   * (`RabitqQuery.topKFromDisk` + partition pruning) instead.
   *
   * RESULT PARITY: every arithmetic step replicates the Spark plan
@@ -47,11 +47,24 @@ final class HotTier private (
   def hasLabels: Boolean = labels != null
 
   /** Fraction of indexed vectors carrying `label` — the serving tier's
-    * catalog statistic, fed to the widening rule and to the Spark
-    * engine path's `filteredTopK(selectivity = ...)`.
+    * catalog statistic, fed to the probe-widening rule. It equals the
+    * count aggregate `RabitqQuery.filteredTopK` measures, which is why
+    * both widen identically.
     */
   def labelSelectivity(label: Long): Double =
     if (nTotal == 0) 0.0 else labelCounts.getOrElse(label, 0L).toDouble / nTotal
+
+  /** Live rows per cluster (clusters with at least one row) — the sizes
+    * `RabitqIndex.IndexHealth` reports, read from the collected slots.
+    */
+  def clusterSizes: Array[(Int, Long)] =
+    slotOf.toArray.map { case (c, s) => c -> vecIds(s).length.toLong }
+
+  /** Number of indexed (live) vectors held. */
+  def nIndexed: Long = nTotal
+
+  /** Number of base vectors held for the exact rerank. */
+  def nBase: Long = baseVecs.size.toLong
 
   /** Single-query top-k: (neighbor_id, dist) sorted by (dist, id).
     *
@@ -106,16 +119,35 @@ final class HotTier private (
 object HotTier {
 
   /** Collect the (RAM-sized, by contract) index + base into driver arrays
-    * grouped by cluster. A `label` column in the index rows (the
-    * filtered-vector-search layout) is picked up automatically and
-    * enables the label-filtered query path.
+    * grouped by cluster. The label that enables the label-filtered query
+    * path comes from the index rows when they carry a `label` column
+    * (the filtered-vector-search layout), otherwise from the base's
+    * `label` column when it has one.
+    *
+    * The base is checked on the collected arrays, for every base: its
+    * `vec_id`s must be unique (a duplicate would silently keep one of
+    * two embeddings), and every index row's `vec_id` must be in it (a
+    * missing one would fail every query that shortlists it). Either
+    * violation throws `IllegalArgumentException` before anything serves.
     */
   def fromIndex(spark: SparkSession, model: RabitqModel, index: DataFrame,
                 base: DataFrame): HotTier = {
-    val labeled = index.columns.contains("label")
+    val indexLabeled = index.columns.contains("label")
+    val baseLabeled = !indexLabeled && base.columns.contains("label")
     val cols = Seq("vec_id", "cluster_id", "code", "factor_ip",
-      "factor_ppc", "cds") ++ (if (labeled) Seq("label") else Nil)
+      "factor_ppc", "cds") ++ (if (indexLabeled) Seq("label") else Nil)
     val rows = index.select(cols.head, cols.tail: _*).collect()
+    val baseCols = Seq("vec_id", "embedding") ++ (if (baseLabeled) Seq("label") else Nil)
+    val baseRows = base.select(baseCols.head, baseCols.tail: _*).collect()
+    val baseVecs = new java.util.HashMap[java.lang.Long, Array[Float]](baseRows.length * 2)
+    baseRows.foreach(r => baseVecs.put(r.getLong(0), r.getSeq[Float](1).toArray))
+    require(baseVecs.size == baseRows.length,
+      s"base has duplicate vec_ids (${baseRows.length} rows, ${baseVecs.size} " +
+        "distinct) — fix the base before serving")
+    val missing = rows.count(r => !baseVecs.containsKey(r.getLong(0)))
+    require(missing == 0,
+      s"$missing index rows have no vec_id in the base — " +
+        "index/base mismatch (wrong base path for this index_dir?)")
     val byCluster = rows.groupBy(_.getInt(1)).toArray.sortBy(_._1)
     val slotOf = byCluster.map(_._1).zipWithIndex.toMap
     val vecIds = byCluster.map(_._2.map(_.getLong(0)))
@@ -124,17 +156,18 @@ object HotTier {
     val fppc = byCluster.map(_._2.map(_.getFloat(4)))
     val cds = byCluster.map(_._2.map(_.getFloat(5)))
     val labels: Array[Array[Long]] =
-      if (labeled) byCluster.map(_._2.map(_.getAs[Number](6).longValue)) else null
+      if (indexLabeled) byCluster.map(_._2.map(_.getAs[Number](6).longValue))
+      else if (baseLabeled) {
+        val labelOf = baseRows.iterator
+          .map(r => r.getLong(0) -> r.getAs[Number](2).longValue).toMap
+        vecIds.map(_.map(labelOf))
+      } else null
     val labelCounts: Map[Long, Long] =
-      if (labeled)
+      if (labels != null)
         labels.iterator.flatten.foldLeft(Map.empty[Long, Long]) { (m, l) =>
           m.updated(l, m.getOrElse(l, 0L) + 1L)
         }
       else Map.empty
-    val baseVecs = new java.util.HashMap[java.lang.Long, Array[Float]]()
-    base.select("vec_id", "embedding").collect().foreach { r =>
-      baseVecs.put(r.getLong(0), r.getSeq[Float](1).toArray)
-    }
     new HotTier(model, slotOf, vecIds, codes, fip, fppc, cds, baseVecs,
       labels, labelCounts, rows.length.toLong)
   }

@@ -672,6 +672,29 @@ object RabitqIndex {
       SeededRelation.footerSchema(spark, f.getPath), None, root, initial, () => files()))
   }
 
+  /** `scan` without the rows generation `gen`'s tombstone log deletes
+    * (an id-only anti-join, broadcast at any realistic delete rate);
+    * `scan` itself, plan-identical, when the generation has no log.
+    */
+  private def withoutTombstones(spark: SparkSession, layout: Layout, gen: String,
+                                scan: DataFrame): DataFrame =
+    logScanOfGen(spark, layout, gen).fold(scan)(log =>
+      scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
+
+  /** Live per-cluster sizes from parquet footers alone (zero data
+    * pages), when footers are exact: the generation has no tombstone
+    * log (else the live sizes need the anti-join) and no promoted-but-
+    * unmarked batch exists (footers count every file, the committed
+    * scans exclude that batch). None otherwise, or for a partitionless
+    * layout — the caller then counts the committed live scan.
+    */
+  private def liveSizesFromFooters(spark: SparkSession, layout: Layout,
+                                   gen: String): Option[Array[(Int, Long)]] =
+    if (tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(gen)).isEmpty &&
+        inProgressPrefixes(layout).isEmpty)
+      clusterSizesFromFooters(spark, layout, gen)
+    else None
+
   /** Mark a generation as RETIRED (superseded by a compaction swap) —
     * the marker's mtime starts the retention clock [[vacuumIndex]]
     * reclaims it on. Written BEFORE the MANIFEST swap so no state exists
@@ -1139,22 +1162,14 @@ object RabitqIndex {
     val gen = indexDataDir(layout)
     val model = known.map(_._1).getOrElse(modelOfGen(layout, gen))
     val index = scanOfGen(spark, layout, gen)
-    val live = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
-      .fold(index)(log => index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
+    val live = withoutTombstones(spark, layout, LayoutFs.baseName(gen), index)
     spark.sparkContext.setJobDescription(s"rebalance: sizes ${layout.dir}")
+    // footer metadata when exact (describeIndex's fast path), else the
+    // committed live scan
     val sizes = known.map(_._2).getOrElse {
-      // with no tombstone log the live sizes are pure footer metadata
-      // (guide §6 — zero data pages), exactly describeIndex's fast path;
-      // crashed-append debris present (in-progress batches) or a
-      // partitionless layout falls back to the committed scan
-      val footer =
-        if (tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(gen)).isEmpty &&
-            inProgressPrefixes(layout).isEmpty)
-          clusterSizesFromFooters(spark, layout, gen)
-        else None
-      footer.fold(
+      liveSizesFromFooters(spark, layout, gen).getOrElse(
         live.groupBy("cluster_id").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap)(_.toMap)
+          .map(r => r.getInt(0) -> r.getLong(1))).toMap
     }
     val total = sizes.values.sum
     val k0 = model.centroids.length
@@ -1910,19 +1925,13 @@ object RabitqIndex {
     // the FULL live scan of the SAME resolved generation, built only if
     // the probe derivation asks for it (the measured-selectivity
     // fallback) — never a second MANIFEST resolution or model load
-    def fullLive(): DataFrame = {
-      val s = scanOfGen(spark, layout, gen)
-      logScanOfGen(spark, layout, genName).fold(s)(log =>
-        s.join(log.select(org.apache.spark.sql.functions.col("vec_id")),
-          Seq("vec_id"), "left_anti"))
-    }
+    def fullLive(): DataFrame =
+      withoutTombstones(spark, layout, genName, scanOfGen(spark, layout, gen))
     val probed = probeOf(model, () => fullLive())
     val scan = scanOfGen(spark, layout, gen, Some(probed.toSet))
       .filter(org.apache.spark.sql.functions.col("cluster_id")
         .isin(probed: _*))
-    val live = logScanOfGen(spark, layout, genName).fold(scan)(log =>
-      scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
-    (model, probed, live)
+    (model, probed, withoutTombstones(spark, layout, genName, scan))
   }
 
   /** [[load]] with the maintained-layout READ CONTRACT applied: if the
@@ -1935,16 +1944,19 @@ object RabitqIndex {
     * `VecsStream.compactIndex`) and for gates that assert physical
     * layout state.
     */
-  def loadLive(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) = {
+  def loadLive(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) =
     // same single-resolution discipline as load: the tombstone log is
     // PER GENERATION, so it must be the log of the generation the data
     // scan resolved, not a re-read of a possibly-republished MANIFEST
-    val gen = indexDataDir(layout)
-    val (model, index) = loadOfGen(spark, layout, gen)
-    val live = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
-      .fold(index)(log =>
-        index.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
-    (model, live)
+    loadLiveOfGen(spark, layout, indexDataDir(layout))
+
+  /** The model and live scan of the generation at `genDir`: its data
+    * scan minus its own tombstone log.
+    */
+  private def loadLiveOfGen(spark: SparkSession, layout: Layout,
+                            genDir: String): (RabitqModel, DataFrame) = {
+    val (model, scan) = loadOfGen(spark, layout, genDir)
+    (model, withoutTombstones(spark, layout, LayoutFs.baseName(genDir), scan))
   }
 
   /** TIME TRAVEL: [[loadLive]] pinned to a NAMED generation — the
@@ -1980,11 +1992,7 @@ object RabitqIndex {
         refuse("retired and partially reclaimed past the retention " +
           "window — only its still-referenced files survive")
     }
-    val model = modelOfGen(layout, genDir)
-    val scan = scanOfGen(spark, layout, genDir)
-    val live = logScanOfGen(spark, layout, gen).fold(scan)(log =>
-      scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
-    (model, live)
+    loadLiveOfGen(spark, layout, genDir)
   }
 
   /** Layout/health statistics for a saved index dir — the one-row report
@@ -2001,7 +2009,7 @@ object RabitqIndex {
     * two-column scan (vec_id, cluster_id — column-pruned, never the
     * codes) into a numClusters-row aggregate. Either way the collected
     * frame is the cluster count, never the corpus. The serving tier's
-    * /describe reads the cached frame instead and is per-call cheap.
+    * /describe reads its hot tier's cluster sizes instead (no job).
     */
   /** The health snapshot [[describeIndex]] renders, kept structured so a
     * maintenance pass can consume the SAME measurement the report was
@@ -2032,20 +2040,15 @@ object RabitqIndex {
     // scan, log, and footer listing all from ONE MANIFEST read
     val gen = indexDataDir(layout)
     val genName = LayoutFs.baseName(gen)
-    val log = tombstoneLogOfGenIfAny(layout, genName)
-    // FOOTER fast path: with no tombstone log, every statistic here is a
-    // row count per cluster_id= partition — parquet footers carry those
-    // exactly, so read ONLY file metadata (one tiny distributed pass,
-    // zero data pages) instead of scanning a corpus-sized column. With a
-    // log present the live sizes need the anti-join, so fall back to the
-    // slim two-column scan. Footers count every file, so neither footer
-    // read runs while a promoted-but-unmarked batch exists: the scans
-    // exclude it (read-committed visibility, [[loadLive]]'s view).
-    val footerOk = footerFastPath && inProgressPrefixes(layout).isEmpty
-    val footerSizes: Option[Array[(Int, Long)]] =
-      if (footerOk && log.isEmpty)
-        clusterSizesFromFooters(spark, layout, gen)
-      else None
+    // FOOTER fast path: when footers give the live sizes exactly, every
+    // statistic here is a row count per cluster_id= partition, so read
+    // ONLY file metadata (one tiny distributed pass, zero data pages)
+    // instead of scanning a corpus-sized column. Otherwise fall back to
+    // the slim two-column scan (read-committed visibility, [[loadLive]]'s
+    // view). The physical count below reads footers whenever no
+    // promoted-but-unmarked batch exists.
+    val footerSizes =
+      if (footerFastPath) liveSizesFromFooters(spark, layout, gen) else None
     footerSizes match {
       case Some(fs) =>
         IndexHealth(modelOfGen(layout, gen), fs.map(_._2).sum, 0L, fs)
@@ -2061,7 +2064,7 @@ object RabitqIndex {
         // when the layout is clean of crashed appends, else from the
         // committed scan.
         val (nRowsOpt, nTomb, sizes) = Overlap(spark,
-          if (footerOk)
+          if (footerFastPath && inProgressPrefixes(layout).isEmpty)
             clusterSizesFromFooters(spark, layout, gen).map(_.map(_._2).sum)
           else None,
           tomb.map(_.count()).getOrElse(0L),

@@ -1130,6 +1130,34 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ---------------- http serving tier --------------------------------------
+  /** The Spark jobs started while `body` runs, counted by a listener. The
+    * suite runs one test at a time, so every job started between the call
+    * and a marker job submitted after `body` returns is `body`'s — also
+    * the jobs a server thread runs to answer a request sent in `body`.
+    */
+  private def jobsDuring[A](body: => A): (Int, A) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "jobs-during-end"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(marker), "the marker job never reached the listener")
+      (started.toArray.count(_ != marker), a)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("HTTP service cold-starts from a saved index dir; spark engine opt-in agrees") {
     val dir = java.nio.file.Files.createTempDirectory("serve_idx").toString
     val (model, index) = RabitqIndex.build(spark, emb, numClusters = 8, seed = 3L)
@@ -1149,12 +1177,20 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
             s"""{"query": ${qvec.mkString("[", ",", "]")}, "top_k": 5, "probe": 8$extra}"""))
           .build(),
         java.net.http.HttpResponse.BodyHandlers.ofString()).body()
-      val hot = post("")
-      val viaSpark = post(""", "engine": "spark"""")
-      assert(graft.Serve.parseFloatArray(hot, "ids").toSeq ==
-        graft.Serve.parseFloatArray(viaSpark, "ids").toSeq,
-        s"hot=$hot spark=$viaSpark")
-      assert(graft.Serve.parseFloatArray(hot, "ids").head.toLong == 0L)
+      // the hot tier answers every request; a leftover "engine" field is
+      // ignored. Its ids equal the batch ANN query over the same live
+      // layout at the same probe and rerank (max(4·top_k, 64) = 64)
+      import spark.implicits._
+      val hot = graft.Serve.parseFloatArray(post(""), "ids").map(_.toLong).toSeq
+      val withField = graft.Serve.parseFloatArray(post(""", "engine": "spark""""), "ids")
+        .map(_.toLong).toSeq
+      val (liveModel, live) = RabitqIndex.loadLive(spark, dir)
+      val viaSpark = RabitqQuery.topK(spark, liveModel, live, emb,
+          Seq((0L, qvec)).toDF("query_id", "qvec"), nprobe = 8, topk = 5, rerank = 64)
+        .orderBy(col("rank")).select("neighbor_id").collect().map(_.getLong(0)).toSeq
+      assert(hot == viaSpark, s"hot=$hot spark=$viaSpark")
+      assert(withField == hot, s"with engine field=$withField hot=$hot")
+      assert(hot.head == 0L)
     } finally server.stop(0)
   }
 
@@ -1267,17 +1303,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())
       val qbody = s"""{"query": ${qvec.mkString("[", ",", "]")}, "top_k": 5, "probe": 8}"""
-      def ids(engine: String = "") =
-        graft.Serve.parseFloatArray(post("query",
-          qbody.dropRight(1) + engine + "}").body(), "ids").map(_.toLong).toSeq
-      // cold start from the maintained dir: both engines exclude tombstones
+      def ids() = {
+        val r = post("query", qbody)
+        assert(r.statusCode() == 200, s"query failed: ${r.body()}")
+        graft.Serve.parseFloatArray(r.body(), "ids").map(_.toLong).toSeq
+      }
+      // cold start from the maintained dir: tombstones are excluded
       assert(!ids().contains(0L) && !ids().contains(7L), s"hot resurrected: ${ids()}")
-      val sp = ids(""", "engine": "spark"""")
-      assert(!sp.contains(0L) && !sp.contains(7L), s"spark resurrected: $sp")
       // /reload of the same maintained dir: the reload path must apply the
-      // log too (a raw load here would resurrect vec 0 post-swap)
-      val reload = post("reload", s"""{"index_dir": "$dirM"}""")
+      // log too (a raw load here would resurrect vec 0 post-swap). Its jobs
+      // are pinned: the base read, its dim probe, the layout stats and the
+      // hot tier's two collects — no checkpoint, base count or Spark-side
+      // label join (22 jobs when the snapshot also kept Spark frames)
+      val (reloadJobs, reload) = jobsDuring(post("reload", s"""{"index_dir": "$dirM"}"""))
       assert(reload.statusCode() == 200, s"reload failed: ${reload.body()}")
+      assert(reloadJobs <= 10, s"one /reload ran $reloadJobs Spark jobs")
       val after = ids()
       assert(!after.contains(0L) && !after.contains(7L), s"reload resurrected: $after")
       assert(after.nonEmpty)
@@ -1287,7 +1327,10 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // loop polling the serving tier can schedule compaction, not just
       // rebalance): serve report ≡ dir report ≡ (via the rebalance
       // spec) the op's own criterion
-      val desc = post("describe", "").body()
+      // served from the hot tier's cluster sizes: no Spark job per call
+      val (describeJobs, descResp) = jobsDuring(post("describe", ""))
+      assert(describeJobs == 0, s"/describe ran $describeJobs Spark jobs")
+      val desc = descResp.body()
       def jsonLong(k: String): Long =
         ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(desc).get.group(1).toLong
       def jsonDouble(k: String): Double =
@@ -1312,6 +1355,16 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         stats.getAs[Double]("mean_cluster_size")) < 1e-9, desc)
       assert(math.abs(jsonDouble("skew") - stats.getAs[Double]("skew")) < 1e-9, desc)
       assert(jsonBool("needs_rebalance") == stats.getAs[Boolean]("needs_rebalance"), desc)
+      // an UNLABELED base that lacks one indexed, live vec_id is refused
+      // at reload like a labeled one (else every query shortlisting that
+      // row would fail), and the old engine keeps serving
+      val shortBase = java.nio.file.Files.createTempDirectory("serve_maint_base")
+        .toString + "/b"
+      emb.filter(col("vec_id") =!= 5L).select("vec_id", "embedding").write.parquet(shortBase)
+      val bad = post("reload", s"""{"index_dir": "$dirM", "base": "$shortBase"}""")
+      assert(bad.statusCode() == 400, s"short base reloaded: ${bad.body()}")
+      assert(bad.body().contains("no vec_id in the base"), bad.body())
+      assert(ids() == after, s"old engine lost: ${ids()} vs $after")
     } finally server.stop(0)
   }
 
@@ -1386,13 +1439,20 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .build(),
         java.net.http.HttpResponse.BodyHandlers.ofString()).body()
       val hot = graft.Serve.parseFloatArray(post(""", "label": 7"""), "ids").map(_.toLong)
-      val viaSpark = graft.Serve.parseFloatArray(
-        post(""", "label": 7, "engine": "spark""""), "ids").map(_.toLong)
-      assert(hot.toSeq == viaSpark.toSeq, s"hot=${hot.toSeq} spark=${viaSpark.toSeq}")
-      // widening saturates to full probe at this scale and the rerank
-      // width covers the filtered set ⇒ exactly filtered brute force
+      // the batch filtered query over the index the server trains (its
+      // recipe: √n clusters, seed 42) with the base's labels joined in, at
+      // the same probe and rerank (max(4·top_k, 64) = 64)
       import spark.implicits._
       val q = Seq((0L, qvec)).toDF("query_id", "qvec")
+      val k = math.max(16, math.min(1024, math.sqrt(emb.count().toDouble).toInt))
+      val (model, index) = RabitqIndex.build(spark, emb, numClusters = k, seed = 42L)
+      val labeled = index.join(emb.select("vec_id", "label"), Seq("vec_id"))
+      def viaSpark(label: Long) = RabitqQuery.filteredTopK(spark, model, labeled, emb, q,
+          col("label") === label, nprobe = 4, topk = 5, rerank = 64)
+        .orderBy(col("rank")).select("neighbor_id").collect().map(_.getLong(0)).toSeq
+      assert(hot.toSeq == viaSpark(7L), s"hot=${hot.toSeq} spark=${viaSpark(7L)}")
+      // widening saturates to full probe at this scale and the rerank
+      // width covers the filtered set ⇒ exactly filtered brute force
       val want = ExactKnn.l2TopK(emb.filter(col("label") === 7), q, 5)
         .orderBy(col("rank")).select("neighbor_id")
         .collect().map(_.getLong(0)).toSeq
@@ -1401,27 +1461,30 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val lbl7 = emb.filter(col("label") === 7).select("vec_id")
         .collect().map(_.getLong(0)).toSet
       assert(hot.forall(lbl7.contains))
-      // a label with no members: empty result, 200, on both engines
+      // a label with no members: empty result, 200, like the batch query
       assert(graft.Serve.parseFloatArray(post(""", "label": 99999"""), "ids").isEmpty)
-      assert(graft.Serve.parseFloatArray(
-        post(""", "label": 99999, "engine": "spark""""), "ids").isEmpty)
+      assert(viaSpark(99999L).isEmpty)
     } finally server.stop(0)
   }
 
   test("Serve: a labeled base with duplicate vec_ids is rejected at engine " +
       "build instead of silently multiplying index rows") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("serve_dup").toString
     val vecs = (0L until 32L).map(i =>
       (i, Array.tabulate(8)(j => (i * 8 + j).toFloat).toSeq, i % 3))
-    (vecs :+ vecs.head).toDF("vec_id", "embedding", "label")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"),
-        col("label"))
-      .write.parquet(s"$tmp/embeddings.parquet")
-    val e = intercept[IllegalArgumentException] {
-      graft.Serve.start(spark, tmp, 0)
+    // labeled and unlabeled alike: an unlabeled duplicate would silently
+    // keep one of its two embeddings for the rerank
+    for (labeled <- Seq(true, false)) {
+      val tmp = java.nio.file.Files.createTempDirectory("serve_dup").toString
+      (vecs :+ vecs.head).toDF("vec_id", "embedding", "label")
+        .select(Seq(col("vec_id"), col("embedding").cast("array<float>").as("embedding")) ++
+          (if (labeled) Seq(col("label")) else Nil): _*)
+        .write.parquet(s"$tmp/embeddings.parquet")
+      val e = intercept[IllegalArgumentException] {
+        graft.Serve.start(spark, tmp, 0)
+      }
+      assert(e.getMessage.contains("duplicate vec_ids"), s"labeled=$labeled: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("duplicate vec_ids"), e.getMessage)
   }
 
   test("HTTP query service answers /query, /health, /metrics") {
@@ -3334,6 +3397,24 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.toSet
       assert(hotRes == sparkRes,
         s"nprobe=$nprobe rerank=$rerank: ${(hotRes diff sparkRes).take(3)} vs ${(sparkRes diff hotRes).take(3)}")
+    }
+    // label-filtered: the hot tier takes the labels from the base (the
+    // index rows carry none); filteredTopK filters the labeled index and
+    // measures the selectivity the hot tier reads from its histogram
+    val labeled = index.join(emb.select("vec_id", "label"), Seq("vec_id"))
+    for (label <- Seq(7L, 99999L); (nprobe, rerank) <- Seq((2, 20), (4, 50))) {
+      val sparkRes = RabitqQuery.filteredTopK(spark, model, labeled, emb, queries,
+          col("label") === label, nprobe = nprobe, topk = 10, rerank = rerank)
+        .select("query_id", "neighbor_id", "dist", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+      val hotRes = qRows.flatMap { case (qid, v) =>
+        hot.query(v, nprobe, 10, rerank, Some(label)).zipWithIndex.map { case ((id, d), i) =>
+          (qid, id, d, i + 1L)
+        }
+      }.toSet
+      assert(hotRes == sparkRes, s"label=$label nprobe=$nprobe rerank=$rerank: " +
+        s"${(hotRes diff sparkRes).take(3)} vs ${(sparkRes diff hotRes).take(3)}")
+      assert(label != 7L || hotRes.nonEmpty, "label 7 has no neighbors: parity is vacuous")
     }
   }
 
