@@ -5,7 +5,6 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.operators._
 
 /** HTTP query service — parity with the reference's axum tier
@@ -27,7 +26,7 @@ object Serve {
     * health report must ride in the snapshot — it's what schedules
     * compaction).
     */
-  private final case class Engine(model: RabitqModel, hot: HotTier,
+  private[graft] final case class Engine(model: RabitqModel, hot: HotTier,
                                   nRows: Long, nTombstones: Long)
 
   // must be set before the HttpServer class initializes: without
@@ -214,35 +213,27 @@ object Serve {
     server
   }
 
-  /** Build a serving snapshot of the saved layout at `idxDir` over the
-    * base at `basePath` — `start` (given an index dir) and `/reload`
-    * both build through here: the live model and index, the base
-    * validated against the index's dim, the layout stats /describe
-    * reports and the hot tier (which checks the base against the index
-    * rows).
+  /** Build a serving snapshot of the saved layout over the base at
+    * `basePath` — `start` (given an index dir) and `/reload` both build
+    * through here. ONE generation snapshot (`RabitqIndex.resolve`) gives
+    * the live model and rows, and the layout stats /describe reports, so
+    * they describe the same generation even when a compaction or
+    * rebalance publishes mid-build. The hot tier checks the base against
+    * the index rows and its dim.
     */
-  private def loadEngine(spark: SparkSession, idxDir: String,
-                         basePath: String): Engine = {
-    // loadLive, not load: a maintained layout (VecsStream.maintainIndex)
+  private[graft] def loadEngine(spark: SparkSession, layout: Layout,
+                                basePath: String): Engine = {
+    val snap = RabitqIndex.resolve(layout)
+    // live, not raw: a maintained layout (VecsStream.maintainIndex)
     // carries an uncompacted tombstone log, and serving the raw layout
-    // would RESURRECT deleted vectors — the anti-join is a no-op when no
-    // log exists
-    val (model, index) = RabitqIndex.loadLive(spark, idxDir)
-    // fail fast on a mismatched saved index (wrong dataset/scale factor)
-    // BEFORE collecting: an empty base would serve 200s that return nothing
-    val base = spark.read.parquet(basePath)
-    val baseDim = base.select(size(col("embedding"))).limit(1).collect()
-      .headOption.map(_.getInt(0))
-      .getOrElse(throw new IllegalArgumentException(
-        s"base embeddings at $basePath are empty — nothing to serve"))
-    require(model.params.dim == baseDim,
-      s"saved index dim ${model.params.dim} != base embedding dim $baseDim — " +
-        s"index at $idxDir was built from a different dataset")
+    // would RESURRECT deleted vectors
+    val (model, index) = RabitqIndex.liveOf(spark, snap)
+    val hot = HotTier.fromIndex(spark, model, index, spark.read.parquet(basePath))
     // tombstone debt for /describe: the hot tier holds only live rows,
     // so the raw-row/tombstone half comes from the layout once per
     // engine build
-    val (nRows, nTomb) = RabitqIndex.layoutStats(spark, idxDir)
-    Engine(model, HotTier.fromIndex(spark, model, index, base), nRows, nTomb)
+    val (nRows, nTomb) = RabitqIndex.statsOf(spark, snap)
+    Engine(model, hot, nRows, nTomb)
   }
 
   /** Escape quotes/backslashes/control chars so exception messages can't

@@ -2061,7 +2061,7 @@ object SparkEntry {
           when(col("vec_id") % 2 === 0, lit(0)).otherwise(lit(NumClusters)))
         .write.partitionBy("cluster_id").parquet(next)
       RabitqIndex.writeCarryListing(idx, "index-v2",
-        RabitqIndex.buildCarryListing(idx, "index", Set(0)))
+        RabitqIndex.resolve(idx).carryEntries(Set(0)))
       RabitqIndex.writeModel(idx, next, model.copy(
         params = model.params.copy(numClusters = NumClusters + 1),
         centroids = model.centroids :+ model.centroids(0)))

@@ -124,11 +124,13 @@ object HotTier {
     * (the filtered-vector-search layout), otherwise from the base's
     * `label` column when it has one.
     *
-    * The base is checked on the collected arrays, for every base: its
-    * `vec_id`s must be unique (a duplicate would silently keep one of
-    * two embeddings), and every index row's `vec_id` must be in it (a
-    * missing one would fail every query that shortlists it). Either
-    * violation throws `IllegalArgumentException` before anything serves.
+    * The base is checked on the collected arrays, for every base: it
+    * must hold rows, every embedding must have the model's dim (a base
+    * from another dataset), its `vec_id`s must be unique (a duplicate
+    * would silently keep one of two embeddings), and every index row's
+    * `vec_id` must be in it (a missing one would fail every query that
+    * shortlists it). Any violation throws `IllegalArgumentException`
+    * before anything serves.
     */
   def fromIndex(spark: SparkSession, model: RabitqModel, index: DataFrame,
                 base: DataFrame): HotTier = {
@@ -139,8 +141,16 @@ object HotTier {
     val rows = index.select(cols.head, cols.tail: _*).collect()
     val baseCols = Seq("vec_id", "embedding") ++ (if (baseLabeled) Seq("label") else Nil)
     val baseRows = base.select(baseCols.head, baseCols.tail: _*).collect()
+    require(baseRows.nonEmpty, "base embeddings are empty — nothing to serve")
+    val dim = model.params.dim
     val baseVecs = new java.util.HashMap[java.lang.Long, Array[Float]](baseRows.length * 2)
-    baseRows.foreach(r => baseVecs.put(r.getLong(0), r.getSeq[Float](1).toArray))
+    baseRows.foreach { r =>
+      val v = Option(r.getSeq[Float](1)).map(_.toArray)
+      require(v.exists(_.length == dim), s"saved index dim $dim != base embedding dim " +
+        s"${v.fold("null")(_.length.toString)} (vec_id ${r.getLong(0)}) — the index " +
+        "was built from a different dataset")
+      baseVecs.put(r.getLong(0), v.get)
+    }
     require(baseVecs.size == baseRows.length,
       s"base has duplicate vec_ids (${baseRows.length} rows, ${baseVecs.size} " +
         "distinct) — fix the base before serving")

@@ -61,7 +61,7 @@ trait LayoutFs {
   def setLastModified(path: String, ms: Long): Unit
 
   /** Copy one file, replacing the destination — STAGING only (its
-    * caller, `RabitqIndex.copyParquetFiles`, copies into
+    * caller, `RabitqIndex.copyFiles`, copies into
     * not-yet-referenced paths; the reader-visible publish is always a
     * [[CommitOps]] primitive).
     */

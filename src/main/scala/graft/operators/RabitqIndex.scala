@@ -260,10 +260,11 @@ object RabitqIndex {
     * resolves through here and a crash mid-compaction can never expose
     * a partial layout (readers keep the old generation until the swap).
     */
-  def indexDataDir(layout: Layout): String = {
+  def indexDataDir(layout: Layout): String = s"${layout.dir}/${activeName(layout)}"
+
+  private def activeName(layout: Layout): String = {
     val mf = s"${layout.dir}/MANIFEST"
-    if (layout.fs.isFile(mf)) s"${layout.dir}/${layout.fs.readString(mf).trim}"
-    else s"${layout.dir}/index"
+    if (layout.fs.isFile(mf)) layout.fs.readString(mf).trim else "index"
   }
 
   /** The tombstone log of the ACTIVE generation. Logs are PER
@@ -277,34 +278,110 @@ object RabitqIndex {
     * stream's del leg) resolve through here per batch, exactly like the
     * data dir resolves through the MANIFEST.
     */
-  def tombstoneLogDir(layout: Layout): String = logDirOfGen(layout.dir,
-    LayoutFs.baseName(indexDataDir(layout)))
+  def tombstoneLogDir(layout: Layout): String =
+    logDirOfGen(layout.dir, activeName(layout))
 
   private[graft] def logDirOfGen(dir: String, gen: String): String =
     if (gen == "index") s"$dir/deletes"
     else s"$dir/deletes-${gen.stripPrefix("index-")}"
 
-  /** The active generation's tombstone log — present only if it holds
-    * DATA files. Presence must be judged by data, not by the directory:
-    * the streamed del leg creates its target dir unconditionally (the
-    * all-empty-batches contract), so a maintain stream that never saw a
-    * delete leaves an EMPTY `deletes` dir, and a reader that anti-joined
-    * `spark.read.parquet` over it would throw (no files to infer a
-    * schema from) on a perfectly healthy layout.
+  /** One generation as ONE operation reads it. The reference loads its
+    * index as one immutable unit (`/root/reference/src/rabitq.rs:128-156`);
+    * a read pieced together from repeated metadata reads can mix two
+    * generations (a publish between two MANIFEST reads). So every reader
+    * and lifecycle op resolves once ([[resolve]]: one MANIFEST read, one
+    * `_commits` walk) and takes everything from the snapshot:
+    *  - `name` and `inProgress`, fixed at resolve time: the prefixes of
+    *    promoted-but-unmarked batches (`IdempotentSink.sentinels`);
+    *  - `model`, the generation's `_model.json` ([[modelOfGen]]);
+    *  - `carry`, the shape of its carry listing ([[Carry]]);
+    *  - `logFiles`, the committed files of its tombstone log;
+    *  - `ownFiles`, its committed own data files per cluster.
+    * Each is read on first use, once, through the handle's `fs`; a probe
+    * restriction lists only its cluster dirs.
+    *
+    * Committed = outside an uncommitted batch. The replay may sweep such
+    * a batch's files at any moment, so a racing reader must neither serve
+    * them nor hard-fail on their deletion (found by the crash×race
+    * hammer), and footers count exactly the files a scan reads.
     */
-  private[graft] def tombstoneLogIfAny(layout: Layout): Option[String] =
-    tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(indexDataDir(layout)))
+  private[graft] final class GenSnapshot private[RabitqIndex] (
+      val layout: Layout, val name: String, val inProgress: Seq[String]) {
+    val dir: String = s"${layout.dir}/$name"
+    lazy val model: RabitqModel = modelOfGen(layout, dir)
+    lazy val carry: Carry = carryOf(layout, name)
+    lazy val logFiles: Seq[FsEntry] =
+      dataFiles(layout, logDirOfGen(layout.dir, name)).filter(f => isCommitted(f.name))
+    private lazy val listedAll = listOwn(None)
 
-  /** [[tombstoneLogIfAny]] against an already-resolved generation — for
-    * callers holding a single MANIFEST resolution ([[loadLive]]).
-    */
-  private[graft] def tombstoneLogOfGenIfAny(
-      layout: Layout, gen: String): Option[String] = {
-    val p = logDirOfGen(layout.dir, gen)
-    val hasData = layout.fs.list(p)
-      .exists(x => !x.isDir && x.name.endsWith(".parquet"))
-    if (hasData) Some(p) else None
+    def isCommitted(fileName: String): Boolean =
+      !inProgress.exists(p => fileName.startsWith(p + "-"))
+
+    /** Own data files of `clusters` (every cluster when None) as
+      * (cluster_id, file), committed or not.
+      */
+    def listed(clusters: Option[Set[Int]]): Seq[(Int, FsEntry)] =
+      if (clusters.isEmpty) listedAll else listOwn(clusters)
+
+    private def listOwn(clusters: Option[Set[Int]]): Seq[(Int, FsEntry)] =
+      clusters.map(_.toSeq).getOrElse(layout.fs.list(dir)
+          .filter(d => d.isDir && d.name.startsWith("cluster_id="))
+          .map(_.name.stripPrefix("cluster_id=").toInt))
+        .sorted.flatMap(c => dataFiles(layout, s"$dir/cluster_id=$c").map(c -> _))
+
+    def ownFiles(clusters: Option[Set[Int]] = None): Seq[(Int, FsEntry)] =
+      listed(clusters).filter(f => isCommitted(f._2.name))
+
+    /** Committed carry entries of `clusters` (all when None). Listings
+      * are built from committed files only, so the filter is defensive.
+      */
+    def carried(clusters: Option[Set[Int]] = None): Seq[String] =
+      clusters.fold(carry.all)(carry.forClusters)
+        .filter(e => isCommitted(e.split('/').last))
+
+    /** The listing a rebalance publishes for the generation it rewrites
+      * this one into: every committed data file of the NON-split clusters
+      * — own files by root-relative path, then inherited entries, flat.
+      */
+    def carryEntries(splitIds: Set[Int]): Seq[String] =
+      ownFiles().collect { case (c, f) if !splitIds(c) => s"$name/cluster_id=$c/${f.name}" } ++
+        carried().filterNot(e => splitIds(clusterOfCarryEntry(e)))
+
+    /** The generation a compaction or rebalance rewrites this one into. */
+    def nextName: String =
+      s"index-v${(if (name == "index") 1 else name.stripPrefix("index-v").toInt) + 1}"
   }
+
+  /** The active generation's snapshot: one MANIFEST read, one `_commits`
+    * walk.
+    */
+  private[graft] def resolve(layout: Layout): GenSnapshot =
+    resolveGen(layout, activeName(layout))
+
+  /** The snapshot of the named generation `gen`. */
+  private[graft] def resolveGen(layout: Layout, gen: String): GenSnapshot =
+    new GenSnapshot(layout, gen, graft.streaming.IdempotentSink.sentinels(layout)
+      .filterNot(_.committed).map(_.prefix))
+
+  /** Sweep promoted-but-unmarked batches out of the active generation and
+    * its tombstone log (`IdempotentSink.settleInProgress`): what a
+    * rewrite runs under the lease before it resolves the generation it
+    * reads.
+    */
+  private[graft] def settle(layout: Layout): Unit = {
+    val gen = activeName(layout)
+    graft.streaming.IdempotentSink.settleInProgress(layout,
+      Seq(s"${layout.dir}/$gen", logDirOfGen(layout.dir, gen)))
+  }
+
+  /** The parquet data files directly in `d`, by name; none when `d` is
+    * missing.
+    */
+  private def dataFiles(layout: Layout, d: String): Seq[FsEntry] =
+    layout.fs.list(d).filter(f => !f.isDir && isDataFile(f.name)).sortBy(_.name)
+
+  private def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 
   /** File-reference CARRY listing of a generation — the metadata-
     * indirection (Iceberg-manifest) shape: `_CARRY` inside a generation
@@ -328,48 +405,42 @@ object RabitqIndex {
     * (`/root/reference/crates/disk/src/cache.rs:24-52`) — this keeps
     * layout MUTATION metadata-sized on the same store.
     */
-  private[graft] def readCarry(layout: Layout, gen: String): Seq[String] = {
+  private[graft] def readCarry(layout: Layout, gen: String): Seq[String] =
+    carryOf(layout, gen).all
+
+  /** A generation's carry listing as read once: the flat `_CARRY`
+    * entries, or the `_CARRY_LIST` shard ranges, whose shard files are
+    * read only when asked for. Empty for a self-contained generation.
+    */
+  private[graft] final class Carry(layout: Layout, gen: String,
+                                   flat: Option[Seq[String]], shards: Seq[CarryShard]) {
+    private def read(ss: Seq[CarryShard]) = ss.flatMap(readShardEntries(layout, gen, _))
+
+    lazy val all: Seq[String] = flat.getOrElse(read(shards))
+
+    /** Entries of `clusters`, reading ONLY the shards whose cluster-id
+      * ranges overlap them — the lazy resolution of the probe-pruned disk
+      * query path. On the flat shape this is a filter of the one listing;
+      * on the sharded shape the bytes read are ∝ probed shards, not ∝
+      * corpus file count. Shard ranges can cover more clusters than
+      * requested, so entries are filtered exactly either way.
+      */
+    def forClusters(clusters: Set[Int]): Seq[String] =
+      flat.getOrElse(read(shards.filter(s => clusters.exists(c => c >= s.lo && c <= s.hi))))
+        .filter(e => clusters.contains(clusterOfCarryEntry(e)))
+
+    /** Some entry, reading at most one shard. */
+    def first: Option[String] = flat.getOrElse(read(shards.take(1))).headOption
+  }
+
+  private[graft] def carryOf(layout: Layout, gen: String): Carry = {
     val f = s"${layout.dir}/$gen/_CARRY"
-    if (layout.fs.isFile(f))
-      layout.fs.readString(f).split('\n')
-        .map(_.trim).filter(_.nonEmpty).toSeq
-    else readCarryShards(layout, gen).flatMap(s => readShardEntries(layout, gen, s))
+    if (layout.fs.isFile(f)) new Carry(layout, gen, Some(lines(layout.fs.readString(f))), Nil)
+    else new Carry(layout, gen, None, readCarryShards(layout, gen))
   }
 
-  /** Batch prefixes of PROMOTED-BUT-UNCOMMITTED appends (in-progress
-    * sentinel present, commit marker absent — a crashed attempt, or a
-    * live batch mid-promote on another worker). Their files may be
-    * SWEPT and re-promoted by the replay at any moment
-    * (`IdempotentSink.sweepPrefix`), so READERS exclude them from every
-    * scan: read-committed visibility for appends, and — the part that
-    * bites — no vanishing-file task failures while a crashed append is
-    * being recovered under a racing reader (found by the crash×race
-    * hammer: a reader that listed the file pre-sweep hard-fails reading
-    * it post-sweep). Metadata-sized: one `_commits` listing per
-    * resolve, empty on the no-crash path.
-    */
-  private[graft] def inProgressPrefixes(layout: Layout): Seq[String] =
-    layout.fs.list(s"${layout.dir}/_commits").filter(_.isDir).flatMap { q =>
-      layout.fs.list(q.path)
-        .filter(f => !f.isDir && f.name.endsWith(".inprogress"))
-        .map(_.name.stripSuffix(".inprogress"))
-        .filter(b => !layout.fs.exists(s"${layout.dir}/_commits/${q.name}/$b"))
-        .map(b => s"${q.name}-$b")
-    }
-
-  private def excludedByInProgress(name: String,
-                                   inprog: Seq[String]): Boolean =
-    inprog.exists(p => name.startsWith(p + "-"))
-
-  /** Does the generation carry ANY files by reference? Metadata-probe
-    * only — the self-contained-vs-carry-listed decision points must not
-    * read a corpus-file-count listing just to test emptiness.
-    */
-  private[graft] def hasCarry(layout: Layout, gen: String): Boolean = {
-    val g = s"${layout.dir}/$gen"
-    (layout.fs.isFile(s"$g/_CARRY") && layout.fs.length(s"$g/_CARRY") > 0) ||
-      layout.fs.isFile(s"$g/_CARRY_LIST")
-  }
+  private def lines(s: String): Seq[String] =
+    s.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
 
   /** One line of `_CARRY_LIST`: a shard's cluster-id range, file name
     * (inside `_carry/`), and entry count.
@@ -380,35 +451,20 @@ object RabitqIndex {
   private[graft] def readCarryShards(layout: Layout, gen: String): Seq[CarryShard] = {
     val f = s"${layout.dir}/$gen/_CARRY_LIST"
     if (!layout.fs.isFile(f)) Nil
-    else layout.fs.readString(f).split('\n')
-      .map(_.trim).filter(_.nonEmpty).toSeq.map { l =>
-        val p = l.split('\t')
-        CarryShard(p(0).toInt, p(1).toInt, p(2), p(3).toInt)
-      }
+    else lines(layout.fs.readString(f)).map { l =>
+      val p = l.split('\t')
+      CarryShard(p(0).toInt, p(1).toInt, p(2), p(3).toInt)
+    }
   }
 
   private def readShardEntries(layout: Layout, gen: String,
                                s: CarryShard): Seq[String] =
-    layout.fs.readString(s"${layout.dir}/$gen/_carry/${s.name}").split('\n')
-      .map(_.trim).filter(_.nonEmpty).toSeq
+    lines(layout.fs.readString(s"${layout.dir}/$gen/_carry/${s.name}"))
 
-  /** Carry entries restricted to `clusters`, reading ONLY the manifest
-    * shards whose cluster-id ranges overlap them — the lazy resolution
-    * of the probe-pruned disk query path. On the flat shape this is a
-    * filter of the one listing file (same bytes as before); on the
-    * sharded shape the bytes read are ∝ probed shards, not ∝ corpus
-    * file count. Shard ranges can cover more clusters than requested,
-    * so entries are filtered exactly either way.
-    */
+  /** [[Carry.forClusters]] of the generation's listing as read now. */
   private[graft] def readCarryForClusters(layout: Layout, gen: String,
-                                          clusters: Set[Int]): Seq[String] = {
-    val all =
-      if (layout.fs.isFile(s"${layout.dir}/$gen/_CARRY")) readCarry(layout, gen)
-      else readCarryShards(layout, gen)
-        .filter(s => clusters.exists(c => c >= s.lo && c <= s.hi))
-        .flatMap(s => readShardEntries(layout, gen, s))
-    all.filter(e => clusters.contains(clusterOfCarryEntry(e)))
-  }
+                                          clusters: Set[Int]): Seq[String] =
+    carryOf(layout, gen).forClusters(clusters)
 
   /** Publish a generation's carry listing from its entry list: the flat
     * single `_CARRY` file up to the handle's `carryShardTarget` entries,
@@ -474,226 +530,110 @@ object RabitqIndex {
         s"carry entry without a cluster_id= segment: $e"))
       .stripPrefix("cluster_id=").toInt
 
-  /** The listing a generation swap publishes, walked from the driver:
-    * every data file of the current generation's NON-split clusters —
-    * its own files by root-relative path plus its inherited carry
-    * entries, flattened. Pure directory metadata; no data bytes move.
-    * The reference [[buildCarryEntriesDistributed]] is spec-pinned to.
-    */
-  private[graft] def buildCarryListing(layout: Layout, curName: String,
-                                       splitIds: Set[Int]): Seq[String] = {
-    val own = layout.fs.list(s"${layout.dir}/$curName")
-      .filter(f => f.isDir && f.name.startsWith("cluster_id=") &&
-        !splitIds.contains(f.name.stripPrefix("cluster_id=").toInt))
-      .sortBy(_.name)
-      .flatMap(cd => layout.fs.list(cd.path)
-        .filter(f => !f.isDir && f.name.endsWith(".parquet"))
-        .sortBy(_.name)
-        .map(f => s"$curName/${cd.name}/${f.name}"))
-    val inherited = readCarry(layout, curName)
-      .filterNot(e => splitIds.contains(clusterOfCarryEntry(e)))
-    own ++ inherited
-  }
-
-  /** [[buildCarryListing]] with the per-cluster FILE listings fanned out
-    * as Spark tasks — the driver does ONE listing (the cluster dirs)
-    * and a metadata-sized collect; the O(file-count) NameNode/object-
-    * store LIST round-trips run distributed, so listing-build wall-clock
-    * stays flat as the corpus grows (the r19 shape walked every file
-    * from the driver). Same entry set as the driver walk
-    * ([[buildCarryListing]], spec-pinned).
-    */
-  private[graft] def buildCarryEntriesDistributed(
-      spark: SparkSession, layout: Layout, curName: String,
-      splitIds: Set[Int]): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(s"${layout.dir}/$curName")
-    val fs = rootPath.getFileSystem(hconf)
-    val dirs: Seq[(String, String)] =
-      if (!fs.exists(rootPath)) Nil
-      else fs.listStatus(rootPath).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("cluster_id=") &&
-          !splitIds.contains(
-            s.getPath.getName.stripPrefix("cluster_id=").toInt))
-        .map(s => (s.getPath.getName, fs.makeQualified(s.getPath).toString))
-    // executor tasks must see the DRIVER's hadoop conf (s3a credentials,
-    // endpoints), not a bare `new Configuration()` of classpath defaults
-    val bConf = org.apache.spark.graft.SerHadoopConf
-      .broadcast(spark.sparkContext, hconf)
-    val own: Seq[String] =
-      if (dirs.isEmpty) Nil
-      else spark.sparkContext
-        .parallelize(dirs, math.max(1, math.min(64, dirs.length)))
-        .flatMap { case (name, qp) =>
-          val p = new org.apache.hadoop.fs.Path(qp)
-          p.getFileSystem(bConf.value.conf).listStatus(p).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(st => s"$curName/$name/${st.getPath.getName}")
-        }.collect().toSeq.sorted
-    val inherited = readCarry(layout, curName)
-      .filterNot(e => splitIds.contains(clusterOfCarryEntry(e)))
-    own ++ inherited
-  }
-
   /** A layout path as the qualified Hadoop path Spark reads it by. */
   private def hpath(spark: SparkSession, p: String): Path = {
     val path = new Path(p)
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path)
   }
 
-  private def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+  /** A listed layout file as the status a relation is seeded with. */
+  private def hstatus(spark: SparkSession, f: FsEntry): FileStatus =
+    new FileStatus(f.length, false, 0, 0L, f.mtime, hpath(spark, f.path))
 
-  /** The children of `d`; none when `d` is missing. */
-  private def listStatus(spark: SparkSession, d: Path): Seq[FileStatus] =
-    try d.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(d).toSeq
-    catch { case _: java.io.FileNotFoundException => Nil }
-
-  /** The parquet data files directly in `d`, by name. */
-  private def parquetFiles(spark: SparkSession, d: Path): Seq[FileStatus] =
-    listStatus(spark, d).filter(s => s.isFile && isDataFile(s.getPath.getName))
-      .sortBy(_.getPath.getName)
-
-  /** The data scan of an already-resolved generation: ONE relation
-    * ([[org.apache.spark.graft.SeededRelation]]) over its own committed
+  /** The data scan of a generation snapshot: ONE relation
+    * ([[org.apache.spark.graft.SeededRelation]]) over its committed own
     * files and the files its carry listing names in older generations,
-    * opened from what the engine already knows — the own listing, the
+    * opened from what the snapshot already knows — the own listing, the
     * listing file, one footer for the schema — so opening runs no Spark
     * job (no listing job however many cluster dirs, no schema
     * inference). Partition values come from the `cluster_id=` dirs of
     * both, so a probe filter prunes carried files exactly like own
-    * ones.
-    *
-    * Read-committed: files of promoted-but-unmarked batches
-    * ([[inProgressPrefixes]]) are left out — the replay may sweep them
-    * at any moment, and a racing reader must neither serve them nor
-    * hard-fail on their deletion. `refresh()` of the relation re-lists
-    * the own dirs (with the exclusion re-read) and keeps the carried
-    * set: a carried source dir can still hold pre-split files the
-    * listing does not carry.
+    * ones. Carried files get their statuses from one listing per carried
+    * cluster dir, not one stat per file. `refresh()` of the relation
+    * re-lists the own dirs through a fresh snapshot of the same
+    * generation and keeps the carried set: a carried source dir can still
+    * hold pre-split files the listing does not carry.
     *
     * With `clusters` given, only those own cluster dirs are listed and
     * carried files come from only the manifest shards overlapping them
-    * ([[readCarryForClusters]]) — driver work ∝ probed data, not ∝
-    * corpus file count. Restriction contract: the caller MUST still
-    * filter `cluster_id ∈ clusters`.
-    *
-    * The schema is the footer schema of the relation's first file. A
-    * relation with no file — a probe of clusters that hold none, or a
-    * generation whose every file belongs to an uncommitted batch — is
-    * empty and takes the schema from the first committed own file of
-    * any cluster, else the first carried file, else an uncommitted own
-    * file.
+    * ([[Carry.forClusters]]) — driver work ∝ probed data, not ∝ corpus
+    * file count. Restriction contract: the caller MUST still filter
+    * `cluster_id ∈ clusters`.
     */
-  private[graft] def scanOfGen(spark: SparkSession, layout: Layout,
-                               gen: String,
+  private[graft] def scanOfGen(spark: SparkSession, snap: GenSnapshot,
                                clusters: Option[Set[Int]] = None): DataFrame = {
-    val genName = LayoutFs.baseName(gen)
-    val root = hpath(spark, gen)
-    def ownFiles(only: Option[Set[Int]]): Seq[FileStatus] = {
-      val dirs = only match {
-        case Some(cs) => cs.toSeq.sorted.map(c => new Path(root, s"cluster_id=$c"))
-        case None => listStatus(spark, root)
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster_id="))
-          .map(_.getPath).sortBy(_.getName)
+    val layout = snap.layout
+    def own(s: GenSnapshot) = s.ownFiles(clusters).map(f => hstatus(spark, f._2))
+    val initial = own(snap)
+    val carried: Map[Path, Seq[FileStatus]] = snap.carried(clusters)
+      .groupBy(e => e.substring(0, e.lastIndexOf('/'))).toSeq.sortBy(_._1)
+      .flatMap { case (rel, es) =>
+        val byName = dataFiles(layout, s"${layout.dir}/$rel").map(f => f.name -> f).toMap
+        es.sorted.map(e => hstatus(spark, byName.getOrElse(e.split('/').last,
+          throw new java.io.FileNotFoundException(
+            s"carried file ${layout.dir}/$e is missing"))))
       }
-      dirs.flatMap(parquetFiles(spark, _))
-    }
-    def committed(files: Seq[FileStatus], inprog: Seq[String]) =
-      files.filterNot(f => excludedByInProgress(f.getPath.getName, inprog))
-    val inprog = inProgressPrefixes(layout)
-    val own = committed(ownFiles(clusters), inprog)
-    val carried: Map[Path, Seq[FileStatus]] =
-      if (!hasCarry(layout, genName)) Map.empty
-      else clusters.fold(readCarry(layout, genName))(cs =>
-          readCarryForClusters(layout, genName, cs))
-        // defensive: listings are built post-settle so they never name
-        // an uncommitted batch's files — but exclusion is one string test
-        .filterNot(e => excludedByInProgress(e.split('/').last, inprog))
-        // statuses from one listing per carried cluster dir, not one
-        // stat per file; root = the source generation dir
-        .groupBy(e => e.substring(0, e.lastIndexOf('/'))).toSeq.sortBy(_._1)
-        .flatMap { case (rel, es) =>
-          val byName = parquetFiles(spark, hpath(spark, s"${layout.dir}/$rel"))
-            .map(s => s.getPath.getName -> s).toMap
-          es.sorted.map(e => byName.getOrElse(e.split('/').last,
-            throw new java.io.FileNotFoundException(
-              s"carried file ${layout.dir}/$e is missing")))
-        }
-        .groupBy(_.getPath.getParent.getParent)
-    def anyCarried: Option[String] =
-      if (layout.fs.isFile(s"${layout.dir}/$genName/_CARRY")) readCarry(layout, genName).headOption
-      else readCarryShards(layout, genName).headOption
-        .flatMap(s => readShardEntries(layout, genName, s).headOption)
-    // the empty relation's schema read races the replay's SWEEP of an
-    // uncommitted file (its deletion is the uncommitted-batch contract):
-    // when the file vanished, look again
-    def schemaOfEmpty(retries: Int): StructType = {
-      val all = ownFiles(None)
-      val src = committed(all, inprog).headOption.map(_.getPath)
-        .orElse(anyCarried.map(e => hpath(spark, s"${layout.dir}/$e")))
-        .orElse(all.headOption.map(_.getPath))
-        .getOrElse(throw new IllegalStateException(
-          s"$gen holds no parquet file to read its schema from"))
-      try SeededRelation.footerSchema(spark, src)
-      catch {
-        case _: java.io.IOException if retries > 0 &&
-            !src.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(src) =>
-          schemaOfEmpty(retries - 1)
-      }
-    }
-    val schema = (own ++ carried.values.flatten).headOption
-      .fold(schemaOfEmpty(retries = 3))(f =>
+      .groupBy(_.getPath.getParent.getParent)
+    val schema = (initial ++ carried.values.flatten).headOption
+      .fold(schemaOfEmpty(spark, snap, retries = 3))(f =>
         SeededRelation.footerSchema(spark, f.getPath))
-    SeededRelation.open(spark, schema, Some("cluster_id"), root, own,
-      () => committed(ownFiles(clusters), inProgressPrefixes(layout)), carried)
+    SeededRelation.open(spark, schema, Some("cluster_id"), hpath(spark, snap.dir), initial,
+      () => own(resolveGen(layout, snap.name)), carried)
   }
 
-  /** The tombstone-log scan of a generation with the same read-committed
-    * exclusion and the same job-free open as [[scanOfGen]]: one relation
-    * over the log's files outside uncommitted batches, both re-read on
-    * `refresh()`, with the footer schema of the first. The log is an
-    * append target too, so a crashed delete batch's files are excluded
-    * (and safe from the replay's sweep racing this read). EVERY reader of
-    * the log goes through here. None when the log is empty or holds only
-    * uncommitted batches.
+  /** The schema of a relation with no file — a probe of clusters that
+    * hold none, or a generation whose every file belongs to an
+    * uncommitted batch: the footer schema of the first committed own
+    * file of any cluster, else of some carried file, else of an
+    * uncommitted own file. That last read races the replay's SWEEP of
+    * the file (its deletion is the uncommitted-batch contract): when the
+    * file vanished, look again in a fresh snapshot.
     */
-  private[graft] def logScanOfGen(spark: SparkSession, layout: Layout,
-                                  gen: String): Option[DataFrame] = {
-    val root = hpath(spark, logDirOfGen(layout.dir, gen))
-    def files(): Seq[FileStatus] = {
-      val excluded = inProgressPrefixes(layout)
-      parquetFiles(spark, root)
-        .filterNot(f => excludedByInProgress(f.getPath.getName, excluded))
+  private def schemaOfEmpty(spark: SparkSession, snap: GenSnapshot,
+                            retries: Int): StructType = {
+    val all = snap.listed(None).map(_._2)
+    val src = all.find(f => snap.isCommitted(f.name)).map(_.path)
+      .orElse(snap.carry.first.map(e => s"${snap.layout.dir}/$e"))
+      .orElse(all.headOption.map(_.path))
+      .getOrElse(throw new IllegalStateException(
+        s"${snap.dir} holds no parquet file to read its schema from"))
+    try SeededRelation.footerSchema(spark, hpath(spark, src))
+    catch {
+      case _: java.io.IOException if retries > 0 && !snap.layout.fs.exists(src) =>
+        schemaOfEmpty(spark, resolveGen(snap.layout, snap.name), retries - 1)
     }
-    val initial = files()
-    initial.headOption.map(f => SeededRelation.open(spark,
-      SeededRelation.footerSchema(spark, f.getPath), None, root, initial, () => files()))
   }
 
-  /** `scan` without the rows generation `gen`'s tombstone log deletes
-    * (an id-only anti-join, broadcast at any realistic delete rate);
-    * `scan` itself, plan-identical, when the generation has no log.
+  /** The tombstone-log scan of a generation snapshot with the same
+    * read-committed exclusion and the same job-free open as
+    * [[scanOfGen]]: one relation over the log's committed files (both
+    * re-read from a fresh snapshot on `refresh()`), with the footer
+    * schema of the first. The log is an append target too, so a crashed
+    * delete batch's files are excluded (and safe from the replay's sweep
+    * racing this read). EVERY reader of the log goes through here. None
+    * when the log is empty or holds only uncommitted batches — presence
+    * is judged by data, not by the directory: the streamed del leg
+    * creates its target dir unconditionally, so a healthy layout can
+    * hold an EMPTY log dir.
     */
-  private def withoutTombstones(spark: SparkSession, layout: Layout, gen: String,
-                                scan: DataFrame): DataFrame =
-    logScanOfGen(spark, layout, gen).fold(scan)(log =>
-      scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
+  private[graft] def logScanOfGen(spark: SparkSession,
+                                  snap: GenSnapshot): Option[DataFrame] = {
+    def files(s: GenSnapshot) = s.logFiles.map(hstatus(spark, _))
+    val initial = files(snap)
+    initial.headOption.map(f => SeededRelation.open(spark,
+      SeededRelation.footerSchema(spark, f.getPath), None,
+      hpath(spark, logDirOfGen(snap.layout.dir, snap.name)), initial,
+      () => files(resolveGen(snap.layout, snap.name))))
+  }
 
-  /** Live per-cluster sizes from parquet footers alone (zero data
-    * pages), when footers are exact: the generation has no tombstone
-    * log (else the live sizes need the anti-join) and no promoted-but-
-    * unmarked batch exists (footers count every file, the committed
-    * scans exclude that batch). None otherwise, or for a partitionless
-    * layout — the caller then counts the committed live scan.
+  /** `scan` without the rows the snapshot's tombstone log deletes (an
+    * id-only anti-join, broadcast at any realistic delete rate); `scan`
+    * itself, plan-identical, when the generation has no log.
     */
-  private def liveSizesFromFooters(spark: SparkSession, layout: Layout,
-                                   gen: String): Option[Array[(Int, Long)]] =
-    if (tombstoneLogOfGenIfAny(layout, LayoutFs.baseName(gen)).isEmpty &&
-        inProgressPrefixes(layout).isEmpty)
-      clusterSizesFromFooters(spark, layout, gen)
-    else None
+  private def withoutTombstones(spark: SparkSession, snap: GenSnapshot,
+                                scan: DataFrame): DataFrame =
+    logScanOfGen(spark, snap).fold(scan)(log =>
+      scan.join(log.select("vec_id"), Seq("vec_id"), "left_anti"))
 
   /** Mark a generation as RETIRED (superseded by a compaction swap) —
     * the marker's mtime starts the retention clock [[vacuumIndex]]
@@ -732,18 +672,17 @@ object RabitqIndex {
 
   /** Raw-layout statistics the serving tier carries into its engine
     * snapshot: (physical index rows of the active generation, distinct
-    * tombstoned ids). The tombstone side is delete-volume-sized; the row
-    * count is a parquet-metadata aggregate.
+    * tombstoned ids). The row count is the footer sum over the
+    * generation's committed files ([[clusterSizesFromFooters]] — zero
+    * data pages); the tombstone side is delete-volume-sized.
     */
-  def layoutStats(spark: SparkSession, layout: Layout): (Long, Long) = {
-    // single generation resolution (the load() discipline): the counted
-    // rows and the counted log must belong to the same generation
-    val gen = indexDataDir(layout)
-    val nRows = scanOfGen(spark, layout, gen).count()
-    val nTomb = logScanOfGen(spark, layout, LayoutFs.baseName(gen))
-      .fold(0L)(_.select("vec_id").distinct().count())
-    (nRows, nTomb)
-  }
+  def layoutStats(spark: SparkSession, layout: Layout): (Long, Long) =
+    statsOf(spark, resolve(layout))
+
+  /** [[layoutStats]] of a snapshot: rows and log of ONE generation. */
+  private[graft] def statsOf(spark: SparkSession, snap: GenSnapshot): (Long, Long) =
+    (clusterSizesFromFooters(spark, snap).map(_._2).sum,
+      logScanOfGen(spark, snap).fold(0L)(_.select("vec_id").distinct().count()))
 
   /** Persist as a parquet directory (S6 analog of the reference's 5-file
     * layout `/root/reference/src/rabitq.rs:128-156`): index partitioned by
@@ -1144,32 +1083,33 @@ object RabitqIndex {
       recovered: Boolean = false): RebalanceReport = {
     import spark.implicits._
     if (!recovered)
-      // settle crashed uncommitted appends BEFORE reading the layout: a
-      // promoted-but-unmarked batch would otherwise be re-encoded into
-      // consolidated files (losing its prefix names) and then re-appended
-      // whole by the stream's replay — duplicates. `recovered = true` is
-      // the maintenanceLoop's contract: the pass already settled appends
+      // settle crashed uncommitted appends BEFORE resolving the layout:
+      // the snapshot already leaves a promoted-but-unmarked batch out of
+      // the rewrite and the listing, and the settle also sweeps its files
+      // out of the generation being retired, so nothing of it outlives
+      // the replay that re-appends it. `recovered = true` is the
+      // maintenanceLoop's contract: the pass already settled appends
       // ONCE under the same held lease.
-      graft.streaming.IdempotentSink.settleInProgress(layout,
-        Seq(indexDataDir(layout), tombstoneLogDir(layout)))
+      settle(layout)
+    // ONE snapshot for the whole op: sizes, split members, the carry
+    // listing and the log carry all read the same generation.
     // `known` threads the maintenance pass's one measurement through
     // (model + LIVE per-cluster sizes — both invariant across the
     // compaction that may have run in between: the rewrite preserves
     // exactly the live rows with their cluster_id and writes the same
     // model into the next generation), replacing this phase's own model
-    // load and full-scan size count. The data scan below still resolves the
+    // load and size count. The data scan below still resolves the
     // CURRENT generation — only the measurement is reused.
-    val gen = indexDataDir(layout)
-    val model = known.map(_._1).getOrElse(modelOfGen(layout, gen))
-    val index = scanOfGen(spark, layout, gen)
-    val live = withoutTombstones(spark, layout, LayoutFs.baseName(gen), index)
+    val snap = resolve(layout)
+    val model = known.map(_._1).getOrElse(snap.model)
+    val live = withoutTombstones(spark, snap, scanOfGen(spark, snap))
     spark.sparkContext.setJobDescription(s"rebalance: sizes ${layout.dir}")
-    // footer metadata when exact (describeIndex's fast path), else the
-    // committed live scan
+    // footer metadata when exact (no tombstone log — describeIndex's
+    // fast path), else the committed live scan
     val sizes = known.map(_._2).getOrElse {
-      liveSizesFromFooters(spark, layout, gen).getOrElse(
-        live.groupBy("cluster_id").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1))).toMap
+      (if (snap.logFiles.isEmpty) clusterSizesFromFooters(spark, snap)
+      else live.groupBy("cluster_id").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1))).toMap
     }
     val total = sizes.values.sum
     val k0 = model.centroids.length
@@ -1278,7 +1218,7 @@ object RabitqIndex {
           .select("vec_id", extraCols.toIndexedSeq: _*),
         Seq("vec_id"))
     val reencSizes =
-      rebalanceGenerationSwap(spark, layout, model2, reencWide, splitIds)
+      rebalanceGenerationSwap(spark, snap, model2, reencWide, splitIds)
 
     // after-sizes without re-reading the layout: untouched sizes +
     // re-encoded destinations
@@ -1313,14 +1253,13 @@ object RabitqIndex {
     *     shape, and the carry-∝-skew spec pins it.) The old generation
     *     stays intact both for its retention-window readers AND as the
     *     physical home of the carried files; vacuum refcounts them.
-    *     Promoted-but-unmarked appends are settled out of the source
-    *     generation immediately before the listing is built: carried by
-    *     reference, their files would sit beyond the reach of the
-    *     replay's sweep (it walks only the new generation's own dirs)
-    *     and the replay would serve those rows twice. Inductively the
+    *     The listing is the snapshot's [[GenSnapshot.carryEntries]]:
+    *     committed files only, so no promoted-but-unmarked batch is ever
+    *     carried by reference beyond the reach of the replay's sweep (it
+    *     walks only the new generation's own dirs). Inductively the
     *     INHERITED carry entries are clean.
-    *  3. The uncompacted tombstone log is carried by copy (delete-
-    *     volume-sized) — logs are per generation, and the carried
+    *  3. The snapshot's committed tombstone-log files are carried by
+    *     copy (delete-volume-sized) — logs are per generation, and the carried
     *     untouched rows still include tombstoned members (the re-encode
     *     dropped them only for split clusters); the anti-join is
     *     idempotent, so split members' ids matching nothing is harmless.
@@ -1342,50 +1281,42 @@ object RabitqIndex {
     * the kill sweep under both commit implementations.
     */
   private[graft] def rebalanceGenerationSwap(
-      spark: SparkSession, layout: Layout, model2: RabitqModel,
+      spark: SparkSession, snap: GenSnapshot, model2: RabitqModel,
       reencWide: DataFrame, splitIds: Seq[Int]): Map[Int, Long] = {
-    val curName = LayoutFs.baseName(indexDataDir(layout))
-    val curV = if (curName == "index") 1 else curName.stripPrefix("index-v").toInt
-    val nextName = s"index-v${curV + 1}"
+    val layout = snap.layout
+    val nextName = snap.nextName
     val nextDir = s"${layout.dir}/$nextName"
     spark.sparkContext.setJobDescription(s"rebalance: reencode+publish ${layout.dir}")
     reencWide.repartition(model2.params.numClusters, col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(nextDir)
     writeModel(layout, nextDir, model2)
-    // step 2's settle: no unmarked batch may enter the listing below
-    graft.streaming.IdempotentSink.settleInProgress(layout,
-      Seq(s"${layout.dir}/$curName", logDirOfGen(layout.dir, curName)))
     // the written schema is known: reading it back with it skips the
     // footer-inference job. The listing files the other leg writes into
     // `nextDir` are underscore-named, invisible to this scan.
     val (_, reencSizes) = Overlap(spark,
       {
-        writeCarryListing(layout, nextName,
-          buildCarryEntriesDistributed(spark, layout, curName, splitIds.toSet))
-        tombstoneLogOfGenIfAny(layout, curName).foreach(logDir =>
-          copyParquetFiles(layout, logDir, logDirOfGen(layout.dir, nextName)))
+        writeCarryListing(layout, nextName, snap.carryEntries(splitIds.toSet))
+        copyFiles(layout, snap.logFiles, logDirOfGen(layout.dir, nextName))
       },
       spark.read.schema(reencWide.schema).parquet(nextDir)
         .groupBy("cluster_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap)
-    publishGeneration(layout, curName, nextName)
+    publishGeneration(layout, snap.name, nextName)
     reencSizes
   }
 
-  /** Copy a directory's parquet data files into `tgt` (flat), replacing
-    * on retry, in parallel — used only for the DELETE-VOLUME-sized
-    * tombstone-log carry; the corpus-sized untouched-cluster carry rides
-    * in the `_CARRY` listing instead and never copies. Staging, not a
-    * commit primitive: nothing resolves the destination until the MANIFEST
-    * publish, and on a real object store each copy is a server-side
-    * CopyObject. A DEDICATED bounded pool, not the JVM-global common
-    * ForkJoinPool — blocking file IO on the common pool from the Spark
-    * driver can stall every other parallel-stream user in the JVM.
+  /** Copy `files` into `tgt` (flat), replacing on retry, in parallel —
+    * used only for the DELETE-VOLUME-sized tombstone-log carry; the
+    * corpus-sized untouched-cluster carry rides in the `_CARRY` listing
+    * instead and never copies. Staging, not a commit primitive: nothing
+    * resolves the destination until the MANIFEST publish, and on a real
+    * object store each copy is a server-side CopyObject. A DEDICATED
+    * bounded pool, not the JVM-global common ForkJoinPool — blocking
+    * file IO on the common pool from the Spark driver can stall every
+    * other parallel-stream user in the JVM.
     */
-  private[graft] def copyParquetFiles(layout: Layout, src: String, tgt: String): Unit = {
-    val files = layout.fs.list(src)
-      .filter(f => !f.isDir && f.name.endsWith(".parquet"))
+  private def copyFiles(layout: Layout, files: Seq[FsEntry], tgt: String): Unit = {
     if (files.isEmpty) return
     layout.fs.mkdirs(tgt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -1414,58 +1345,36 @@ object RabitqIndex {
   }
 
   /** Per-cluster row counts from parquet FOOTER metadata only — no data
-    * pages touched. One lightweight task per file, distributed (at
-    * corpus scale a partitioned layout holds thousands of files; the
-    * driver only ever sees the numClusters-row reduction). Returns None
-    * when the dir has no `cluster_id=` partition dirs (caller falls
-    * back to the scan).
+    * pages touched — over exactly the snapshot's committed files: its own
+    * and the ones its listing carries by reference (named directly, no
+    * directory walk of the source generations). Distributed (at corpus
+    * scale a partitioned layout holds thousands of files); the driver
+    * sees one (cluster, rows) pair per file. The paths shipped to
+    * executor tasks are FULLY QUALIFIED (scheme+authority), so they
+    * resolve on executors that do not share the driver's filesystem view.
     */
   private[operators] def clusterSizesFromFooters(
-      spark: SparkSession, layout: Layout,
-      dataDir: String): Option[Array[(Int, Long)]] = {
-    // list AND address through the Hadoop FileSystem API so the paths
-    // shipped to executor tasks are FULLY QUALIFIED (scheme+authority) —
-    // a driver-local java.io.File listing would ship bare local paths
-    // that only resolve when executors share the driver's filesystem
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = rootPath.getFileSystem(hconf)
-    if (!(fs.exists(rootPath) && fs.getFileStatus(rootPath).isDirectory))
-      return None
-    // files carried BY REFERENCE into this generation count exactly like
-    // its own: the listing names them directly (no directory walk of the
-    // source generations — the resolution is metadata-bounded)
-    val carried: Seq[(Int, String)] =
-      readCarry(layout, rootPath.getName).map(e => (clusterOfCarryEntry(e),
-        fs.makeQualified(new org.apache.hadoop.fs.Path(s"${layout.dir}/$e")).toString))
-    val parts = fs.listStatus(rootPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster_id="))
-    if (parts.isEmpty && carried.isEmpty) return None
-    val files: Seq[(Int, String)] = parts.toSeq.flatMap { d =>
-      val c = d.getPath.getName.stripPrefix("cluster_id=").toInt
-      fs.listStatus(d.getPath)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => (c, fs.makeQualified(s.getPath).toString))
-    } ++ carried
-    if (files.isEmpty) return Some(Array.empty)
+      spark: SparkSession, snap: GenSnapshot): Array[(Int, Long)] = {
+    val files: Seq[(Int, String)] =
+      snap.ownFiles().map { case (c, f) => (c, hpath(spark, f.path).toString) } ++
+        snap.carried().map(e => (clusterOfCarryEntry(e),
+          hpath(spark, s"${snap.layout.dir}/$e").toString))
+    if (files.isEmpty) return Array.empty
+    val sc = spark.sparkContext
     // executor tasks must see the DRIVER's hadoop conf (s3a credentials,
     // endpoints), not a bare `new Configuration()` of classpath defaults
-    val bConf = org.apache.spark.graft.SerHadoopConf
-      .broadcast(spark.sparkContext, hconf)
-    val sizes = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(64, files.length)))
-      .mapPartitions { it =>
-        val conf = bConf.value.conf
-        it.map { case (c, p) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (c, r.getRecordCount) finally r.close()
-        }
+    val bConf = org.apache.spark.graft.SerHadoopConf.broadcast(sc, sc.hadoopConfiguration)
+    // one stage of at most defaultParallelism tasks, summed on the driver:
+    // a footer read is tiny, so a task or a shuffle per file costs more
+    // than the read
+    sc.parallelize(files, math.max(1, math.min(sc.defaultParallelism, files.length)))
+      .map { case (c, p) =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), bConf.value.conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try (c, r.getRecordCount) finally r.close()
       }
-      .reduceByKey(_ + _)
-      .collect()
-    Some(sizes)
+      .collect().groupMapReduce(_._1)(_._2)(_ + _).toArray
   }
 
   /** Lease file serializing the SCHEDULED maintenance mutators
@@ -1637,7 +1546,7 @@ object RabitqIndex {
   private[graft] def vacuumUnlocked(
       layout: Layout, retainMs: Long = DefaultRetainMs): VacuumReport = {
     val now = System.currentTimeMillis()
-    val active = LayoutFs.baseName(indexDataDir(layout))
+    val active = activeName(layout)
     val markers = layout.fs.list(s"${layout.dir}/_retired")
       .filter(!_.isDir).map(f => f.name -> f).toMap
     def expired(gen: String): Boolean =
@@ -1691,11 +1600,8 @@ object RabitqIndex {
     val dirVictims = retiredVictims.map(_.path) ++ debrisGens.map(_.path) ++
       logVictims ++ orphanLogVictims ++ stagingVictims
     // committed batches' stranded in-progress sentinels
-    val staleSentinels = layout.fs.list(s"${layout.dir}/_commits")
-      .filter(_.isDir).flatMap(q => layout.fs.list(q.path))
-      .filter(f => !f.isDir && f.name.endsWith(".inprogress") &&
-        layout.fs.exists(f.path.stripSuffix(".inprogress")))
-      .map(_.path)
+    val staleSentinels = graft.streaming.IdempotentSink.sentinels(layout)
+      .filter(_.committed).map(_.path)
     val fileVictims = layout.fs.list(layout.dir).filter(f => !f.isDir &&
       (f.name == "MANIFEST.tmp" ||
         f.name.startsWith("_maintenance.lock.broken-") ||
@@ -1805,15 +1711,13 @@ object RabitqIndex {
       }
   }
 
-  def load(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) =
-    // ONE generation resolution per load — the model file and the data
-    // scan must come from the SAME generation even when a concurrent
-    // maintenance pass publishes a new one mid-call
-    loadOfGen(spark, layout, indexDataDir(layout))
-
-  private def loadOfGen(spark: SparkSession, layout: Layout,
-                        gen: String): (RabitqModel, DataFrame) =
-    (modelOfGen(layout, gen), scanOfGen(spark, layout, gen))
+  def load(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) = {
+    // ONE snapshot per load — the model file and the data scan must come
+    // from the SAME generation even when a concurrent maintenance pass
+    // publishes a new one mid-call
+    val snap = resolve(layout)
+    (snap.model, scanOfGen(spark, snap))
+  }
 
   /** The file a generation's model lives in, inside the generation dir.
     * The MANIFEST write that publishes a generation therefore flips data
@@ -1901,12 +1805,12 @@ object RabitqIndex {
       floats("bias", p), rerankScale = ps * ps)
   }
 
-  /** Single-resolution PROBE-PRUNED live read — the disk query paths'
+  /** Single-snapshot PROBE-PRUNED live read — the disk query paths'
     * read: resolve the generation ONCE, load its model, let the caller
     * derive the probed cluster ids from it, and return the live scan
     * restricted to them. Only the probed own cluster dirs are listed
     * and carried files come from only the manifest shards overlapping
-    * the probed clusters ([[readCarryForClusters]]), so the planner's
+    * the probed clusters ([[Carry.forClusters]]), so the planner's
     * file index is ∝ probed data, not ∝ corpus file count; the
     * `cluster_id ∈ probed` filter is already applied (it lands in the
     * scan's PartitionFilters — the plan the pruning gates assert), and
@@ -1919,19 +1823,15 @@ object RabitqIndex {
       spark: SparkSession, layout: Layout,
       probeOf: (RabitqModel, () => DataFrame) => Seq[Int])
       : (RabitqModel, Seq[Int], DataFrame) = {
-    val gen = indexDataDir(layout)
-    val genName = LayoutFs.baseName(gen)
-    val model = modelOfGen(layout, gen)
-    // the FULL live scan of the SAME resolved generation, built only if
-    // the probe derivation asks for it (the measured-selectivity
-    // fallback) — never a second MANIFEST resolution or model load
-    def fullLive(): DataFrame =
-      withoutTombstones(spark, layout, genName, scanOfGen(spark, layout, gen))
-    val probed = probeOf(model, () => fullLive())
-    val scan = scanOfGen(spark, layout, gen, Some(probed.toSet))
+    val snap = resolve(layout)
+    // the FULL live scan of the SAME snapshot, built only if the probe
+    // derivation asks for it (the measured-selectivity fallback) — never
+    // a second MANIFEST resolution or model load
+    val probed = probeOf(snap.model, () => liveOf(spark, snap)._2)
+    val scan = scanOfGen(spark, snap, Some(probed.toSet))
       .filter(org.apache.spark.sql.functions.col("cluster_id")
         .isin(probed: _*))
-    (model, probed, withoutTombstones(spark, layout, genName, scan))
+    (snap.model, probed, withoutTombstones(spark, snap, scan))
   }
 
   /** [[load]] with the maintained-layout READ CONTRACT applied: if the
@@ -1945,19 +1845,17 @@ object RabitqIndex {
     * layout state.
     */
   def loadLive(spark: SparkSession, layout: Layout): (RabitqModel, DataFrame) =
-    // same single-resolution discipline as load: the tombstone log is
-    // PER GENERATION, so it must be the log of the generation the data
-    // scan resolved, not a re-read of a possibly-republished MANIFEST
-    loadLiveOfGen(spark, layout, indexDataDir(layout))
+    // same single-snapshot discipline as load: the tombstone log is PER
+    // GENERATION, so it must be the log of the generation the data scan
+    // resolved, not a re-read of a possibly-republished MANIFEST
+    liveOf(spark, resolve(layout))
 
-  /** The model and live scan of the generation at `genDir`: its data
-    * scan minus its own tombstone log.
+  /** The model and live scan of a snapshot: its data scan minus its own
+    * tombstone log.
     */
-  private def loadLiveOfGen(spark: SparkSession, layout: Layout,
-                            genDir: String): (RabitqModel, DataFrame) = {
-    val (model, scan) = loadOfGen(spark, layout, genDir)
-    (model, withoutTombstones(spark, layout, LayoutFs.baseName(genDir), scan))
-  }
+  private[graft] def liveOf(spark: SparkSession,
+                            snap: GenSnapshot): (RabitqModel, DataFrame) =
+    (snap.model, withoutTombstones(spark, snap, scanOfGen(spark, snap)))
 
   /** TIME TRAVEL: [[loadLive]] pinned to a NAMED generation — the
     * active one, or a RETIRED generation still inside its retention
@@ -1978,11 +1876,10 @@ object RabitqIndex {
   def loadAt(spark: SparkSession, layout: Layout,
              gen: String): (RabitqModel, DataFrame) = {
     val genDir = s"${layout.dir}/$gen"
-    val active = LayoutFs.baseName(indexDataDir(layout))
     def refuse(why: String) =
       throw new IllegalStateException(
         s"generation $gen is not resolvable under ${layout.dir}: $why")
-    if (gen != active) {
+    if (gen != activeName(layout)) {
       if (!layout.fs.isFile(s"${layout.dir}/_retired/$gen"))
         refuse("neither active nor retired-retained (never published, " +
           "or reclaimed past the retention window)")
@@ -1992,25 +1889,9 @@ object RabitqIndex {
         refuse("retired and partially reclaimed past the retention " +
           "window — only its still-referenced files survive")
     }
-    loadLiveOfGen(spark, layout, genDir)
+    liveOf(spark, resolveGen(layout, gen))
   }
 
-  /** Layout/health statistics for a saved index dir — the one-row report
-    * an operator reads to SCHEDULE the maintenance the lifecycle ops
-    * perform: `tombstone debt` (n_tombstones/n_rows) decides when
-    * `VecsStream.compactIndex` is worth the rewrite, `skew` and
-    * `clusters_oversized` decide when [[rebalanceIndex]] is (the emitted
-    * `needs_rebalance` applies rebalanceIndex's own split criterion at
-    * the same `maxSizeFactor`, so the report and the op can never
-    * disagree). Cost shape: with no tombstone log the WHOLE report is
-    * parquet FOOTER metadata ([[clusterSizesFromFooters]] — zero data
-    * pages, sub-second at 1M where the scan took 10.9s); with a log the
-    * live sizes need the anti-join, so it falls back to ONE slim
-    * two-column scan (vec_id, cluster_id — column-pruned, never the
-    * codes) into a numClusters-row aggregate. Either way the collected
-    * frame is the cluster count, never the corpus. The serving tier's
-    * /describe reads its hot tier's cluster sizes instead (no job).
-    */
   /** The health snapshot [[describeIndex]] renders, kept structured so a
     * maintenance pass can consume the SAME measurement the report was
     * built from: `VecsStream.maintenanceLoop` previously re-derived the
@@ -2034,51 +1915,55 @@ object RabitqIndex {
     }
   }
 
-  private[graft] def indexHealth(spark: SparkSession, layout: Layout,
+  private[graft] def indexHealth(spark: SparkSession, snap: GenSnapshot,
                                  footerFastPath: Boolean = true): IndexHealth = {
-    // single generation resolution (the load() discipline): model, data
-    // scan, log, and footer listing all from ONE MANIFEST read
-    val gen = indexDataDir(layout)
-    val genName = LayoutFs.baseName(gen)
-    // FOOTER fast path: when footers give the live sizes exactly, every
-    // statistic here is a row count per cluster_id= partition, so read
-    // ONLY file metadata (one tiny distributed pass, zero data pages)
-    // instead of scanning a corpus-sized column. Otherwise fall back to
-    // the slim two-column scan (read-committed visibility, [[loadLive]]'s
-    // view). The physical count below reads footers whenever no
-    // promoted-but-unmarked batch exists.
-    val footerSizes =
-      if (footerFastPath) liveSizesFromFooters(spark, layout, gen) else None
-    footerSizes match {
-      case Some(fs) =>
-        IndexHealth(modelOfGen(layout, gen), fs.map(_._2).sum, 0L, fs)
-      case None =>
-        val (model, index) = loadOfGen(spark, layout, gen)
-        val tomb = logScanOfGen(spark, layout, genName)
-          .map(_.select("vec_id").distinct())
-        val live = tomb.map(t => index.join(t, Seq("vec_id"), "left_anti"))
-          .getOrElse(index)
-        // three INDEPENDENT actions — physical row count, tombstone
-        // count, live per-cluster sizes — overlapped (guide §2.6). The
-        // physical count comes from parquet footers (zero data pages)
-        // when the layout is clean of crashed appends, else from the
-        // committed scan.
-        val (nRowsOpt, nTomb, sizes) = Overlap(spark,
-          if (footerFastPath && inProgressPrefixes(layout).isEmpty)
-            clusterSizesFromFooters(spark, layout, gen).map(_.map(_._2).sum)
-          else None,
-          tomb.map(_.count()).getOrElse(0L),
-          live.groupBy("cluster_id").count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)))
-        IndexHealth(model, nRowsOpt.getOrElse(index.count()), nTomb, sizes)
+    // ONE snapshot (the load() discipline): model, data scan, log, and
+    // footer files all from one MANIFEST read and one `_commits` walk.
+    // The physical row count is the footer sum over the snapshot's
+    // committed files (zero data pages); with no tombstone log the live
+    // sizes are footer sums too, else they come from the slim two-column
+    // live scan (vec_id, cluster_id — [[loadLive]]'s view).
+    // `footerFastPath = false` counts everything from the scans instead.
+    val tomb = logScanOfGen(spark, snap).map(_.select("vec_id").distinct())
+    if (footerFastPath && tomb.isEmpty) {
+      val sizes = clusterSizesFromFooters(spark, snap)
+      IndexHealth(snap.model, sizes.map(_._2).sum, 0L, sizes)
+    } else {
+      val index = scanOfGen(spark, snap)
+      val live = tomb.fold(index)(t => index.join(t, Seq("vec_id"), "left_anti"))
+      // three INDEPENDENT actions — physical row count, tombstone count,
+      // live per-cluster sizes — overlapped (guide §2.6)
+      val (nRows, nTomb, sizes) = Overlap(spark,
+        if (footerFastPath) clusterSizesFromFooters(spark, snap).map(_._2).sum
+        else index.count(),
+        tomb.fold(0L)(_.count()),
+        live.groupBy("cluster_id").count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)))
+      IndexHealth(snap.model, nRows, nTomb, sizes)
     }
   }
 
+  /** Layout/health statistics for a saved index dir — the one-row report
+    * an operator reads to SCHEDULE the maintenance the lifecycle ops
+    * perform: `tombstone debt` (n_tombstones/n_rows) decides when
+    * `VecsStream.compactIndex` is worth the rewrite, `skew` and
+    * `clusters_oversized` decide when [[rebalanceIndex]] is (the emitted
+    * `needs_rebalance` applies rebalanceIndex's own split criterion at
+    * the same `maxSizeFactor`, so the report and the op can never
+    * disagree). Cost shape: with no tombstone log the WHOLE report is
+    * parquet FOOTER metadata ([[clusterSizesFromFooters]] — zero data
+    * pages, sub-second at 1M where the scan took 10.9s); with a log the
+    * live sizes need the anti-join, so it falls back to ONE slim
+    * two-column scan (vec_id, cluster_id — column-pruned, never the
+    * codes) into a numClusters-row aggregate. Either way the collected
+    * frame is the cluster count, never the corpus. The serving tier's
+    * /describe reads its hot tier's cluster sizes instead (no job).
+    */
   def describeIndex(spark: SparkSession, layout: Layout,
                     maxSizeFactor: Double = 1.5,
                     footerFastPath: Boolean = true): DataFrame = {
     import spark.implicits._
-    val h = indexHealth(spark, layout, footerFastPath)
+    val h = indexHealth(spark, resolve(layout), footerFastPath)
     val oversized = h.oversized(maxSizeFactor)
     Seq((h.model.params.numClusters, h.nRows, h.nLive, h.nTomb, h.debt,
         h.maxSize, h.meanSize, h.skew, oversized, oversized > 0))

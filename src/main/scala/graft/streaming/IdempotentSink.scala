@@ -110,6 +110,33 @@ object IdempotentSink {
       .foreach(f => layout.fs.delete(f.path))
   }
 
+  /** One batch's in-progress sentinel (`_commits/<query>/<batchId>.inprogress`)
+    * and whether that batch COMMITTED (its marker sits beside it). A
+    * sentinel without a marker is a crashed attempt or a live batch
+    * mid-write: its files (named `<prefix>-*`) may be swept and
+    * re-promoted by the replay at any moment. A committed batch's
+    * sentinel is stranded debris vacuum reclaims.
+    */
+  private[graft] final case class Sentinel(path: String, prefix: String,
+                                           committed: Boolean)
+
+  /** Every sentinel under the commit root, from ONE `_commits` walk (one
+    * listing of `_commits`, one per query dir; the marker test reads the
+    * same listing). The only statement of the "which batches are
+    * uncommitted" rule: readers exclude the uncommitted prefixes
+    * (`RabitqIndex.resolve`), [[settleInProgress]] sweeps them, and
+    * vacuum reclaims the committed batches' sentinels.
+    */
+  private[graft] def sentinels(commitRoot: Layout): Seq[Sentinel] =
+    commitRoot.fs.list(s"${commitRoot.dir}/_commits").filter(_.isDir).flatMap { q =>
+      val files = commitRoot.fs.list(q.path).filterNot(_.isDir)
+      val names = files.map(_.name).toSet
+      files.filter(_.name.endsWith(".inprogress")).map { f =>
+        val batchId = f.name.stripSuffix(".inprogress")
+        Sentinel(f.path, s"${q.name}-$batchId", names.contains(batchId))
+      }
+    }
+
   /** Maintenance-side half of the append-vs-maintenance closure: sweep
     * every PROMOTED-BUT-UNCOMMITTED batch (in-progress sentinel present,
     * no commit marker) out of `targetDirs` before a rewrite reads the
@@ -123,15 +150,7 @@ object IdempotentSink {
     * duplicate.
     */
   private[graft] def settleInProgress(commitRoot: Layout,
-                                      targetDirs: Seq[String]): Unit = {
-    val qs = commitRoot.fs.list(s"${commitRoot.dir}/_commits").filter(_.isDir)
-    for {
-      q <- qs
-      f <- commitRoot.fs.list(q.path)
-      if !f.isDir && f.name.endsWith(".inprogress")
-      batchId = f.name.stripSuffix(".inprogress")
-      if !commitRoot.fs.exists(s"${q.path}/$batchId")
-      t <- targetDirs
-    } sweepPrefix(commitRoot, t, s"${q.name}-$batchId")
-  }
+                                      targetDirs: Seq[String]): Unit =
+    for (s <- sentinels(commitRoot) if !s.committed; t <- targetDirs)
+      sweepPrefix(commitRoot, t, s.prefix)
 }

@@ -234,31 +234,32 @@ object VecsStream {
   private[graft] def compactUnlocked(spark: SparkSession, idx: Layout,
                                      recovered: Boolean = false): Unit = {
     if (!recovered)
-      // settle crashed uncommitted appends BEFORE the rewrite reads the
-      // layout: a promoted-but-unmarked batch would be folded into
-      // consolidated files (losing its prefix names) and then re-appended
-      // whole by the stream's replay — duplicates. Swept rows are re-staged
-      // in full by the replay, so nothing is lost. Live batches can't be
-      // mid-promote here (the promote takes the lease we hold).
+      // settle crashed uncommitted appends BEFORE the rewrite resolves the
+      // layout: the snapshot already leaves a promoted-but-unmarked batch
+      // out of the rewrite (folded into consolidated files, its rows
+      // would lose their prefix names and the replay would append them a
+      // second time), and the settle also sweeps its files out of the
+      // generation being retired. Swept rows are re-staged in full by the
+      // replay, so nothing is lost. Live batches can't be mid-promote here
+      // (the promote takes the lease we hold).
       // `recovered = true` is the maintenanceLoop's contract: the pass
       // already settled ONCE under the same held lease.
-      IdempotentSink.settleInProgress(idx,
-        Seq(RabitqIndex.indexDataDir(idx), RabitqIndex.tombstoneLogDir(idx)))
-    // presence judged by DATA files, not the directory: the streamed del
-    // leg creates its (possibly forever-empty) target dir unconditionally
-    if (RabitqIndex.tombstoneLogIfAny(idx).isEmpty) return
-    compactSwap(idx, compactRewrite(spark, idx))
+      RabitqIndex.settle(idx)
+    // ONE snapshot for the rewrite and the swap; presence of a log is
+    // judged by its committed DATA files, not the directory (the streamed
+    // del leg creates its possibly forever-empty target dir)
+    val snap = RabitqIndex.resolve(idx)
+    if (snap.logFiles.nonEmpty) compactSwap(snap, compactRewrite(spark, snap))
   }
 
-  /** Phase 1 (durable, retry-safe): rewrite the live rows, then the
-    * model, into the next versioned data dir; returns its name. Nothing the current
-    * generation's readers resolve is touched.
+  /** Phase 1 (durable, retry-safe): rewrite the snapshot's live rows,
+    * then its model, into the next versioned data dir; returns its name.
+    * Nothing the current generation's readers resolve is touched.
     */
-  private[graft] def compactRewrite(spark: SparkSession, idx: Layout): String = {
-    val cur = LayoutFs.baseName(RabitqIndex.indexDataDir(idx))
-    val curV = if (cur == "index") 1 else cur.stripPrefix("index-v").toInt
-    val nextName = s"index-v${curV + 1}"
-    val (m, live) = RabitqIndex.loadLive(spark, idx)
+  private[graft] def compactRewrite(spark: SparkSession,
+                                    snap: RabitqIndex.GenSnapshot): String = {
+    val (idx, nextName) = (snap.layout, snap.nextName)
+    val (m, live) = RabitqIndex.liveOf(spark, snap)
     // compaction's SECOND job: undo file fragmentation. Continuous
     // appends and rebalances leave O(write-tasks × clusters) small part
     // files (measured ~8k at 1M/256 — footer-describe and scan listing
@@ -288,9 +289,8 @@ object VecsStream {
     * belongs to the old generation and anti-joins ids the rewrite
     * already dropped.
     */
-  private[graft] def compactSwap(idx: Layout, nextName: String): Unit =
-    RabitqIndex.publishGeneration(idx,
-      LayoutFs.baseName(RabitqIndex.indexDataDir(idx)), nextName)
+  private[graft] def compactSwap(snap: RabitqIndex.GenSnapshot, nextName: String): Unit =
+    RabitqIndex.publishGeneration(snap.layout, snap.name, nextName)
 
   /** What one [[maintenanceLoop]] pass did. */
   case class MaintenanceReport(
@@ -325,15 +325,14 @@ object VecsStream {
       // settle crashed uncommitted appends ONCE for the whole pass (the
       // phases previously each re-ran the settle, re-listing the layout
       // under the same held lease)
-      IdempotentSink.settleInProgress(idx,
-        Seq(RabitqIndex.indexDataDir(idx), RabitqIndex.tombstoneLogDir(idx)))
+      RabitqIndex.settle(idx)
       // ONE measurement for the whole pass: the health snapshot below is
       // what describeIndex renders, and the phases consume it directly —
       // the model and the LIVE per-cluster sizes are both invariant
       // across the compaction (the rewrite preserves exactly the live
       // rows and writes the same model), so the rebalance phase needs
       // no re-load and no re-count (guide §1.2 run fewer passes).
-      val h = RabitqIndex.indexHealth(spark, idx)
+      val h = RabitqIndex.indexHealth(spark, RabitqIndex.resolve(idx))
       val compacted =
         if (h.debt >= debtThreshold && h.nTomb > 0L) {
           compactUnlocked(spark, idx, recovered = true); true

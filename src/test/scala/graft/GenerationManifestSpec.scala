@@ -227,11 +227,11 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     sc.addSparkListener(listener)
     try {
-      assert(jobsOf(RabitqIndex.scanOfGen(spark, idxDir, gen)) == 0,
+      assert(jobsOf(RabitqIndex.scanOfGen(spark, RabitqIndex.resolve(idxDir))) == 0,
         "opening the generation's data scan must run no job")
-      assert(jobsOf(RabitqIndex.scanOfGen(spark, idxDir, gen, Some(probed))) == 0,
+      assert(jobsOf(RabitqIndex.scanOfGen(spark, RabitqIndex.resolve(idxDir), Some(probed))) == 0,
         "opening the probe-restricted scan must run no job")
-      assert(jobsOf(RabitqIndex.logScanOfGen(spark, idxDir, "index-v2")) == 0,
+      assert(jobsOf(RabitqIndex.logScanOfGen(spark, RabitqIndex.resolve(idxDir))) == 0,
         "opening the tombstone log must run no job")
       assert(jobsOf(RabitqIndex.modelOfGen(idxDir, gen)) == 0,
         "reading the generation's model must run no job")
@@ -267,7 +267,7 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rel(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath.stripPrefix(s"$idxDir/")
     val sourceOnly = ownDataFiles(idxDir, "index").keySet -- carry
     assert(sourceOnly.nonEmpty, "gate is vacuous: the source generation holds no uncarried file")
-    val cached = RabitqIndex.scanOfGen(spark, idxDir, gen).cache()
+    val cached = RabitqIndex.scanOfGen(spark, RabitqIndex.resolve(idxDir)).cache()
     try {
       val n0 = cached.count()
       val extra = emb.limit(20)
@@ -660,15 +660,19 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
         "brute force")
   }
 
-  /** LayoutFs delegate recording every readString path — the probe for
-    * "a pruned read touches only the manifest shards it needs".
+  /** LayoutFs delegate recording every readString and list path — the
+    * probe for "a pruned read touches only the manifest shards it needs"
+    * and for the metadata calls of one operation. `onIsFile` runs after
+    * each `isFile` probe returns (a hook to act between two reads).
     */
-  private final class RecordingFs(inner: LayoutFs) extends LayoutFs {
+  private final class RecordingFs(inner: LayoutFs,
+                                  onIsFile: String => Unit = _ => ()) extends LayoutFs {
     val reads = scala.collection.mutable.ArrayBuffer.empty[String]
+    val lists = scala.collection.mutable.ArrayBuffer.empty[String]
     def exists(p: String) = inner.exists(p)
-    def isFile(p: String) = inner.isFile(p)
+    def isFile(p: String) = { val r = inner.isFile(p); onIsFile(p); r }
     def isDirectory(p: String) = inner.isDirectory(p)
-    def list(p: String) = inner.list(p)
+    def list(p: String) = { lists.synchronized(lists += p); inner.list(p) }
     def readString(p: String) = { reads.synchronized(reads += p); inner.readString(p) }
     def lastModified(p: String) = inner.lastModified(p)
     def setLastModified(p: String, ms: Long) = inner.setLastModified(p, ms)
@@ -745,11 +749,12 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(RabitqIndex.readCarry(idxDir, "index-v2").toSet == untouched,
       "sharded readCarry must resolve exactly the untouched files")
 
-    // 3. the distributed builder and the driver walk agree
-    assert(RabitqIndex.buildCarryEntriesDistributed(
-        spark, idxDir, "index", splitIds).toSet ==
-      RabitqIndex.buildCarryListing(idxDir, "index", splitIds).toSet,
-      "distributed carry enumeration diverged from the driver walk")
+    // 3. the carry entries a snapshot of the source generation builds
+    // equal a walk of its cluster dirs: every file of a non-split cluster
+    assert(RabitqIndex.resolveGen(idxDir, "index").carryEntries(splitIds).toSet ==
+      ownDataFiles(idxDir, "index").keySet.filterNot(p =>
+        splitIds.contains(RabitqIndex.clusterOfCarryEntry(p))),
+      "the snapshot's carry entries diverged from the walk of the fixture dirs")
 
     // 4. LAZY RESOLUTION: a single-cluster restriction reads only the
     // one shard covering it; the disk query path goes through the
@@ -954,7 +959,7 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).write.parquet(s"$ops/in")
     graft.streaming.VecsStream.maintainIndex(spark, s"$ops/in", idxDir,
       s"$ops/ckpt", m0, "gen_model_maint")
-    assert(RabitqIndex.tombstoneLogIfAny(idxDir).nonEmpty,
+    assert(RabitqIndex.resolve(idxDir).logFiles.nonEmpty,
       "gate is vacuous: the maintain stream wrote no tombstone")
 
     graft.streaming.VecsStream.compactIndex(spark, idxDir)
@@ -1057,5 +1062,106 @@ class GenerationManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a retained retired generation still loads from its own model file
     assertSameModel(RabitqIndex.loadAt(spark, idxDir, "index-v2")._1, m0,
       "index-v2 after the active generation lost its model")
+  }
+
+  test("one snapshot per operation: every read and lifecycle op reads the " +
+      "MANIFEST once and lists _commits once after its settle, and every " +
+      "scan listing goes through the handle") {
+    import spark.implicits._
+    // a rebalanced, carry-listed index-v2 with a committed tombstone log
+    val (idxDir, _) = skewedLayout()
+    RabitqIndex.rebalanceIndex(spark, idxDir, emb, maxSizeFactor = 1.4)
+    assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2")
+    val carry = RabitqIndex.readCarry(idxDir, "index-v2")
+    assert(carry.nonEmpty, "gate is vacuous: index-v2 carries nothing")
+    graft.streaming.IdempotentSink.appendBatch(
+      emb.select("vec_id").orderBy("vec_id").limit(20),
+      RabitqIndex.tombstoneLogDir(idxDir), idxDir, "count-del", 0L)
+
+    // (MANIFEST reads, `_commits` listings, every listed path) of one op
+    // run through a counting handle
+    def counted(op: Layout => Any): (Int, Int, Seq[String]) = {
+      val rec = new RecordingFs(PosixFs)
+      op(Layout(idxDir, fs = rec))
+      (rec.reads.count(_ == s"$idxDir/MANIFEST"),
+        rec.lists.count(_ == s"$idxDir/_commits"), rec.lists.toSeq)
+    }
+    val qs = ExactKnn.queriesFromEmbeddings(emb, 5)
+    val reads: Seq[(String, Layout => Any)] = Seq(
+      "loadLive" -> (l => RabitqIndex.loadLive(spark, l)._2.count()),
+      "loadAt" -> (l => RabitqIndex.loadAt(spark, l, "index")._2.count()),
+      "topKFromDisk" -> (l => RabitqQuery.topKFromDisk(spark, l, emb, qs,
+        nprobe = 2, topk = 5, rerank = 32).count()),
+      "layoutStats" -> (l => RabitqIndex.layoutStats(spark, l)),
+      "describeIndex" -> (l => RabitqIndex.describeIndex(spark, l).collect()),
+      "Serve engine build" -> (l =>
+        graft.Serve.loadEngine(spark, l, s"$sf/embeddings.parquet")))
+    reads.foreach { case (op, run) =>
+      val (m, c, _) = counted(run)
+      info(s"$op: $m MANIFEST reads, $c _commits listings")
+      assert((m, c) == ((1, 1)),
+        s"$op read the MANIFEST $m times and listed _commits $c times")
+    }
+
+    // the scan's cluster-dir and log-dir listings are the handle's
+    val (_, _, listed) = counted(l => RabitqIndex.loadLive(spark, l)._2.count())
+    val ownDirs = new java.io.File(s"$idxDir/index-v2").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cluster_id="))
+      .map(f => s"$idxDir/index-v2/${f.getName}").toSet
+    val carriedDirs = carry.map(e => s"$idxDir/${e.substring(0, e.lastIndexOf('/'))}").toSet
+    assert(ownDirs.nonEmpty && carriedDirs.nonEmpty, "gate is vacuous")
+    val expected = ownDirs ++ carriedDirs + s"$idxDir/deletes-v2"
+    assert(expected.subsetOf(listed.toSet),
+      s"scan listings the handle never saw: ${(expected -- listed).take(5)}")
+
+    // lifecycle ops settle, then resolve one snapshot: the settle reads
+    // the MANIFEST once and walks `_commits` once, the rest of the op
+    // once more each
+    val settle = counted(l => RabitqIndex.settle(l))
+    assert((settle._1, settle._2) == ((1, 1)), s"the settle alone: $settle")
+    for ((op, run) <- Seq[(String, Layout => Any)](
+        "rebalanceIndex" -> (l =>
+          RabitqIndex.rebalanceIndex(spark, l, emb, maxSizeFactor = 1.1)),
+        "compactIndex" -> (l => graft.streaming.VecsStream.compactIndex(spark, l)))) {
+      val (m, c, _) = counted(run)
+      info(s"$op: $m MANIFEST reads, $c _commits listings (settle included)")
+      assert((m - 1, c - 1) == ((1, 1)),
+        s"$op after its settle read the MANIFEST ${m - 1} times and listed " +
+          s"_commits ${c - 1} times")
+    }
+    assert(RabitqIndex.resolve(idxDir).logFiles.isEmpty,
+      "gate is vacuous: the compaction folded no log")
+  }
+
+  test("mixed generations: an engine built while a compaction publishes " +
+      "reports the stats of the generation its hot tier holds") {
+    import spark.implicits._
+    val idxDir = java.nio.file.Files.createTempDirectory("mixed_gen").toString
+    val (model, index) = RabitqIndex.build(spark, emb, numClusters = 8, seed = 3L)
+    RabitqIndex.save(spark, model, index, idxDir)
+    val nRows = emb.count()
+    val dels = Seq(0L, 7L, 11L)
+    graft.streaming.IdempotentSink.appendBatch(dels.toDF("vec_id"),
+      RabitqIndex.tombstoneLogDir(idxDir), idxDir, "mixed-del", 0L)
+    assert(RabitqIndex.layoutStats(spark, idxDir) == ((nRows, dels.size.toLong)))
+    // the engine's handle publishes a compacted generation, through a
+    // separate plain handle, right after the build's first MANIFEST probe
+    val published = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val racing = new RecordingFs(PosixFs, onIsFile = p =>
+      if (p == s"$idxDir/MANIFEST" && published.compareAndSet(false, true))
+        graft.streaming.VecsStream.compactIndex(spark, Layout(idxDir)))
+    val eng = graft.Serve.loadEngine(spark, Layout(idxDir, fs = racing),
+      s"$sf/embeddings.parquet")
+    assert(published.get() && RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index-v2",
+      "gate is vacuous: no generation was published mid-build")
+    assert(RabitqIndex.layoutStats(spark, idxDir) == ((nRows - dels.size, 0L)),
+      "gate is vacuous: the published generation has the old one's stats")
+    // the hot tier holds the live rows of the generation resolved first
+    // (`index`: nRows rows, three of them tombstoned)
+    assert(eng.hot.nIndexed == nRows - dels.size)
+    assert((eng.nRows, eng.nTombstones) == ((nRows, dels.size.toLong)),
+      s"the engine reports (${eng.nRows}, ${eng.nTombstones}): the stats of " +
+        s"another generation than the one its hot tier holds ($nRows rows, " +
+        s"${dels.size} tombstones)")
   }
 }

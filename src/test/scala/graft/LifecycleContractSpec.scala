@@ -368,6 +368,22 @@ class LifecycleContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(hits.isEmpty, s"$path: layout I/O bypassing the handle:\n  " +
         hits.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("\n  "))
     }
+    // one listing path: every layout listing goes through the handle's
+    // `fs.list`, so a counting or faulting LayoutFs sees the scans' cluster
+    // and log dirs too — no Hadoop FileSystem.listStatus beside it
+    for (rel <- Seq("operators/RabitqIndex.scala", "streaming/VecsStream.scala",
+        "streaming/IdempotentSink.scala")) {
+      val path = repoRoot.resolve(s"src/main/scala/graft/$rel")
+      assert(java.nio.file.Files.isRegularFile(path), s"grep gate target missing: $path")
+      val lines = java.nio.file.Files.readAllLines(path).toArray(Array.empty[String])
+      val hits = lines.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        l.contains("listStatus(") &&
+          !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/**")
+      }
+      assert(hits.isEmpty, s"$path: a layout listing bypassing the handle:\n  " +
+        hits.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("\n  "))
+    }
     // one model store: a generation's `_model.json`. No parquet model
     // table (root `rotation`/`centroids`/`params`, generation-local
     // `_centroids`/`_params`) is written or read on these paths. The

@@ -1312,12 +1312,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!ids().contains(0L) && !ids().contains(7L), s"hot resurrected: ${ids()}")
       // /reload of the same maintained dir: the reload path must apply the
       // log too (a raw load here would resurrect vec 0 post-swap). Its jobs
-      // are pinned: the base read, its dim probe, the layout stats and the
-      // hot tier's two collects — no checkpoint, base count or Spark-side
-      // label join (22 jobs when the snapshot also kept Spark frames)
+      // are pinned: the base read, the hot tier's two collects (which also
+      // check the base's dim), the footer row count and the distinct log
+      // count — no dim probe, checkpoint, base count or Spark-side label
+      // join (22 jobs when the snapshot also kept Spark frames, 10 with the
+      // dim probe and a scan row count)
       val (reloadJobs, reload) = jobsDuring(post("reload", s"""{"index_dir": "$dirM"}"""))
       assert(reload.statusCode() == 200, s"reload failed: ${reload.body()}")
-      assert(reloadJobs <= 10, s"one /reload ran $reloadJobs Spark jobs")
+      assert(reloadJobs <= 8, s"one /reload ran $reloadJobs Spark jobs")
       val after = ids()
       assert(!after.contains(0L) && !after.contains(7L), s"reload resurrected: $after")
       assert(after.nonEmpty)
@@ -1365,6 +1367,48 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bad.statusCode() == 400, s"short base reloaded: ${bad.body()}")
       assert(bad.body().contains("no vec_id in the base"), bad.body())
       assert(ids() == after, s"old engine lost: ${ids()} vs $after")
+    } finally server.stop(0)
+  }
+
+  test("Serve: a /reload of a wrong-dim or an empty base answers 400 with " +
+      "its message, and the old engine keeps serving") {
+    val dir = java.nio.file.Files.createTempDirectory("serve_bad_base").toString
+    val (model, index) = RabitqIndex.build(spark, emb, numClusters = 8, seed = 3L)
+    RabitqIndex.save(spark, model, index, dir)
+    // the wrong dim sits past the first row: the check covers every row
+    val wrongDim = s"$dir-bases/wrong_dim"
+    emb.select(col("vec_id"), when(col("vec_id") === emb.agg(max("vec_id")).head().getLong(0),
+        slice(col("embedding"), 1, model.params.dim - 1))
+      .otherwise(col("embedding")).as("embedding"))
+      .orderBy("vec_id").write.parquet(wrongDim)
+    val empty = s"$dir-bases/empty"
+    emb.limit(0).select("vec_id", "embedding").write.parquet(empty)
+    val port = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val server = graft.Serve.start(spark, sf, port, Some(dir))
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def post(path: String, body: String) = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"http://localhost:$port/$path"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val qvec = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+      def ids() = {
+        val r = post("query", s"""{"query": ${qvec.mkString("[", ",", "]")}, "top_k": 5}""")
+        assert(r.statusCode() == 200, s"query failed: ${r.body()}")
+        graft.Serve.parseFloatArray(r.body(), "ids").map(_.toLong).toSeq
+      }
+      val before = ids()
+      assert(before.head == 0L, s"unexpected first answer: $before")
+      for ((base, msg) <- Seq(wrongDim -> s"saved index dim ${model.params.dim} != base embedding dim",
+          empty -> "are empty — nothing to serve")) {
+        val r = post("reload", s"""{"index_dir": "$dir", "base": "$base"}""")
+        assert(r.statusCode() == 400 && r.body().contains(msg),
+          s"reload over $base: ${r.statusCode()} ${r.body()}")
+        assert(ids() == before, "a refused reload must leave the old engine serving")
+      }
     } finally server.stop(0)
   }
 
@@ -1869,14 +1913,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // CRASH BEFORE THE SWAP: the distributed rewrite completed but the
     // MANIFEST never moved — readers must resolve the OLD generation +
     // log (correct live set); the new dir is invisible
-    val next = graft.streaming.VecsStream.compactRewrite(spark, idxDir)
+    val next = graft.streaming.VecsStream.compactRewrite(spark, RabitqIndex.resolve(idxDir))
     assert(next == "index-v2" && new java.io.File(s"$idxDir/$next").exists)
     assert(!new java.io.File(s"$idxDir/MANIFEST").exists)
     assert(RabitqIndex.indexDataDir(idxDir) == s"$idxDir/index",
       "pre-swap readers must still resolve the old generation")
     assert(liveIds() == expected)
     // a RETRY of the rewrite (mode overwrite) is idempotent
-    assert(graft.streaming.VecsStream.compactRewrite(spark, idxDir) == "index-v2")
+    assert(graft.streaming.VecsStream.compactRewrite(spark, RabitqIndex.resolve(idxDir)) == "index-v2")
     // CRASH AFTER THE RETIRE MARKER, BEFORE THE MANIFEST MOVE: the old
     // generation is marked retired but still active — readers resolve it
     // (with its log); the retry converges to v2 (not v3 — the rewrite
@@ -2192,7 +2236,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // debris: a compaction that rewrote but never swapped, a lease-break
     // aside a crashed breaker stranded, orphaned batch staging, a torn
     // MANIFEST.tmp, and a committed batch's marker (which must SURVIVE)
-    graft.streaming.VecsStream.compactRewrite(spark, dir) // index-v2, no swap
+    graft.streaming.VecsStream.compactRewrite(spark, RabitqIndex.resolve(dir)) // index-v2, no swap
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_maintenance.lock.broken-dead"), "x")
     new java.io.File(s"$dir/_staging/q-0").mkdirs()
@@ -2670,7 +2714,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"two adds-only micro-batches must run exactly one job each " +
         s"(the staged write) — saw ${jobs.get()}")
     // and the stream still must not have manufactured a del log
-    assert(RabitqIndex.tombstoneLogIfAny(idxDir).isEmpty)
+    assert(RabitqIndex.resolve(idxDir).logFiles.isEmpty)
     val (_, live) = RabitqIndex.loadLive(spark, idxDir)
     assert(live.select("vec_id").collect().map(_.getLong(0)).toSet ==
       (0L until 160L).toSet)
@@ -2740,7 +2784,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // second line of defense: a deletes dir with NO data files (e.g. a
     // crashed promote swept back to nothing) reads as no-log everywhere
     new java.io.File(s"$idxDir/deletes").mkdirs()
-    assert(RabitqIndex.tombstoneLogIfAny(idxDir).isEmpty)
+    assert(RabitqIndex.resolve(idxDir).logFiles.isEmpty)
     assert(RabitqIndex.loadLive(spark, idxDir)._2.count() == 260)
     assert(RabitqIndex.layoutStats(spark, idxDir)._2 == 0L)
     assert(RabitqIndex.describeIndex(spark, idxDir)
@@ -3858,7 +3902,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val repA = RabitqIndex.rebalanceIndex(spark, dA, emb, maxSizeFactor = 1.4)
     assert(repA.split.nonEmpty, s"construction must trigger a split ($repA)")
     // the fused maintenanceLoop path: ONE health measurement, threaded in
-    val h = RabitqIndex.indexHealth(spark, dB)
+    val h = RabitqIndex.indexHealth(spark, RabitqIndex.resolve(dB))
     val repB = RabitqIndex.withLayoutLock(dB)(
       RabitqIndex.rebalanceUnlocked(spark, dB, emb, maxSizeFactor = 1.4,
         fitSampleCap = 100000L, known = Some((h.model, h.sizes.toMap)),
